@@ -79,14 +79,19 @@ object Bench {
       .map { case (name, fn) =>
       val sp0 = spilled.get(); val gc0 = gcTime.get()
       val st0 = stealJiffies()
-      val w0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-      val warm = (System.nanoTime() - w0) / 1e9
-      val times = (1 to 3).map { _ =>
+      // a query that throws on ANY run is FAILED: it keeps its error
+      // class and never contributes a time (a throw is fast, not valid)
+      var error: Option[String] = None
+      def timed(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try { fn(spark, sfDir).count(): Unit } catch {
+          case t: Throwable =>
+            if (error.isEmpty) error = Some(t.getClass.getName)
+        }
         (System.nanoTime() - t0) / 1e9
       }
+      val warm = timed()
+      val times = (1 to 3).map(_ => timed())
       val stor = spark.sparkContext.getRDDStorageInfo
       // per-query hypervisor steal over warmup+timed runs — committed
       // into bench_full.json (not just stderr) so round-over-round
@@ -99,11 +104,18 @@ object Bench {
           stor.map(_.memSize).sum / (1024 * 1024)}%d" +
         f" spillMB=${(spilled.get() - sp0) / (1024 * 1024)}%d" +
         f" gcSec=${(gcTime.get() - gc0) / 1000.0}%.1f" +
-        f" stealSec=$qSteal%.1f")
+        f" stealSec=$qSteal%.1f" + error.fold("")(e => s" FAILED=$e"))
       if (freeBetween) graft.operators.Checkpoints.freeTransient(spark)
-      (name, times.min, qSteal)
+      (name, times.min, qSteal, error)
     }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val failed = results.filter(_._4.isDefined)
+    val ok = results.filter(_._4.isEmpty)
+      .map { case (k, v, s, _) => (k, v, s) }
+    val total = ok.map(_._2).sum
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} failed queries " +
+        "(left out of the total): " +
+        failed.map { case (k, _, _, e) => s"$k=${e.get}" }.mkString(" "))
     // window-total hypervisor steal (cpu-seconds): the in-band
     // contention signal — a window with hundreds of stolen cpu-seconds
     // is adjudicating the HOST, not this code (see ROUND_NOTES_r14 §1b)
@@ -113,16 +125,23 @@ object Bench {
     // BENCH_r02 proved a full 92-query map overflows that window and
     // parses as null).
     val fullJson = {
-      val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
+      val qs = ok.map { case (k, v, _) => "\"" + k + "\":" + v }
+        .mkString("{", ",", "}")
+      val status = results
+        .map { case (k, _, _, e) => "\"" + k + "\":\"" +
+          (if (e.isEmpty) "ok" else "failed") + "\"" }
+        .mkString("{", ",", "}")
+      val errors = failed
+        .map { case (k, _, _, e) => "\"" + k + "\":\"" + e.get + "\"" }
         .mkString("{", ",", "}")
       // Locale.ROOT: f"" uses the JVM default locale, which under a
       // comma-decimal locale (de_DE) would emit 0,3 — invalid JSON
       val steals = results
-        .map { case (k, _, s) => "\"" + k + "\":" +
+        .map { case (k, _, s, _) => "\"" + k + "\":" +
           String.format(java.util.Locale.ROOT, "%.1f",
             Double.box(s)) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"steal_sec":$stealSec,"queries":$qs,"steals":$steals,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${ok.size},"failed":${failed.size},"steal_sec":$stealSec,"queries":$qs,"status":$status,"errors":$errors,"steals":$steals,"sf":"$sfDir"}"""
     }
     try {
       val p = java.nio.file.Paths.get("target/bench_full.json")
@@ -149,7 +168,7 @@ object Bench {
       "r_asof_native", "r_session_window",
       "x_embed_lsh_clusters", "x_cc_chain", "x_image_meta",
       "x_heavy_hitters", "r_interval_join")
-    val byName = results.map { case (k, v, _) => k -> v }.toMap
+    val byName = ok.map { case (k, v, _) => k -> v }.toMap
     // same Locale.ROOT treatment as the steals map above — every
     // %-formatted number that lands in JSON must be locale-independent
     def num(fmt: String, v: Double): String =
@@ -158,7 +177,7 @@ object Bench {
       val qs = names.flatMap(n => byName.get(n)
           .map(v => "\"" + n + "\":" + num("%.3f", v)))
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${num("%.3f", total)},"unit":"sec","n":${results.size},"steal_sec":${num("%.1f", stealSec)},"queries":$qs,"sf":"${new java.io.File(sfDir).getName}"}"""
+      s"""{"metric":"total","value":${num("%.3f", total)},"unit":"sec","n":${ok.size},"failed":${failed.size},"steal_sec":${num("%.1f", stealSec)},"queries":$qs,"sf":"${new java.io.File(sfDir).getName}"}"""
     }
     val out = {
       val l = line(headline)

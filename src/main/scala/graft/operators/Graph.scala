@@ -27,6 +27,13 @@ object Graph {
   @inline private def probeRound(tag: String, df: => DataFrame): Unit =
     roundPlanProbe.foreach(p => p(tag, df))
 
+  /** The measured broadcast gate every operator here shares: `df`
+    * broadcasts when `n`, the row count it was measured at, is within
+    * `limit`.
+    */
+  private def gate(n: Long, limit: Long)(df: DataFrame): DataFrame =
+    if (n <= limit) broadcast(df) else df
+
   /** Lineage truncation per round: reliable `checkpoint()` under a set
     * checkpoint dir (fault-tolerant; superseded files deleted by
     * freeLocalCheckpoint), else executor-local `localCheckpoint()`.
@@ -80,10 +87,7 @@ object Graph {
       .withColumn("comp", col("id"))
       .observe(obs0, count(lit(1)).as("n"))
       .roundCheckpoint()
-    val small =
-      obs0.get("n").asInstanceOf[Long] <= broadcastLimit
-    def vSized(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val vSized = gate(obs0.get("n").asInstanceOf[Long], broadcastLimit) _
     var converged = false
     var it = 0
     var prevSum: java.math.BigDecimal = null
@@ -217,8 +221,6 @@ object Graph {
     // exchanges are its two partial-aggregated groupBys + the
     // distinct, never an edge-table shuffle join
     var nE = nE0
-    def gated(df: DataFrame): DataFrame =
-      if (nE <= broadcastLimit) broadcast(df) else df
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -227,7 +229,7 @@ object Graph {
         .select(col("mu"), least(col("mu"), col("mv")).as("m"))
       // no distinct here: smallStar's groupBy/distinct dedups right
       // after, and skipping it saves a full shuffle per round
-      sym.join(gated(mins), sym("u") === col("mu"))
+      sym.join(gate(nE, broadcastLimit)(mins), sym("u") === col("mu"))
         .where(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v"))
@@ -237,7 +239,7 @@ object Graph {
       val o = e.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       val mins = o.groupBy(col("u").as("mu")).agg(min(col("v")).as("m"))
-      o.join(gated(mins), o("u") === col("mu"))
+      o.join(gate(nE, broadcastLimit)(mins), o("u") === col("mu"))
         .where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins.select(col("mu").as("u"), col("m").as("v")))
@@ -361,9 +363,7 @@ object Graph {
           .select(col("id"),
             coalesce(col("__r0"), lit(scale / n)).as("rank"))
     })
-    val small = n <= broadcastLimit
-    def vSized(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     var it = 0
     while (it < iters) {
       val contrib = e
@@ -431,9 +431,7 @@ object Graph {
         .union(sd.select(col("id"))).distinct())
     require(ns > 0, "empty seed set")
     val base = scale * (dampDen - dampNum) / (dampDen * ns)
-    val small = n <= broadcastLimit
-    def vSized(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     def seeded(rank: Long): DataFrame = nodes
       .join(vSized(sd.withColumn("__s", lit(1))), Seq("id"), "left")
       .select(col("id"),
@@ -525,8 +523,7 @@ object Graph {
         .select(col("id"), lit(0L).as("p"), lit(scale).as("r")))
     var it = 0
     while (it < rounds && nActive > 0) {
-      def gated(df: DataFrame): DataFrame =
-        if (nActive <= broadcastLimit) broadcast(df) else df
+      val gated = gate(nActive, broadcastLimit) _
       // the degree table narrows to the ACTIVE slice through a
       // broadcast semi join (a scan of the staged deg table, never a
       // |V|-sized shuffle), then joins state at state size
@@ -609,9 +606,7 @@ object Graph {
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
     require(n > 0, "empty graph")
-    val small = n <= broadcastLimit
-    def vSized(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     def normalized(raw: DataFrame, out: String): DataFrame = {
       val m = raw.agg(greatest(max(col("raw")), lit(1L)).as("__m"))
       raw.crossJoin(broadcast(m))
@@ -702,9 +697,7 @@ object Graph {
     val (nodes, n) = Checkpoints.stageCount(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
-    val small = n <= broadcastLimit
-    def vSized(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     var cur = Checkpoints.stage(nodes
       .select(col("id").as("start"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("walk"))
@@ -870,6 +863,15 @@ object Graph {
 
   // ---------- incremental landmark-distance store ----------
 
+  /** The landmark store: (id, lm) -> dist rows, id-clustered, folded to
+    * min(dist) per (id, lm) — distances only shrink under edge
+    * insertion.
+    */
+  private[graft] def landmarkStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "landmarkStore",
+      Seq("id" -> "bigint", "lm" -> "bigint"), Seq("dist" -> "int"),
+      KeyedStore.MinValue, cluster = Seq("id"))
+
   /** Persist [[landmarkDistances]]'s sketch as `batch=0` of an
     * incremental store (id-clustered (id, lm, dist, __b) rows on the
     * shared gen=/batch= protocol), the warm base for
@@ -880,45 +882,17 @@ object Graph {
   def writeLandmarkStore(edges: DataFrame, a: Column, b: Column,
                          landmarks: Int, maxDepth: Int,
                          storeDir: String, filesOut: Int = 4): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeLandmarkStore(batch)") {
-    landmarkDistances(edges, a, b, landmarks, maxDepth)
-      .select(col("id"), col("lm"), col("dist"), lit(0L).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"), col("lm"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
-    Stats.upsertManifest(edges.sparkSession, storeDir,
-      storeManifestPath(storeDir))
-  }
-
-  private def landmarkStoreView(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("id" -> "bigint", "lm" -> "bigint", "dist" -> "int",
-          "__b" -> "bigint"), "landmarkStore")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("id"), col("lm"))
-      .agg(min(col("dist")).as("dist"))
-  }
+    landmarkStore(storeDir).writeBase(edges.sparkSession,
+        "writeLandmarkStore(batch)", filesOut) {
+      landmarkDistances(edges, a, b, landmarks, maxDepth)
+    }
 
   /** The landmark store's CURRENT sketch (distances only shrink under
     * edge insertion, so the fold is min(dist) per (id, lm)).
     */
   def landmarkStoreDistances(spark: org.apache.spark.sql.SparkSession,
                              storeDir: String): DataFrame =
-    landmarkStoreView(spark, storeDir, Long.MaxValue)
-
-  /** Snapshot read of the landmark store as of batch `asOf` — same
-    * contract and retention trade as [[ccStoreLabelsAsOf]].
-    */
-  def landmarkStoreDistancesAsOf(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      asOf: Long): DataFrame = {
-    require(asOf >= 0L, "asOf is a committed batch id")
-    landmarkStoreView(spark, storeDir, asOf + 1)
-  }
+    landmarkStore(storeDir).current(spark)
 
   /** WARM-START landmark sketch maintenance: distances over the UNION
     * graph for the store's FROZEN landmark set, relaxing ONLY from the
@@ -961,16 +935,13 @@ object Graph {
       allEdges: DataFrame, a: Column, b: Column,
       newEdges: DataFrame, na: Column, nb: Column,
       storeDir: String, batchId: Long, maxDepth: Int = 6,
-      filesOut: Int = 4, broadcastLimit: Long = 4000000L): DataFrame =
-    Stats.withWriterLease(allEdges.sparkSession, Seq(storeDir),
-        "landmarkDistancesIncremental(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeLandmarkStore base")
+      filesOut: Int = 4, broadcastLimit: Long = 4000000L)
+      : DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
     val spark = allEdges.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "landmarkDistancesIncremental")
-    val stored = Checkpoints.stage(
-      landmarkStoreView(spark, storeDir, batchId))
+    val store = landmarkStore(storeDir)
+    store.appending(spark, batchId, "landmarkDistancesIncremental") {
+    val stored = Checkpoints.stage(store.view(spark, batchId))
     val e0 = allEdges.select(a.as("src"), b.as("dst"))
     val sym = Checkpoints.stage(
       e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
@@ -1010,7 +981,7 @@ object Graph {
             .groupBy(col("id"), col("lm"))
             .agg(min(col("dist")).as("__imp"))
           withSt.join(
-            if (nImp <= broadcastLimit) broadcast(impMin) else impMin,
+            gate(nImp, broadcastLimit)(impMin),
             Seq("id", "lm"), "left")
         }
       // least() skips nulls, so missing-on-both-sides = infinity
@@ -1033,8 +1004,7 @@ object Graph {
       nImp += nF
       // frontier-sized probe side broadcasts under the gate, so the
       // staged edge table is never shuffled per round (guide §3.1)
-      val fSized =
-        if (nF <= broadcastLimit) broadcast(frontier) else frontier
+      val fSized = gate(nF, broadcastLimit)(frontier)
       val roundDf = improving(
         fSized.join(sym, col("id") === col("src"))
           .select(col("dst").as("id"), col("lm"),
@@ -1058,17 +1028,11 @@ object Graph {
       else Checkpoints.stage(improved.reduce(_ unionAll _)
         .groupBy(col("id"), col("lm"))
         .agg(min(col("dist")).as("dist")))
-    delta.select(col("id"), col("lm"), col("dist"),
-        lit(batchId).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"), col("lm"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
-    Stats.upsertManifestFor(spark, storeDir,
-      storeManifestPath(storeDir), s"$storeDir/batch=$batchId")
+    store.append(spark, "landmarkDistancesIncremental(batch)", batchId,
+      filesOut)(delta)
     // sketch is staged, so its data predates the overwrite safely
     sketch
-  }
+  }}
 
   /** Fold the landmark store's batches (min dist per (id, lm); __b =
     * the first batch that achieved it) into one generation.
@@ -1076,19 +1040,8 @@ object Graph {
   def compactLandmarkStore(spark: org.apache.spark.sql.SparkSession,
                            storeDir: String, filesOut: Int = 4)
       : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactLandmarkStore(batch)") {
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      _.groupBy(col("id"), col("lm"))
-        .agg(min(struct(col("dist"), col("__b"))).as("m"))
-        .select(col("id"), col("lm"), col("m.dist").as("dist"),
-          col("m.__b").as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id"), col("lm")))
-    if (tok.isDefined)
-      Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
+    landmarkStore(storeDir).compact(spark, "compactLandmarkStore(batch)",
+      filesOut)
 
   /** RETRACTION for the landmark store — [[rebuildCCStore]]'s
     * posture, distance-valued: edge (or node) deletion can only
@@ -1116,29 +1069,22 @@ object Graph {
                            b: Column, storeDir: String,
                            deletedNodes: Option[DataFrame] = None,
                            maxDepth: Int = 6, filesOut: Int = 4)
-      : Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildLandmarkStore(batch)") {
+      : Long = {
     val spark = survivingEdges.sparkSession
-    val storedLms = landmarkStoreDistances(spark, storeDir)
-      .where(col("dist") === 0)
-      .select(col("lm"))
-    val pivots = deletedNodes match {
-      case Some(del) => storedLms.join(
-        del.select(col(del.columns.head).as("lm")), Seq("lm"),
-        "left_anti")
-      case None => storedLms
-    }
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    landmarkDistances(survivingEdges, a, b, maxDepth = maxDepth,
+    landmarkStore(storeDir).supersede(spark, "rebuildLandmarkStore(batch)",
+        filesOut) {
+      val storedLms = landmarkStoreDistances(spark, storeDir)
+        .where(col("dist") === 0)
+        .select(col("lm"))
+      val pivots = deletedNodes match {
+        case Some(del) => storedLms.join(
+          del.select(col(del.columns.head).as("lm")), Seq("lm"),
+          "left_anti")
+        case None => storedLms
+      }
+      landmarkDistances(survivingEdges, a, b, maxDepth = maxDepth,
         pivots = Some(pivots))
-      .select(col("id"), col("lm"), col("dist"), lit(tok).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"), col("lm"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
+    }
   }
 
   /** NODE2VEC biased walks (Grover & Leskovec, KDD 2016): like
@@ -1185,9 +1131,7 @@ object Graph {
     val (nodes, n) = Checkpoints.stageCount(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
-    val small = n <= broadcastLimit
-    def vSized(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     val prevEdge = e.select(col("src").as("__pu"),
       col("dst").as("__pc"), lit(true).as("__adj"))
     // walk state: (start, walk, step, prev, node); prev = -1 at step 0
@@ -1295,8 +1239,7 @@ object Graph {
       .union(p.select(col("context").as("id"))).distinct()
     val (idx, n) = Checkpoints.stageCount(Training.withPrefixSum(
       nodes, Seq(col("id")), lit(1L), "__idx"))
-    def vSized(df: DataFrame): DataFrame =
-      if (n <= broadcastLimit) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     p.select(col("center"), col("context"),
         explode(sequence(lit(0), lit(k - 1))).as("j"))
       .withColumn("__draw",
@@ -1311,6 +1254,11 @@ object Graph {
 
   // ---------- warm-start PageRank ----------
 
+  /** The PageRank store: id -> rank, newest batch wins. */
+  private[graft] def pageRankStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "pageRankStore", Seq("id" -> "bigint"),
+      Seq("rank" -> "bigint"), KeyedStore.NewestWins)
+
   /** Persist [[pageRank]]'s converged ranks as `batch=0` of an
     * incremental store (id-clustered (id, rank, __b) rows — the
     * label-store protocol), the warm-start base for
@@ -1321,18 +1269,11 @@ object Graph {
                          filesOut: Int = 4, dampNum: Long = 85,
                          dampDen: Long = 100, scale: Long = 1000000L,
                          broadcastLimit: Long = 4000000L): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writePageRankStore(batch)") {
-    pageRank(edges, src, dst, iters, dampNum, dampDen, scale,
+    pageRankStore(storeDir).writeBase(edges.sparkSession,
+        "writePageRankStore(batch)", filesOut) {
+      pageRank(edges, src, dst, iters, dampNum, dampDen, scale,
         broadcastLimit)
-      .select(col("id"), col("rank"), lit(0L).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
-    Stats.upsertManifest(edges.sparkSession, storeDir,
-      storeManifestPath(storeDir))
-  }
+    }
 
   /** RETRACTION for the PageRank store — the value-iteration twist
     * on [[rebuildCCStore]]'s posture: a warm restart from the stored
@@ -1350,37 +1291,16 @@ object Graph {
                            filesOut: Int = 4, dampNum: Long = 85,
                            dampDen: Long = 100, scale: Long = 1000000L,
                            broadcastLimit: Long = 4000000L): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildPageRankStore(batch)") {
-    val spark = survivingEdges.sparkSession
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    pageRank(survivingEdges, src, dst, iters, dampNum, dampDen, scale,
+    pageRankStore(storeDir).supersede(survivingEdges.sparkSession,
+        "rebuildPageRankStore(batch)", filesOut) {
+      pageRank(survivingEdges, src, dst, iters, dampNum, dampDen, scale,
         broadcastLimit)
-      .select(col("id"), col("rank"), lit(tok).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
-
-  private def prStoreView(spark: org.apache.spark.sql.SparkSession,
-                          storeDir: String,
-                          beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("id" -> "bigint", "rank" -> "bigint", "__b" -> "bigint"),
-        "pageRankStore")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("id"))
-      .agg(max(struct(col("__b"), col("rank"))).as("m"))
-      .select(col("id"), col("m.rank").as("rank"))
-  }
+    }
 
   /** The PageRank store's CURRENT ranks (newest batch wins per id). */
   def pageRankStoreRanks(spark: org.apache.spark.sql.SparkSession,
                          storeDir: String): DataFrame =
-    prStoreView(spark, storeDir, Long.MaxValue)
+    pageRankStore(storeDir).current(spark)
 
   /** WARM-START PageRank over an EVOLVED graph: power iteration on
     * the union edge list initialized from the STORED ranks (new nodes
@@ -1409,47 +1329,32 @@ object Graph {
                    storeDir: String, batchId: Long, rounds: Int = 2,
                    filesOut: Int = 4, dampNum: Long = 85,
                    dampDen: Long = 100, scale: Long = 1000000L,
-                   broadcastLimit: Long = 4000000L): DataFrame =
-    Stats.withWriterLease(allEdges.sparkSession, Seq(storeDir),
-        "pageRankWarm(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writePageRankStore base")
+                   broadcastLimit: Long = 4000000L): DataFrame = {
     val spark = allEdges.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "pageRankWarm")
-    val start = prStoreView(spark, storeDir, batchId)
-    val ranks = Checkpoints.stage(
-      pageRank(allEdges, src, dst, rounds, dampNum, dampDen, scale,
-        broadcastLimit, start = Some(start)))
-    ranks.select(col("id"), col("rank"), lit(batchId).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
-    Stats.upsertManifestFor(spark, storeDir,
-      storeManifestPath(storeDir), s"$storeDir/batch=$batchId")
-    // ranks is staged, so its data predates the overwrite safely
-    ranks
+    val store = pageRankStore(storeDir)
+    store.appending(spark, batchId, "pageRankWarm") {
+      val ranks = Checkpoints.stage(
+        pageRank(allEdges, src, dst, rounds, dampNum, dampDen, scale,
+          broadcastLimit, start = Some(store.view(spark, batchId))))
+      store.append(spark, "pageRankWarm(batch)", batchId, filesOut)(ranks)
+      // ranks is staged, so its data predates the overwrite safely
+      ranks
+    }
   }
 
   /** Fold the PageRank store's batches, newest winning per id. */
   def compactPageRankStore(spark: org.apache.spark.sql.SparkSession,
                            storeDir: String, filesOut: Int = 4)
       : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactPageRankStore(batch)") {
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      _.groupBy(col("id"))
-        .agg(max(struct(col("__b"), col("rank"))).as("m"))
-        .select(col("id"), col("m.rank").as("rank"),
-          col("m.__b").as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id")))
-    if (tok.isDefined)
-      Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
+    pageRankStore(storeDir).compact(spark, "compactPageRankStore(batch)",
+      filesOut)
 
   // ---------- warm-start HITS ----------
+
+  /** The HITS store: id -> (hub, auth), newest batch wins. */
+  private[graft] def hitsStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "hitsStore", Seq("id" -> "bigint"),
+      Seq("hub" -> "bigint", "auth" -> "bigint"), KeyedStore.NewestWins)
 
   /** Persist [[hits]]'s converged hub/auth vectors as `batch=0` of an
     * incremental store (id-clustered (id, hub, auth, __b) rows — the
@@ -1459,17 +1364,10 @@ object Graph {
                      iters: Int, storeDir: String, filesOut: Int = 4,
                      scale: Long = 1000000L,
                      broadcastLimit: Long = 4000000L): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeHitsStore(batch)") {
-    hits(edges, src, dst, iters, scale, broadcastLimit)
-      .select(col("id"), col("hub"), col("auth"), lit(0L).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
-    Stats.upsertManifest(edges.sparkSession, storeDir,
-      storeManifestPath(storeDir))
-  }
+    hitsStore(storeDir).writeBase(edges.sparkSession,
+        "writeHitsStore(batch)", filesOut) {
+      hits(edges, src, dst, iters, scale, broadcastLimit)
+    }
 
   /** RETRACTION for the HITS store — [[rebuildPageRankStore]]'s
     * posture and argument verbatim (a warm hub seed carries the
@@ -1480,37 +1378,15 @@ object Graph {
                        dst: Column, iters: Int, storeDir: String,
                        filesOut: Int = 4, scale: Long = 1000000L,
                        broadcastLimit: Long = 4000000L): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildHitsStore(batch)") {
-    val spark = survivingEdges.sparkSession
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    hits(survivingEdges, src, dst, iters, scale, broadcastLimit)
-      .select(col("id"), col("hub"), col("auth"), lit(tok).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
-
-  private def hitsStoreView(spark: org.apache.spark.sql.SparkSession,
-                            storeDir: String,
-                            beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("id" -> "bigint", "hub" -> "bigint", "auth" -> "bigint",
-          "__b" -> "bigint"), "hitsStore")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("id"))
-      .agg(max(struct(col("__b"), col("hub"), col("auth"))).as("m"))
-      .select(col("id"), col("m.hub").as("hub"),
-        col("m.auth").as("auth"))
-  }
+    hitsStore(storeDir).supersede(survivingEdges.sparkSession,
+        "rebuildHitsStore(batch)", filesOut) {
+      hits(survivingEdges, src, dst, iters, scale, broadcastLimit)
+    }
 
   /** The HITS store's CURRENT scores (newest batch wins per id). */
   def hitsStoreScores(spark: org.apache.spark.sql.SparkSession,
                       storeDir: String): DataFrame =
-    hitsStoreView(spark, storeDir, Long.MaxValue)
+    hitsStore(storeDir).current(spark)
 
   /** WARM-START HITS over an EVOLVED graph: power iteration on the
     * union edge list initialized from the STORED hub vector (new
@@ -1533,46 +1409,24 @@ object Graph {
   def hitsWarm(allEdges: DataFrame, src: Column, dst: Column,
                storeDir: String, batchId: Long, rounds: Int = 2,
                filesOut: Int = 4, scale: Long = 1000000L,
-               broadcastLimit: Long = 4000000L): DataFrame =
-    Stats.withWriterLease(allEdges.sparkSession, Seq(storeDir),
-        "hitsWarm(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeHitsStore base")
+               broadcastLimit: Long = 4000000L): DataFrame = {
     val spark = allEdges.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "hitsWarm")
-    val start = hitsStoreView(spark, storeDir, batchId)
-    val scores = Checkpoints.stage(
-      hits(allEdges, src, dst, rounds, scale, broadcastLimit,
-        start = Some(start)))
-    scores.select(col("id"), col("hub"), col("auth"),
-        lit(batchId).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
-    Stats.upsertManifestFor(spark, storeDir,
-      storeManifestPath(storeDir), s"$storeDir/batch=$batchId")
-    // scores is staged, so its data predates the overwrite safely
-    scores
+    val store = hitsStore(storeDir)
+    store.appending(spark, batchId, "hitsWarm") {
+      val scores = Checkpoints.stage(
+        hits(allEdges, src, dst, rounds, scale, broadcastLimit,
+          start = Some(store.view(spark, batchId))))
+      store.append(spark, "hitsWarm(batch)", batchId, filesOut)(scores)
+      // scores is staged, so its data predates the overwrite safely
+      scores
+    }
   }
 
   /** Fold the HITS store's batches, newest winning per id. */
   def compactHitsStore(spark: org.apache.spark.sql.SparkSession,
                        storeDir: String, filesOut: Int = 4)
       : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactHitsStore(batch)") {
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      _.groupBy(col("id"))
-        .agg(max(struct(col("__b"), col("hub"), col("auth"))).as("m"))
-        .select(col("id"), col("m.hub").as("hub"),
-          col("m.auth").as("auth"), col("m.__b").as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id")))
-    if (tok.isDefined)
-      Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
+    hitsStore(storeDir).compact(spark, "compactHitsStore(batch)", filesOut)
 
   /** DETERMINISTIC one-level Louvain (the modularity-gain label
     * update of Blondel et al., "Fast unfolding of communities in
@@ -1655,8 +1509,7 @@ object Graph {
     val n = nm.getLong(0)
     require(n > 0, "empty graph")
     val m2 = nm.getLong(1)
-    def vSized(df: DataFrame): DataFrame =
-      if (n <= broadcastLimit) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     val dec = "decimal(38,0)"
     // `start` WARM-STARTS the rounds from a stored assignment (the
     // [[louvainWarm]] contract): known ids keep their stored
@@ -1796,6 +1649,11 @@ object Graph {
 
   // ---------- warm-start Louvain ----------
 
+  /** The Louvain store: id -> community c, newest batch wins. */
+  private[graft] def louvainStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "louvainStore", Seq("id" -> "bigint"),
+      Seq("c" -> "bigint"), KeyedStore.NewestWins)
+
   /** Persist [[louvain]]'s assignment as `batch=0` of an incremental
     * store (id-clustered (id, c, __b) rows — the PageRank-store
     * protocol), the warm-start base for [[louvainWarm]].
@@ -1805,17 +1663,11 @@ object Graph {
                         filesOut: Int = 4,
                         weight: Option[Column] = None,
                         broadcastLimit: Long = 4000000L): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeLouvainStore(batch)") {
-    louvain(edges, a, b, rounds, weight, broadcastLimit)
-      .select(col("id"), col("community").as("c"), lit(0L).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
-    Stats.upsertManifest(edges.sparkSession, storeDir,
-      storeManifestPath(storeDir))
-  }
+    louvainStore(storeDir).writeBase(edges.sparkSession,
+        "writeLouvainStore(batch)", filesOut) {
+      louvain(edges, a, b, rounds, weight, broadcastLimit)
+        .withColumnRenamed("community", "c")
+    }
 
   /** RETRACTION for the Louvain store — [[rebuildPageRankStore]]'s
     * posture and argument (a warm assignment seed remembers the
@@ -1829,37 +1681,17 @@ object Graph {
                           filesOut: Int = 4,
                           weight: Option[Column] = None,
                           broadcastLimit: Long = 4000000L): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildLouvainStore(batch)") {
-    val spark = survivingEdges.sparkSession
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    louvain(survivingEdges, a, b, rounds, weight, broadcastLimit)
-      .select(col("id"), col("community").as("c"), lit(tok).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
-
-  private def louvainStoreView(
-      spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("id" -> "bigint", "c" -> "bigint", "__b" -> "bigint"),
-        "louvainStore")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("id"))
-      .agg(max(struct(col("__b"), col("c"))).as("m"))
-      .select(col("id"), col("m.c").as("c"))
-  }
+    louvainStore(storeDir).supersede(survivingEdges.sparkSession,
+        "rebuildLouvainStore(batch)", filesOut) {
+      louvain(survivingEdges, a, b, rounds, weight, broadcastLimit)
+        .withColumnRenamed("community", "c")
+    }
 
   /** The Louvain store's CURRENT assignment (newest batch wins). */
   def louvainStoreCommunities(
       spark: org.apache.spark.sql.SparkSession, storeDir: String)
       : DataFrame =
-    louvainStoreView(spark, storeDir, Long.MaxValue)
+    louvainStore(storeDir).current(spark)
 
   /** WARM-START Louvain over an EVOLVED graph: gain rounds on the
     * union edge list initialized from the STORED assignment (new
@@ -1877,45 +1709,26 @@ object Graph {
   def louvainWarm(allEdges: DataFrame, a: Column, b: Column,
                   storeDir: String, batchId: Long, rounds: Int = 1,
                   filesOut: Int = 4, weight: Option[Column] = None,
-                  broadcastLimit: Long = 4000000L): DataFrame =
-    Stats.withWriterLease(allEdges.sparkSession, Seq(storeDir),
-        "louvainWarm(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeLouvainStore base")
+                  broadcastLimit: Long = 4000000L): DataFrame = {
     val spark = allEdges.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "louvainWarm")
-    val start = louvainStoreView(spark, storeDir, batchId)
-    val asg = Checkpoints.stage(
-      louvain(allEdges, a, b, rounds, weight, broadcastLimit,
-        start = Some(start)))
-    asg.select(col("id"), col("community").as("c"),
-        lit(batchId).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
-    Stats.upsertManifestFor(spark, storeDir,
-      storeManifestPath(storeDir), s"$storeDir/batch=$batchId")
-    // asg is staged, so its data predates the overwrite safely
-    asg
+    val store = louvainStore(storeDir)
+    store.appending(spark, batchId, "louvainWarm") {
+      val asg = Checkpoints.stage(
+        louvain(allEdges, a, b, rounds, weight, broadcastLimit,
+          start = Some(store.view(spark, batchId))))
+      store.append(spark, "louvainWarm(batch)", batchId, filesOut)(
+        asg.withColumnRenamed("community", "c"))
+      // asg is staged, so its data predates the overwrite safely
+      asg
+    }
   }
 
   /** Fold the Louvain store's batches, newest winning per id. */
   def compactLouvainStore(spark: org.apache.spark.sql.SparkSession,
                           storeDir: String, filesOut: Int = 4)
       : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactLouvainStore(batch)") {
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      _.groupBy(col("id"))
-        .agg(max(struct(col("__b"), col("c"))).as("m"))
-        .select(col("id"), col("m.c").as("c"), col("m.__b").as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id")))
-    if (tok.isDefined)
-      Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
+    louvainStore(storeDir).compact(spark, "compactLouvainStore(batch)",
+      filesOut)
 
   /** Contract a weighted undirected graph by a community assignment:
     * edges fold to their endpoint communities (canonical order,
@@ -1996,9 +1809,7 @@ object Graph {
         .union(sym.select(col("dst").as("id")))
         .union(sd.select(col("id")))
         .distinct())
-    val small = n <= broadcastLimit
-    def vSized(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     var labels = Checkpoints.stage(
       nodes.join(vSized(sd), Seq("id"), "left")
         .select(col("id"), col("__seed").as("label"),
@@ -2033,27 +1844,18 @@ object Graph {
 
   // ---------- warm-start incremental label propagation ----------
 
-  /** The persisted label state, ALL rounds merged in one pass:
-    * committed store rows from batches BEFORE `beforeBatch` (a retry
-    * of batch b must never read its own prior attempt's rows), newest
-    * batch wins per (round, id). The argmax rides
-    * max(struct(__b, label)) — batch ids are unique per (round, id),
-    * so the label field never decides. ONE aggregate serves every
-    * round's reads (callers stage the result and filter per round —
+  /** The label store: every round's (__round, id) -> label state,
+    * newest batch wins per (round, id) — batch ids are unique per
+    * (round, id), so the label field never decides. Its view merges ALL
+    * rounds in one aggregate (callers stage it and filter per round —
     * three per-round aggregates over a mostly-history store cost more
-    * than the whole frontier recompute).
+    * than the whole frontier recompute). No manifest: reads are
+    * round-sliced, never key-probed. The label type follows the corpus.
     */
-  private def labelStateAll(spark: org.apache.spark.sql.SparkSession,
-                            storeDir: String,
-                            beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("__round" -> "int", "id" -> "bigint",
-          "label" -> "*", "__b" -> "bigint"), "labelStore")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("__round"), col("id"))
-      .agg(max(struct(col("__b"), col("label"))).as("m"))
-      .select(col("__round"), col("id"), col("m.label").as("label"))
-  }
+  private[graft] def labelStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "labelStore",
+      Seq("__round" -> "int", "id" -> "bigint"), Seq("label" -> "*"),
+      KeyedStore.NewestWins, manifest = false)
 
   /** Run [[labelPropagation]] and persist EVERY round's (id, label)
     * state — not just the final one — as `batch=0` of a label store.
@@ -2071,14 +1873,10 @@ object Graph {
                       iters: Int, storeDir: String,
                       filesOut: Int = 4,
                       broadcastLimit: Long = 4000000L): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeLabelState(batch)") {
+    labelStore(storeDir).writeBase(edges.sparkSession,
+        "writeLabelState(batch)", filesOut) {
       labelStateRoundSlices(edges, a, b, seeds, seedId, seedLabel,
-          iters, broadcastLimit, bTok = 0L)
-        .repartitionByRange(filesOut, col("__round"), col("id"))
-        .sortWithinPartitions(col("__round"), col("id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$storeDir/batch=0")
+        iters, broadcastLimit)
     }
 
   /** RETRACTION for the label-propagation state store — the
@@ -2096,23 +1894,16 @@ object Graph {
                         seedId: Column, seedLabel: Column, iters: Int,
                         storeDir: String, filesOut: Int = 4,
                         broadcastLimit: Long = 4000000L): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildLabelState(batch)") {
-    val spark = survivingEdges.sparkSession
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    labelStateRoundSlices(survivingEdges, a, b, survivingSeeds,
-        seedId, seedLabel, iters, broadcastLimit, bTok = tok)
-      .repartitionByRange(filesOut, col("__round"), col("id"))
-      .sortWithinPartitions(col("__round"), col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    tok
-  }
+    labelStore(storeDir).supersede(survivingEdges.sparkSession,
+        "rebuildLabelState(batch)", filesOut) {
+      labelStateRoundSlices(survivingEdges, a, b, survivingSeeds,
+        seedId, seedLabel, iters, broadcastLimit)
+    }
 
   private def labelStateRoundSlices(
       edges: DataFrame, a: Column, b: Column, seeds: DataFrame,
       seedId: Column, seedLabel: Column, iters: Int,
-      broadcastLimit: Long, bTok: Long): DataFrame = {
+      broadcastLimit: Long): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // the labelPropagation loop, with each round's staged labels kept
     // (sym pre-partitioned on dst for the exchange-free vote path,
@@ -2132,8 +1923,7 @@ object Graph {
         .union(sym.select(col("dst").as("id")))
         .union(sd.select(col("id")))
         .distinct())
-    def vSized(df: DataFrame): DataFrame =
-      if (n <= broadcastLimit) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     var labels = Checkpoints.stage(
       nodes.join(vSized(sd), Seq("id"), "left")
         .select(col("id"), col("__seed").as("label"),
@@ -2158,7 +1948,7 @@ object Graph {
           col("__fixed"))
       labels = Checkpoints.stage(next)
       rounds += labels.select(lit(it + 1).as("__round"), col("id"),
-        col("label"), lit(bTok).as("__b"))
+        col("label"))
       it += 1
     }
     rounds.reduce(_ unionByName _)
@@ -2205,14 +1995,11 @@ object Graph {
                                   seedLabel: Column, iters: Int,
                                   storeDir: String, batchId: Long,
                                   broadcastLimit: Long = 4000000L)
-      : DataFrame =
-    Stats.withWriterLease(allEdges.sparkSession, Seq(storeDir),
-        "labelPropagationIncremental(batch)") {
+      : DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    require(batchId >= 1L, "batchId 0 is the writeLabelState base")
     val spark = allEdges.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "labelPropagationIncremental")
+    val store = labelStore(storeDir)
+    store.appending(spark, batchId, "labelPropagationIncremental") {
     val e0 = allEdges.select(a.as("src"), b.as("dst"))
     // pre-partitioned on dst for the exchange-free vote aggregates,
     // as in [[labelPropagation]]
@@ -2226,8 +2013,6 @@ object Graph {
       seeds.select(seedId.as("id"), seedLabel.as("__seed"))
         .where(col("__seed").isNotNull)
         .groupBy(col("id")).agg(max(col("__seed")).as("__seed")))
-    def gated(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastLimit) broadcast(df) else df
     // dirty_1: endpoints of the new edges (new nodes arrive only here)
     var (dirty, nDirty) = Checkpoints.stageCount(
       en.select(col("src").as("id"))
@@ -2235,8 +2020,7 @@ object Graph {
         .distinct())
     // the persisted state, merged ONCE for all rounds and staged —
     // every per-round read below is a filter on this
-    val state = Checkpoints.stage(
-      labelStateAll(spark, storeDir, batchId))
+    val state = Checkpoints.stage(store.view(spark, batchId))
     // round-0 labels are the seed labels — no store read needed
     var prevSlice: DataFrame = null // labels of dirty_{r-1}
     val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -2249,23 +2033,23 @@ object Graph {
         if (r == 1) sd.select(col("id"), col("__seed").as("label"))
         else state.where(col("__round") === (r - 1))
           .select(col("id"), col("label"))
-          .join(gated(dirty.select(col("id")), nDirty), Seq("id"),
-            "left_anti")
+          .join(gate(nDirty, broadcastLimit)(dirty.select(col("id"))),
+            Seq("id"), "left_anti")
           .unionByName(prevSlice)
       // frontier for THIS round: last round's dirty set plus its
       // neighbors (their votes read a changed label)
       val (dirtyNow, nNow) =
         if (r == 1) (dirty, nDirty)
         else Checkpoints.stageCount(
-          sym.join(gated(dirty.select(col("id").as("src")), nDirty),
-              Seq("src"), "left_semi")
+          sym.join(gate(nDirty, broadcastLimit)(
+              dirty.select(col("id").as("src"))), Seq("src"), "left_semi")
             .select(col("dst").as("id"))
             .union(dirty.select(col("id")))
             .distinct())
       // votes only for dirty nodes: edge scan pruned to edges INTO the
       // frontier, labels joined on the source side
       val votes = sym
-        .join(gated(dirtyNow.select(col("id").as("dst")), nNow),
+        .join(gate(nNow, broadcastLimit)(dirtyNow.select(col("id").as("dst"))),
           Seq("dst"), "left_semi")
         .join(prevLabels.where(col("label").isNotNull)
           .select(col("id").as("src"), col("label").as("__l")),
@@ -2278,21 +2062,21 @@ object Graph {
       // current (round r-1) labels of the dirty nodes themselves
       val cur =
         if (r == 1)
-          dirty.join(gated(sd, nSd), Seq("id"), "left")
+          dirty.join(gate(nSd, broadcastLimit)(sd), Seq("id"), "left")
             .select(col("id"), col("__seed").as("__cur"))
         else dirtyNow
           .join(prevLabels.select(col("id"), col("label").as("__cur")),
             Seq("id"), "left")
           .select(col("id"), col("__cur"))
       val slice = Checkpoints.stage(cur
-        .join(gated(votes, nNow), Seq("id"), "left")
-        .join(gated(sd, nNow), Seq("id"), "left")
+        .join(gate(nNow, broadcastLimit)(votes), Seq("id"), "left")
+        .join(gate(nNow, broadcastLimit)(sd), Seq("id"), "left")
         .select(col("id"),
           when(col("__seed").isNotNull, col("__seed"))
             .otherwise(coalesce(col("__nl"), col("__cur")))
             .as("label")))
       slices += slice.select(lit(r).as("__round"), col("id"),
-        col("label"), lit(batchId).as("__b"))
+        col("label"))
       prevSlice = slice
       dirty = dirtyNow
       nDirty = nNow
@@ -2301,19 +2085,16 @@ object Graph {
     // persist the frontier slices (overwrite-idempotent batch append —
     // frontier-sized, never |V|-sized); the state view reads only
     // batches < batchId, so the result below is retry-stable
-    slices.reduce(_ unionByName _)
-      .repartitionByRange(1, col("__round"), col("id"))
-      .sortWithinPartitions(col("__round"), col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
+    store.append(spark, "labelPropagationIncremental(batch)", batchId, 1)(
+      slices.reduce(_ unionByName _))
     // final view off the STAGED state (materialized before the write,
     // so a retry's overwrite cannot invalidate its file listing)
     state.where(col("__round") === iters)
       .select(col("id"), col("label"))
-      .join(gated(dirty.select(col("id")), nDirty), Seq("id"),
+      .join(gate(nDirty, broadcastLimit)(dirty.select(col("id"))), Seq("id"),
         "left_anti")
       .unionByName(prevSlice.select(col("id"), col("label")))
-  }
+  }}
 
   /** The label store's CURRENT (id, label) state at `round` (rounds
     * are 1-based; pass the run's `iters` for the final labels) — the
@@ -2322,7 +2103,7 @@ object Graph {
     */
   def labelStoreLabels(spark: org.apache.spark.sql.SparkSession,
                        storeDir: String, round: Int): DataFrame =
-    labelStateAll(spark, storeDir, Long.MaxValue)
+    labelStore(storeDir).current(spark)
       .where(col("__round") === round)
       .select(col("id"), col("label"))
 
@@ -2333,16 +2114,8 @@ object Graph {
   def compactLabelState(spark: org.apache.spark.sql.SparkSession,
                         storeDir: String, filesOut: Int = 4)
       : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactLabelState(batch)") {
-      Stats.compactCommittedStore(spark, storeDir,
-        _.groupBy(col("__round"), col("id"))
-          .agg(max(struct(col("__b"), col("label"))).as("m"))
-          .select(col("__round"), col("id"), col("m.label").as("label"),
-            col("m.__b").as("__b"))
-          .repartitionByRange(filesOut, col("__round"), col("id"))
-          .sortWithinPartitions(col("__round"), col("id")))
-    }
+    labelStore(storeDir).compact(spark, "compactLabelState(batch)",
+      filesOut)
 
   /** Per-node triangle counts over an undirected edge list — the local
     * clustering signal of a near-dup graph: a candidate edge whose
@@ -2383,8 +2156,7 @@ object Graph {
       .unionAll(e.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
     val (degS, n) = Checkpoints.stageCount(deg)
-    def vSized(df: DataFrame): DataFrame =
-      if (n <= broadcastLimit) broadcast(df) else df
+    val vSized = gate(n, broadcastLimit) _
     // orient from the (degree, id)-smaller endpoint
     val oriented = Checkpoints.stage(e
       .join(vSized(degS.select(col("id").as("u"), col("d").as("du"))),
@@ -2426,27 +2198,13 @@ object Graph {
 
   // ---------- incremental triangle counts ----------
 
-  /** Sibling footer-manifest path for a gen=/batch= graph store — the
-    * BM25-index convention (`postings` + `postings_manifest`): outside
-    * the store root so the manifest's own parquet never pollutes the
-    * store's recursive listings.
+  /** The triangle store: id -> n_tri, newest batch wins, with the
+    * sibling footer manifest so warm-start batches open only
+    * touched-id files.
     */
-  private def storeManifestPath(storeDir: String): String =
-    storeDir.stripSuffix("/") + "_manifest"
-
-  /** The store's committed view opened ONLY on the files the probe id
-    * set can live in ([[Stats.readTouchedKeysUnder]] over the
-    * id-clustered batch/gen layout). File-granular superset of the
-    * probed ids' rows — every row of a probed id survives pruning, so
-    * per-id newest-wins folds over the pruned set are exact; callers
-    * keep their row-level filters. Absent manifest = full view.
-    */
-  private def prunedStoreView(spark: org.apache.spark.sql.SparkSession,
-                              storeDir: String, keyCol: String,
-                              probes: DataFrame): DataFrame =
-    Stats.readTouchedKeysUnder(spark,
-      Stats.committedViewDirs(spark, storeDir),
-      storeManifestPath(storeDir), keyCol, probes)
+  private[graft] def triangleStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "triangleStore", Seq("id" -> "bigint"),
+      Seq("n_tri" -> "bigint"), KeyedStore.NewestWins)
 
   /** Persist [[triangleCounts]]' per-node totals as `batch=0` of an
     * incremental store (id-clustered (id, n_tri, __b) rows — the
@@ -2456,29 +2214,10 @@ object Graph {
   def writeTriangleStore(edges: DataFrame, a: Column, b: Column,
                          storeDir: String, filesOut: Int = 4,
                          broadcastLimit: Long = 4000000L): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeTriangleStore(batch)") {
-    triangleCounts(edges, a, b, broadcastLimit)
-      .select(col("id"), col("n_tri"), lit(0L).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
-    Stats.upsertManifest(edges.sparkSession, storeDir,
-      storeManifestPath(storeDir))
-  }
-
-  private def triangleStoreView(spark: org.apache.spark.sql.SparkSession,
-                                storeDir: String,
-                                beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("id" -> "bigint", "n_tri" -> "bigint", "__b" -> "bigint"),
-        "triangleStore")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("id"))
-      .agg(max(struct(col("__b"), col("n_tri"))).as("m"))
-      .select(col("id"), col("m.n_tri").as("n_tri"))
-  }
+    triangleStore(storeDir).writeBase(edges.sparkSession,
+        "writeTriangleStore(batch)", filesOut) {
+      triangleCounts(edges, a, b, broadcastLimit)
+    }
 
   /** The triangle store's CURRENT per-node totals (newest committed
     * batch wins per id); the read the streaming gate's consumers (and
@@ -2486,16 +2225,14 @@ object Graph {
     */
   def triangleStoreCounts(spark: org.apache.spark.sql.SparkSession,
                           storeDir: String): DataFrame =
-    triangleStoreView(spark, storeDir, Long.MaxValue)
+    triangleStore(storeDir).current(spark)
 
   /** Snapshot read of the triangle store as of batch `asOf` — same
     * contract and retention trade as [[ccStoreLabelsAsOf]].
     */
   def triangleStoreCountsAsOf(spark: org.apache.spark.sql.SparkSession,
-                              storeDir: String, asOf: Long): DataFrame = {
-    require(asOf >= 0L, "asOf is a committed batch id")
-    triangleStoreView(spark, storeDir, asOf + 1)
-  }
+                              storeDir: String, asOf: Long): DataFrame =
+    triangleStore(storeDir).asOf(spark, asOf)
 
   /** WARM-START triangle counting: per-node totals over the UNION
     * graph, counting ONLY the triangles a new edge creates — old
@@ -2536,13 +2273,10 @@ object Graph {
                                 nb: Column, storeDir: String,
                                 batchId: Long,
                                 broadcastLimit: Long = 4000000L)
-      : DataFrame =
-    Stats.withWriterLease(allEdges.sparkSession, Seq(storeDir),
-        "triangleCountsIncremental(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeTriangleStore base")
+      : DataFrame = {
     val spark = allEdges.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "triangleCountsIncremental")
+    val store = triangleStore(storeDir)
+    store.appending(spark, batchId, "triangleCountsIncremental") {
     def canon(df: DataFrame, x: Column, y: Column): DataFrame =
       df.select(least(x, y).as("u"), greatest(x, y).as("v"))
         .where(col("u") =!= col("v"))
@@ -2554,8 +2288,7 @@ object Graph {
     val all =
       if (allEdges eq newEdges) n
       else Checkpoints.stage(canon(allEdges, a, b))
-    def gated(df: DataFrame): DataFrame =
-      if (nCnt <= broadcastLimit) broadcast(df) else df
+    val gated = gate(nCnt, broadcastLimit) _
     val old = all.join(n, Seq("u", "v"), "left_anti")
     val tagged = old.withColumn("__new", lit(false))
       .unionByName(n.withColumn("__new", lit(true)))
@@ -2592,11 +2325,8 @@ object Graph {
     // never a |V|-sized side. Newest-wins is exact over the pruned
     // set: pruning keeps EVERY file a probed id can live in, so every
     // one of its rows survives
-    val prior = prunedStoreView(spark, storeDir, "id", touched)
-      .where(col("__b") < batchId)
-      .groupBy(col("id"))
-      .agg(max(struct(col("__b"), col("n_tri"))).as("m"))
-      .select(col("id"), col("m.n_tri").as("n_tri"))
+    val prior = store.foldRows(store.pruned(spark, "id", touched),
+      batchId)
     val priorTouched = prior.join(gated(touched), Seq("id"), "left_semi")
     val slice = Checkpoints.stage(touched
       .join(priorTouched, Seq("id"), "left")
@@ -2604,25 +2334,17 @@ object Graph {
       .select(col("id"),
         (coalesce(col("n_tri"), lit(0L)) + coalesce(col("__d"), lit(0L)))
           .as("n_tri")))
-    slice.select(col("id"), col("n_tri"), lit(batchId).as("__b"))
-      .repartitionByRange(1, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
-    Stats.upsertManifestFor(spark, storeDir, storeManifestPath(storeDir),
-      s"$storeDir/batch=$batchId")
+    store.append(spark, "triangleCountsIncremental(batch)", batchId, 1)(
+      slice)
     // the returned view is REBUILT after the write: a retry's
     // overwrite of batch=<id> invalidates any file listing captured
     // before it (slice itself is staged, so its data predates the
     // overwrite safely)
-    triangleStoreView(spark, storeDir, batchId)
+    store.view(spark, batchId)
       .join(gated(touched), Seq("id"), "left_anti")
       .unionByName(slice)
-  }
+  }}
 
-  /** Fold the triangle store's delta batches, newest batch winning per
-    * id — the OPTIMIZE cycle every incremental store here carries.
-    */
   /** RETRACTION for the triangle store — [[rebuildCCStore]]'s posture
     * on the count form: deletion DECREASES per-node triangle counts,
     * which the create-only incremental form cannot absorb, so the
@@ -2635,36 +2357,19 @@ object Graph {
                            b: Column, storeDir: String,
                            filesOut: Int = 4,
                            broadcastLimit: Long = 4000000L): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildTriangleStore(batch)") {
-    val spark = survivingEdges.sparkSession
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    triangleCounts(survivingEdges, a, b, broadcastLimit)
-      .select(col("id"), col("n_tri"), lit(tok).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
+    triangleStore(storeDir).supersede(survivingEdges.sparkSession,
+        "rebuildTriangleStore(batch)", filesOut) {
+      triangleCounts(survivingEdges, a, b, broadcastLimit)
+    }
 
+  /** Fold the triangle store's delta batches, newest batch winning per
+    * id — the OPTIMIZE cycle every incremental store here carries.
+    */
   def compactTriangleStore(spark: org.apache.spark.sql.SparkSession,
                            storeDir: String, filesOut: Int = 4)
       : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactTriangleStore(batch)") {
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      _.groupBy(col("id"))
-        .agg(max(struct(col("__b"), col("n_tri"))).as("m"))
-        .select(col("id"), col("m.n_tri").as("n_tri"),
-          col("m.__b").as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id")))
-    if (tok.isDefined)
-      Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
+    triangleStore(storeDir).compact(spark, "compactTriangleStore(batch)",
+      filesOut)
 
   /** [[connectedComponents]] for ARBITRARY key types (URLs, source
     * names, entity strings): endpoints are densely re-labeled through
@@ -2690,7 +2395,7 @@ object Graph {
       Training.withPrefixSum(vocab, Seq(col("__cat")), lit(1L),
         "__code"))
     val side =
-      if (nVocab <= broadcastLimit) broadcast(coded) else coded
+      gate(nVocab, broadcastLimit)(coded)
     val codedEdges = e
       .join(side.select(col("__cat").as("ga"),
         col("__code").as("ca")), Seq("ga"))
@@ -2741,11 +2446,10 @@ object Graph {
     var (nodes, n) = Checkpoints.stageCount(
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
         .distinct())
-    def vSized(df: DataFrame): DataFrame =
-      if (n <= broadcastLimit) broadcast(df) else df
     var it = 0
     var converged = false
     while (it < maxRounds && !converged && n > 0) {
+      val vSized = gate(n, broadcastLimit) _
       val live = e
         .join(vSized(nodes.select(col("id").as("u"))), Seq("u"),
           "left_semi")
@@ -2852,9 +2556,7 @@ object Graph {
     // frontiers, retirement sets): below the gate every per-round
     // join is a broadcast hash join — an AQE exchange stage is its
     // own JOB, so each removed exchange removes a per-round barrier
-    val small = nAll <= broadcastLimit
-    def gated(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    val gated = gate(nAll, broadcastLimit) _
     // FB-retired SCCs only. Trim-retired and edge-drained nodes are
     // singleton SCCs by construction, filled in ONCE at the end via
     // allNodes ∖ (FB-found) — the per-trim-layer staged singleton
@@ -3135,11 +2837,55 @@ object Graph {
                      storeDir: String, maxInner: Int = 0): DataFrame = {
     val asg = Checkpoints.stage(sccStoreAssign(spark, storeDir))
     val ce = Checkpoints.stage(
-      sccCedgesView(spark, storeDir, Long.MaxValue, asg))
+      sccCondensed(sccCedgesStore(storeDir).current(spark), asg))
     condensationLevels(asg, ce, maxInner)
   }
 
   // ---------- incremental strongly connected components ----------
+
+  /** The SCC store's two roots, one family leased on `storeDir`, no
+    * manifests: `assign` (id -> scc, newest batch wins) and `cedges`,
+    * the condensation's cross-SCC (src, dst) edges as a set whose
+    * compaction keeps each edge's EARLIEST batch — relabeling is left to
+    * read time, since folding post-batch labels into older rows would
+    * break a retried batch's strictly-before view; stale rows only cost
+    * the read-time mapping join ([[sccCondensed]]).
+    */
+  private[graft] def sccAssignStore(storeDir: String): KeyedStore =
+    KeyedStore(s"$storeDir/assign", "sccStore/assign",
+      Seq("id" -> "bigint"), Seq("scc" -> "bigint"), KeyedStore.NewestWins,
+      manifest = false, leaseRoot = storeDir)
+
+  private[graft] def sccCedgesStore(storeDir: String): KeyedStore =
+    KeyedStore(s"$storeDir/cedges", "sccStore/cedges",
+      Seq("src" -> "bigint", "dst" -> "bigint"), Nil,
+      KeyedStore.EarliestBatch, cluster = Seq("src"), manifest = false,
+      leaseRoot = storeDir)
+
+  // edges mapped through an (id, scc) assignment: the distinct
+  // cross-SCC (src, dst) pairs, every endpoint a node id
+  private def sccCondensed(e: DataFrame, asg: DataFrame): DataFrame =
+    e.join(asg.select(col("id").as("src"), col("scc").as("__ca")),
+        Seq("src"))
+      .join(asg.select(col("id").as("dst"), col("scc").as("__cb")),
+        Seq("dst"))
+      .where(col("__ca") =!= col("__cb"))
+      .select(col("__ca").as("src"), col("__cb").as("dst"))
+      .distinct()
+
+  // the SCC store's full content over an edge list: the staged (id, scc)
+  // assignment and the condensation's cross-SCC edges
+  private def sccState(edges: DataFrame, src: Column, dst: Column)
+      : (DataFrame, DataFrame) = {
+    val e0 = Checkpoints.stage(
+      edges.select(src.cast("long").as("src"),
+          dst.cast("long").as("dst"))
+        .where(col("src") =!= col("dst"))
+        .distinct())
+    val asg = Checkpoints.stage(
+      stronglyConnectedComponents(e0, col("src"), col("dst")))
+    (asg, sccCondensed(e0, asg))
+  }
 
   /** Persist [[stronglyConnectedComponents]]' (id, scc) assignment
     * PLUS the condensation's cross-SCC edges as `batch=0` of an
@@ -3153,45 +2899,15 @@ object Graph {
     * pattern, directed.
     */
   def writeSccStore(edges: DataFrame, src: Column, dst: Column,
-                    storeDir: String, filesOut: Int = 1): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeSccStore(batch)") {
-    val e0 = Checkpoints.stage(
-      edges.select(src.cast("long").as("src"),
-          dst.cast("long").as("dst"))
-        .where(col("src") =!= col("dst"))
-        .distinct())
-    val asg = Checkpoints.stage(
-      stronglyConnectedComponents(e0, col("src"), col("dst")))
-    asg.select(col("id"), col("scc"), lit(0L).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/assign/batch=0")
-    e0.join(asg.select(col("id").as("src"), col("scc").as("__ca")),
-        Seq("src"))
-      .join(asg.select(col("id").as("dst"), col("scc").as("__cb")),
-        Seq("dst"))
-      .where(col("__ca") =!= col("__cb"))
-      .select(col("__ca").as("src"), col("__cb").as("dst"))
-      .distinct()
-      .withColumn("__b", lit(0L))
-      .repartitionByRange(filesOut, col("src"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/cedges/batch=0")
+                    storeDir: String, filesOut: Int = 1): Unit = {
+    val (spark, owner) = (edges.sparkSession, "writeSccStore(batch)")
+    val assign = sccAssignStore(storeDir)
+    assign.leased(spark, owner) {
+      val (asg, cedges) = sccState(edges, src, dst)
+      assign.writeBase(spark, owner, filesOut)(asg)
+      sccCedgesStore(storeDir).writeBase(spark, owner, filesOut)(cedges)
+    }
   }
-
-  private def sccAssignView(spark: org.apache.spark.sql.SparkSession,
-                            storeDir: String,
-                            beforeBatch: Long): DataFrame =
-    Stats.openCommittedStore(spark, s"$storeDir/assign",
-        Seq("id" -> "bigint", "scc" -> "bigint", "__b" -> "bigint"),
-        "sccStore/assign")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("id"))
-      .agg(max(struct(col("__b"), col("scc"))).as("m"))
-      .select(col("id"), col("m.scc").as("scc"))
 
   /** The SCC store's CURRENT (id, scc) assignment — newest wins per
     * id (scc = min member id of the merged component, maintained
@@ -3199,7 +2915,7 @@ object Graph {
     */
   def sccStoreAssign(spark: org.apache.spark.sql.SparkSession,
                      storeDir: String): DataFrame =
-    sccAssignView(spark, storeDir, Long.MaxValue)
+    sccAssignStore(storeDir).current(spark)
 
   /** The store's condensation edges under the CURRENT assignment:
     * stored rows may carry stale labels (their endpoints were SCC
@@ -3210,23 +2926,8 @@ object Graph {
     */
   def sccStoreCondensation(spark: org.apache.spark.sql.SparkSession,
                            storeDir: String): DataFrame =
-    sccCedgesView(spark, storeDir, Long.MaxValue,
+    sccCondensed(sccCedgesStore(storeDir).current(spark),
       sccStoreAssign(spark, storeDir))
-
-  private def sccCedgesView(spark: org.apache.spark.sql.SparkSession,
-                            storeDir: String, beforeBatch: Long,
-                            asg: DataFrame): DataFrame =
-    Stats.openCommittedStore(spark, s"$storeDir/cedges",
-        Seq("src" -> "bigint", "dst" -> "bigint", "__b" -> "bigint"),
-        "sccStore/cedges")
-      .where(col("__b") < beforeBatch)
-      .join(asg.select(col("id").as("src"), col("scc").as("__ca")),
-        Seq("src"))
-      .join(asg.select(col("id").as("dst"), col("scc").as("__cb")),
-        Seq("dst"))
-      .where(col("__ca") =!= col("__cb"))
-      .select(col("__ca").as("src"), col("__cb").as("dst"))
-      .distinct()
 
   /** INCREMENTAL SCC — the directed warm start: contract the batch's
     * edges through the stored assignment (unseen endpoints are their
@@ -3249,23 +2950,18 @@ object Graph {
     */
   def sccIncremental(newEdges: DataFrame, src: Column, dst: Column,
                      storeDir: String, batchId: Long,
-                     broadcastLimit: Long = 4000000L): DataFrame =
-    Stats.withWriterLease(newEdges.sparkSession, Seq(storeDir),
-        "sccIncremental(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeSccStore base")
+                     broadcastLimit: Long = 4000000L): DataFrame = {
     val spark = newEdges.sparkSession
-    Stats.requireMonotoneBatch(spark,
-      Seq(s"$storeDir/assign", s"$storeDir/cedges"), batchId,
-      "sccIncremental")
+    val (assign, cedges) = (sccAssignStore(storeDir), sccCedgesStore(storeDir))
+    val owner = "sccIncremental(batch)"
+    assign.appending(spark, batchId, "sccIncremental", cedges) {
     val (en, nNew) = Checkpoints.stageCount(
       newEdges.select(src.cast("long").as("src"),
           dst.cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
         .distinct())
-    def gated(df: DataFrame): DataFrame =
-      if (nNew <= broadcastLimit) broadcast(df) else df
-    val stored = Checkpoints.stage(
-      sccAssignView(spark, storeDir, batchId))
+    val gated = gate(nNew, broadcastLimit) _
+    val stored = Checkpoints.stage(assign.view(spark, batchId))
     val ids = en.select(col("src").as("id"))
       .union(en.select(col("dst").as("id"))).distinct()
     val mapped = Checkpoints.stage(en
@@ -3277,7 +2973,7 @@ object Graph {
         coalesce(col("__cv"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct())
-    val superE = sccCedgesView(spark, storeDir, batchId, stored)
+    val superE = sccCondensed(cedges.view(spark, batchId), stored)
       .unionByName(mapped)
       .distinct()
     val superAsg = Checkpoints.stage(stronglyConnectedComponents(
@@ -3296,13 +2992,9 @@ object Graph {
       .join(gated(remap), col("id") === col("__old"), "left")
       .select(col("id"), coalesce(col("__new"), col("id")).as("scc"))
     val slice = Checkpoints.stage(newNodes.unionByName(losers))
-    slice.select(col("id"), col("scc"), lit(batchId).as("__b"))
-      .repartitionByRange(1, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/assign/batch=$batchId")
+    assign.append(spark, owner, batchId, 1)(slice)
     // the batch's own cross-SCC edges, under the POST-batch labels
-    mapped
+    cedges.append(spark, owner, batchId, 1)(mapped
       .join(gated(remap.select(col("__old").as("src"),
         col("__new").as("__ns"))), Seq("src"), "left")
       .join(gated(remap.select(col("__old").as("dst"),
@@ -3310,16 +3002,11 @@ object Graph {
       .select(coalesce(col("__ns"), col("src")).as("src"),
         coalesce(col("__nd"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .withColumn("__b", lit(batchId))
-      .repartitionByRange(1, col("src"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/cedges/batch=$batchId")
+      .distinct())
     stored
       .join(gated(slice.select(col("id"))), Seq("id"), "left_anti")
       .unionByName(slice.select(col("id"), col("scc")))
-  }
+  }}
 
   /** RETRACTION for the SCC store — the one maintenance direction
     * [[sccIncremental]] cannot absorb: edge (or node) DELETION can
@@ -3340,68 +3027,42 @@ object Graph {
     */
   def rebuildSccStore(survivingEdges: DataFrame, src: Column,
                       dst: Column, storeDir: String,
-                      filesOut: Int = 1): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildSccStore(batch)") {
-    val spark = survivingEdges.sparkSession
-    val tok = Stats.supersedingToken(spark,
-      Seq(s"$storeDir/assign", s"$storeDir/cedges"))
-    val e0 = Checkpoints.stage(
-      survivingEdges.select(src.cast("long").as("src"),
-          dst.cast("long").as("dst"))
-        .where(col("src") =!= col("dst"))
-        .distinct())
-    val asg = Checkpoints.stage(
-      stronglyConnectedComponents(e0, col("src"), col("dst")))
-    asg.select(col("id"), col("scc"), lit(tok).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/assign/gen=$tok")
-    e0.join(asg.select(col("id").as("src"), col("scc").as("__ca")),
-        Seq("src"))
-      .join(asg.select(col("id").as("dst"), col("scc").as("__cb")),
-        Seq("dst"))
-      .where(col("__ca") =!= col("__cb"))
-      .select(col("__ca").as("src"), col("__cb").as("dst"))
-      .distinct()
-      .withColumn("__b", lit(tok))
-      .repartitionByRange(filesOut, col("src"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/cedges/gen=$tok")
-    tok
+                      filesOut: Int = 1): Long = {
+    val (spark, owner) =
+      (survivingEdges.sparkSession, "rebuildSccStore(batch)")
+    val (assign, cedges) = (sccAssignStore(storeDir), sccCedgesStore(storeDir))
+    assign.leased(spark, owner) {
+      val tok = assign.supersedingToken(spark, cedges)
+      val (asg, ce) = sccState(survivingEdges, src, dst)
+      assign.writeGen(spark, owner, tok, filesOut)(asg)
+      cedges.writeGen(spark, owner, tok, filesOut)(ce)
+      tok
+    }
   }
 
   /** OPTIMIZE for the SCC store: assign folds newest-wins per id
     * (row-level `__b` kept — the retry-view contract), cedges fold to
-    * distinct rows keeping each edge's EARLIEST batch id (relabeling
-    * is deliberately left to read time: folding post-batch labels
-    * into older rows would break a retried batch's strictly-before
-    * view; stale rows only cost the read-time mapping join).
+    * distinct rows keeping each edge's EARLIEST batch id.
     */
   def compactSccStore(spark: org.apache.spark.sql.SparkSession,
                       storeDir: String, filesOut: Int = 1)
-      : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactSccStore(batch)") {
-    val tok = Stats.compactCommittedStore(spark, s"$storeDir/assign",
-      _.groupBy(col("id"))
-        .agg(max(struct(col("__b"), col("scc"))).as("m"))
-        .select(col("id"), col("m.scc").as("scc"),
-          col("m.__b").as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id")))
-    if (tok.isDefined)
-      Stats.compactCommittedStore(spark, s"$storeDir/cedges",
-        _.groupBy(col("src"), col("dst"))
-          .agg(min(col("__b")).as("__b"))
-          .repartitionByRange(filesOut, col("src"))
-          .sortWithinPartitions(col("src"), col("dst"))): Unit
-    tok
+      : Option[Long] = {
+    val owner = "compactSccStore(batch)"
+    val assign = sccAssignStore(storeDir)
+    assign.leased(spark, owner) {
+      val tok = assign.compact(spark, owner, filesOut)
+      if (tok.isDefined)
+        sccCedgesStore(storeDir).compact(spark, owner, filesOut): Unit
+      tok
+    }
   }
 
   // ---------- incremental connected components ----------
+
+  /** The CC store: id -> comp, newest batch wins, id-clustered. */
+  private[graft] def ccStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "ccStore", Seq("id" -> "bigint"),
+      Seq("comp" -> "bigint"), KeyedStore.NewestWins)
 
   /** The CC store's comp-clustered PROJECTION root — the same
     * (id, comp, __b) rows re-clustered by comp, so the losers lookup
@@ -3412,8 +3073,10 @@ object Graph {
     * lookup, so staleness costs reading, never correctness;
     * [[compactCCStore]] folds the staleness away.
     */
-  private def ccByCompDir(storeDir: String): String =
-    storeDir.stripSuffix("/") + "_bycomp"
+  private[graft] def ccByCompStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir.stripSuffix("/") + "_bycomp", "ccStore/bycomp",
+      Seq("id" -> "bigint"), Seq("comp" -> "bigint"),
+      KeyedStore.NewestWins, cluster = Seq("comp"), leaseRoot = storeDir)
 
   /** Persist [[connectedComponents]]' (id, comp) labeling as `batch=0`
     * of an incremental store (id-clustered, newest-batch-wins rows —
@@ -3421,30 +3084,19 @@ object Graph {
     * both sibling footer manifests.
     */
   def writeCCStore(edges: DataFrame, a: Column, b: Column,
-                   storeDir: String, filesOut: Int = 4): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeCCStore(batch)") {
-    val spark = edges.sparkSession
-    val labels = Checkpoints.stage(connectedComponents(edges, a, b)
-      .select(col("id"), col("comp"), lit(0L).as("__b")))
-    // projection FIRST, main store second: a committed main row must
-    // always have its projection mirror (loser-lookup completeness),
-    // so the main write is the commit point — a crash between the two
-    // leaves only an orphan projection batch, whose extra candidates
-    // the confirm step filters harmlessly
-    labels
-      .repartitionByRange(filesOut, col("comp"))
-      .sortWithinPartitions(col("comp"), col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${ccByCompDir(storeDir)}/batch=0")
-    labels
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    Stats.upsertManifest(spark, ccByCompDir(storeDir),
-      storeManifestPath(ccByCompDir(storeDir)))
+                   storeDir: String, filesOut: Int = 4): Unit = {
+    val (spark, owner) = (edges.sparkSession, "writeCCStore(batch)")
+    val main = ccStore(storeDir)
+    main.leased(spark, owner) {
+      val labels = Checkpoints.stage(connectedComponents(edges, a, b))
+      // projection FIRST, main store second: a committed main row must
+      // always have its projection mirror (loser-lookup completeness),
+      // so the main write is the commit point — a crash between the
+      // two leaves only an orphan projection batch, whose extra
+      // candidates the confirm step filters harmlessly
+      ccByCompStore(storeDir).writeBase(spark, owner, filesOut)(labels)
+      main.writeBase(spark, owner, filesOut)(labels)
+    }
   }
 
   /** RETRACTION for the CC store — [[rebuildSccStore]]'s posture,
@@ -3459,41 +3111,19 @@ object Graph {
     * batches continue above the generation (monotone-guarded).
     */
   def rebuildCCStore(survivingEdges: DataFrame, a: Column, b: Column,
-                     storeDir: String, filesOut: Int = 4): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildCCStore(batch)") {
-    val spark = survivingEdges.sparkSession
-    val byComp = ccByCompDir(storeDir)
-    val tok = Stats.supersedingToken(spark, Seq(storeDir, byComp))
-    val labels = Checkpoints.stage(
-      connectedComponents(survivingEdges, a, b)
-        .select(col("id"), col("comp"), lit(tok).as("__b")))
-    // projection first, main second — the writeCCStore commit order
-    labels
-      .repartitionByRange(filesOut, col("comp"))
-      .sortWithinPartitions(col("comp"), col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$byComp/gen=$tok")
-    labels
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    Stats.upsertManifest(spark, byComp, storeManifestPath(byComp))
-    tok
-  }
-
-  private def ccStoreView(spark: org.apache.spark.sql.SparkSession,
-                          storeDir: String,
-                          beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("id" -> "bigint", "comp" -> "bigint", "__b" -> "bigint"),
-        "ccStore")
-      .where(col("__b") < beforeBatch)
-      .groupBy(col("id"))
-      .agg(max(struct(col("__b"), col("comp"))).as("m"))
-      .select(col("id"), col("m.comp").as("comp"))
+                     storeDir: String, filesOut: Int = 4): Long = {
+    val (spark, owner) =
+      (survivingEdges.sparkSession, "rebuildCCStore(batch)")
+    val (main, byComp) = (ccStore(storeDir), ccByCompStore(storeDir))
+    main.leased(spark, owner) {
+      val tok = main.supersedingToken(spark, byComp)
+      val labels = Checkpoints.stage(
+        connectedComponents(survivingEdges, a, b))
+      // projection first, main second — the writeCCStore commit order
+      byComp.writeGen(spark, owner, tok, filesOut)(labels)
+      main.writeGen(spark, owner, tok, filesOut)(labels)
+      tok
+    }
   }
 
   /** The CC store's CURRENT (id, comp) labeling — the committed view
@@ -3502,7 +3132,7 @@ object Graph {
     */
   def ccStoreLabels(spark: org.apache.spark.sql.SparkSession,
                     storeDir: String): DataFrame =
-    ccStoreView(spark, storeDir, Long.MaxValue)
+    ccStore(storeDir).current(spark)
 
   /** SNAPSHOT read of the CC store: the (id, comp) labeling AS OF
     * batch `asOf` (batches ≤ asOf, newest wins per id) — the
@@ -3518,10 +3148,8 @@ object Graph {
     * Delta/Iceberg do).
     */
   def ccStoreLabelsAsOf(spark: org.apache.spark.sql.SparkSession,
-                        storeDir: String, asOf: Long): DataFrame = {
-    require(asOf >= 0L, "asOf is a committed batch id")
-    ccStoreView(spark, storeDir, asOf + 1)
-  }
+                        storeDir: String, asOf: Long): DataFrame =
+    ccStore(storeDir).asOf(spark, asOf)
 
   /** INCREMENTAL connected components — the truly sublinear warm
     * start: edge insertion only MERGES components, so a batch is
@@ -3555,20 +3183,17 @@ object Graph {
                                      batchId: Long,
                                      broadcastLimit: Long = 4000000L,
                                      smallStoreBytes: Long = 32L << 20)
-      : DataFrame =
-    Stats.withWriterLease(newEdges.sparkSession, Seq(storeDir),
-        "connectedComponentsIncremental(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeCCStore base")
+      : DataFrame = {
     val spark = newEdges.sparkSession
-    Stats.requireMonotoneBatch(spark,
-      Seq(storeDir, ccByCompDir(storeDir)), batchId,
-      "connectedComponentsIncremental")
+    val (main, byComp) = (ccStore(storeDir), ccByCompStore(storeDir))
+    val owner = "connectedComponentsIncremental(batch)"
+    main.appending(spark, batchId, "connectedComponentsIncremental",
+        byComp) {
     val (en, nNew) = Checkpoints.stageCount(
       newEdges.select(na.cast("long").as("u"), nb.cast("long").as("v"))
         .where(col("u") =!= col("v"))
         .distinct())
-    def gated(df: DataFrame): DataFrame =
-      if (nNew <= broadcastLimit) broadcast(df) else df
+    val gated = gate(nNew, broadcastLimit) _
     // relabel batch endpoints through the stored components; unknown
     // (new) nodes keep their own id — the store scan OPENS only the
     // files the batch endpoints can live in (sibling footer manifest
@@ -3582,21 +3207,13 @@ object Graph {
     // gate on MEASURED store bytes, as in kCoreIncremental: a small
     // store reads whole (fewer scheduler round trips than per-probe
     // pruning), a big one only by manifest-pruned probe.
-    val idPruner = Stats.keyPruner(spark,
-      Stats.committedViewDirs(spark, storeDir),
-      storeManifestPath(storeDir), "id")
+    val idPruner = main.keyPruner(spark, "id")
     val smallStore = idPruner.totalBytes <= smallStoreBytes
     def idProbeView(probe: DataFrame): DataFrame =
-      if (smallStore)
-        spark.read.parquet(
-          Stats.committedViewDirs(spark, storeDir): _*)
+      if (smallStore) spark.read.parquet(main.committedDirs(spark): _*)
       else idPruner.read(probe)
     val touchedState = Checkpoints.stage(
-      idProbeView(ids)
-        .where(col("__b") < batchId)
-        .groupBy(col("id"))
-        .agg(max(struct(col("__b"), col("comp"))).as("m"))
-        .select(col("id"), col("m.comp").as("comp"))
+      main.foldRows(idProbeView(ids), batchId)
         .join(gated(ids), Seq("id"), "left_semi"))
     val relabeled = en
       .join(gated(touchedState.select(col("id").as("u"),
@@ -3620,28 +3237,21 @@ object Graph {
     // staleness cost reading, never correctness; compaction folds it
     // away). Stores written before the projection existed fall back
     // to the id-clustered scan, and never grow a partial projection.
-    val byComp = ccByCompDir(storeDir)
-    val hasProjection = Stats.committedViewDirs(spark, byComp).nonEmpty
+    val hasProjection = byComp.committedDirs(spark).nonEmpty
     val losers =
       if (!hasProjection || smallStore)
-        ccStoreView(spark, storeDir, batchId)
+        main.view(spark, batchId)
           .join(gated(merged), col("comp") === col("__old"))
           .select(col("id"), col("__new").as("comp"))
       else {
         val loserComps = merged.select(col("__old").as("comp"))
         val candIds = Checkpoints.stage(
-          Stats.readTouchedKeysUnder(spark,
-              Stats.committedViewDirs(spark, byComp),
-              storeManifestPath(byComp), "comp", loserComps)
+          byComp.pruned(spark, "comp", loserComps)
             .where(col("__b") < batchId)
             .join(gated(loserComps), Seq("comp"), "left_semi")
             .select(col("id")).distinct())
-        idPruner.read(candIds)
-          .where(col("__b") < batchId)
-          .join(candIds, Seq("id"), "left_semi")
-          .groupBy(col("id"))
-          .agg(max(struct(col("__b"), col("comp"))).as("m"))
-          .select(col("id"), col("m.comp").as("comp"))
+        main.foldRows(idPruner.read(candIds)
+            .join(candIds, Seq("id"), "left_semi"), batchId)
           .join(gated(merged), col("comp") === col("__old"))
           .select(col("id"), col("__new").as("comp"))
       }
@@ -3660,34 +3270,19 @@ object Graph {
     // completeness — the main write is the commit point; an orphan
     // projection batch from a crash in between only adds candidates
     // the confirm step filters). A store without a projection base
-    // skips the mirror and stays on the fallback scan.
+    // skips the mirror and stays on the fallback scan. Manifest upkeep
+    // only in the big regime (stale manifests are sound — uncovered
+    // files always read — and compactCCStore restores full coverage);
+    // the PROJECTION batch itself is always appended: its completeness
+    // is a correctness invariant for future big-regime loser lookups,
+    // the manifest is only an index
     if (hasProjection)
-      slice.select(col("id"), col("comp"), lit(batchId).as("__b"))
-        .repartitionByRange(1, col("comp"))
-        .sortWithinPartitions(col("comp"), col("id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$byComp/batch=$batchId")
-    slice.select(col("id"), col("comp"), lit(batchId).as("__b"))
-      .repartitionByRange(1, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
-    // manifest upkeep only in the big regime (stale manifests are
-    // sound — uncovered files always read — and compactCCStore
-    // restores full coverage); the PROJECTION batch itself is always
-    // appended above: its completeness is a correctness invariant for
-    // future big-regime loser lookups, the manifest is only an index
-    if (!smallStore) {
-      if (hasProjection)
-        Stats.upsertManifestFor(spark, byComp, storeManifestPath(byComp),
-          s"$byComp/batch=$batchId")
-      Stats.upsertManifestFor(spark, storeDir,
-        storeManifestPath(storeDir), s"$storeDir/batch=$batchId")
-    }
-    ccStoreView(spark, storeDir, batchId)
+      byComp.append(spark, owner, batchId, 1, indexed = !smallStore)(slice)
+    main.append(spark, owner, batchId, 1, indexed = !smallStore)(slice)
+    main.view(spark, batchId)
       .join(gated(slice.select(col("id"))), Seq("id"), "left_anti")
       .unionByName(slice.select(col("id"), col("comp")))
-  }
+  }}
 
   /** Fold the CC store's delta batches, newest batch winning per id —
     * and fold the comp-clustered projection the same way (the per-id
@@ -3695,33 +3290,26 @@ object Graph {
     * manifests.
     */
   def compactCCStore(spark: org.apache.spark.sql.SparkSession,
-                     storeDir: String, filesOut: Int = 4): Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactCCStore(batch)") {
-    def currentRows(df: DataFrame): DataFrame =
-      df.groupBy(col("id"))
-        .agg(max(struct(col("__b"), col("comp"))).as("m"))
-        .select(col("id"), col("m.comp").as("comp"),
-          col("m.__b").as("__b"))
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      currentRows(_)
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id")))
-    if (tok.isDefined) {
-      val byComp = ccByCompDir(storeDir)
-      if (Stats.committedViewDirs(spark, byComp).nonEmpty) {
-        Stats.compactCommittedStore(spark, byComp,
-          currentRows(_)
-            .repartitionByRange(filesOut, col("comp"))
-            .sortWithinPartitions(col("comp"), col("id"))): Unit
-        Stats.upsertManifest(spark, byComp, storeManifestPath(byComp))
-      }
-      Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
+                     storeDir: String, filesOut: Int = 4)
+      : Option[Long] = {
+    val owner = "compactCCStore(batch)"
+    val main = ccStore(storeDir)
+    main.leased(spark, owner) {
+      val tok = main.compact(spark, owner, filesOut)
+      if (tok.isDefined)
+        ccByCompStore(storeDir).compact(spark, owner, filesOut): Unit
+      tok
     }
-    tok
   }
 
   // ---------- warm-start incremental k-core ----------
+
+  /** The k-core store: member ids, a monotone set — the view is the
+    * union of committed member deltas.
+    */
+  private[graft] def kCoreStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "kCoreStore", Seq("id" -> "bigint"), Nil,
+      KeyedStore.Membership)
 
   /** Persist [[kCore]]'s member set as `batch=0` of an incremental
     * store. Membership is MONOTONE under edge insertion (the k-core
@@ -3733,17 +3321,10 @@ object Graph {
                       storeDir: String, filesOut: Int = 4,
                       maxRounds: Int = 50,
                       broadcastLimit: Long = 4000000L): Unit =
-    Stats.withWriterLease(edges.sparkSession, Seq(storeDir),
-        "writeKCoreStore(batch)") {
-    kCore(edges, a, b, k, maxRounds, broadcastLimit)
-      .select(col("id"), lit(0L).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
-    Stats.upsertManifest(edges.sparkSession, storeDir,
-      storeManifestPath(storeDir))
-  }
+    kCoreStore(storeDir).writeBase(edges.sparkSession,
+        "writeKCoreStore(batch)", filesOut) {
+      kCore(edges, a, b, k, maxRounds, broadcastLimit)
+    }
 
   /** RETRACTION for the k-core store — the monotone-union twist on
     * [[rebuildCCStore]]'s posture: membership only GROWS under edge
@@ -3759,28 +3340,10 @@ object Graph {
                         b: Column, k: Int, storeDir: String,
                         filesOut: Int = 4, maxRounds: Int = 50,
                         broadcastLimit: Long = 4000000L): Long =
-    Stats.withWriterLease(survivingEdges.sparkSession, Seq(storeDir),
-        "rebuildKCoreStore(batch)") {
-    val spark = survivingEdges.sparkSession
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    kCore(survivingEdges, a, b, k, maxRounds, broadcastLimit)
-      .select(col("id"), lit(tok).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
-
-  private def kCoreStoreView(spark: org.apache.spark.sql.SparkSession,
-                             storeDir: String,
-                             beforeBatch: Long): DataFrame = {
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("id" -> "bigint", "__b" -> "bigint"), "kCoreStore")
-      .where(col("__b") < beforeBatch)
-      .select(col("id")).distinct()
-  }
+    kCoreStore(storeDir).supersede(survivingEdges.sparkSession,
+        "rebuildKCoreStore(batch)", filesOut) {
+      kCore(survivingEdges, a, b, k, maxRounds, broadcastLimit)
+    }
 
   /** The k-core store's CURRENT member set (union of committed member
     * deltas — membership is monotone); the read the streaming gate's
@@ -3788,7 +3351,7 @@ object Graph {
     */
   def kCoreStoreMembers(spark: org.apache.spark.sql.SparkSession,
                         storeDir: String): DataFrame =
-    kCoreStoreView(spark, storeDir, Long.MaxValue)
+    kCoreStore(storeDir).current(spark)
 
   /** Snapshot read of the k-core member set as of batch `asOf` —
     * membership is monotone, so (unlike the newest-wins stores) every
@@ -3797,10 +3360,8 @@ object Graph {
     * then. No retention trade here.
     */
   def kCoreStoreMembersAsOf(spark: org.apache.spark.sql.SparkSession,
-                            storeDir: String, asOf: Long): DataFrame = {
-    require(asOf >= 0L, "asOf is a committed batch id")
-    kCoreStoreView(spark, storeDir, asOf + 1)
-  }
+                            storeDir: String, asOf: Long): DataFrame =
+    kCoreStore(storeDir).asOf(spark, asOf)
 
   /** WARM-START k-core: the fixed-k core of the UNION graph, peeling
     * ONLY a candidate frontier — the persisted members never re-peel
@@ -3827,22 +3388,18 @@ object Graph {
                        k: Int, storeDir: String, batchId: Long,
                        maxRounds: Int = 50,
                        broadcastLimit: Long = 4000000L,
-                       smallStoreBytes: Long = 32L << 20): DataFrame =
-    Stats.withWriterLease(allEdges.sparkSession, Seq(storeDir),
-        "kCoreIncremental(batch)") {
+                       smallStoreBytes: Long = 32L << 20)
+      : DataFrame = {
     require(k >= 1, "k must be >= 1")
-    require(batchId >= 1L, "batchId 0 is the writeKCoreStore base")
     val spark = allEdges.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "kCoreIncremental")
+    val store = kCoreStore(storeDir)
+    store.appending(spark, batchId, "kCoreIncremental") {
     val e = Checkpoints.stage(
       allEdges.select(least(a, b).as("u"), greatest(a, b).as("v"))
         .where(col("u") =!= col("v"))
         .distinct())
     val en = newEdges.select(least(na, nb).as("u"),
       greatest(na, nb).as("v")).where(col("u") =!= col("v"))
-    def gated(df: DataFrame, sz: Long): DataFrame =
-      if (sz <= broadcastLimit) broadcast(df) else df
     // union-degree eligibility: only ≥ k-degree nodes can flip into
     // the core — computed from the input edge list (data-sized and
     // inherent: the union graph is an argument), staged once
@@ -3864,16 +3421,12 @@ object Graph {
     // caught the un-gated pruned shape at 143 scheduler round trips
     // per run (2.9× on x_kcore_incremental) — per-round pruning of a
     // megabyte-sized store is pure fixed cost.
-    val memberPruner = Stats.keyPruner(spark,
-      Stats.committedViewDirs(spark, storeDir),
-      storeManifestPath(storeDir), "id")
+    val memberPruner = store.keyPruner(spark, "id")
     val smallStore = memberPruner.totalBytes <= smallStoreBytes
     val oldCoreSmall: Option[DataFrame] =
       if (!smallStore) None
-      else Some(Checkpoints.stage(
-        spark.read.parquet(Stats.committedViewDirs(spark, storeDir): _*)
-          .where(col("__b") < batchId)
-          .select(col("id")).distinct()))
+      else Some(Checkpoints.stage(store.foldRows(
+        spark.read.parquet(store.committedDirs(spark): _*), batchId)))
     def memberOf(probe: DataFrame): DataFrame = oldCoreSmall match {
       case Some(oc) =>
         probe.join(broadcast(oc), Seq("id"), "left_semi")
@@ -3905,10 +3458,11 @@ object Graph {
     var it = 0
     var grown = nc > 0
     while (it < maxRounds && grown) {
-      val nbrs = e.join(gated(cand.select(col("id").as("u")), nc),
+      val nbrs = e.join(
+          gate(nc, broadcastLimit)(cand.select(col("id").as("u"))),
           Seq("u"), "left_semi")
         .select(col("v").as("id"))
-        .union(e.join(gated(cand.select(col("id").as("v")), nc),
+        .union(e.join(gate(nc, broadcastLimit)(cand.select(col("id").as("v"))),
           Seq("v"), "left_semi")
           .select(col("u").as("id")))
       val (next, m) = Checkpoints.stageCount(
@@ -3931,10 +3485,11 @@ object Graph {
     while (it < maxRounds && !converged) {
       // one (c, w) row per candidate endpoint of each incident edge
       // (a candidate–candidate edge credits both endpoints)
-      val inc = e.join(gated(surv.select(col("id").as("u")), ns),
+      val inc = e.join(gate(ns, broadcastLimit)(surv.select(col("id").as("u"))),
           Seq("u"))
         .select(col("u").as("c"), col("v").as("w"))
-        .unionAll(e.join(gated(surv.select(col("id").as("v")), ns),
+        .unionAll(e.join(
+          gate(ns, broadcastLimit)(surv.select(col("id").as("v"))),
           Seq("v"))
           .select(col("v").as("c"), col("u").as("w")))
       val nbrIds = inc.select(col("w").as("id")).distinct()
@@ -3951,23 +3506,17 @@ object Graph {
       ns = m
       it += 1
     }
-    surv.select(col("id"), lit(batchId).as("__b"))
-      .repartitionByRange(1, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
     // manifest upkeep only in the big regime: a stale manifest is
     // SOUND (uncovered files always read), the small regime never
     // consults it, and the next compactKCoreStore refreshes coverage
     // in full — so the small regime pays zero index maintenance
-    if (!smallStore)
-      Stats.upsertManifestFor(spark, storeDir,
-        storeManifestPath(storeDir), s"$storeDir/batch=$batchId")
+    store.append(spark, "kCoreIncremental(batch)", batchId, 1,
+      indexed = !smallStore)(surv)
     // the one full-view read, REBUILT after the write (a retry's
     // overwrite invalidates listings captured before it; surv is
     // staged, so its data predates the overwrite safely)
-    kCoreStoreView(spark, storeDir, batchId).unionByName(surv)
-  }
+    store.view(spark, batchId).unionByName(surv)
+  }}
 
   /** Fold the k-core store's member deltas into one id-clustered
     * generation (set union — membership is monotone).
@@ -3975,15 +3524,6 @@ object Graph {
   def compactKCoreStore(spark: org.apache.spark.sql.SparkSession,
                         storeDir: String, filesOut: Int = 4)
       : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactKCoreStore(batch)") {
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      _.groupBy(col("id"))
-        .agg(max(col("__b")).as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id")))
-    if (tok.isDefined)
-      Stats.upsertManifest(spark, storeDir, storeManifestPath(storeDir))
-    tok
-  }
+    kCoreStore(storeDir).compact(spark, "compactKCoreStore(batch)",
+      filesOut)
 }

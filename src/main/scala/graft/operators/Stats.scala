@@ -1037,23 +1037,29 @@ object Stats {
         // the family forever; our own app's stale file (terminated
         // holder, or a file this JVM lost track of after a listener
         // raced a crash) is removed so the create below arbitrates
-        // cleanly
+        // cleanly. A file that VANISHES between the existence check and
+        // a read — a same-JVM holder's release deleting it right after
+        // dropping its registry entry — is absent, not an unreadable
+        // live lease: the create below still arbitrates.
+        def inspect[T](read: => T, unreadable: T): Option[T] =
+          try Some(read) catch {
+            case _: Throwable => if (fs.exists(hp)) Some(unreadable) else None
+          }
         if (fs.exists(hp)) {
-          val body = try {
+          val body = inspect({
             val in = fs.open(hp)
             try org.apache.commons.io.IOUtils.toString(in, "UTF-8")
             finally in.close()
-          } catch { case _: Throwable => "" }
-          if (!body.contains(s"app=$appId")) {
-            val hbAge = try
-              System.currentTimeMillis() -
-                fs.getFileStatus(hp).getModificationTime
-            catch { case _: Throwable => 0L }
-            if (hbAge <= leaseStaleGraceMs)
-              fail(p, if (body.isEmpty) "an unreadable lease"
-                else s"$body (heartbeat ${hbAge}ms old — a live " +
+          }, "")
+          body.filterNot(_.contains(s"app=$appId")).foreach { b =>
+            val hbAge = inspect(System.currentTimeMillis() -
+              fs.getFileStatus(hp).getModificationTime, 0L)
+            hbAge.filter(_ <= leaseStaleGraceMs).foreach { age =>
+              fail(p, if (b.isEmpty) "an unreadable lease"
+                else s"$b (heartbeat ${age}ms old — a live " +
                   "process; stale-lease reclaim needs age > " +
                   s"$leaseStaleGraceMs ms)")
+            }
           }
           fs.delete(hp, false): Unit
         }

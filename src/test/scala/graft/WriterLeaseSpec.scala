@@ -155,6 +155,61 @@ class WriterLeaseSpec extends SparkSuite {
     Stats.releaseWriterLease(spark, Seq(root))
   }
 
+  test("claim/release STRESS on one root: a lease file that vanishes " +
+      "between a claimer's inspection and its read is absent, never " +
+      "refused as an unreadable lease") {
+    // deterministic: the holder's release deletes the file right
+    // between our existence check and our read (a local filesystem
+    // that deletes the file on open stages exactly that interleave)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.vanishfs.impl", classOf[VanishOnOpenFs].getName)
+    val vdir = s"/tmp/graft-vlease-${System.nanoTime()}"
+    new java.io.File(vdir).mkdirs()
+    val vroot = s"vanishfs://$vdir/store"
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(Stats.writerLeasePath(s"$vdir/store")),
+      "owner=released;app=this;holder=gone".getBytes("UTF-8"))
+    VanishOnOpenFs.armed.set(true)
+    try Stats.acquireWriterLease(spark, Seq(vroot), "after-release")
+    finally VanishOnOpenFs.armed.set(false)
+    Stats.releaseWriterLease(spark, Seq(vroot))
+    // stress: many claimers and releasers on one root
+    val root = s"/tmp/graft-slease-${System.nanoTime()}/store"
+    new java.io.File(root).getParentFile.mkdirs()
+    val threads = 4
+    val rounds = 300
+    val wins = new java.util.concurrent.atomic.AtomicInteger(0)
+    val refusals = new java.util.concurrent.atomic.AtomicInteger(0)
+    val unreadable = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val others = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val ts = (1 to threads).map { i =>
+      new Thread(() => {
+        gate.await()
+        (1 to rounds).foreach { _ =>
+          try {
+            Stats.withWriterLease(spark, Seq(root), s"stress$i") {
+              wins.incrementAndGet(): Unit
+            }
+          } catch {
+            case e: Stats.ConcurrentWriterException =>
+              if (e.getMessage.contains("unreadable lease"))
+                unreadable.add(e.getMessage): Unit
+              else refusals.incrementAndGet(): Unit
+            case t: Throwable => others.add(t): Unit
+          }
+        }
+      })
+    }
+    ts.foreach(_.start()); gate.countDown(); ts.foreach(_.join())
+    Stats.releaseWriterLease(spark, Seq(root))
+    assert(unreadable.isEmpty,
+      s"${unreadable.size} of ${threads * rounds} claims refused as " +
+        s"an unreadable lease, e.g. ${unreadable.peek()}")
+    assert(others.isEmpty, s"unexpected failures: ${others.peek()}")
+    assert(wins.get > 0, s"no claim won (refusals=${refusals.get})")
+  }
+
   test("BATCH mutators are fenced too: a takedown or compaction " +
       "against a LIVE gate throws the named error in the caller's " +
       "thread; the quiesce → batch-delete → resume cycle works and " +
@@ -562,4 +617,22 @@ class WriterLeaseSpec extends SparkSuite {
     Stats.releaseWriterLease(spark, Seq(held, free))
     assert(!new java.io.File(Stats.writerLeasePath(held)).exists)
   }
+}
+
+/** A local filesystem under the `vanishfs` scheme that, once armed,
+  * deletes a file as it is opened — the lease holder's release landing
+  * between a claimer's existence check and its read.
+  */
+class VanishOnOpenFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vanishfs:///")
+  override def getScheme: String = "vanishfs"
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    if (VanishOnOpenFs.armed.getAndSet(false)) super.delete(f, false): Unit
+    super.open(f, bufferSize)
+  }
+}
+
+object VanishOnOpenFs {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
