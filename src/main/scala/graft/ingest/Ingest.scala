@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, collect_list, struct}
 import graft.model.{Location, Locations, Schemas}
 import java.sql.Timestamp
 
@@ -55,13 +56,24 @@ object Ingest {
     * reference's `CREATE TABLE IF NOT EXISTS` + `INSERT`
     * (`open_meteo.py:62-76`). Parquet-backed catalog table; at 100 TB this
     * is partitioned by ingest date so daily reruns prune.
+    *
+    * The per-location row counts are observed on the append job itself
+    * (Observation metrics ride its task results), so the batch runs once.
+    * A batch holds one row per fetched location, so the collected list
+    * is as long as the batch; the struct wrap keeps a null location
+    * counted, as `groupBy` would. An empty batch yields no results.
     */
   def append(spark: SparkSession, batch: DataFrame,
              table: String = "raw.swell_data"): Seq[IngestResult] = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS ${table.split('.').head}")
-    batch.write.mode(SaveMode.Append).saveAsTable(table)
-    batch.groupBy("location").count().collect()
-      .map(r => IngestResult(r.getString(0), r.getLong(1), table)).toSeq
+    val db = table.split('.').head
+    if (!spark.catalog.databaseExists(db))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    val obs = Observation()
+    batch.observe(obs, collect_list(struct(col("location"))).as("locations"))
+      .write.mode(SaveMode.Append).saveAsTable(table)
+    obs.get("locations").asInstanceOf[Seq[Row]].groupBy(_.getString(0))
+      .map { case (l, rows) => IngestResult(l, rows.size.toLong, table) }
+      .toSeq
   }
 
   def run(spark: SparkSession, fetcher: SwellFetcher): Seq[IngestResult] =

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 import graft.model.Schemas
 
 /** The flagship pipeline: raw swell payloads → staged hourly rows →
@@ -89,26 +90,57 @@ object SwellPipeline {
   // -------- Layered materialization (S4, S6–S9, O1–O6) --------
 
   /** dbt's `not_null` schema tests on the int model
-    * (`_int_open_meteo.yml:10-16`), enforced at materialization time.
+    * (`_int_open_meteo.yml:10-16`) as an action of its own: one
+    * `limit(1).count()` over `df` before anything is written. Only
+    * [[runAll]] uses it — its `saveAsTable(Overwrite)` drops the old
+    * table before the write job runs, so a check fused into that job
+    * would abort it only after the previous contract table is gone.
+    * Every other write carries the contract inside its own job
+    * ([[guardNotNull]]).
     */
   def requireNotNull(df: DataFrame, cols: Seq[String]): Unit = {
-    val bad = df.where(cols.map(col(_).isNull).reduce(_ || _)).limit(1).count()
-    require(bad == 0, s"not_null violated on ${cols.mkString(",")}")
+    val bad = df.where(anyNull(cols)).limit(1).count()
+    require(bad == 0, notNullViolated(cols))
   }
+
+  /** The same contract as a guard projection inside the plan that
+    * consumes `df`: column `cols.head` raises `not_null violated on
+    * <cols>` (Spark's `USER_RAISED_EXCEPTION`) on the first row with a
+    * null in any of `cols`. A write of the result aborts in the task
+    * that meets the row, before its commit, and no extra action runs.
+    * Column names and order are unchanged; `cols.head` must survive to
+    * the consuming plan's output, or the guard is pruned with it.
+    */
+  def guardNotNull(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.withColumn(cols.head, when(anyNull(cols),
+      raise_error(lit(notNullViolated(cols)))).otherwise(col(cols.head)))
+
+  private def anyNull(cols: Seq[String]) = cols.map(col(_).isNull).reduce(_ || _)
+
+  private def notNullViolated(cols: Seq[String]) =
+    s"not_null violated on ${cols.mkString(",")}"
+
+  /** The contract table's key columns, both `not_null`. */
+  private val contractKey = Seq("dt", "location")
 
   /** Bootstrap the layered catalog namespaces — Spark databases replace the
     * reference's two-file DuckDB ATTACH topology (`profiles.yml:5-11`).
     * Idempotent, like the reference's `CREATE ... IF NOT EXISTS`
-    * (`open_meteo.py:62-71`).
+    * (`open_meteo.py:62-71`); a catalog lookup skips the statement for
+    * every database that already exists.
     */
   def bootstrap(spark: SparkSession): Unit =
     Seq("raw", "staging", "intermediate", "presentation")
+      .filterNot(spark.catalog.databaseExists)
       .foreach(db => spark.sql(s"CREATE DATABASE IF NOT EXISTS $db"))
 
   /** Materialize the layers the way the reference does: stg + int as views
     * (`stg...sql:4`, `int...sql:2` — logical only, no copy), presentation
-    * as a physically rebuilt table (`pres...sql:2`). Re-runs are
-    * idempotent: raw appends + derived overwrite (SURVEY.md §2.4 O6).
+    * as a physically rebuilt table (`pres...sql:2`), partitioned by `dt`
+    * like [[runIncremental]]'s so nightly refreshes can follow a rebuild.
+    * Re-runs are idempotent: raw appends + derived overwrite (SURVEY.md
+    * §2.4 O6). The `not_null` check runs before the write
+    * ([[requireNotNull]]): a violation keeps the previous table.
     */
   def runAll(spark: SparkSession): DataFrame = {
     bootstrap(spark)
@@ -118,8 +150,8 @@ object SwellPipeline {
     val daily = dailyMax(spark.table("stg_swell_data"))
     daily.createOrReplaceTempView("int_max_swell_per_day")
     val pres = present(spark.table("int_max_swell_per_day"))
-    requireNotNull(pres, Seq("dt", "location"))
-    pres.write.mode(SaveMode.Overwrite)
+    requireNotNull(pres, contractKey)
+    documented(pres).write.mode(SaveMode.Overwrite).partitionBy("dt")
       .saveAsTable("presentation.daily_max_swell")
     persistDocs(spark)
     spark.table("presentation.daily_max_swell")
@@ -145,6 +177,18 @@ object SwellPipeline {
     * appends and re-fetched payloads resolve the same winners), and
     * idempotent: re-running the same batch rewrites the same partitions
     * with identical content.
+    *
+    * The `not_null(dt, location)` contract runs inside the job that
+    * writes ([[guardNotNull]]), on both branches: the first-night
+    * `partitionBy("dt")` create and the dynamic partition overwrite. A
+    * violation aborts the write before its commit — no partition is
+    * replaced, and a failed create leaves no table — and surfaces as
+    * Spark's `USER_RAISED_EXCEPTION` with the message `not_null violated
+    * on dt,location`. The batch's touched-date projection carries the
+    * same guard, so a batch row whose staged `dt` is null fails the
+    * refresh (as it fails [[runAll]]) instead of dropping out of the
+    * semi join; that check rides the broadcast stage the join already
+    * runs.
     */
   def runIncremental(spark: SparkSession, batchRaw: DataFrame,
                      rawTable: String = "raw.swell_data",
@@ -152,17 +196,16 @@ object SwellPipeline {
       : DataFrame = {
     bootstrap(spark)
     if (!spark.catalog.tableExists(presTable)) {
-      val all = present(dailyMax(stage(spark.table(rawTable))))
-      requireNotNull(all, Seq("dt", "location"))
-      all.write.partitionBy("dt").saveAsTable(presTable)
+      guardNotNull(full(spark.table(rawTable)), contractKey)
+        .write.partitionBy("dt").saveAsTable(presTable)
     } else {
       require(spark.catalog.listColumns(presTable).collect()
         .exists(c => c.isPartition && c.name == "dt"),
         s"$presTable must be partitioned by dt for incremental runs")
-      val touched = stage(batchRaw).select(col("dt")).distinct()
-      val slice = present(dailyMax(stage(spark.table(rawTable))
-        .join(broadcast(touched), Seq("dt"), "left_semi")))
-      requireNotNull(slice, Seq("dt", "location"))
+      val touched = guardNotNull(stage(batchRaw), contractKey)
+        .select(col("dt")).distinct()
+      val slice = guardNotNull(present(dailyMax(stage(spark.table(rawTable))
+        .join(broadcast(touched), Seq("dt"), "left_semi"))), contractKey)
       // partition columns sit last in the table schema; insertInto is
       // positional
       val cols = spark.table(presTable).columns.toSeq
@@ -193,6 +236,19 @@ object SwellPipeline {
     "swell_wave_height" -> "Maximum hourly swell height of the day (m).",
     "timestamp" -> "Hour (UTC) at which the daily maximum occurred.")
 
+  /** `df` with each [[contractDocs]] entry attached as its column's schema
+    * comment, so a table written from it carries the docs from its
+    * create on — the only way to document a partition column, which
+    * `ALTER COLUMN … COMMENT` refuses.
+    */
+  private def documented(df: DataFrame): DataFrame =
+    df.select(df.columns.toSeq.map(c => contractDocs.get(c).fold(col(c))(doc =>
+      col(c).as(c, new MetadataBuilder().putString("comment", doc).build()))): _*)
+
+  /** Partition columns are skipped: `ALTER COLUMN … COMMENT` refuses them
+    * (`CANNOT_ALTER_PARTITION_COLUMN`); their docs come from the schema
+    * the table was written with, as [[runAll]] writes `dt`'s.
+    */
   def persistDocs(spark: SparkSession,
                   table: String = "presentation.daily_max_swell",
                   docs: Map[String, String] = contractDocs): Unit = {
@@ -201,7 +257,9 @@ object SwellPipeline {
     def q(s: String): String = "'" + s.replace("'", "''") + "'"
     spark.sql(s"COMMENT ON TABLE $table IS " +
       q("Daily maximum swell per location (external contract table)."))
-    docs.foreach { case (c, doc) =>
+    val partitionCols = spark.catalog.listColumns(table).collect()
+      .filter(_.isPartition).map(_.name).toSet
+    docs.filterNot(d => partitionCols(d._1)).foreach { case (c, doc) =>
       spark.sql(s"ALTER TABLE $table ALTER COLUMN $c COMMENT ${q(doc)}")
     }
   }
