@@ -14,33 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** DEBUG-ONLY hook (tools/RoundPlanDump): when set, each iterative
-    * operator offers one representative per-round DataFrame here
-    * BEFORE its staging action, so the round fragment's physical plan
-    * (Exchange count, join strategy) can be captured as committed
-    * evidence — the shipped query's own explain covers only the final
-    * readout. `None` in production: the by-name argument is never
-    * evaluated, so the hot path pays nothing.
-    */
-  private[graft] var roundPlanProbe
-      : Option[(String, DataFrame) => Unit] = None
-  @inline private def probeRound(tag: String, df: => DataFrame): Unit =
-    roundPlanProbe.foreach(p => p(tag, df))
-
   /** The measured broadcast gate every operator here shares: `df`
     * broadcasts when `n`, the row count it was measured at, is within
     * `limit`.
     */
   private def gate(n: Long, limit: Long)(df: DataFrame): DataFrame =
     if (n <= limit) broadcast(df) else df
-
-  /** Lineage truncation per round: reliable `checkpoint()` under a set
-    * checkpoint dir (fault-tolerant; superseded files deleted by
-    * freeLocalCheckpoint), else executor-local `localCheckpoint()`.
-    */
-  private implicit class RoundCheckpoint(private val df: DataFrame) {
-    def roundCheckpoint(): DataFrame = Checkpoints.stage(df)
-  }
 
   /** Connected components by iterative min-label propagation with a
     * contraction fallback: `comp(v) ← min(comp(v), min over neighbors
@@ -73,26 +52,27 @@ object Graph {
     // (groupBy src over the dst-keyed labels join) reuses the
     // checkpoint partitioning — in the broadcast-label regime the
     // round's vote path runs without an exchange
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .roundCheckpoint()
+    val sym = Checkpoints.stage(
+      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .where(col("src") =!= col("dst"))
+        .distinct()
+        .repartition(col("src")))
     // node count rides the labels staging job (the broadcast regime
     // gate every other iterative operator here carries — without it,
     // every round's |V|-sized label joins are planned as shuffle
     // joins and each exchange is a per-round barrier)
-    val obs0 = org.apache.spark.sql.Observation()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .observe(obs0, count(lit(1)).as("n"))
-      .roundCheckpoint()
-    val vSized = gate(obs0.get("n").asInstanceOf[Long], broadcastLimit) _
-    var converged = false
-    var it = 0
-    var prevSum: java.math.BigDecimal = null
+    val labels0 = Rounds.stage("connectedComponents.labels",
+      sym.select(col("src").as("id")).distinct()
+        .withColumn("comp", col("id")), Rounds.Rows)
+    val vSized = gate(labels0.count, broadcastLimit) _
     val propagationRounds = math.min(maxIter, switchAfter)
-    while (!converged && it < propagationRounds) {
+    // labels only ever decrease, so the fixpoint is reached exactly
+    // when the label sum stops falling (a decimal(38,0) sum observed
+    // on each round's staging job — see [[Rounds.Sum]])
+    val prop = Rounds.iterate("connectedComponents.round", labels0,
+        propagationRounds, Rounds.Sum("comp"),
+        done = (p, c) => p.index > 0 && p.sum.compareTo(c.sum) == 0) { t =>
+      val labels = t.last.df
       val lbl = vSized(labels)
       val nbrMin = sym
         .join(lbl, sym("dst") === lbl("id"))
@@ -108,43 +88,21 @@ object Graph {
       // comp ← oldComp(comp). Labels only decrease, so this stays
       // monotone and halves the remaining diameter each round:
       // O(log d) rounds on chains instead of O(d).
-      // labels only ever decrease, so the fixpoint is reached exactly
-      // when the label sum stops falling. The sum OBSERVES the
-      // checkpoint-materialization job itself (no second pass per
-      // round), as decimal(38,0): a Long sum over ~2^40 vertices with
-      // 2^63-range ids overflows (wraps silently non-ANSI, throws
-      // under ANSI), which would break the monotone
-      // "equal sums ⇒ converged" argument.
-      val obs = org.apache.spark.sql.Observation()
       // round 1's jump would follow the IDENTITY init table — a
       // provable no-op, so the join (and its broadcast build) is
       // skipped there
-      val jumped =
-        if (it == 0) prop
+      t.stage(
+        if (t.index == 1) prop
         else prop
           .join(vSized(labels.select(col("id").as("__cid"),
             col("comp").as("__cc"))), prop("comp") === col("__cid"),
             "left")
           .select(prop("id").as("id"),
-            coalesce(col("__cc"), prop("comp")).as("comp"))
-      probeRound("connectedComponents.round", jumped)
-      val next = jumped
-        .observe(obs,
-          coalesce(sum(col("comp").cast("decimal(38,0)")),
-            lit(java.math.BigDecimal.ZERO)).as("s"))
-        .roundCheckpoint()
-      val sumNow = obs.get("s").asInstanceOf[java.math.BigDecimal]
-      converged = prevSum != null && prevSum.compareTo(sumNow) == 0
-      prevSum = sumNow
-      // free the superseded round's cached blocks — an iterative job
-      // that checkpoints per round would otherwise leak the block
-      // manager full across rounds (and across repeated calls)
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(labels)
-      labels = next
-      it += 1
+            coalesce(col("__cc"), prop("comp")).as("comp")))
     }
+    val labels = prop.last.df
     val out =
-      if (converged) labels
+      if (prop.converged) labels
       else {
         // Contract through the partial labels — same quotient
         // components, (usually far) fewer vertices — and finish with
@@ -161,22 +119,19 @@ object Graph {
         // and starRounds would label straight off the UNCONVERGED edges
         // (duplicate ids with conflicting comps); give the fallback at
         // least one round and let its convergence guard fail loudly if
-        // that isn't enough
-        val roots = connectedComponentsStar(relab, col("src"), col("dst"),
-          math.max(1, maxIter - propagationRounds))
-        val joined = labels
+        // that isn't enough. The caller's broadcast limit carries over.
+        val (roots, _) = starRounds(relab, col("src"), col("dst"),
+          math.max(1, maxIter - propagationRounds), broadcastLimit)
+        val joined = Checkpoints.stage(labels
           .join(vSized(roots.select(col("id").as("__rid"),
             col("comp").as("__rc"))),
             labels("comp") === col("__rid"), "left")
           .select(labels("id"),
-            coalesce(col("__rc"), labels("comp")).as("comp"))
-          .roundCheckpoint()
-        org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(roots)
+            coalesce(col("__rc"), labels("comp")).as("comp")))
+        Rounds.free(roots, labels)
         joined
       }
-    if (out ne labels)
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(labels)
-    org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(sym)
+    Rounds.free(sym)
     out
   }
 
@@ -210,19 +165,18 @@ object Graph {
   def starRounds(edges: DataFrame, a: Column, b: Column,
                  maxIter: Int = 20,
                  broadcastLimit: Long = 4000000L): (DataFrame, Int) = {
-    val (e0, nE0) = Checkpoints.stageCount(edges
+    val e0 = Rounds.stage("starRounds.edges", edges
       .select(a.cast("long").as("u"), b.cast("long").as("v"))
       .where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct())
+      .distinct(), Rounds.Rows)
     // per-round min tables are node-sized (≤ 2·edges rows) — below
-    // the gate they broadcast into the star joins, so a round's only
-    // exchanges are its two partial-aggregated groupBys + the
-    // distinct, never an edge-table shuffle join
-    var nE = nE0
-
-    def largeStar(e: DataFrame): DataFrame = {
+    // the gate (measured at the round's input edge count) they
+    // broadcast into the star joins, so a round's only exchanges are
+    // its two partial-aggregated groupBys + the distinct, never an
+    // edge-table shuffle join
+    def largeStar(e: DataFrame, nE: Long): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val mins = sym.groupBy(col("u").as("mu"))
         .agg(min(col("v")).as("mv"))
@@ -235,7 +189,7 @@ object Graph {
         .where(col("u") =!= col("v"))
     }
 
-    def smallStar(e: DataFrame): DataFrame = {
+    def smallStar(e: DataFrame, nE: Long): DataFrame = {
       val o = e.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       val mins = o.groupBy(col("u").as("mu")).agg(min(col("v")).as("m"))
@@ -247,33 +201,28 @@ object Graph {
         .distinct()
     }
 
-    var e = e0
-    var rounds = 0
-    var isStar = false
-    while (!isStar && rounds < maxIter) {
-      val (next, nNext) =
-        Checkpoints.stageCount(smallStar(largeStar(e)))
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(e)
-      e = next
-      nE = nNext
-      rounds += 1
-      // a union of stars ⇔ no edge target is also an edge source
-      isStar = e.join(e.select(col("v").as("u")).distinct(),
-        Seq("u"), "left_semi").isEmpty
+    // a union of stars ⇔ no edge target is also an edge source
+    def isStar(e: DataFrame): Boolean =
+      e.join(e.select(col("v").as("u")).distinct(), Seq("u"), "left_semi")
+        .isEmpty
+    val run = Rounds.iterate("starRounds.round", e0, maxIter, Rounds.Rows,
+        done = (_, c) => isStar(c.df)) { t =>
+      t.stage(smallStar(largeStar(t.last.df, t.last.count), t.last.count))
     }
+    val e = run.last.df
     // labels derived from a non-star edge set would emit duplicate ids
     // with conflicting comps — refuse rather than return silently wrong
     // components (star contraction halves depth per round, so any sane
     // budget converges; hitting this means maxIter was set far too low)
-    require(isStar || e.isEmpty,
-      s"connectedComponentsStar: not converged after $rounds rounds; " +
-        "raise maxIter")
-    val labels = e.select(col("u").as("id"), col("v").as("comp"))
-      .union(e.select(col("v").as("id"), col("v").as("comp")))
-      .distinct()
-      .roundCheckpoint()
-    org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(e)
-    (labels, rounds)
+    require(run.converged || e.isEmpty,
+      s"connectedComponentsStar: not converged after ${run.rounds} " +
+        "rounds; raise maxIter")
+    val labels = Checkpoints.stage(
+      e.select(col("u").as("id"), col("v").as("comp"))
+        .union(e.select(col("v").as("id"), col("v").as("comp")))
+        .distinct())
+    Rounds.free(e)
+    (labels, run.rounds)
   }
 
   /** Cluster-resolved dedup decision over an edge list: every vertex
@@ -324,24 +273,7 @@ object Graph {
     require(iters >= 0, "iters must be >= 0")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       "need 0 <= dampNum <= dampDen")
-    // staged PRE-PARTITIONED on dst (distinct FIRST so the dedup
-    // keeps its map-side partial aggregation — the repartition then
-    // re-exchanges only the deduped edges, once): every round's
-    // inflow aggregate groups by dst over a broadcast-joined scan of
-    // e, so with this layout the per-round plan has NO exchange at
-    // all in the broadcast regime — the checkpoint partitioning is
-    // reused round after round (guide §2.4)
-    // outdeg rides the staged edge row (a src-partitioned window count
-    // over the deduped edges): it is STATIC across rounds, so folding
-    // it into e removes one |V|-sized broadcast/join from EVERY round
-    // — the only per-round state left is the rank vector (guide §2.4)
-    val e = Checkpoints.stage(
-      edges.select(src.as("src"), dst.as("dst"))
-        .distinct()
-        .withColumn("outdeg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("src"))))
-        .repartition(col("dst")))
+    val e = rankEdges(edges, src, dst)
     // nodes are |V|-sized and re-joined every iteration — stage them
     // once instead of recomputing the aggregate per round.
     val (nodes, n) = Checkpoints.stageCount(
@@ -354,7 +286,7 @@ object Graph {
     // converges from any start vector, a near-fixed-point start just
     // needs fewer rounds (the warm-start contract [[pageRankWarm]]
     // prices). The arithmetic stays bit-deterministic either way.
-    var ranks = Checkpoints.stage(start match {
+    val ranks0 = Rounds.stage("pageRank.start", start match {
       case None =>
         nodes.select(col("id"), lit(scale / n).as("rank"))
       case Some(s0) =>
@@ -364,33 +296,52 @@ object Graph {
             coalesce(col("__r0"), lit(scale / n)).as("rank"))
     })
     val vSized = gate(n, broadcastLimit) _
-    var it = 0
-    while (it < iters) {
-      val contrib = e
-        .join(vSized(ranks.withColumnRenamed("id", "src")), Seq("src"))
-        .select(col("dst").as("id"),
-          expr("rank DIV outdeg").as("share"))
-        .groupBy(col("id"))
-        .agg(sum(col("share")).as("inflow"))
+    Rounds.iterate("pageRank.round", ranks0, iters) { t =>
       // contrib is |V|-sized (one row per in-degree-bearing node) —
       // under the gate it broadcasts like every other round state, so
       // the round plan has NO shuffle at all (nodes keeps its staged
       // partitioning; above the gate this degrades to the shuffle
       // join as before)
-      val next = nodes
-        .join(vSized(contrib), Seq("id"), "left")
+      t.stage(nodes
+        .join(vSized(inflow(e, t.last.df, vSized)), Seq("id"), "left")
         .select(col("id"),
           (lit(base) +
             expr(s"($dampNum * coalesce(inflow, 0L)) DIV $dampDen"))
-            .as("rank"))
-      probeRound("pageRank.round", next)
-      val staged = Checkpoints.stage(next)
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(ranks)
-      ranks = staged
-      it += 1
-    }
-    ranks
+            .as("rank")))
+    }.last.df
   }
+
+  /** [[pageRank]]'s edge table, staged PRE-PARTITIONED on dst
+    * (distinct FIRST so the dedup keeps its map-side partial
+    * aggregation — the repartition then re-exchanges only the deduped
+    * edges, once): every round's inflow aggregate groups by dst over a
+    * broadcast-joined scan of it, so the per-round plan has NO
+    * exchange at all in the broadcast regime — the checkpoint
+    * partitioning is reused round after round (guide §2.4). outdeg
+    * rides the staged edge row (a src-partitioned window count over the
+    * deduped edges): it is STATIC across rounds, so folding it in
+    * removes one |V|-sized broadcast/join from EVERY round — the only
+    * per-round state left is the rank vector.
+    */
+  private def rankEdges(edges: DataFrame, src: Column,
+                        dst: Column): DataFrame =
+    Checkpoints.stage(
+      edges.select(src.as("src"), dst.as("dst"))
+        .distinct()
+        .withColumn("outdeg", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("src"))))
+        .repartition(col("dst")))
+
+  /** One rank round's (id, inflow): every rank split over its
+    * out-edges ([[rankEdges]]) and summed per destination.
+    */
+  private def inflow(e: DataFrame, ranks: DataFrame,
+                     vSized: DataFrame => DataFrame): DataFrame =
+    e.join(vSized(ranks.withColumnRenamed("id", "src")), Seq("src"))
+      .select(col("dst").as("id"), expr("rank DIV outdeg").as("share"))
+      .groupBy(col("id"))
+      .agg(sum(col("share")).as("inflow"))
 
   /** PERSONALIZED PageRank (the random-walk-with-restart variant:
     * Jeh & Widom, "Scaling personalized web search", WWW 2003):
@@ -414,15 +365,7 @@ object Graph {
     require(iters >= 0, "iters must be >= 0")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       "need 0 <= dampNum <= dampDen")
-    // pre-partitioned on dst like [[pageRank]], with the static outdeg
-    // folded onto the staged edge row (one fewer |V| broadcast/round)
-    val e = Checkpoints.stage(
-      edges.select(src.as("src"), dst.as("dst"))
-        .distinct()
-        .withColumn("outdeg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("src"))))
-        .repartition(col("dst")))
+    val e = rankEdges(edges, src, dst)
     val (sd, ns) = Checkpoints.stageCount(
       seeds.select(seedId.as("id")).distinct())
     val (nodes, n) = Checkpoints.stageCount(
@@ -437,32 +380,19 @@ object Graph {
       .select(col("id"),
         when(col("__s").isNotNull, lit(rank)).otherwise(lit(0L))
           .as("__seed_term"))
-    var ranks = Checkpoints.stage(
+    val ranks0 = Rounds.stage("ppr.start",
       seeded(scale / ns).select(col("id"),
         col("__seed_term").as("rank")))
     val baseTerms = Checkpoints.stage(seeded(base))
-    var it = 0
-    while (it < iters) {
-      val contrib = e
-        .join(vSized(ranks.withColumnRenamed("id", "src")), Seq("src"))
-        .select(col("dst").as("id"),
-          expr("rank DIV outdeg").as("share"))
-        .groupBy(col("id"))
-        .agg(sum(col("share")).as("inflow"))
-      // |V|-sized contrib broadcasts under the gate (see [[pageRank]])
-      val next = baseTerms
-        .join(vSized(contrib), Seq("id"), "left")
+    Rounds.iterate("ppr.round", ranks0, iters) { t =>
+      // |V|-sized inflow broadcasts under the gate (see [[pageRank]])
+      t.stage(baseTerms
+        .join(vSized(inflow(e, t.last.df, vSized)), Seq("id"), "left")
         .select(col("id"),
           (col("__seed_term") +
             expr(s"($dampNum * coalesce(inflow, 0L)) DIV $dampDen"))
-            .as("rank"))
-      probeRound("ppr.round", next)
-      val staged = Checkpoints.stage(next)
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(ranks)
-      ranks = staged
-      it += 1
-    }
-    ranks
+            .as("rank")))
+    }.last.df
   }
 
   /** LOCAL personalized PageRank by synchronous FORWARD PUSH
@@ -517,13 +447,16 @@ object Graph {
     val deg = Checkpoints.stage(
       sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .select(col("src").as("id"), col("deg")))
-    var (state, nActive) = Checkpoints.stageCount(
+    val state0 = Rounds.stage("pprForwardPush.seeds",
       seeds.select(seedId.as("id")).where(col("id").isNotNull)
         .distinct()
-        .select(col("id"), lit(0L).as("p"), lit(scale).as("r")))
-    var it = 0
-    while (it < rounds && nActive > 0) {
-      val gated = gate(nActive, broadcastLimit) _
+        .select(col("id"), lit(0L).as("p"), lit(scale).as("r")),
+      Rounds.Rows)
+    Rounds.iterate("pprForwardPush.round", state0,
+        if (state0.count > 0) rounds else 0, Rounds.Rows,
+        done = (_, c) => c.count == 0) { t =>
+      val state = t.last.df
+      val gated = gate(t.last.count, broadcastLimit) _
       // the degree table narrows to the ACTIVE slice through a
       // broadcast semi join (a scan of the staged deg table, never a
       // |V|-sized shuffle), then joins state at state size
@@ -557,18 +490,13 @@ object Graph {
       // sum() reproduces the coalesce arithmetic exactly — replaces
       // two exchanges + two sorts per round with one exchange and
       // keeps the merge map-side combinable (guide §2.3/§2.4)
-      val (next, nNext) = Checkpoints.stageCount(
+      t.stage(
         updated.select(col("id"), col("p"), col("r"))
           .unionAll(shares.select(col("id"), lit(0L).as("p"),
             col("inc").as("r")))
           .groupBy(col("id"))
           .agg(sum(col("p")).as("p"), sum(col("r")).as("r")))
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(state)
-      state = next
-      nActive = nNext
-      it += 1
-    }
-    state
+    }.last.df
   }
 
   /** HITS hubs & authorities (Kleinberg, "Authoritative sources in a
@@ -619,7 +547,7 @@ object Graph {
     // just needs fewer rounds. Only the HUB vector seeds: each round
     // derives auth from hub first, so a stored auth would be
     // overwritten before it was ever read.
-    var hub = Checkpoints.stage(start match {
+    val hub0 = Rounds.stage("hits.start", start match {
       case None => nodes.select(col("id"), lit(scale).as("hub"))
       case Some(s0) =>
         nodes.join(s0.select(col("id"), col("hub").as("__h0")),
@@ -627,35 +555,27 @@ object Graph {
           .select(col("id"),
             coalesce(col("__h0"), lit(scale)).as("hub"))
     })
-    var auth: DataFrame = null
-    var it = 0
-    while (it < iters) {
-      // the half-step aggregate is |V|-sized — broadcast under the
-      // gate so the round plan keeps zero shuffles (see [[pageRank]])
-      val rawA = nodes.join(
-          vSized(e.join(vSized(hub.withColumnRenamed("id", "src")),
-              Seq("src"))
-            .groupBy(col("dst")).agg(sum(col("hub")).as("__x"))
-            .withColumnRenamed("dst", "id")),
+    // one half-step: the `score` of every `via` endpoint summed onto
+    // its `to` endpoints. The aggregate is |V|-sized — broadcast under
+    // the gate so the round plan keeps zero shuffles (see [[pageRank]])
+    def half(prev: DataFrame, score: String, via: String, to: String,
+             out: String): DataFrame =
+      normalized(nodes.join(
+          vSized(e.join(vSized(prev.withColumnRenamed("id", via)),
+              Seq(via))
+            .groupBy(col(to)).agg(sum(col(score)).as("__x"))
+            .withColumnRenamed(to, "id")),
           Seq("id"), "left")
-        .select(col("id"), coalesce(col("__x"), lit(0L)).as("raw"))
-      probeRound("hits.authHalfRound", rawA)
-      val nextAuth = Checkpoints.stage(normalized(rawA, "auth"))
-      if (auth != null)
-        org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(auth)
-      auth = nextAuth
-      val rawH = nodes.join(
-          vSized(e.join(vSized(auth.withColumnRenamed("id", "dst")),
-              Seq("dst"))
-            .groupBy(col("src")).agg(sum(col("auth")).as("__x"))
-            .withColumnRenamed("src", "id")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("__x"), lit(0L)).as("raw"))
-      val nextHub = Checkpoints.stage(normalized(rawH, "hub"))
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(hub)
-      hub = nextHub
-      it += 1
+        .select(col("id"), coalesce(col("__x"), lit(0L)).as("raw")), out)
+    // rounds alternate auth (odd) and hub (even) half-steps; keeping
+    // the newest two leaves the final auth and hub staged
+    val run = Rounds.iterate("hits.halfRound", hub0, 2L * iters,
+        keep = 2) { t =>
+      t.stage(
+        if (t.index % 2 == 1) half(t.last.df, "hub", "src", "dst", "auth")
+        else half(t.last.df, "auth", "dst", "src", "hub"))
     }
+    val Seq(auth, hub) = run.kept.map(_.df)
     nodes.join(hub, Seq("id")).join(auth, Seq("id"))
       .select(col("id"), col("hub"), col("auth"))
   }
@@ -698,30 +618,27 @@ object Graph {
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
     val vSized = gate(n, broadcastLimit) _
-    var cur = Checkpoints.stage(nodes
+    val walks0 = Rounds.stage("randomWalks.start", nodes
       .select(col("id").as("start"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("walk"))
       .select(col("start"), col("walk"), lit(0).as("step"),
         col("start").as("node")))
-    val outs = scala.collection.mutable.ArrayBuffer(cur)
-    var t = 1
-    while (t <= len) {
-      val key = concat_ws("_", col("start"), col("walk"), lit(t),
+    // the corpus is the union of every step, so every step stays staged
+    val run = Rounds.iterate("randomWalks.step", walks0, len,
+        keep = Rounds.All) { t =>
+      val key = concat_ws("_", col("start"), col("walk"), lit(t.index),
         col("node"))
-      val next = Checkpoints.stage(cur
+      t.stage(t.last.df
         .join(vSized(od), col("node") === col("__ds"))
         .select(col("start"), col("walk"),
           pmod(TextAnalysis.fingerprint(key), col("deg")).as("__i"),
           col("node"))
         .join(vSized(nbr),
           col("node") === col("__ns") && col("__i") === col("idx"))
-        .select(col("start"), col("walk"), lit(t).as("step"),
+        .select(col("start"), col("walk"), lit(t.index).as("step"),
           col("__nd").as("node")))
-      outs += next
-      cur = next
-      t += 1
     }
-    outs.reduce(_.unionAll(_))
+    Rounds.union(run.kept)
       .select(col("start"), col("walk"), col("step"), col("node"))
   }
 
@@ -768,33 +685,24 @@ object Graph {
       case None => nodes.orderBy(col("id")).limit(landmarks)
         .select(col("id").as("lm"))
     })
-    // BFS layers accumulate in a buffer; the sketch is their UNION —
+    // BFS layers are kept staged; the sketch is their UNION —
     // re-staging the whole growing sketch per layer would rewrite
     // O(|V|·L) rows `maxDepth` times (and pay a second job per layer
-    // for the liveness count, which now rides the layer's staging job
-    // as an Observation)
-    val (l0, n0) = Checkpoints.stageCount(
-      lms.select(col("lm").as("id"), col("lm"), lit(0).as("dist")))
-    val layers = scala.collection.mutable.ArrayBuffer(l0)
-    def sketchView: DataFrame = layers.reduce(_ unionAll _)
-    var frontier = l0
-    var d = 1
-    var alive = n0 > 0
-    while (d <= maxDepth && alive) {
-      val (next, nNext) = Checkpoints.stageCount(
-        frontier.join(sym, col("id") === col("src"))
-          .select(col("dst").as("id"), col("lm"), lit(d).as("dist"))
-          .distinct()
-          .join(sketchView.select(col("id"), col("lm")),
-            Seq("id", "lm"), "left_anti"))
-      alive = nNext > 0
-      if (alive) {
-        layers += next
-        frontier = next
-      }
-      d += 1
+    // for the liveness count, which rides the layer's staging job)
+    val l0 = Rounds.stage("landmarkDistances.layer",
+      lms.select(col("lm").as("id"), col("lm"), lit(0).as("dist")),
+      Rounds.Rows)
+    val run = Rounds.iterate("landmarkDistances.layer", l0,
+        if (l0.count > 0) maxDepth else 0, Rounds.Rows, keep = Rounds.All,
+        done = (_, c) => c.count == 0) { t =>
+      t.stage(t.last.df.join(sym, col("id") === col("src"))
+        .select(col("dst").as("id"), col("lm"), lit(t.index).as("dist"))
+        .distinct()
+        .join(Rounds.union(t.kept).select(col("id"), col("lm")),
+          Seq("id", "lm"), "left_anti"))
     }
-    sketchView
+    // an empty last layer ended the search and adds nothing
+    Rounds.union(run.untilDone)
   }
 
   /** HARMONIC closeness centrality within `maxDepth` hops — the
@@ -962,10 +870,9 @@ object Graph {
     // a |sketch|-sized scan + aggregate per round that this removes
     // (one observed staging job per round is kept; the liveness count
     // still rides it).
-    val improved =
-      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var nImp = 0L // accumulated improvement rows (broadcast gate)
-    def improving(cand: DataFrame): DataFrame = {
+    // `improved`: the improvement layers so far (every one kept staged)
+    def improving(improved: Seq[Rounds.Round],
+                  cand: DataFrame): DataFrame = {
       val candAgg = cand.where(col("dist") <= maxDepth)
         .groupBy(col("id"), col("lm"))
         .agg(min(col("dist")).as("dist"))
@@ -977,11 +884,11 @@ object Graph {
           // dist is int end to end (the store schema pins it)
           withSt.withColumn("__imp", lit(null).cast("int"))
         else {
-          val impMin = improved.reduce(_ unionAll _)
+          val impMin = Rounds.union(improved)
             .groupBy(col("id"), col("lm"))
             .agg(min(col("dist")).as("__imp"))
           withSt.join(
-            gate(nImp, broadcastLimit)(impMin),
+            gate(improved.map(_.count).sum, broadcastLimit)(impMin),
             Seq("id", "lm"), "left")
         }
       // least() skips nulls, so missing-on-both-sides = infinity
@@ -990,41 +897,32 @@ object Graph {
           col("dist") < least(col("__st"), col("__imp")))
         .select(col("id"), col("lm"), col("dist"))
     }
-    def curView: DataFrame =
-      (stored +: improved.toSeq).reduce(_ unionAll _)
-    var (frontier, nF) = Checkpoints.stageCount(improving(
+    val f0 = Rounds.stage("landmarkIncremental.round", improving(Nil,
       enSym.join(stored.select(col("id").as("src"), col("lm"),
           col("dist")), Seq("src"))
         .select(col("dst").as("id"), col("lm"),
-          (col("dist") + 1).as("dist"))))
-    var d = 0
-    var alive = nF > 0
-    while (alive && d < maxDepth) {
-      improved += frontier
-      nImp += nF
+          (col("dist") + 1).as("dist"))), Rounds.Rows)
+    val run = Rounds.iterate("landmarkIncremental.round", f0,
+        if (f0.count > 0) maxDepth else 0, Rounds.Rows, keep = Rounds.All,
+        done = (_, c) => c.count == 0) { t =>
       // frontier-sized probe side broadcasts under the gate, so the
       // staged edge table is never shuffled per round (guide §3.1)
-      val fSized = gate(nF, broadcastLimit)(frontier)
-      val roundDf = improving(
+      val fSized = gate(t.last.count, broadcastLimit)(t.last.df)
+      t.stage(improving(t.kept,
         fSized.join(sym, col("id") === col("src"))
           .select(col("dst").as("id"), col("lm"),
-            (col("dist") + 1).as("dist")))
-      probeRound("landmarkIncremental.round", roundDf)
-      val (next, nNext) = Checkpoints.stageCount(roundDf)
-      frontier = next
-      nF = nNext
-      alive = nNext > 0
-      d += 1
+            (col("dist") + 1).as("dist"))))
     }
-    if (alive) improved += frontier // dist = maxDepth discoveries
-    val sketch = curView
+    // the non-empty layers (an empty one improved nothing)
+    val improved = run.kept.filter(_.count > 0).map(_.df)
+    val sketch = (stored +: improved).reduce(_ unionAll _)
       .groupBy(col("id"), col("lm"))
       .agg(min(col("dist")).as("dist"))
     // delta append: only improved keys, min-folded across rounds
     // (a later round can re-improve a key); empty batches still
     // commit a visible empty dir (retry-idempotent)
     val delta =
-      if (improved.isEmpty) frontier
+      if (improved.isEmpty) f0.df
       else Checkpoints.stage(improved.reduce(_ unionAll _)
         .groupBy(col("id"), col("lm"))
         .agg(min(col("dist")).as("dist")))
@@ -1135,23 +1033,22 @@ object Graph {
     val prevEdge = e.select(col("src").as("__pu"),
       col("dst").as("__pc"), lit(true).as("__adj"))
     // walk state: (start, walk, step, prev, node); prev = -1 at step 0
-    var cur = Checkpoints.stage(nodes
+    val walks0 = Rounds.stage("node2vecWalks.start", nodes
       .select(col("id").as("start"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("walk"))
       .select(col("start"), col("walk"), lit(0).as("step"),
         lit(-1L).as("prev"), col("start").as("node")))
-    val outs = scala.collection.mutable.ArrayBuffer(
-      cur.select(col("start"), col("walk"), col("step"), col("node")))
     val wKey = org.apache.spark.sql.expressions.Window
       .partitionBy(col("start"), col("walk"), col("prev"), col("node"))
-    var t = 1
-    while (t <= len) {
-      val cands = cur
+    // the corpus is the union of every step, so every step stays staged
+    val run = Rounds.iterate("node2vecWalks.step", walks0, len,
+        keep = Rounds.All) { t =>
+      val cands = t.last.df
         .join(vSized(nbr), col("node") === col("__ns"))
         .select(col("start"), col("walk"), col("prev"), col("node"),
           col("__nd").as("cand"), col("idx"))
       val weighted = (
-          if (t == 1)
+          if (t.index == 1)
             cands.withColumn("__w", lit(1L))
           else
             cands.join(vSized(prevEdge),
@@ -1168,21 +1065,18 @@ object Graph {
               .rowsBetween(org.apache.spark.sql.expressions.Window
                 .unboundedPreceding, -1)), lit(0L)))
         .withColumn("__tot", sum(col("__w")).over(wKey))
-      val key = concat_ws("_", col("start"), col("walk"), lit(t),
+      val key = concat_ws("_", col("start"), col("walk"), lit(t.index),
         col("prev"), col("node"))
-      val next = Checkpoints.stage(weighted
+      t.stage(weighted
         .withColumn("__draw",
           pmod(TextAnalysis.fingerprint(key), col("__tot")))
         .where(col("__draw") >= col("__cum") &&
           col("__draw") < col("__cum") + col("__w"))
-        .select(col("start"), col("walk"), lit(t).as("step"),
+        .select(col("start"), col("walk"), lit(t.index).as("step"),
           col("node").as("prev"), col("cand").as("node")))
-      outs += next.select(col("start"), col("walk"), col("step"),
-        col("node"))
-      cur = next
-      t += 1
     }
-    outs.reduce(_.unionAll(_))
+    run.kept.map(_.df.select(col("start"), col("walk"), col("step"),
+        col("node"))).reduce(_.unionAll(_))
       .select(col("start"), col("walk"), col("step"), col("node"))
   }
 
@@ -1516,7 +1410,7 @@ object Graph {
     // community, unseen (new) ids start as singletons — the gain
     // arithmetic is valid from ANY assignment, a near-converged start
     // just needs fewer rounds.
-    var comm = Checkpoints.stage(start match {
+    val comm0 = Rounds.stage("louvain.start", start match {
       case None => deg.select(col("id"), col("id").as("c"))
       case Some(s0) =>
         deg.select(col("id"))
@@ -1525,9 +1419,18 @@ object Graph {
           .select(col("id"),
             coalesce(col("__c0"), col("id")).as("c"))
     })
-    var it = 0
-    var executed = 0
-    while (it < rounds) {
+    // CONVERGENCE EARLY-EXIT (the CC equal-sums pattern at a stronger
+    // invariant): zero movers means the next round sees the identical
+    // assignment, recomputes the identical scores, and picks the
+    // identical argmax — a fixed point, so skipping the remaining
+    // rounds is bit-identical and saves one full edge-scale shuffle
+    // per skipped round. The mover count is observed on the staging
+    // job — no per-round probe job.
+    val movers = coalesce(sum(
+      when(col("m.pick") =!= col("__cur"), 1L).otherwise(0L)), lit(0L))
+    val run = Rounds.iterate("louvain.round", comm0, rounds,
+        Rounds.Of(movers), done = (_, c) => earlyExit && c.count == 0L) { t =>
+      val comm = t.last.df
       // community weighted-degree sums (|C|-sized)
       val dc = comm.join(vSized(deg), Seq("id"))
         .groupBy(col("c")).agg(sum(col("d")).as("dc"))
@@ -1555,35 +1458,17 @@ object Graph {
               (col("dc").cast(dec) -
                 when(col("__cur") === col("cand"), col("d"))
                   .otherwise(lit(0L)).cast(dec))).as("score"))
-      val next = scored
+      t.stage(scored
         .groupBy(col("id"))
         .agg(max(struct(col("score"), (-col("cand")).as("nc"),
           col("cand").as("pick"))).as("m"),
           // every cand row of an id carries the same __cur, so max
           // is exact — it rides the argmax aggregate for the mover
-          // count below
-          max(col("__cur")).as("__cur"))
-      // CONVERGENCE EARLY-EXIT (the CC equal-sums pattern at a
-      // stronger invariant): zero movers means the next round sees
-      // the identical assignment, recomputes the identical scores,
-      // and picks the identical argmax — a fixed point, so skipping
-      // the remaining rounds is bit-identical and saves one full
-      // edge-scale shuffle per skipped round. The mover count rides
-      // the staging job as an Observation — no per-round probe job.
-      val obs = org.apache.spark.sql.Observation()
-      val staged = Checkpoints.stage(next
-        .observe(obs, coalesce(sum(
-            when(col("m.pick") =!= col("__cur"), 1L).otherwise(0L)),
-          lit(0L)).as("mv"))
-        .select(col("id"), col("m.pick").as("c")))
-      executed += 1
-      if (earlyExit && executed < rounds &&
-          obs.get("mv").asInstanceOf[Long] == 0L) it = rounds
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(comm)
-      comm = staged
-      it += 1
+          // count
+          max(col("__cur")).as("__cur")),
+        col("id"), col("m.pick").as("c"))
     }
-    (comm.select(col("id"), col("c").as("community")), executed)
+    (run.last.df.select(col("id"), col("c").as("community")), run.rounds)
   }
 
   /** EXACT modularity decomposition of a community assignment
@@ -1790,6 +1675,18 @@ object Graph {
                        iters: Int = 3,
                        broadcastLimit: Long = 4000000L): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
+    labelRounds(edges, a, b, seeds, seedId, seedLabel, iters,
+      broadcastLimit, keep = 1).last.df.select(col("id"), col("label"))
+  }
+
+  /** The [[labelPropagation]] loop: round 0 is the seed labeling,
+    * round r the (id, label, __fixed) state after r votes, the newest
+    * `keep` rounds left staged.
+    */
+  private def labelRounds(edges: DataFrame, a: Column, b: Column,
+                          seeds: DataFrame, seedId: Column,
+                          seedLabel: Column, iters: Int,
+                          broadcastLimit: Long, keep: Int): Rounds.Run = {
     val e0 = edges.select(a.as("src"), b.as("dst"))
     // pre-partitioned on dst: BOTH per-round vote aggregates
     // (groupBy (dst,label) then groupBy dst) are satisfied by the
@@ -1810,12 +1707,13 @@ object Graph {
         .union(sd.select(col("id")))
         .distinct())
     val vSized = gate(n, broadcastLimit) _
-    var labels = Checkpoints.stage(
+    val labels0 = Rounds.stage("labelPropagation.start",
       nodes.join(vSized(sd), Seq("id"), "left")
         .select(col("id"), col("__seed").as("label"),
           col("__seed").isNotNull.as("__fixed")))
-    var it = 0
-    while (it < iters) {
+    Rounds.iterate("labelPropagation.round", labels0, iters,
+        keep = keep) { t =>
+      val labels = t.last.df
       // (dst, label) neighbor counts and their argmax in ONE shuffle:
       // max(struct(cnt, label)) = max count, then max label on ties.
       val best = sym
@@ -1827,19 +1725,13 @@ object Graph {
         .groupBy(col("dst"))
         .agg(max(struct(col("__c"), col("__l"))).as("__b"))
         .select(col("dst").as("id"), col("__b.__l").as("__nl"))
-      val next = labels
+      t.stage(labels
         .join(vSized(best), Seq("id"), "left")
         .select(col("id"),
           when(col("__fixed"), col("label"))
             .otherwise(coalesce(col("__nl"), col("label"))).as("label"),
-          col("__fixed"))
-      probeRound("labelPropagation.round", next)
-      val staged = Checkpoints.stage(next)
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(labels)
-      labels = staged
-      it += 1
+          col("__fixed")))
     }
-    labels.select(col("id"), col("label"))
   }
 
   // ---------- warm-start incremental label propagation ----------
@@ -1900,58 +1792,19 @@ object Graph {
         seedId, seedLabel, iters, broadcastLimit)
     }
 
+  // every round of the [[labelPropagation]] run as (__round, id, label)
+  // slices, rounds 1..iters
   private def labelStateRoundSlices(
       edges: DataFrame, a: Column, b: Column, seeds: DataFrame,
       seedId: Column, seedLabel: Column, iters: Int,
       broadcastLimit: Long): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    // the labelPropagation loop, with each round's staged labels kept
-    // (sym pre-partitioned on dst for the exchange-free vote path,
-    // exactly as in [[labelPropagation]])
-    val e0 = edges.select(a.as("src"), b.as("dst"))
-    val sym = Checkpoints.stage(
-      e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .where(col("src") =!= col("dst"))
-        .distinct()
-        .repartition(col("dst")))
-    val sd = Checkpoints.stage(
-      seeds.select(seedId.as("id"), seedLabel.as("__seed"))
-        .where(col("__seed").isNotNull)
-        .groupBy(col("id")).agg(max(col("__seed")).as("__seed")))
-    val (nodes, n) = Checkpoints.stageCount(
-      sym.select(col("src").as("id"))
-        .union(sym.select(col("dst").as("id")))
-        .union(sd.select(col("id")))
-        .distinct())
-    val vSized = gate(n, broadcastLimit) _
-    var labels = Checkpoints.stage(
-      nodes.join(vSized(sd), Seq("id"), "left")
-        .select(col("id"), col("__seed").as("label"),
-          col("__seed").isNotNull.as("__fixed")))
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var it = 0
-    while (it < iters) {
-      val best = sym
-        .join(vSized(labels.where(col("label").isNotNull)
-          .select(col("id").as("src"), col("label").as("__l"))),
-          Seq("src"))
-        .groupBy(col("dst"), col("__l"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy(col("dst"))
-        .agg(max(struct(col("__c"), col("__l"))).as("__b"))
-        .select(col("dst").as("id"), col("__b.__l").as("__nl"))
-      val next = labels
-        .join(vSized(best), Seq("id"), "left")
-        .select(col("id"),
-          when(col("__fixed"), col("label"))
-            .otherwise(coalesce(col("__nl"), col("label"))).as("label"),
-          col("__fixed"))
-      labels = Checkpoints.stage(next)
-      rounds += labels.select(lit(it + 1).as("__round"), col("id"),
-        col("label"))
-      it += 1
-    }
-    rounds.reduce(_ unionByName _)
+    labelRounds(edges, a, b, seeds, seedId, seedLabel, iters,
+        broadcastLimit, keep = Rounds.All)
+      .kept.tail
+      .map(r => r.df.select(lit(r.index).as("__round"), col("id"),
+        col("label")))
+      .reduce(_ unionByName _)
   }
 
   /** WARM-START label propagation: the k-round result over the UNION
@@ -2014,18 +1867,19 @@ object Graph {
         .where(col("__seed").isNotNull)
         .groupBy(col("id")).agg(max(col("__seed")).as("__seed")))
     // dirty_1: endpoints of the new edges (new nodes arrive only here)
-    var (dirty, nDirty) = Checkpoints.stageCount(
+    var dirty = Rounds.stage("labelPropagationIncremental.dirty",
       en.select(col("src").as("id"))
         .union(en.select(col("dst").as("id")))
-        .distinct())
+        .distinct(), Rounds.Rows)
     // the persisted state, merged ONCE for all rounds and staged —
     // every per-round read below is a filter on this
     val state = Checkpoints.stage(store.view(spark, batchId))
-    // round-0 labels are the seed labels — no store read needed
-    var prevSlice: DataFrame = null // labels of dirty_{r-1}
-    val slices = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var r = 1
-    while (r <= iters) {
+    // round r stages dirty_r (r > 1) and the slice of dirty_r's round-r
+    // labels; round 0 has no slice — its labels are the seed labels,
+    // no store read needed
+    val run = Rounds.iterate("labelPropagationIncremental.slice",
+        Rounds.seed(), iters, keep = Rounds.All) { t =>
+      val r = t.index
       // full round-(r-1) labels where votes need them: store state
       // overridden by the recomputed dirty_{r-1} slice (round 1 votes
       // read seed labels directly)
@@ -2033,24 +1887,29 @@ object Graph {
         if (r == 1) sd.select(col("id"), col("__seed").as("label"))
         else state.where(col("__round") === (r - 1))
           .select(col("id"), col("label"))
-          .join(gate(nDirty, broadcastLimit)(dirty.select(col("id"))),
+          .join(gate(dirty.count, broadcastLimit)(dirty.df.select(col("id"))),
             Seq("id"), "left_anti")
-          .unionByName(prevSlice)
+          .unionByName(t.last.df)
       // frontier for THIS round: last round's dirty set plus its
-      // neighbors (their votes read a changed label)
-      val (dirtyNow, nNow) =
-        if (r == 1) (dirty, nDirty)
-        else Checkpoints.stageCount(
-          sym.join(gate(nDirty, broadcastLimit)(
-              dirty.select(col("id").as("src"))), Seq("src"), "left_semi")
-            .select(col("dst").as("id"))
-            .union(dirty.select(col("id")))
-            .distinct())
+      // neighbors (their votes read a changed label); the superseded
+      // set is freed once this round is staged
+      val dirtyNow =
+        if (r == 1) dirty
+        else {
+          t.scratch(dirty.df)
+          Rounds.stage("labelPropagationIncremental.dirty",
+            sym.join(gate(dirty.count, broadcastLimit)(
+                dirty.df.select(col("id").as("src"))), Seq("src"), "left_semi")
+              .select(col("dst").as("id"))
+              .union(dirty.df.select(col("id")))
+              .distinct(), Rounds.Rows)
+        }
+      val nNow = dirtyNow.count
       // votes only for dirty nodes: edge scan pruned to edges INTO the
       // frontier, labels joined on the source side
       val votes = sym
-        .join(gate(nNow, broadcastLimit)(dirtyNow.select(col("id").as("dst"))),
-          Seq("dst"), "left_semi")
+        .join(gate(nNow, broadcastLimit)(
+            dirtyNow.df.select(col("id").as("dst"))), Seq("dst"), "left_semi")
         .join(prevLabels.where(col("label").isNotNull)
           .select(col("id").as("src"), col("label").as("__l")),
           Seq("src"))
@@ -2062,38 +1921,37 @@ object Graph {
       // current (round r-1) labels of the dirty nodes themselves
       val cur =
         if (r == 1)
-          dirty.join(gate(nSd, broadcastLimit)(sd), Seq("id"), "left")
+          dirty.df.join(gate(nSd, broadcastLimit)(sd), Seq("id"), "left")
             .select(col("id"), col("__seed").as("__cur"))
-        else dirtyNow
+        else dirtyNow.df
           .join(prevLabels.select(col("id"), col("label").as("__cur")),
             Seq("id"), "left")
           .select(col("id"), col("__cur"))
-      val slice = Checkpoints.stage(cur
+      dirty = dirtyNow
+      t.stage(cur
         .join(gate(nNow, broadcastLimit)(votes), Seq("id"), "left")
         .join(gate(nNow, broadcastLimit)(sd), Seq("id"), "left")
         .select(col("id"),
           when(col("__seed").isNotNull, col("__seed"))
             .otherwise(coalesce(col("__nl"), col("__cur")))
             .as("label")))
-      slices += slice.select(lit(r).as("__round"), col("id"),
-        col("label"))
-      prevSlice = slice
-      dirty = dirtyNow
-      nDirty = nNow
-      r += 1
     }
+    val slices = run.kept.tail
     // persist the frontier slices (overwrite-idempotent batch append —
     // frontier-sized, never |V|-sized); the state view reads only
     // batches < batchId, so the result below is retry-stable
     store.append(spark, "labelPropagationIncremental(batch)", batchId, 1)(
-      slices.reduce(_ unionByName _))
+      slices.map(s => s.df.select(lit(s.index).as("__round"), col("id"),
+        col("label"))).reduce(_ unionByName _))
+    // written: only the final slice is read again
+    Rounds.free(slices.init.map(_.df): _*)
     // final view off the STAGED state (materialized before the write,
     // so a retry's overwrite cannot invalidate its file listing)
     state.where(col("__round") === iters)
       .select(col("id"), col("label"))
-      .join(gate(nDirty, broadcastLimit)(dirty.select(col("id"))), Seq("id"),
-        "left_anti")
-      .unionByName(prevSlice.select(col("id"), col("label")))
+      .join(gate(dirty.count, broadcastLimit)(dirty.df.select(col("id"))),
+        Seq("id"), "left_anti")
+      .unionByName(run.last.df.select(col("id"), col("label")))
   }}
 
   /** The label store's CURRENT (id, label) state at `round` (rounds
@@ -2443,40 +2301,27 @@ object Graph {
       edges.select(least(a, b).as("u"), greatest(a, b).as("v"))
         .where(col("u") =!= col("v"))
         .distinct())
-    var (nodes, n) = Checkpoints.stageCount(
+    val nodes0 = Rounds.stage("kCore.nodes",
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
-        .distinct())
-    var it = 0
-    var converged = false
-    while (it < maxRounds && !converged && n > 0) {
-      val vSized = gate(n, broadcastLimit) _
+        .distinct(), Rounds.Rows)
+    // converged when a round peels nothing (or nothing is left)
+    Rounds.iterate("kCore.round", nodes0,
+        if (nodes0.count > 0) maxRounds else 0, Rounds.Rows,
+        done = (p, c) => c.count == p.count || c.count == 0) { t =>
+      val nodes = t.last.df
+      val vSized = gate(t.last.count, broadcastLimit) _
       val live = e
         .join(vSized(nodes.select(col("id").as("u"))), Seq("u"),
           "left_semi")
         .join(vSized(nodes.select(col("id").as("v"))), Seq("v"),
           "left_semi")
-      val next = live.select(col("u").as("id"))
+      t.stage(live.select(col("u").as("id"))
         .unionAll(live.select(col("v").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("__d"))
         .where(col("__d") >= k)
-        .select(col("id"))
-      val (staged, m) = Checkpoints.stageCount(next)
-      converged = m == n
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(nodes)
-      nodes = staged
-      n = m
-      it += 1
-    }
-    nodes
+        .select(col("id")))
+    }.last.df
   }
-
-  /** Stage + row count in ONE action — see [[Checkpoints.stageCount]]
-    * (the convergence checks of iterative operators are per-job
-    * scheduling latency, not data; fusing them halves the job count
-    * of round-heavy topologies).
-    */
-  private def stagedCount(df: DataFrame): (DataFrame, Long) =
-    Checkpoints.stageCount(df)
 
   // ---------- strongly connected components ----------
 
@@ -2536,18 +2381,14 @@ object Graph {
                                   maxInner: Int = 0,
                                   broadcastLimit: Long = 4000000L)
       : DataFrame = {
-    val free: DataFrame => Unit =
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint
-    val (e0, nE0) = Checkpoints.stageCount(
+    val e0 = Rounds.stage("scc.edges",
       edges.select(src.cast("long").as("src"),
           dst.cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
-        .distinct())
-    val (allNodes, nAll) = stagedCount(
-      e0.select(col("src").as("id"))
-        .union(e0.select(col("dst").as("id"))).distinct())
-    var remE = e0
-    var nE = nE0
+        .distinct(), Rounds.Rows)
+    val (allNodes, nAll) = Checkpoints.stageCount(
+      e0.df.select(col("src").as("id"))
+        .union(e0.df.select(col("dst").as("id"))).distinct())
     val roundBudget =
       if (maxRounds > 0) maxRounds.toLong else math.max(nAll, 1L)
     val innerBudget =
@@ -2563,8 +2404,11 @@ object Graph {
     // DataFrame (and its anti-join job) of the previous form is gone.
     val found =
       scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var outer = 0L
-    while (nE > 0 && outer < roundBudget) {
+    // each OUTER round's state is the remaining edge set
+    val drained = Rounds.iterate("scc.outerRound", e0,
+        if (e0.count > 0) roundBudget else 0, Rounds.Rows,
+        done = (_, c) => c.count == 0) { t =>
+      val outer = t.index - 1
       // 0. TRIM, edge-driven: an edge survives iff its src has an
       // in-edge and its dst has an out-edge; the surviving node set
       // is exactly srcSet ∩ dstSet of the surviving edges, so no node
@@ -2573,157 +2417,129 @@ object Graph {
       // stage = 3-4 jobs per layer). Edge count stable ⇒ no node
       // trimmed (trimming a node removes its edges), so the fixpoint
       // test rides the same job.
-      var trimming = true
-      while (trimming && nE > 0) {
+      val remE = Rounds.iterate("scc.trimLayer", t.last, Long.MaxValue,
+          Rounds.Rows,
+          done = (p, c) => c.count == p.count || c.count == 0) { tt =>
+        val remE = tt.last.df
         // semi joins dedup their build side internally — no distinct
         // (each distinct was an exchange, i.e. a per-layer barrier)
         val hasIn = remE.select(col("dst").as("src"))
         val hasOut = remE.select(col("src").as("dst"))
-        val (keepE, nKeepE) = stagedCount(remE
+        tt.stage(remE
           .join(gated(hasIn), Seq("src"), "left_semi")
           .join(gated(hasOut), Seq("dst"), "left_semi"))
-        if (nKeepE == nE) { free(keepE); trimming = false }
-        else {
-          if (!(remE eq e0)) free(remE)
-          remE = keepE
-          nE = nKeepE
-        }
-      }
-      if (nE == 0) {
-        outer += 1
-      } else {
-      // nodes of the surviving cyclic core (each has in + out
-      // here) — derived lazily into the f init staging, never
-      // materialized on its own
-      val rem = remE.select(col("src").as("id"))
-        .union(remE.select(col("dst").as("id"))).distinct()
-      // Rounds ALTERNATE the coloring direction: SCCs are invariant
-      // under edge reversal, and a chain whose ids ascend along the
-      // edges — the worst case for one direction (a single color per
-      // round) — splits into one color PER SCC under the reversed
-      // min-propagation, so monotone chains drain in ~2 rounds
-      // instead of SCC-depth-many.
-      val dirE =
-        if (outer % 2 == 0) remE
-        else remE.select(col("dst").as("src"), col("src").as("dst"))
-      // 1. directional min-label fixpoint with PATH COMPRESSION:
-      // one edge step (f(dst) ≤ min over in-neighbors f(src)) plus
-      // one pointer jump (f(v) ← f(f(v)) through the previous
-      // round's staged table, the CC loop's trick) per round. Every
-      // assigned value is an id that reaches v and labels only
-      // decrease, so the fixpoint is the same min-reaching-id
-      // coloring and "equal sums ⇒ converged" still holds (the
-      // combined step is monotone; a fixpoint of edge∘jump is a
-      // fixpoint of the edge step alone). The jump halves the
-      // remaining label depth per round: O(log d) observed staging
-      // jobs on a depth-d chain instead of O(d).
-      // round 1 reads the IDENTITY coloring straight off the edge set
-      // (f(v) = v ⇒ the neighbor-min is just min(src) per dst), so the
-      // identity table is never staged and round 1 pays no f-broadcast
-      // — one staging job and one broadcast job fewer per outer round
-      var f: DataFrame = null
-      var prevSum: java.math.BigDecimal = null
-      var stable = false
-      var it = 0
-      while (!stable && it < innerBudget) {
-        val nbrMin =
-          if (f eq null)
-            dirE.groupBy(col("dst").as("id"))
-              .agg(min(col("src")).as("__nbr"))
-          else dirE
-            .join(gated(f.select(col("id").as("src"),
-              col("f").as("__nf"))), Seq("src"))
-            .groupBy(col("dst").as("id"))
-            .agg(min(col("__nf")).as("__nbr"))
-        val fBase =
-          if (f eq null) rem.select(col("id"), col("id").as("f"))
-          else f
-        val prop = fBase
-          .join(gated(nbrMin), Seq("id"), "left")
-          .select(col("id"),
-            least(col("f"), coalesce(col("__nbr"), col("f")))
-              .as("f"))
-        // round 1's jump would follow the IDENTITY init table — a
-        // provable no-op, skipped
-        val jumped =
-          if (it == 0) prop
-          else prop
-            .join(gated(f.select(col("id").as("__jid"),
-              col("f").as("__jf"))),
-              prop("f") === col("__jid"), "left")
-            .select(prop("id").as("id"),
-              least(prop("f"), coalesce(col("__jf"), prop("f")))
+      }.last
+      // trimming drained the remainder: the outer round ends here
+      if (remE.count == 0) remE
+      else {
+        // nodes of the surviving cyclic core (each has in + out
+        // here) — derived lazily into the f init staging, never
+        // materialized on its own
+        val rem = remE.df.select(col("src").as("id"))
+          .union(remE.df.select(col("dst").as("id"))).distinct()
+        // Rounds ALTERNATE the coloring direction: SCCs are invariant
+        // under edge reversal, and a chain whose ids ascend along the
+        // edges — the worst case for one direction (a single color per
+        // round) — splits into one color PER SCC under the reversed
+        // min-propagation, so monotone chains drain in ~2 rounds
+        // instead of SCC-depth-many.
+        val dirE =
+          if (outer % 2 == 0) remE.df
+          else remE.df.select(col("dst").as("src"), col("src").as("dst"))
+        // 1. directional min-label fixpoint with PATH COMPRESSION:
+        // one edge step (f(dst) ≤ min over in-neighbors f(src)) plus
+        // one pointer jump (f(v) ← f(f(v)) through the previous
+        // round's staged table, the CC loop's trick) per round. Every
+        // assigned value is an id that reaches v and labels only
+        // decrease, so the fixpoint is the same min-reaching-id
+        // coloring and "equal sums ⇒ converged" still holds (the
+        // combined step is monotone; a fixpoint of edge∘jump is a
+        // fixpoint of the edge step alone). The jump halves the
+        // remaining label depth per round: O(log d) observed staging
+        // jobs on a depth-d chain instead of O(d).
+        // round 1 reads the IDENTITY coloring straight off the edge set
+        // (f(v) = v ⇒ the neighbor-min is just min(src) per dst), so the
+        // identity table is never staged and round 1 pays no f-broadcast
+        // — one staging job and one broadcast job fewer per outer round
+        val coloring = Rounds.iterate("scc.coloringRound", Rounds.seed(),
+            innerBudget, Rounds.Sum("f"),
+            done = (p, c) => p.index > 0 && p.sum.compareTo(c.sum) == 0) { ct =>
+          val f = ct.last.df
+          val nbrMin =
+            if (f eq null)
+              dirE.groupBy(col("dst").as("id"))
+                .agg(min(col("src")).as("__nbr"))
+            else dirE
+              .join(gated(f.select(col("id").as("src"),
+                col("f").as("__nf"))), Seq("src"))
+              .groupBy(col("dst").as("id"))
+              .agg(min(col("__nf")).as("__nbr"))
+          val fBase =
+            if (f eq null) rem.select(col("id"), col("id").as("f"))
+            else f
+          val prop = fBase
+            .join(gated(nbrMin), Seq("id"), "left")
+            .select(col("id"),
+              least(col("f"), coalesce(col("__nbr"), col("f")))
                 .as("f"))
-        probeRound("scc.coloringRound", jumped)
-        val obs = org.apache.spark.sql.Observation()
-        val next = Checkpoints.stage(jumped
-          .observe(obs,
-            coalesce(sum(col("f").cast("decimal(38,0)")),
-              lit(java.math.BigDecimal.ZERO)).as("s")))
-        val sumNow = obs.get("s").asInstanceOf[java.math.BigDecimal]
-        stable = prevSum != null && prevSum.compareTo(sumNow) == 0
-        prevSum = sumNow
-        if (f ne null) free(f)
-        f = next
-        it += 1
-      }
-      require(stable, s"scc: forward coloring did not converge in " +
-        s"$innerBudget rounds (outer $outer)")
-      // 2. reach back to the pivot INSIDE each color class (against
-      // the round's coloring direction)
-      val ce = Checkpoints.stage(dirE
-        .join(gated(f.select(col("id").as("src"),
-          col("f").as("__fs"))), Seq("src"))
-        .join(gated(f.select(col("id").as("dst"),
-          col("f").as("__fd"))), Seq("dst"))
-        .where(col("__fs") === col("__fd"))
-        .select(col("src"), col("dst")))
-      // frontier-layered BFS against the coloring direction: each
-      // layer stages only the NEWLY reached ids (one observed job per
-      // layer), never the whole reached set re-distincted; reached =
-      // the union of layers. Converged when a layer comes back empty.
-      // pivots derive from the CACHED f by a narrow filter — no
-      // staging job
-      val pivots = f.where(col("id") === col("f")).select(col("id"))
-      val rLayers = scala.collection.mutable.ArrayBuffer(pivots)
-      def reachedView: DataFrame = rLayers.reduce(_ unionAll _)
-      var frontier = pivots
-      stable = false
-      it = 0
-      while (!stable && it < innerBudget) {
-        val (next, n2) = stagedCount(
-          ce.join(gated(frontier.select(col("id").as("dst"))),
-              Seq("dst"), "left_semi")
-            .select(col("src").as("id"))
-            .distinct()
-            .join(gated(reachedView), Seq("id"), "left_anti"))
-        stable = n2 == 0
-        if (n2 > 0) { rLayers += next; frontier = next }
-        it += 1
-      }
-      require(stable, s"scc: backward reach did not converge in " +
-        s"$innerBudget rounds (outer $outer)")
-      val reached = reachedView
-      // 3. retire the found SCCs; surviving edges re-color next round
-      val scc = Checkpoints.stage(
-        f.join(gated(reached), Seq("id"), "left_semi")
-          .select(col("id"), col("f").as("scc")))
-      found += scc
-      free(ce)
-      free(f)
-      rLayers.foreach(free)
-      val (remENext, nENext) = stagedCount(remE
-        .join(gated(scc.select(col("id").as("src"))), Seq("src"),
-          "left_anti")
-        .join(gated(scc.select(col("id").as("dst"))), Seq("dst"),
-          "left_anti"))
-      if (!(remE eq e0)) free(remE)
-      remE = remENext
-      nE = nENext
-      outer += 1
+          // round 1's jump would follow the IDENTITY init table — a
+          // provable no-op, skipped
+          ct.stage(
+            if (f eq null) prop
+            else prop
+              .join(gated(f.select(col("id").as("__jid"),
+                col("f").as("__jf"))),
+                prop("f") === col("__jid"), "left")
+              .select(prop("id").as("id"),
+                least(prop("f"), coalesce(col("__jf"), prop("f")))
+                  .as("f")))
+        }
+        require(coloring.converged, s"scc: forward coloring did not " +
+          s"converge in $innerBudget rounds (outer $outer)")
+        val f = coloring.last.df
+        // 2. reach back to the pivot INSIDE each color class (against
+        // the round's coloring direction)
+        val ce = Checkpoints.stage(dirE
+          .join(gated(f.select(col("id").as("src"),
+            col("f").as("__fs"))), Seq("src"))
+          .join(gated(f.select(col("id").as("dst"),
+            col("f").as("__fd"))), Seq("dst"))
+          .where(col("__fs") === col("__fd"))
+          .select(col("src"), col("dst")))
+        // frontier-layered BFS against the coloring direction: each
+        // layer stages only the NEWLY reached ids (one observed job per
+        // layer), never the whole reached set re-distincted; reached =
+        // the union of layers. Converged when a layer comes back empty.
+        // pivots derive from the CACHED f by a narrow filter — no
+        // staging job
+        val reach = Rounds.iterate("scc.reachLayer",
+            Rounds.seed(f.where(col("id") === col("f")).select(col("id"))),
+            innerBudget, Rounds.Rows, keep = Rounds.All,
+            done = (_, c) => c.count == 0) { rt =>
+          rt.stage(
+            ce.join(gated(rt.last.df.select(col("id").as("dst"))),
+                Seq("dst"), "left_semi")
+              .select(col("src").as("id"))
+              .distinct()
+              .join(gated(Rounds.union(rt.kept)), Seq("id"), "left_anti"))
+        }
+        require(reach.converged, s"scc: backward reach did not " +
+          s"converge in $innerBudget rounds (outer $outer)")
+        // 3. retire the found SCCs; surviving edges re-color next round
+        val scc = Checkpoints.stage(
+          f.join(gated(Rounds.union(reach.untilDone)), Seq("id"),
+            "left_semi")
+            .select(col("id"), col("f").as("scc")))
+        found += scc
+        t.scratch(Seq(ce, f, remE.df) ++ reach.kept.map(_.df): _*)
+        t.stage(remE.df
+          .join(gated(scc.select(col("id").as("src"))), Seq("src"),
+            "left_anti")
+          .join(gated(scc.select(col("id").as("dst"))), Seq("dst"),
+            "left_anti"))
       }
     }
-    require(nE == 0,
+    require(drained.last.count == 0,
       s"scc did not drain in $roundBudget outer rounds")
     // singleton fill: every node never retired by an FB round is its
     // own SCC (trim-retired or edge-drained) — one anti-join at the
@@ -2782,46 +2598,35 @@ object Graph {
     */
   private def condensationLevels(asg: DataFrame, ce: DataFrame,
                                  maxInner: Int): DataFrame = {
-    val free: DataFrame => Unit =
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint
-    var lvl = Checkpoints.stage(
+    val lvl0 = Rounds.stage("condensationLevels.start",
       asg.select(col("scc")).distinct()
-        .withColumn("level", lit(0L)))
+        .withColumn("level", lit(0L)), Rounds.Rows)
     // DAG depth < #condensed nodes, so the derived budget never
     // aborts a finite input (the levels fixpoint converges or the
     // condensation was not a DAG — a bug the require below names)
     val levelBudget =
-      if (maxInner > 0) maxInner.toLong else lvl.count() + 1L
-    var prevSum: java.math.BigDecimal = null
-    var stable = false
-    var it = 0
-    while (!stable && it < levelBudget) {
+      if (maxInner > 0) maxInner.toLong else lvl0.count + 1L
+    // levels only grow: equal level sums ⇒ converged
+    val run = Rounds.iterate("condensationLevels.round", lvl0,
+        levelBudget, Rounds.Sum("level"),
+        done = (p, c) => p.index > 0 && p.sum.compareTo(c.sum) == 0) { t =>
+      val lvl = t.last.df
       val predMax = ce
         .join(lvl.select(col("scc").as("src"),
           col("level").as("__pl")), Seq("src"))
         .groupBy(col("dst").as("scc"))
         .agg((max(col("__pl")) + 1).as("__nl"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = Checkpoints.stage(lvl
+      t.stage(lvl
         .join(predMax, Seq("scc"), "left")
         .select(col("scc"),
           greatest(col("level"), coalesce(col("__nl"), col("level")))
-            .as("level"))
-        .observe(obs,
-          coalesce(sum(col("level").cast("decimal(38,0)")),
-            lit(java.math.BigDecimal.ZERO)).as("s")))
-      val sumNow = obs.get("s").asInstanceOf[java.math.BigDecimal]
-      stable = prevSum != null && prevSum.compareTo(sumNow) == 0
-      prevSum = sumNow
-      free(lvl)
-      lvl = next
-      it += 1
+            .as("level")))
     }
-    require(stable,
+    require(run.converged,
       s"condensationLevels: no fixpoint in $levelBudget rounds" +
         " — the condensation must be a DAG, so this is a bug")
     asg.groupBy(col("scc")).agg(count(lit(1)).as("n_members"))
-      .join(lvl, Seq("scc"))
+      .join(run.last.df, Seq("scc"))
       .select(col("scc"), col("level"), col("n_members"))
   }
 
@@ -3450,14 +3255,15 @@ object Graph {
         val pk = probe.join(degreeOK, Seq("id"), "left_semi")
         pk.join(memberOf(pk), Seq("id"), "left_anti")
     }
-    var (cand, nc) = Checkpoints.stageCount(eligibleOf(
+    val cand0 = Rounds.stage("kCoreIncremental.closure", eligibleOf(
       en.select(col("u").as("id")).union(en.select(col("v").as("id")))
-        .distinct()))
+        .distinct()), Rounds.Rows)
     // closure: grow through eligible neighbors to a fixpoint — flips
     // propagate only along such chains
-    var it = 0
-    var grown = nc > 0
-    while (it < maxRounds && grown) {
+    val cand = Rounds.iterate("kCoreIncremental.closure", cand0,
+        if (cand0.count > 0) maxRounds else 0, Rounds.Rows,
+        done = (p, c) => c.count <= p.count) { t =>
+      val (cand, nc) = (t.last.df, t.last.count)
       val nbrs = e.join(
           gate(nc, broadcastLimit)(cand.select(col("id").as("u"))),
           Seq("u"), "left_semi")
@@ -3465,24 +3271,17 @@ object Graph {
         .union(e.join(gate(nc, broadcastLimit)(cand.select(col("id").as("v"))),
           Seq("v"), "left_semi")
           .select(col("u").as("id")))
-      val (next, m) = Checkpoints.stageCount(
-        cand.unionByName(eligibleOf(nbrs.distinct())).distinct())
-      grown = m > nc
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(cand)
-      cand = next
-      nc = m
-      it += 1
-    }
+      t.stage(cand.unionByName(eligibleOf(nbrs.distinct())).distinct())
+    }.last
     // peel candidates with members frozen: a candidate survives iff
     // its degree into (frozen members ∪ surviving candidates) ≥ k.
     // Only edges INCIDENT to candidates are enumerated, and only the
     // candidates' current neighbor set probes the member store —
     // per-round work is frontier-sized on both the edge and store side
-    var surv = cand
-    var ns = nc
-    it = 0
-    var converged = ns == 0
-    while (it < maxRounds && !converged) {
+    val surv = Rounds.iterate("kCoreIncremental.peel", cand,
+        if (cand.count > 0) maxRounds else 0, Rounds.Rows,
+        done = (p, c) => c.count == p.count) { t =>
+      val (surv, ns) = (t.last.df, t.last.count)
       // one (c, w) row per candidate endpoint of each incident edge
       // (a candidate–candidate edge credits both endpoints)
       val inc = e.join(gate(ns, broadcastLimit)(surv.select(col("id").as("u"))),
@@ -3494,18 +3293,12 @@ object Graph {
           .select(col("v").as("c"), col("u").as("w")))
       val nbrIds = inc.select(col("w").as("id")).distinct()
       val live = surv.unionByName(memberOf(nbrIds))
-      val (next, m) = Checkpoints.stageCount(
+      t.stage(
         inc.join(live.select(col("id").as("w")), Seq("w"), "left_semi")
           .groupBy(col("c")).agg(count(lit(1)).as("__d"))
           .where(col("__d") >= k)
           .select(col("c").as("id")))
-      converged = m == ns
-      if (surv ne cand)
-        org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(surv)
-      surv = next
-      ns = m
-      it += 1
-    }
+    }.last.df
     // manifest upkeep only in the big regime: a stale manifest is
     // SOUND (uncovered files always read), the small regime never
     // consults it, and the next compactKCoreStore refreshes coverage

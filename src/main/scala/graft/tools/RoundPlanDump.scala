@@ -6,12 +6,16 @@ import org.apache.spark.sql.SparkSession
   * — the committed evidence that a round's vote/contribution path has
   * (or has not) an `Exchange` in the broadcast regime. The shipped
   * query's own explain covers only the final readout fragment of a
-  * driver-side job loop; this tool taps [[graft.operators.Graph]]'s
-  * `roundPlanProbe` hook to capture the FIRST occurrence of each
-  * distinct round tag while the query actually runs.
+  * driver-side job loop; this tool taps the round driver's
+  * [[graft.operators.Rounds]]`.probe` hook — every round any iterative
+  * operator stages passes it, tagged by the driver — to capture the
+  * FIRST occurrence of each distinct round tag while the query actually
+  * runs.
   *
   * Usage: runMain graft.tools.RoundPlanDump <outDir> <suffix> <q1,...>
-  * writes <outDir>/<query>__<tag>_<suffix>.txt per (query, tag).
+  * writes <outDir>/<query>__<tag>_<suffix>.txt per (query, tag). A
+  * query that fails writes nothing for that query, and the tool exits
+  * non-zero once every query has been tried.
   * Session mirrors Bench's (local[$SPARK_GRAFT_CPUS],
   * shuffle.partitions = cpus, extensions) so captured plans are the
   * benched plans. Local tool, not a driver surface.
@@ -35,9 +39,9 @@ object RoundPlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir)): Unit
-    names.foreach { name =>
+    val failed = names.filterNot { name =>
       val seen = scala.collection.mutable.Map.empty[String, String]
-      graft.operators.Graph.roundPlanProbe = Some { (tag, df) =>
+      graft.operators.Rounds.probe = Some { (tag, df) =>
         if (!seen.contains(tag)) {
           // execute the fragment first so the captured plan is the
           // FINAL adaptive plan (AQE runtime join rewrites included),
@@ -48,23 +52,32 @@ object RoundPlanDump {
             org.apache.spark.sql.execution.FormattedMode)
         }
       }
-      try {
-        val fn = graft.SparkEntry.queries(name)
-        fn(spark, sfDir).count(): Unit
-      } catch { case e: Throwable =>
-        System.err.println(s"[roundplan] $name failed: $e")
-      } finally {
-        graft.operators.Graph.roundPlanProbe = None
-        graft.operators.Checkpoints.freeTransient(spark)
-      }
-      seen.foreach { case (tag, plan) =>
+      val ok =
+        try {
+          val fn = graft.SparkEntry.queries(name)
+          fn(spark, sfDir).count(): Unit
+          true
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[roundplan] $name failed: $e")
+          false
+        } finally {
+          graft.operators.Rounds.probe = None
+          graft.operators.Checkpoints.freeTransient(spark)
+        }
+      if (ok) seen.foreach { case (tag, plan) =>
         val f = s"${name}__${tag}_$suffix.txt"
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, f),
           plan.getBytes("UTF-8")): Unit
         println(s"wrote $outDir/$f")
       }
+      ok
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[roundplan] ${failed.length} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }
