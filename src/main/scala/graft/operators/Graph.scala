@@ -702,6 +702,7 @@ object Graph {
           Seq("id", "lm"), "left_anti"))
     }
     // an empty last layer ended the search and adds nothing
+    if (run.converged) Rounds.free(run.last.df)
     Rounds.union(run.untilDone)
   }
 
@@ -928,6 +929,8 @@ object Graph {
         .agg(min(col("dist")).as("dist")))
     store.append(spark, "landmarkDistancesIncremental(batch)", batchId,
       filesOut)(delta)
+    // an empty layer (the one that ended the search) improved nothing
+    Rounds.free(run.kept.filter(_.count == 0).map(_.df): _*)
     // sketch is staged, so its data predates the overwrite safely
     sketch
   }}

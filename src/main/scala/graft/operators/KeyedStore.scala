@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions._
   * `__b` < b, which is both the retry-stable prior state of an append
   * and the as-of snapshot read.
   *
+  * A family's deleted-id set is a KeyedStore too
+  * ([[KeyedStore.tombstones]]): its verbs are the whole tombstone
+  * protocol — [[writeFresh]], [[deletedBefore]] / [[without]], and
+  * [[foldWithout]].
+  *
   * Every mutating verb runs under the writer lease on `leaseRoot` (the
   * family root; default `root`). The lease is reentrant, so a family
   * verb that already holds it — a two-store write, or an incremental
@@ -51,11 +56,11 @@ private[graft] final case class KeyedStore(
   private val clusterNames: Seq[String] =
     if (cluster.isEmpty) keyNames else cluster
   private val manifestPath: String = root.stripSuffix("/") + "_manifest"
+  private val familyRoot: String = if (leaseRoot.isEmpty) root else leaseRoot
 
   /** Run `body` holding the family's writer lease. */
   def leased[T](spark: SparkSession, owner: String)(body: => T): T =
-    Stats.withWriterLease(spark,
-      Seq(if (leaseRoot.isEmpty) root else leaseRoot), owner)(body)
+    Stats.withWriterLease(spark, Seq(familyRoot), owner)(body)
 
   // the store's file layout: `parts` files range-partitioned on the
   // cluster key, each sorted on cluster ++ key
@@ -223,6 +228,77 @@ private[graft] final case class KeyedStore(
   /** A reusable [[pruned]] reader ([[Stats.keyPruner]]). */
   def keyPruner(spark: SparkSession, keyCol: String): Stats.KeyPruner =
     Stats.keyPruner(spark, committedDirs(spark), manifestPath, keyCol)
+
+  // ---------- deleted-id sets ([[KeyedStore.tombstones]]) ----------
+
+  /** The deleted ids (the key column) committed before `beforeBatch`;
+    * None when nothing is committed.
+    */
+  def deletedBefore(spark: SparkSession,
+                    beforeBatch: Long = Long.MaxValue): Option[DataFrame] =
+    if (committedDirs(spark).isEmpty) None
+    else Some(open(spark).where(col("__b") < beforeBatch)
+      .select(keyCols: _*))
+
+  // `rows` minus `deleted`, matched on each of the columns `on`
+  private def minus(rows: DataFrame, deleted: Option[DataFrame],
+                    on: Seq[String]): DataFrame =
+    deleted.fold(rows)(d => on.foldLeft(rows)((r, c) =>
+      r.join(d.select(keyCols.head.as(c)), Seq(c), "left_anti")))
+
+  /** `rows` minus every committed deleted id, matched on each of `on`
+    * (default: the key column).
+    */
+  def without(spark: SparkSession, rows: DataFrame,
+              on: String*): DataFrame =
+    minus(rows, deletedBefore(spark), if (on.isEmpty) keyNames else on)
+
+  /** Write batch `batchId`'s fresh ids — those of `ids` not committed
+    * before the batch — once `batchId` is checked to be on the monotone
+    * sequence of `guard` (no check when empty); returns them staged.
+    * A retry recomputes the same set: the prior view reads only
+    * batches below `batchId`.
+    */
+  def writeFresh(spark: SparkSession, who: String, batchId: Long,
+                 guard: Seq[String] = Nil, parts: Int = 1)
+                (ids: DataFrame): DataFrame =
+    leased(spark, s"$who(batch)") {
+      if (guard.nonEmpty)
+        Stats.requireMonotoneBatch(spark, guard, batchId, who)
+      val fresh = Checkpoints.stage(minus(ids.select(keyCols: _*)
+        .distinct(), deletedBefore(spark, batchId), keyNames))
+      write(fresh, batchId, parts, s"batch=$batchId")
+      fresh
+    }
+
+  /** Fold each `(root, on, shape)` store's committed view minus the
+    * deleted ids (matched on `on`) through `shape`
+    * ([[Stats.compactCommittedStore]]), run `use` on the staged set,
+    * then — when every store folded and a set is committed — clear the
+    * set and, if it held ids, record the family's retraction floor at
+    * the newest fold ([[Stats.recordRetractionFloor]]). A store with
+    * nothing to fold keeps the set in force for the next cycle. Returns
+    * each store's fold token.
+    */
+  def foldWithout(spark: SparkSession, who: String,
+                  stores: Seq[(String, Seq[String], DataFrame => DataFrame)],
+                  use: Option[DataFrame] => Unit = _ => ())
+      : Seq[Option[Long]] =
+    leased(spark, s"$who(batch)") {
+      val deleted = deletedBefore(spark).map(Checkpoints.stage)
+      val toks = stores.map { case (r, on, shape) =>
+        Stats.compactCommittedStore(spark, r,
+          rows => shape(minus(rows, deleted, on)))
+      }
+      use(deleted)
+      if (deleted.isDefined && toks.forall(_.isDefined)) {
+        if (!deleted.get.isEmpty)
+          Stats.recordRetractionFloor(spark, familyRoot, toks.flatten.max)
+        Stats.compactCommittedStore(spark, root,
+          _.where(lit(false)).select(keyCols :+ col("__b"): _*)): Unit
+      }
+      toks
+    }
 }
 
 private[graft] object KeyedStore {
@@ -246,4 +322,28 @@ private[graft] object KeyedStore {
     * predates it.
     */
   case object EarliestBatch extends Fold
+
+  /** Where a family's deleted-id set lives, relative to the family
+    * root: `<root>_deleted` (the id-keyed gate stores), `<root>/deleted`
+    * (BM25 index, KMV units, PCA moments, k-center coreset, cumulative
+    * models) and `<edges>_deleted_nodes` (the graph edge store).
+    */
+  val tombstoneLayouts: Seq[String] =
+    Seq("_deleted", "/deleted", "_deleted_nodes")
+
+  /** Every root a family's deleted-id set can live at. */
+  def tombstoneRoots(familyRoot: String): Seq[String] =
+    tombstoneLayouts.map(familyRoot.stripSuffix("/") + _)
+
+  /** A family's deleted-id set: a [[Membership]] store on the one id
+    * column, no manifest, leased on the family root — the one owner of
+    * the tombstone protocol (write a batch's fresh ids, read the set
+    * before a batch, fold the family without it and clear it).
+    */
+  def tombstones(familyRoot: String, layout: String, name: String,
+                 id: (String, String) = "id" -> "*"): KeyedStore = {
+    require(tombstoneLayouts.contains(layout), s"$name: layout $layout")
+    KeyedStore(familyRoot.stripSuffix("/") + layout, name, Seq(id), Nil,
+      Membership, manifest = false, leaseRoot = familyRoot)
+  }
 }

@@ -222,7 +222,7 @@ object Overlap {
         "appendKmvUnitSketches(batch)") {
     require(batchId >= 1L, "batchId 0 is the writeKmvUnitStore base")
     Stats.requireMonotoneBatch(batch.sparkSession,
-      Seq(storeDir, s"$storeDir/deleted"), batchId,
+      Seq(storeDir, kmvTombstones(storeDir).root), batchId,
       "appendKmvUnitSketches")
     kmvUnitSketches(batch, group, unit, key, k)
       .repartitionByRange(filesOut, col("grp"), col("unit"))
@@ -241,30 +241,17 @@ object Overlap {
     * nothing additive remembers it, unlike the BM25 stats fold.
     */
   def deleteKmvUnits(ids: DataFrame, storeDir: String, batchId: Long,
-                     filesOut: Int = 1): Unit =
-    Stats.withWriterLease(ids.sparkSession, Seq(storeDir),
-        "deleteKmvUnits(batch)") {
+                     filesOut: Int = 1): Unit = {
     require(batchId >= 1L, "batchId 0 is the writeKmvUnitStore base")
-    Stats.requireMonotoneBatch(ids.sparkSession,
-      Seq(storeDir, s"$storeDir/deleted"), batchId, "deleteKmvUnits")
-    ids.select(col("unit")).distinct()
-      .select(col("unit"), lit(batchId).as("__b"))
-      .repartitionByRange(filesOut, col("unit"))
-      .sortWithinPartitions(col("unit"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/deleted/batch=$batchId")
+    val tomb = kmvTombstones(storeDir)
+    Rounds.free(tomb.writeFresh(ids.sparkSession, "deleteKmvUnits",
+      batchId, Seq(storeDir, tomb.root), filesOut)(ids))
   }
 
-  private def kmvDeletedUnits(spark: SparkSession, storeDir: String)
-      : Option[DataFrame] =
-    Stats.committedViewDirs(spark, s"$storeDir/deleted") match {
-      case Seq() => None
-      case _ => Some(Stats.openCommittedStore(spark,
-          s"$storeDir/deleted",
-          Seq("unit" -> "bigint", "__b" -> "bigint"),
-          "kmvDeletedUnits")
-        .select(col("unit")))
-    }
+  // the store's `deleted/` unit set
+  private def kmvTombstones(storeDir: String): KeyedStore =
+    KeyedStore.tombstones(storeDir, "/deleted", "kmvDeletedUnits",
+      "unit" -> "bigint")
 
   /** The store's CURRENT per-group sketches: surviving units' rows
     * folded by the merge semigroup — bit-identical to
@@ -276,11 +263,7 @@ object Overlap {
     val rows = Stats.openCommittedStore(spark, storeDir,
       Seq("grp" -> "string", "unit" -> "bigint",
         "sketch" -> "array<bigint>"), "kmvUnitStore")
-    val live = kmvDeletedUnits(spark, storeDir) match {
-      case None => rows
-      case Some(del) => rows.join(del, Seq("unit"), "left_anti")
-    }
-    live.groupBy(col("grp"))
+    kmvTombstones(storeDir).without(spark, rows).groupBy(col("grp"))
       .agg(slice(array_sort(array_distinct(flatten(
         collect_list(col("sketch"))))), 1, k).as("sketch"))
   }
@@ -293,19 +276,9 @@ object Overlap {
     */
   def compactKmvUnitStore(spark: SparkSession, storeDir: String,
                           filesOut: Int = 2): Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactKmvUnitStore(batch)") {
-    val deleted = kmvDeletedUnits(spark, storeDir)
-      .map(d => Checkpoints.stage(d))
-    val tok = Stats.compactCommittedStore(spark, storeDir,
-      df => deleted.fold(df)(del =>
-          df.join(del, Seq("unit"), "left_anti"))
-        .select(col("grp"), col("unit"), col("sketch"))
-        .repartitionByRange(filesOut, col("grp"), col("unit"))
-        .sortWithinPartitions(col("grp"), col("unit")))
-    if (tok.isDefined && deleted.isDefined)
-      Stats.compactCommittedStore(spark, s"$storeDir/deleted",
-        _.where(lit(false)).select(col("unit"), col("__b"))): Unit
-    tok
-  }
+    kmvTombstones(storeDir).foldWithout(spark, "compactKmvUnitStore",
+      Seq((storeDir, Seq("unit"),
+        _.select(col("grp"), col("unit"), col("sketch"))
+          .repartitionByRange(filesOut, col("grp"), col("unit"))
+          .sortWithinPartitions(col("grp"), col("unit"))))).head
 }

@@ -201,23 +201,12 @@ object Retrieval {
     Stats.withWriterLease(spark, Seq(indexDir),
         "deleteBm25Docs(batch)") {
     require(batchId > 0L, "deleteBm25Docs: batchId 0 is the base write")
-    Stats.requireMonotoneBatch(spark, Seq(s"$indexDir/stats"), batchId,
-      "deleteBm25Docs")
-    val fresh = Checkpoints.stage(
-      bm25DeletedIds(spark, indexDir, batchId) match {
-        case None => ids.select(col("id")).distinct()
-        case Some(del) => ids.select(col("id")).distinct()
-          .join(del, Seq("id"), "left_anti")
-      })
     // the tombstone set FIRST, the stats correction second: the
     // correction is derived from exactly the fresh set, and a retry
     // (same batchId) recomputes the same set because the prior view
     // reads only batches < batchId
-    fresh.select(col("id"), lit(batchId).as("__b"))
-      .repartitionByRange(filesOut, col("id"))
-      .sortWithinPartitions(col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexDir/deleted/batch=$batchId")
+    val fresh = bm25Tombstones(indexDir).writeFresh(spark,
+      "deleteBm25Docs", batchId, Seq(s"$indexDir/stats"), filesOut)(ids)
     readTouchedKeysView(spark, s"$indexDir/doclen",
         s"$indexDir/doclen_manifest", "id", fresh)
       .join(fresh, Seq("id"), "left_semi")
@@ -228,30 +217,11 @@ object Retrieval {
       .parquet(s"$indexDir/stats/batch=$batchId")
   }
 
-  /** The index's tombstoned doc ids committed before `beforeBatch`
-    * (None when the index has never seen a delete — the common case
-    * pays one existence check, no join).
+  /** The index's tombstoned doc ids, `deleted/` (an index that has
+    * never seen a delete pays one existence check per read, no join).
     */
-  private def bm25DeletedIds(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String,
-                             beforeBatch: Long = Long.MaxValue)
-      : Option[DataFrame] =
-    Stats.committedViewDirs(spark, s"$indexDir/deleted") match {
-      case Seq() => None
-      case _ => Some(Stats.openCommittedStore(spark,
-          s"$indexDir/deleted",
-          Seq("id" -> "*", "__b" -> "bigint"), "bm25DeletedIds")
-        .where(col("__b") < beforeBatch)
-        .select(col("id")))
-    }
-
-  /** Drop tombstoned docs from a postings/doclen slice. */
-  private def minusDeleted(df: DataFrame,
-                           deleted: Option[DataFrame]): DataFrame =
-    deleted match {
-      case None => df
-      case Some(del) => df.join(del, Seq("id"), "left_anti")
-    }
+  private def bm25Tombstones(indexDir: String): KeyedStore =
+    KeyedStore.tombstones(indexDir, "/deleted", "bm25DeletedIds")
 
   /** Fold accumulated postings/doclen batch appends into ONE clustered
     * generation each (`gen=<maxBatchId>`, the
@@ -271,28 +241,20 @@ object Retrieval {
     Stats.withWriterLease(spark, Seq(indexDir),
         "compactBm25Index(batch)") {
     // tombstoned docs drop PHYSICALLY here: the folded generations
-    // hold surviving rows only, and the tombstone set is then rewritten
-    // as an empty generation (its corrections live on in the additive
-    // stats rows, which never compact). Staged first — the fold and
-    // the tombstone rewrite race otherwise.
-    val deleted = bm25DeletedIds(spark, indexDir)
-      .map(d => Checkpoints.stage(d))
-    def dropDeleted(df: DataFrame): DataFrame =
-      minusDeleted(df, deleted)
-    val tok = Stats.compactCommittedStore(spark, s"$indexDir/postings",
-      df => dropDeleted(df)
-        .select(col("th"), col("term"), col("id"), col("tf"))
-        .repartitionByRange(filesOut, col("th"))
-        .sortWithinPartitions(col("th"), col("term")))
+    // hold surviving rows only, and the tombstone set is then cleared
+    // (its corrections live on in the additive stats rows, which never
+    // compact)
+    val Seq(tok, _) = bm25Tombstones(indexDir).foldWithout(spark,
+      "compactBm25Index", Seq(
+        (s"$indexDir/postings", Seq("id"),
+          _.select(col("th"), col("term"), col("id"), col("tf"))
+            .repartitionByRange(filesOut, col("th"))
+            .sortWithinPartitions(col("th"), col("term"))),
+        (s"$indexDir/doclen", Seq("id"),
+          _.select(col("id"), col("dl"))
+            .repartitionByRange(math.max(1, filesOut / 2), col("id"))
+            .sortWithinPartitions(col("id")))))
     if (tok.isDefined) {
-      Stats.compactCommittedStore(spark, s"$indexDir/doclen",
-        df => dropDeleted(df)
-          .select(col("id"), col("dl"))
-          .repartitionByRange(math.max(1, filesOut / 2), col("id"))
-          .sortWithinPartitions(col("id"))): Unit
-      if (deleted.isDefined)
-        Stats.compactCommittedStore(spark, s"$indexDir/deleted",
-          _.where(lit(false)).select(col("id"), col("__b"))): Unit
       Stats.refreshManifest(spark, s"$indexDir/postings",
         s"$indexDir/postings_manifest")
       Stats.refreshManifest(spark, s"$indexDir/doclen",
@@ -350,12 +312,11 @@ object Retrieval {
       .select(xxhash64(col("term")).as("th"))
     // tombstoned docs drop BEFORE the df recovery below, so per-term
     // df is the SURVIVING document count
-    val slice = Checkpoints.stage(minusDeleted(
+    val slice = Checkpoints.stage(bm25Tombstones(indexDir).without(spark,
       readTouchedKeysView(spark, s"$indexDir/postings",
           s"$indexDir/postings_manifest", "th", probe)
         .where(col("term").isin(queryTerms: _*))
-        .select(col("term"), col("id"), col("tf")),
-      bm25DeletedIds(spark, indexDir)))
+        .select(col("term"), col("id"), col("tf"))))
     val dfAggs = idx.map(i =>
       sum(when(col("term") === queryTerms(i), 1L).otherwise(0L))
         .as(s"df_$i"))
@@ -417,12 +378,11 @@ object Retrieval {
       col("pos").cast("int").as("pos"), col("term")))
     val terms = q.select(col("term")).distinct()
     val probe = terms.select(xxhash64(col("term")).as("th"))
-    val slice = Checkpoints.stage(minusDeleted(
+    val slice = Checkpoints.stage(bm25Tombstones(indexDir).without(spark,
       readTouchedKeysView(spark, s"$indexDir/postings",
           s"$indexDir/postings_manifest", "th", probe)
         .join(broadcast(terms), Seq("term"), "left_semi")
-        .select(col("term"), col("id"), col("tf").as("tf_0")),
-      bm25DeletedIds(spark, indexDir)))
+        .select(col("term"), col("id"), col("tf").as("tf_0"))))
     // postings are unique per (id, term), so rows-per-term = docs
     // containing the term — the same df the single-query agg derives
     val dfs = slice.groupBy(col("term"))

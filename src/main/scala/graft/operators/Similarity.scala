@@ -1038,7 +1038,8 @@ object Similarity {
     Stats.withWriterLease(batch.sparkSession, Seq(storeDir),
         "appendPcaMoments(batch)") {
     Stats.requireMonotoneBatch(batch.sparkSession,
-      Seq(storeDir, s"$storeDir/deleted"), batchId, "appendPcaMoments")
+      Seq(storeDir, pcaTombstones(storeDir).root), batchId,
+      "appendPcaMoments")
     pcaMoments(batch, vec, scale)
       .coalesce(1)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1075,23 +1076,13 @@ object Similarity {
                        scale: Long = 1L << 20): Unit =
     Stats.withWriterLease(deleted.sparkSession, Seq(storeDir),
         "deletePcaMoments(batch)") {
-    val spark = deleted.sparkSession
-    Stats.requireMonotoneBatch(spark,
-      Seq(storeDir, s"$storeDir/deleted"), batchId, "deletePcaMoments")
     val rows = deleted.select(id.as("id"), vec.as("__v"))
-    val fresh = Checkpoints.stage(
-      pcaDeletedIds(spark, storeDir, batchId) match {
-        case None => rows.select(col("id")).distinct()
-        case Some(del) => rows.select(col("id")).distinct()
-          .join(del, Seq("id"), "left_anti")
-      })
     // tombstone set first, the negative moment row second: a retry
     // (same batchId) recomputes the same fresh set because the prior
     // view reads only batches < batchId
-    fresh.select(col("id"), lit(batchId).as("__b"))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/deleted/batch=$batchId")
+    val tomb = pcaTombstones(storeDir)
+    val fresh = tomb.writeFresh(deleted.sparkSession, "deletePcaMoments",
+      batchId, Seq(storeDir, tomb.root))(rows)
     pcaMoments(rows.join(fresh, Seq("id"), "left_semi"), col("__v"),
         scale)
       .select(col("i"), col("j"),
@@ -1101,20 +1092,11 @@ object Similarity {
       .parquet(s"$storeDir/batch=$batchId")
   }
 
-  /** The moment store's tombstoned ids committed before `beforeBatch`
-    * (None when the store has never seen a delete).
+  /** The moment store's tombstoned ids, `deleted/` — permanent: it is
+    * compacted with the store, never cleared.
     */
-  private def pcaDeletedIds(spark: SparkSession, storeDir: String,
-                            beforeBatch: Long = Long.MaxValue)
-      : Option[DataFrame] =
-    Stats.committedViewDirs(spark, s"$storeDir/deleted") match {
-      case Seq() => None
-      case _ => Some(Stats.openCommittedStore(spark,
-          s"$storeDir/deleted",
-          Seq("id" -> "*", "__b" -> "bigint"), "pcaDeletedIds")
-        .where(col("__b") < beforeBatch)
-        .select(col("id")))
-    }
+  private def pcaTombstones(storeDir: String): KeyedStore =
+    KeyedStore.tombstones(storeDir, "/deleted", "pcaDeletedIds")
 
   /** The store's current total moments — same relation shape as
     * [[pcaMoments]] over the union of all committed batches.
@@ -1149,8 +1131,8 @@ object Similarity {
         .agg(sum(col("v")).cast("decimal(38,0)").as("v"))
         .coalesce(1))
     if (tok.isDefined)
-      Stats.compactCommittedStore(spark, s"$storeDir/deleted",
-        _.select(col("id"), col("__b")).coalesce(1)): Unit
+      pcaTombstones(storeDir).compact(spark, "compactPcaMoments(batch)", 1)
+        : Unit
     tok
   }
 

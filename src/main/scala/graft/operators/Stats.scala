@@ -279,14 +279,16 @@ object Stats {
     spark.catalog.refreshByPath(manifestPath)
   }
 
-  /** [[writeManifest]] when no manifest exists yet, [[refreshManifest]]
-    * otherwise — the one maintenance call every store append/compact
-    * site needs, tolerant of stores created before their manifest
-    * existed (absent manifest = first write, full footer sweep once).
+  /** [[writeManifest]] when no committed manifest exists yet,
+    * [[refreshManifest]] otherwise — the one maintenance call every
+    * store append/compact site needs, tolerant of stores created before
+    * their manifest existed and of a crashed first manifest write
+    * (absent or uncommitted manifest = first write, full footer sweep
+    * once).
     */
   def upsertManifest(spark: SparkSession, dir: String,
                      manifestPath: String): Unit =
-    if (pathExists(spark, manifestPath))
+    if (hasManifest(spark, manifestPath))
       refreshManifest(spark, dir, manifestPath)
     else writeManifest(spark, dir, manifestPath)
 
@@ -297,12 +299,13 @@ object Stats {
     * verbatim, and nothing else is listed or footer-read. A store-wide
     * [[refreshManifest]] pays a full recursive listing plus a
     * known-file collect per append; this pays one small-dir listing.
-    * Falls back to a full [[writeManifest]] when no manifest exists.
+    * Falls back to a full [[writeManifest]] when no committed manifest
+    * exists.
     */
   def upsertManifestFor(spark: SparkSession, dir: String,
                         manifestPath: String,
                         changedDir: String): Unit = {
-    if (!pathExists(spark, manifestPath)) {
+    if (!hasManifest(spark, manifestPath)) {
       writeManifest(spark, dir, manifestPath); return
     }
     val p = new org.apache.hadoop.fs.Path(changedDir)
@@ -320,9 +323,16 @@ object Stats {
     spark.catalog.refreshByPath(manifestPath)
   }
 
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** True iff a manifest is committed at `manifestPath` — judged by
+    * reader-visible parquet ([[hasCommittedParquet]]), so a crashed
+    * first write's `_temporary` leftovers count as no manifest, never
+    * as one `spark.read.parquet` cannot open.
+    */
+  private[graft] def hasManifest(spark: SparkSession,
+                                 manifestPath: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(manifestPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && hasCommittedParquet(fs, p)
   }
 
   /** Manifest-pruned read of an EXPLICIT directory set keyed on one
@@ -337,7 +347,7 @@ object Stats {
                            manifestPath: String, c: String,
                            probes: DataFrame): DataFrame = {
     require(dirs.nonEmpty, "readTouchedKeysUnder: empty committed view")
-    if (!pathExists(spark, manifestPath))
+    if (!hasManifest(spark, manifestPath))
       return spark.read.parquet(dirs: _*)
     val keep = touchedKeysKeptFilesUnder(spark, dirs, manifestPath, c,
       probes)
@@ -385,7 +395,17 @@ object Stats {
     * write is ignored until its retry commits it. Empty = no committed
     * store content.
     */
-  def committedViewDirs(spark: SparkSession, root: String): Seq[String] = {
+  def committedViewDirs(spark: SparkSession, root: String): Seq[String] =
+    viewDirsAt(spark, root, Long.MaxValue)
+
+  /** The committed dirs the view resolved to when the newest committed
+    * token was `asOf`: the newest committed `gen=<g>` with g ≤ asOf (if
+    * any) plus committed `batch=<id>` dirs with g < id ≤ asOf. No
+    * vacuum-floor check — [[committedViewDirsAsOf]] adds it; at
+    * `Long.MaxValue` this is [[committedViewDirs]].
+    */
+  private[graft] def viewDirsAt(spark: SparkSession, root: String,
+                                asOf: Long): Seq[String] = {
     val rootP = new org.apache.hadoop.fs.Path(root)
     val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(rootP)) return Nil
@@ -393,10 +413,13 @@ object Stats {
       .filter(p => hasCommittedParquet(fs, p))
     val gens = dirs.filter(_.getName.startsWith("gen="))
       .map(p => (p.getName.stripPrefix("gen=").toLong, p))
+      .filter(_._1 <= asOf)
     val tok = if (gens.isEmpty) Long.MinValue else gens.map(_._1).max
-    val batches = dirs
-      .filter(_.getName.startsWith("batch="))
-      .filter(_.getName.stripPrefix("batch=").toLong > tok)
+    val batches = dirs.filter(_.getName.startsWith("batch="))
+      .filter { p =>
+        val id = p.getName.stripPrefix("batch=").toLong
+        id > tok && id <= asOf
+      }
     (gens.filter(_._1 == tok).map(_._2) ++ batches)
       .map(_.toString).toSeq
   }
@@ -480,22 +503,7 @@ object Stats {
           "(one-cycle grace keeps exactly the dirs above the " +
           "second-newest generation); re-run against a token >= " +
           s"$floor, or retain more history by compacting less often")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(rootP)) return Nil
-    val dirs = fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath)
-      .filter(p => hasCommittedParquet(fs, p))
-    val gens = dirs.filter(_.getName.startsWith("gen="))
-      .map(p => (p.getName.stripPrefix("gen=").toLong, p))
-      .filter(_._1 <= asOf)
-    val tok = if (gens.isEmpty) Long.MinValue else gens.map(_._1).max
-    val batches = dirs.filter(_.getName.startsWith("batch="))
-      .filter { p =>
-        val id = p.getName.stripPrefix("batch=").toLong
-        id > tok && id <= asOf
-      }
-    (gens.filter(_._1 == tok).map(_._2) ++ batches)
-      .map(_.toString).toSeq
+    viewDirsAt(spark, root, asOf)
   }
 
   private def retractionFloorPath(root: String) =
@@ -557,28 +565,8 @@ object Stats {
                              who: String): Option[DataFrame] = {
     val dirs = committedViewDirsAsOf(spark, root, asOf)
     if (dirs.isEmpty) None
-    else {
-      val intWidths = Set("tinyint", "smallint", "int", "bigint")
-      def canon(t: String): String =
-        if (intWidths(t)) "integral" else t
-      val df = spark.read.parquet(dirs: _*)
-      val found = df.schema.fields
-        .map(f => f.name -> f.dataType.simpleString).toSeq
-      val foundM = found.map { case (n, t) => n -> canon(t) }.toMap
-      val ok = foundM.keySet == expected.map(_._1).toSet &&
-        expected.forall { case (n, t) =>
-          t == "*" || foundM.get(n).contains(canon(t))
-        }
-      if (!ok)
-        throw new StoreSchemaException(
-          s"$who: snapshot of $root as of $asOf has a drifted " +
-            "schema — expected {" +
-            expected.map { case (n, t) => s"$n: $t" }.mkString(", ") +
-            "}, found {" +
-            found.map { case (n, t) => s"$n: $t" }.mkString(", ") +
-            "}; refusing the read")
-      Some(df)
-    }
+    else Some(guardSchema(spark.read.parquet(dirs: _*), expected, who,
+      s"snapshot of $root as of $asOf", ""))
   }
 
   /** One store root's health, from FS metadata only — see
@@ -629,7 +617,7 @@ object Stats {
   /** Thresholds for [[maintainStores]] — a family is DUE when any of:
     * compaction debt (committed batch dirs above the newest
     * generation) ≥ `minDebt`; tombstone backlog (debt of the family's
-    * `_deleted` / `_deleted_nodes` siblings) ≥ `minTombstones`
+    * deleted-id set, [[KeyedStore.tombstoneRoots]]) ≥ `minTombstones`
     * (retraction compliance wants physical drops promptly — lower to
     * 1 to fold on every takedown); committed-view file count ≥
     * `minViewFiles` (small-file pressure; disabled by default — debt
@@ -678,11 +666,11 @@ object Stats {
     * stats read). A family whose lease is held by a live writer is
     * reported, not thrown — quiesce the gate (or let its own in-sink
     * maintenance run) and sweep again. Tombstone backlog is read from
-    * the `_deleted` and `_deleted_nodes` sibling sequences
-    * automatically. Run it from a cron/driver loop with the same
-    * policy everywhere; at 100 TB this is the OPTIMIZE scheduler — a
-    * metadata-only sweep deciding which few of thousands of store
-    * families pay a fold this cycle.
+    * every place the family's deleted-id set can live
+    * ([[KeyedStore.tombstoneRoots]]) automatically. Run it from a
+    * cron/driver loop with the same policy everywhere; at 100 TB this
+    * is the OPTIMIZE scheduler — a metadata-only sweep deciding which
+    * few of thousands of store families pay a fold this cycle.
     */
   def maintainStores(spark: SparkSession,
                      families: Seq[(String, () => Option[Long])],
@@ -690,8 +678,7 @@ object Stats {
       : Seq[MaintenanceOutcome] =
     families.map { case (root, compact) =>
       val s = storeStats(spark, Seq(root)).head
-      val tombDebt = storeStats(spark,
-          Seq(s"${root}_deleted", s"${root}_deleted_nodes"))
+      val tombDebt = storeStats(spark, KeyedStore.tombstoneRoots(root))
         .map(_.batchDirsAboveGen).sum
       val dueCompliance = tombDebt >= policy.minTombstones
       val due = dueCompliance ||
@@ -797,11 +784,20 @@ object Stats {
     */
   def openCommittedStore(spark: SparkSession, root: String,
                          expected: Seq[(String, String)],
-                         who: String): DataFrame = {
+                         who: String): DataFrame =
+    guardSchema(spark.read.parquet(committedViewDirs(spark, root): _*),
+      expected, who, s"store at $root", " (a drifted store dir would " +
+        "otherwise surface as an unrelated mid-query analysis error, " +
+        "or silently cast)")
+
+  // the store schema guard: column names as a set, types compared with
+  // every integer width equivalent ("*" accepts any type)
+  private def guardSchema(df: DataFrame, expected: Seq[(String, String)],
+                          who: String, subject: String,
+                          why: String): DataFrame = {
     val intWidths = Set("tinyint", "smallint", "int", "bigint")
     def canon(t: String): String =
       if (intWidths(t)) "integral" else t
-    val df = spark.read.parquet(committedViewDirs(spark, root): _*)
     val found = df.schema.fields
       .map(f => f.name -> f.dataType.simpleString).toSeq
     val foundM = found.map { case (n, t) => n -> canon(t) }.toMap
@@ -811,13 +807,11 @@ object Stats {
       }
     if (!ok)
       throw new StoreSchemaException(
-        s"$who: store at $root has a drifted schema — expected {" +
+        s"$who: $subject has a drifted schema — expected {" +
           expected.map { case (n, t) => s"$n: $t" }.mkString(", ") +
           "}, found {" +
           found.map { case (n, t) => s"$n: $t" }.mkString(", ") +
-          "}; refusing the read (a drifted store dir would otherwise " +
-          "surface as an unrelated mid-query analysis error, or " +
-          "silently cast)")
+          s"}; refusing the read$why")
     df
   }
 
@@ -1542,7 +1536,7 @@ object Stats {
     val totalBytes: Long = sized.map(_._2).sum
 
     private lazy val stats: Option[DataFrame] =
-      if (!pathExists(spark, manifestPath)) None
+      if (!hasManifest(spark, manifestPath)) None
       else Some(Checkpoints.stage(spark.read.parquet(manifestPath)))
 
     def keptFiles(probes: DataFrame): Seq[String] = stats match {

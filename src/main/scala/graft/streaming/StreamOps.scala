@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Upsert
+import graft.operators.{KeyedStore, Stats, Upsert}
 
 /** Streaming counterparts of the batch pipeline operators: bounded-state
   * exact dedup, stream-static dimension enrichment, and an incremental
@@ -246,12 +246,9 @@ object StreamOps {
     */
   private[graft] def nearDupStoreView(spark: SparkSession,
                                           storePath: String)
-      : Option[DataFrame] = {
-    val paths = storeViewDirs(spark, storePath).map(_.toString)
-    if (paths.isEmpty) None
-    else Some(dropDeletedIds(spark, storePath,
-      spark.read.parquet(paths: _*).select(col("id"), col("sig"))))
-  }
+      : Option[DataFrame] =
+    gateStoreView(spark, storePath, Seq("id", "sig"))
+      .map(gateTombstones(storePath).without(spark, _))
 
   /** SNAPSHOT readout of the near-dup store: the corpus exactly as
     * the committed view resolved it when the sequence head was
@@ -279,18 +276,9 @@ object StreamOps {
           s"$rf")
     val paths = Stats.committedViewDirsAsOf(spark, storePath, asOf)
     if (paths.isEmpty) None
-    else Some(dropDeletedIds(spark, storePath,
+    else Some(gateTombstones(storePath).without(spark,
       spark.read.parquet(paths: _*).select(col("id"), col("sig"))))
   }
-
-  /** The view's directories: newest committed generation (if any) plus
-    * committed `batch=<id>` dirs with id > its token (the shared
-    * [[graft.operators.Stats.committedViewDirs]] protocol).
-    */
-  private def storeViewDirs(spark: SparkSession, storePath: String)
-      : Seq[org.apache.hadoop.fs.Path] =
-    graft.operators.Stats.committedViewDirs(spark, storePath)
-      .map(new org.apache.hadoop.fs.Path(_))
 
   /** Fold the near-dup gate's per-micro-batch `batch=<id>` store
     * appends into a compacted generation: after 10⁵ micro-batches the
@@ -311,47 +299,35 @@ object StreamOps {
     */
   def compactNearDupStore(spark: SparkSession, storePath: String,
                           filesOut: Int): Option[Long] =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "compactNearDupStore(batch)") {
-      compactStoreMinusDeleted(spark, storePath, "id")(
-        _.select(col("id"), col("sig")).repartition(filesOut))
-    }
+    compactGateStore(spark, storePath, "compactNearDupStore")(
+      _.select(col("id"), col("sig")).repartition(filesOut))
 
-  /** The drop-and-clear compaction core shared by every id-keyed gate
-    * store (text sigs, substring fps, media/audio windows, video
-    * frames, entity dictionary): fold the committed view MINUS
-    * tombstoned rows into a new generation shaped by `shape`, then
-    * rewrite the tombstone store as an empty generation — the
-    * physical-drop half of the retraction contract (the read-time
-    * half is [[dropDeletedIds]]).
+  /** The `<store>_deleted` set every id-keyed gate store shares (text
+    * sigs, substring fps, media/audio windows, video frames, embedding
+    * codes+vecs, entity dictionary by eid).
     */
-  private def compactStoreMinusDeleted(spark: SparkSession,
-                                       storePath: String,
-                                       idCol: String)(
-      shape: DataFrame => DataFrame): Option[Long] = {
-    val deleted = nearDupDeletedIds(spark, storePath)
-      .map(d => graft.operators.Checkpoints.stage(d))
-    // a previously-cleared set leaves a committed EMPTY generation —
-    // Some, zero rows; only actual tombstones may raise the
-    // retraction floor below (bounded probe on the staged set)
-    val hadTombstones = deleted.exists(d => !d.isEmpty)
-    val tok = compactStoreShaped(spark, storePath,
-      df => shape(deleted.fold(df)(del =>
-        df.join(del.select(col("id").as(idCol)), Seq(idCol),
-          "left_anti"))))
-    if (tok.isDefined && deleted.isDefined) {
-      // the fold just applied (and is about to clear) tombstones, but
-      // raw dirs below it survive one vacuum cycle — record the
-      // retraction floor so snapshot reads refuse the pre-takedown
-      // corpus instead of resurrecting it from those dirs
-      if (hadTombstones)
-        graft.operators.Stats.recordRetractionFloor(spark, storePath,
-          tok.get)
-      compactStoreShaped(spark, s"${storePath}_deleted",
-        _.where(lit(false)).select(col("id"), col("__b"))): Unit
+  private def gateTombstones(storePath: String): KeyedStore =
+    KeyedStore.tombstones(storePath, "_deleted", "nearDupDeletedIds")
+
+  /** The compactor every id-keyed gate store shares: fold the committed
+    * view minus the `_deleted` set (matched on `idCol`) through
+    * `shape`, clear the set ([[KeyedStore.foldWithout]] — the
+    * physical-drop half of the retraction contract; the read-time half
+    * is [[KeyedStore.without]]), then upsert the footer manifest at
+    * `manifestPath` when one is kept.
+    */
+  private def compactGateStore(spark: SparkSession, storePath: String,
+                               who: String, manifestPath: String = "",
+                               idCol: String = "id")
+                              (shape: DataFrame => DataFrame)
+      : Option[Long] =
+    Stats.withWriterLease(spark, Seq(storePath), s"$who(batch)") {
+      val Seq(tok) = gateTombstones(storePath).foldWithout(spark, who,
+        Seq((storePath, Seq(idCol), shape)))
+      if (tok.isDefined && manifestPath.nonEmpty)
+        Stats.upsertManifest(spark, storePath, manifestPath)
+      tok
     }
-    tok
-  }
 
   /** [[compactNearDupStore]] for a BANDED store
     * ([[nearDupGateSinkBanded]]): the generation is rewritten
@@ -363,19 +339,11 @@ object StreamOps {
   def compactNearDupStoreBanded(spark: SparkSession, storePath: String,
                                 manifestPath: String,
                                 filesOut: Int): Option[Long] =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "compactNearDupStoreBanded(batch)") {
-      // tombstoned docs drop PHYSICALLY here (the BM25-index protocol):
-      // fold survivors only, then rewrite the tombstone store as an
-      // empty generation
-      val tok = compactStoreMinusDeleted(spark, storePath, "id")(
-        _.select(col("band"), col("bucket"), col("id"), col("sig"))
-          .repartitionByRange(filesOut, col("band"), col("bucket"))
-          .sortWithinPartitions(col("band"), col("bucket")))
-      if (tok.isDefined)
-        refreshStoreManifest(spark, storePath, manifestPath)
-      tok
-    }
+    compactGateStore(spark, storePath, "compactNearDupStoreBanded",
+        manifestPath)(
+      _.select(col("band"), col("bucket"), col("id"), col("sig"))
+        .repartitionByRange(filesOut, col("band"), col("bucket"))
+        .sortWithinPartitions(col("band"), col("bucket")))
 
   /** TOMBSTONE deletes for ANY id-keyed gate store — the shared
     * retraction op of the whole dedup-gate family: a taken-down
@@ -385,7 +353,7 @@ object StreamOps {
     * suppressing future near-duplicates, and stop existing at all
     * after compaction. The ids land in a
     * `<storePath>_deleted/batch=<id>` committed set every store
-    * read path anti-joins ([[dropDeletedIds]]); the store's
+    * read path anti-joins ([[KeyedStore.without]]); the store's
     * compactor ([[compactNearDupStoreBanded]] /
     * [[compactWindowStoreGen]] / [[compactMediaStoreBanded]] /
     * [[compactFrameStore]] / [[compactEmbedStore]] /
@@ -406,19 +374,12 @@ object StreamOps {
     */
   def deleteFromNearDupStore(spark: SparkSession, storePath: String,
                              ids: DataFrame, batchId: Long,
-                             filesOut: Int = 1): Unit =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "deleteFromNearDupStore(batch)") {
-      graft.operators.Stats.requireMonotoneBatch(spark,
-        Seq(storePath, s"${storePath}_deleted"), batchId,
-        "deleteFromNearDupStore")
-      ids.select(col("id")).distinct()
-        .select(col("id"), lit(batchId).as("__b"))
-        .repartitionByRange(filesOut, col("id"))
-        .sortWithinPartitions(col("id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"${storePath}_deleted/batch=$batchId")
-    }
+                             filesOut: Int = 1): Unit = {
+    val tomb = gateTombstones(storePath)
+    graft.operators.Rounds.free(tomb.writeFresh(spark,
+      "deleteFromNearDupStore", batchId, Seq(storePath, tomb.root),
+      filesOut)(ids))
+  }
 
   /** [[storeBandsFor]] for the substring gate's window-fingerprint
     * store: the TOMBSTONE-AWARE, manifest-pruned (fp, id) slice for a
@@ -427,26 +388,10 @@ object StreamOps {
     */
   def storeFpsFor(spark: SparkSession, storePath: String,
                   manifestPath: String, probeFps: DataFrame)
-      : DataFrame = {
-    import graft.operators.Stats
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val viewDirs = storeViewDirs(spark, storePath)
-    val empty = probeFps.select(col("fp"), col("id")).limit(0)
-    if (viewDirs.isEmpty) empty
-    else {
-      val mp = new org.apache.hadoop.fs.Path(manifestPath)
-      val files =
-        if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-          Stats.touchedKeysKeptFilesUnder(spark,
-            viewDirs.map(_.toString), manifestPath, "fp",
-            probeFps.select(col("fp")))
-        else viewDirs.map(_.toString)
-      if (files.isEmpty) empty
-      else dropDeletedIds(spark, storePath,
-        spark.read.parquet(files: _*).select(col("fp"), col("id")))
-    }
-  }
+      : DataFrame =
+    prunedKeysSlice(spark, storePath, manifestPath, "fp",
+        probeFps.select(col("fp")), Seq("fp", "id"))
+      .getOrElse(probeFps.select(col("fp"), col("id")).limit(0))
 
   /** [[storeBandsFor]] for the ER gate's entity dictionary: the
     * TOMBSTONE-AWARE (by eid), manifest-pruned (eid, nm, blkh) slice
@@ -455,27 +400,10 @@ object StreamOps {
     */
   def erStoreSliceFor(spark: SparkSession, storePath: String,
                       manifestPath: String, probeBlkh: DataFrame,
-                      empty: DataFrame): DataFrame = {
-    import graft.operators.Stats
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val viewDirs = storeViewDirs(spark, storePath)
-    if (viewDirs.isEmpty) empty
-    else {
-      val mp = new org.apache.hadoop.fs.Path(manifestPath)
-      val files =
-        if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-          Stats.touchedKeysKeptFilesUnder(spark,
-            viewDirs.map(_.toString), manifestPath, "blkh",
-            probeBlkh.select(col("blkh")))
-        else viewDirs.map(_.toString)
-      if (files.isEmpty) empty
-      else dropDeletedIds(spark, storePath,
-        spark.read.parquet(files: _*)
-          .select(col("eid"), col("nm"), col("blkh")),
-        idCol = "eid")
-    }
-  }
+                      empty: DataFrame): DataFrame =
+    prunedKeysSlice(spark, storePath, manifestPath, "blkh",
+        probeBlkh.select(col("blkh")), Seq("eid", "nm", "blkh"), "eid")
+      .getOrElse(empty)
 
   /** The banded signature store's TOMBSTONE-AWARE, manifest-pruned
     * read view for a probe batch: committed `batch=`/`gen=` dirs
@@ -487,78 +415,11 @@ object StreamOps {
     */
   def storeBandsFor(spark: SparkSession, storePath: String,
                     manifestPath: String, newBands: DataFrame)
-      : DataFrame = {
-    import graft.operators.Stats
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val viewDirs = storeViewDirs(spark, storePath)
-    if (viewDirs.isEmpty) newBands.limit(0)
-    else {
-      val mp = new org.apache.hadoop.fs.Path(manifestPath)
-      val files =
-        if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-          Stats.touchedPairsKeptFilesUnder(spark,
-            viewDirs.map(_.toString), manifestPath, "band", "bucket",
-            newBands.select(col("band"), col("bucket")))
-        else viewDirs.map(_.toString)
-      if (files.isEmpty) newBands.limit(0)
-      else {
-        // tombstoned docs must not suppress new near-dups
-        val raw = spark.read.parquet(files: _*)
-          .select(col("band"), col("bucket"), col("id"), col("sig"))
-        nearDupDeletedIds(spark, storePath)
-          .fold(raw)(del => raw.join(del, Seq("id"), "left_anti"))
-      }
-    }
-  }
-
-  private def nearDupDeletedIds(spark: SparkSession,
-                                storePath: String): Option[DataFrame] =
-    graft.operators.Stats
-      .committedViewDirs(spark, s"${storePath}_deleted") match {
-      case Seq() => None
-      // schema-guarded like every main-family reader: a drifted
-      // tombstone dir must fail loudly, not silently anti-join on a
-      // miscast column (the id type follows the corpus — "*")
-      case _ => Some(graft.operators.Stats.openCommittedStore(spark,
-          s"${storePath}_deleted",
-          Seq("id" -> "*", "__b" -> "bigint"), "nearDupDeletedIds")
-        .select(col("id")))
-    }
-
-  /** Anti-join a gate store slice against its `_deleted` tombstone
-    * set on `idCol` — the shared read-time retraction filter every
-    * id-keyed gate store applies ([[deleteFromNearDupStore]] writes
-    * the set; the store's compactor drops rows physically and clears
-    * it). A missing set is the common case and costs one directory
-    * probe.
-    */
-  private def dropDeletedIds(spark: SparkSession, storePath: String,
-                             df: DataFrame,
-                             idCol: String = "id"): DataFrame =
-    nearDupDeletedIds(spark, storePath).fold(df)(del =>
-      df.join(del.select(col("id").as(idCol)), Seq(idCol),
-        "left_anti"))
-
-  private def compactStoreShaped(spark: SparkSession, storePath: String,
-                                 shape: DataFrame => DataFrame)
-      : Option[Long] =
-    graft.operators.Stats.compactCommittedStore(spark, storePath, shape)
-
-  /** Write-or-refresh the store's footer manifest: refresh when a
-    * committed manifest exists (footers read only for unknown files),
-    * full write otherwise (bootstrap, or a crashed first manifest
-    * write).
-    */
-  private def refreshStoreManifest(spark: SparkSession, storePath: String,
-                                   manifestPath: String): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-      graft.operators.Stats.refreshManifest(spark, storePath, manifestPath)
-    else
-      graft.operators.Stats.writeManifest(spark, storePath, manifestPath)
-  }
+      : DataFrame =
+    prunedPairsSlice(spark, storePath, manifestPath, "band", "bucket",
+        newBands.select(col("band"), col("bucket")),
+        Seq("band", "bucket", "id", "sig"))
+      .getOrElse(newBands.limit(0))
 
   /** [[nearDupGateSink]] over a BANDED, manifest-pruned store — the
     * streaming composition of the batch pipeline's banded signature
@@ -616,7 +477,7 @@ object StreamOps {
             .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
           survivors.write.mode("overwrite")
             .parquet(s"$outPath/batch=$batchId")
-          refreshStoreManifest(spark, storePath, mPath)
+          Stats.upsertManifest(spark, storePath, mPath)
           if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
             compactNearDupStoreBanded(spark, storePath, mPath,
               compactFilesOut): Unit
@@ -704,7 +565,7 @@ object StreamOps {
             .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
           survivors.write.mode("overwrite")
             .parquet(s"$outPath/batch=$batchId")
-          refreshStoreManifest(spark, storePath, mPath)
+          Stats.upsertManifest(spark, storePath, mPath)
           if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
             compactWindowStoreGen(spark, storePath, mPath,
               compactFilesOut): Unit
@@ -721,16 +582,11 @@ object StreamOps {
   def compactWindowStoreGen(spark: SparkSession, storePath: String,
                             manifestPath: String,
                             filesOut: Int): Option[Long] =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "compactWindowStoreGen(batch)") {
-      val tok = compactStoreMinusDeleted(spark, storePath, "id")(
-        _.select(col("fp"), col("id"))
-          .repartitionByRange(filesOut, col("fp"))
-          .sortWithinPartitions(col("fp")))
-      if (tok.isDefined)
-        refreshStoreManifest(spark, storePath, manifestPath)
-      tok
-    }
+    compactGateStore(spark, storePath, "compactWindowStoreGen",
+        manifestPath)(
+      _.select(col("fp"), col("id"))
+        .repartitionByRange(filesOut, col("fp"))
+        .sortWithinPartitions(col("fp")))
 
   /** True iff `root` holds at least one READER-VISIBLE committed
     * parquet data file (the shared
@@ -812,14 +668,9 @@ object StreamOps {
     * [[nearDupStoreView]] resolution on the media store shape.
     */
   private[graft] def mediaStoreView(spark: SparkSession,
-                                    storePath: String): Option[DataFrame] = {
-    val paths = storeViewDirs(spark, storePath).map(_.toString)
-    if (paths.isEmpty) None
-    else Some(dropDeletedIds(spark, storePath,
-      spark.read.parquet(paths: _*)
-        .select(col("media_id"), col("dhash")),
-      idCol = "media_id"))
-  }
+                                    storePath: String): Option[DataFrame] =
+    gateStoreView(spark, storePath, Seq("media_id", "dhash"))
+      .map(gateTombstones(storePath).without(spark, _, "media_id"))
 
   /** [[mediaDedupGateSink]] over a BANDED, manifest-pruned store — the
     * r8 treatment of the MinHash store applied to perceptual hashes:
@@ -867,25 +718,10 @@ object StreamOps {
               batch.select(col(id).cast("long").as("media_id"),
                 col(payload).as("payload"))).localCheckpoint()
           val pw = Multimodal.dhashWindowRows(hashes)
-          val fs = new org.apache.hadoop.fs.Path(storePath)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val viewDirs = storeViewDirs(spark, storePath)
-          val storeBands =
-            if (viewDirs.isEmpty) pw.limit(0)
-            else {
-              val mp = new org.apache.hadoop.fs.Path(mPath)
-              val files =
-                if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-                  Stats.touchedPairsKeptFilesUnder(spark,
-                    viewDirs.map(_.toString), mPath, "w", "wk",
-                    pw.select(col("w"), col("wk")))
-                else viewDirs.map(_.toString)
-              if (files.isEmpty) pw.limit(0)
-              else dropDeletedIds(spark, storePath,
-                spark.read.parquet(files: _*)
-                  .select(col("w"), col("wk"), col("id"),
-                    col("dhash")))
-            }
+          val storeBands = prunedPairsSlice(spark, storePath, mPath, "w",
+              "wk", pw.select(col("w"), col("wk")),
+              Seq("w", "wk", "id", "dhash"))
+            .getOrElse(pw.limit(0))
           val dropIds = Multimodal
             .dhashPairsAgainstBands(storeBands, pw, maxDist, maxBucket)
             .select(col("id_b").as("media_id")).distinct()
@@ -899,7 +735,7 @@ object StreamOps {
             .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
           survivors.select(col("media_id"))
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          refreshStoreManifest(spark, storePath, mPath)
+          Stats.upsertManifest(spark, storePath, mPath)
           if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
             compactMediaStoreBanded(spark, storePath, mPath,
               compactFilesOut): Unit
@@ -956,26 +792,9 @@ object StreamOps {
           // gate, and the store append
           val frames = Multimodal.videoFrameRows(media, frameBytes)
             .localCheckpoint()
-          val fs = new org.apache.hadoop.fs.Path(storePath)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val viewDirs = storeViewDirs(spark, storePath)
-          val storeFrames =
-            if (viewDirs.isEmpty) frames.select(col("fh"), col("id"))
-              .limit(0)
-            else {
-              val mp = new org.apache.hadoop.fs.Path(mPath)
-              val files =
-                if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-                  Stats.touchedKeysKeptFilesUnder(spark,
-                    viewDirs.map(_.toString), mPath, "fh",
-                    frames.select(col("fh")).distinct())
-                else viewDirs.map(_.toString)
-              if (files.isEmpty)
-                frames.select(col("fh"), col("id")).limit(0)
-              else dropDeletedIds(spark, storePath,
-                spark.read.parquet(files: _*)
-                  .select(col("fh"), col("id")))
-            }
+          val storeFrames = prunedKeysSlice(spark, storePath, mPath,
+              "fh", frames.select(col("fh")).distinct(), Seq("fh", "id"))
+            .getOrElse(frames.select(col("fh"), col("id")).limit(0))
           val dropIds = Multimodal
             .frameDupPairsAgainstRows(storeFrames, frames, minShared,
               maxBucket)
@@ -992,7 +811,7 @@ object StreamOps {
             .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
           survivors
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          refreshStoreManifest(spark, storePath, mPath)
+          Stats.upsertManifest(spark, storePath, mPath)
           if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
             compactFrameStore(spark, storePath, mPath,
               compactFilesOut): Unit
@@ -1008,16 +827,11 @@ object StreamOps {
   def compactFrameStore(spark: SparkSession, storePath: String,
                         manifestPath: String,
                         filesOut: Int): Option[Long] =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "compactFrameStore(batch)") {
-      val tok = compactStoreMinusDeleted(spark, storePath, "id")(
-        _.select(col("fh"), col("id"))
-          .repartitionByRange(filesOut, col("fh"))
-          .sortWithinPartitions(col("fh")))
-      if (tok.isDefined)
-        refreshStoreManifest(spark, storePath, manifestPath)
-      tok
-    }
+    compactGateStore(spark, storePath, "compactFrameStore",
+        manifestPath)(
+      _.select(col("fh"), col("id"))
+        .repartitionByRange(filesOut, col("fh"))
+        .sortWithinPartitions(col("fh")))
 
   /** [[compactNearDupStoreBanded]] for the banded MEDIA store: fold
     * batch dirs into a (w, wk)-range-clustered generation and refresh
@@ -1026,66 +840,50 @@ object StreamOps {
   def compactMediaStoreBanded(spark: SparkSession, storePath: String,
                               manifestPath: String,
                               filesOut: Int): Option[Long] =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "compactMediaStoreBanded(batch)") {
-      val tok = compactStoreMinusDeleted(spark, storePath, "id")(
-        _.select(col("w"), col("wk"), col("id"), col("dhash"))
-          .repartitionByRange(filesOut, col("w"), col("wk"))
-          .sortWithinPartitions(col("w"), col("wk")))
-      if (tok.isDefined)
-        refreshStoreManifest(spark, storePath, manifestPath)
-      tok
-    }
+    compactGateStore(spark, storePath, "compactMediaStoreBanded",
+        manifestPath)(
+      _.select(col("w"), col("wk"), col("id"), col("dhash"))
+        .repartitionByRange(filesOut, col("w"), col("wk"))
+        .sortWithinPartitions(col("w"), col("wk")))
 
-  /** A gate store's committed, manifest-pruned slice for a probe over
-    * a (ka, kb) clustering key pair — the store-read block every
-    * banded gate repeats, factored: committed generation view, footer
-    * manifest file pruning when a committed manifest exists (falling
-    * back to the unpruned view — manifest loss costs pruning, never
-    * rows), `None` when the store is empty or no file can match.
+  /** A gate store's committed, manifest-pruned slice — the store read
+    * every gate shares: the committed view's files that `kept` keeps
+    * (all of them when no manifest is committed — manifest loss costs
+    * pruning, never rows), projected to `cols`, minus the `_deleted`
+    * set matched on `idCol`; `None` when the store is empty or no file
+    * can match.
     */
+  private def prunedSlice(spark: SparkSession, storePath: String,
+                          manifestPath: String, cols: Seq[String],
+                          idCol: String)
+                         (kept: Seq[String] => Seq[String])
+      : Option[DataFrame] = {
+    val viewDirs = Stats.committedViewDirs(spark, storePath)
+    val files =
+      if (viewDirs.isEmpty || !Stats.hasManifest(spark, manifestPath))
+        viewDirs
+      else kept(viewDirs)
+    if (files.isEmpty) None
+    else Some(gateTombstones(storePath).without(spark,
+      spark.read.parquet(files: _*).select(cols.map(col): _*), idCol))
+  }
+
+  /** [[prunedSlice]] for a probe over a (ka, kb) clustering key pair. */
   private def prunedPairsSlice(spark: SparkSession, storePath: String,
                                manifestPath: String, ka: String,
                                kb: String, probe: DataFrame,
-                               cols: Seq[String]): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val viewDirs = storeViewDirs(spark, storePath)
-    if (viewDirs.isEmpty) None
-    else {
-      val mp = new org.apache.hadoop.fs.Path(manifestPath)
-      val files =
-        if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-          graft.operators.Stats.touchedPairsKeptFilesUnder(spark,
-            viewDirs.map(_.toString), manifestPath, ka, kb, probe)
-        else viewDirs.map(_.toString)
-      if (files.isEmpty) None
-      else Some(dropDeletedIds(spark, storePath,
-        spark.read.parquet(files: _*).select(cols.map(col): _*)))
-    }
-  }
+                               cols: Seq[String]): Option[DataFrame] =
+    prunedSlice(spark, storePath, manifestPath, cols, "id")(
+      Stats.touchedPairsKeptFilesUnder(spark, _, manifestPath, ka, kb,
+        probe))
 
-  /** [[prunedPairsSlice]] for a single clustering key. */
+  /** [[prunedSlice]] for a probe over a single clustering key. */
   private def prunedKeysSlice(spark: SparkSession, storePath: String,
                               manifestPath: String, key: String,
-                              probe: DataFrame,
-                              cols: Seq[String]): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val viewDirs = storeViewDirs(spark, storePath)
-    if (viewDirs.isEmpty) None
-    else {
-      val mp = new org.apache.hadoop.fs.Path(manifestPath)
-      val files =
-        if (fs.exists(mp) && hasCommittedParquet(fs, mp))
-          graft.operators.Stats.touchedKeysKeptFilesUnder(spark,
-            viewDirs.map(_.toString), manifestPath, key, probe)
-        else viewDirs.map(_.toString)
-      if (files.isEmpty) None
-      else Some(dropDeletedIds(spark, storePath,
-        spark.read.parquet(files: _*).select(cols.map(col): _*)))
-    }
-  }
+                              probe: DataFrame, cols: Seq[String],
+                              idCol: String = "id"): Option[DataFrame] =
+    prunedSlice(spark, storePath, manifestPath, cols, idCol)(
+      Stats.touchedKeysKeptFilesUnder(spark, _, manifestPath, key, probe))
 
   /** The UNIFIED cross-modal dedup gate — the streaming face of the
     * x_multimodal_dedup capstone: one stream whose rows carry ALL FOUR
@@ -1226,10 +1024,10 @@ object StreamOps {
             .write.mode("overwrite").parquet(s"$vStore/batch=$batchId")
           survivors.select(col("mid"))
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          refreshStoreManifest(spark, tStore, tMan)
-          refreshStoreManifest(spark, iStore, iMan)
-          refreshStoreManifest(spark, aStore, aMan)
-          refreshStoreManifest(spark, vStore, vMan)
+          Stats.upsertManifest(spark, tStore, tMan)
+          Stats.upsertManifest(spark, iStore, iMan)
+          Stats.upsertManifest(spark, aStore, aMan)
+          Stats.upsertManifest(spark, vStore, vMan)
           if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
             compactNearDupStoreBanded(spark, tStore, tMan, compactFilesOut)
             compactMediaStoreBanded(spark, iStore, iMan, compactFilesOut)
@@ -1273,14 +1071,15 @@ object StreamOps {
         if (!batch.isEmpty) {
           val base = batch.select(col(id).cast("long").as("id"),
             col(vec).as("vec")).localCheckpoint()
+          val tomb = gateTombstones(storePath)
           val storeCodes = gateStoreView(spark, s"$storePath/codes",
               Seq("id", "table", "bucket"))
-            .map(df => dropDeletedIds(spark, storePath, df))
+            .map(tomb.without(spark, _))
             .getOrElse(Dedup.embeddingCodes(base.limit(0), col("id"),
               col("vec"), planes, tables, dim))
           val storeVecs = gateStoreView(spark, s"$storePath/vecs",
               Seq("id", "vec"))
-            .map(df => dropDeletedIds(spark, storePath, df))
+            .map(tomb.without(spark, _))
             .getOrElse(base.limit(0))
           val dropIds = Dedup.embeddingIncremental(base, col("id"),
               col("vec"), storeCodes, storeVecs, threshold, planes,
@@ -1311,31 +1110,22 @@ object StreamOps {
     * retry.
     */
   def compactEmbedStore(spark: SparkSession, storePath: String,
-                        filesOut: Int): Option[Long] =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "compactEmbedStore(batch)") {
-      val deleted = nearDupDeletedIds(spark, storePath)
-        .map(d => graft.operators.Checkpoints.stage(d))
-      def minus(df: DataFrame): DataFrame =
-        deleted.fold(df)(del => df.join(del, Seq("id"), "left_anti"))
-      val tokC = compactStoreShaped(spark, s"$storePath/codes",
-        df => minus(df).select(col("id"), col("table"), col("bucket"))
-          .repartition(filesOut))
-      val tokV = compactStoreShaped(spark, s"$storePath/vecs",
-        df => minus(df).select(col("id"), col("vec"))
-          .repartition(filesOut))
-      if (tokC.isDefined && tokV.isDefined && deleted.isDefined)
-        compactStoreShaped(spark, s"${storePath}_deleted",
-          _.where(lit(false)).select(col("id"), col("__b"))): Unit
-      tokC.orElse(tokV)
-    }
+                        filesOut: Int): Option[Long] = {
+    val Seq(tokC, tokV) = gateTombstones(storePath).foldWithout(spark,
+      "compactEmbedStore", Seq(
+        (s"$storePath/codes", Seq("id"), _.select(col("id"), col("table"),
+          col("bucket")).repartition(filesOut)),
+        (s"$storePath/vecs", Seq("id"),
+          _.select(col("id"), col("vec")).repartition(filesOut))))
+    tokC.orElse(tokV)
+  }
 
   /** Generic committed-store view for a gate store dir: newest
     * committed generation + newer batch dirs, projected to `cols`.
     */
   private[graft] def gateStoreView(spark: SparkSession, storePath: String,
                                    cols: Seq[String]): Option[DataFrame] = {
-    val paths = storeViewDirs(spark, storePath).map(_.toString)
+    val paths = Stats.committedViewDirs(spark, storePath)
     if (paths.isEmpty) None
     else {
       val df = spark.read.parquet(paths: _*)
@@ -1448,22 +1238,9 @@ object StreamOps {
                                      sb: Long)
       (subtract: (DataFrame, DataFrame) => DataFrame): Unit =
     dsirModelView(spark, modelPath, sb).foreach { m =>
-      val fresh = graft.operators.Checkpoints.stage(
-        graft.operators.Stats.committedViewDirs(spark,
-            s"$modelPath/deleted") match {
-          case Seq() => ids
-          case _ => ids.join(
-            graft.operators.Stats.openCommittedStore(spark,
-                s"$modelPath/deleted",
-                Seq("id" -> "*", "__b" -> "bigint"),
-                "modelDeletedIds")
-              .where(col("__b") < sb).select(col("id")),
-            Seq("id"), "left_anti")
-        })
-      fresh.select(col("id"), lit(sb).as("__b"))
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$modelPath/deleted/batch=$sb")
+      val fresh = KeyedStore.tombstones(modelPath, "/deleted",
+          "modelDeletedIds")
+        .writeFresh(spark, "retractCumulativeModel", sb)(ids)
       subtract(m, fresh)
         .coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1608,7 +1385,7 @@ object StreamOps {
             .repartitionByRange(appendFilesOut, col("blkh"))
             .sortWithinPartitions(col("blkh"))
             .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          refreshStoreManifest(spark, storePath, mPath)
+          Stats.upsertManifest(spark, storePath, mPath)
           if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
             compactEntityStoreGen(spark, storePath, mPath,
               compactFilesOut): Unit
@@ -1894,12 +1671,10 @@ object StreamOps {
     val base: Long = {
       val roots = bm25IndexDir.map(p => s"$p/stats").toSeq ++
         pqStoreDir.toSeq ++
-        sigStorePath.toSeq.flatMap(p => Seq(p, s"${p}_deleted")) ++
-        pcaStoreDir.toSeq.flatMap(p => Seq(p, s"$p/deleted")) ++
-        kmvStoreDir.toSeq.flatMap(p => Seq(p, s"$p/deleted")) ++
-        kcenterStoreDir.toSeq.flatMap(p => Seq(p, s"$p/deleted")) ++
-        (gateStorePaths ++ erStorePaths)
-          .flatMap(p => Seq(p, s"${p}_deleted")) ++
+        (sigStorePath.toSeq ++ gateStorePaths ++ erStorePaths)
+          .flatMap(p => Seq(p, gateTombstones(p).root)) ++
+        (pcaStoreDir.toSeq ++ kmvStoreDir ++ kcenterStoreDir)
+          .flatMap(p => Seq(p, s"$p/deleted")) ++
         (dsirModelPath.toSeq ++ lmModelPath.toSeq)
           .map(p => s"$p/deleted")
       val head = (roots.map { r =>
@@ -1958,15 +1733,12 @@ object StreamOps {
             // a non-center deletion is provably a trace no-op
             // (SimilaritySpec pins it), so the stored trace already
             // equals the from-scratch trace over survivors
-            ids.select(col("id"), lit(sb).as("__b"))
-              .coalesce(1)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$p/deleted/batch=$sb")
+            val tomb = KeyedStore.tombstones(p, "/deleted",
+              "kCenterDeletedIds")
+            graft.operators.Rounds.free(
+              tomb.writeFresh(spark, "retractionGateSink", sb)(ids))
             val deleted = graft.operators.Checkpoints.stage(
-              Stats.openCommittedStore(spark, s"$p/deleted",
-                  Seq("id" -> "*", "__b" -> "bigint"),
-                  "kCenterDeletedIds")
-                .select(col("id")))
+              tomb.deletedBefore(spark).get)
             val centers = Similarity.kCenterStoreCenters(spark, p)
             val hit = centers.join(deleted, Seq("id"), "left_semi")
               .limit(1).count() > 0
@@ -2067,7 +1839,8 @@ object StreamOps {
                           compactEvery: Int = 0, filesOut: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.{Graph, Stats}
-    val tombRoot = s"${edgesPath}_deleted_nodes"
+    val tomb = KeyedStore.tombstones(edgesPath, "_deleted_nodes",
+      "graphDeletedNodes", "id" -> "bigint")
     val fenceRoots = Seq(edgesPath) ++ ccStorePath ++
       sccStorePath ++ landmarkStorePath ++ triStorePath ++
       kcoreStorePath ++ prStorePath ++ hitsStorePath ++
@@ -2078,39 +1851,15 @@ object StreamOps {
       .outputMode("append")
       .foreachBatch(heldBatch(fenceRoots) { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          batch.select(col(id).cast("long").as("id")).distinct()
-            .withColumn("__b", lit(batchId))
-            .coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$tombRoot/batch=$batchId")
-          if (compactEvery > 0 &&
-              batchId % compactEvery == compactEvery - 1) {
-            val deleted = graft.operators.Checkpoints.stage(
-              Stats.openCommittedStore(spark, tombRoot,
-                  Seq("id" -> "bigint", "__b" -> "bigint"),
-                  "graphDeletedNodes")
-                .select(col("id")))
-            // edge store: physical drop of edges touching a deleted
-            // node. The fold is a no-op when the store is already one
-            // generation (nothing above the token to fold) — then the
-            // rebuild filters the view directly and the tombstones
-            // are KEPT for the next cycle instead of cleared, so a
-            // deletion can never silently survive.
-            def minusDeletedEdges(df: DataFrame): DataFrame = df
-              .join(deleted.select(col("id").as("u")), Seq("u"),
-                "left_anti")
-              .join(deleted.select(col("id").as("v")), Seq("v"),
-                "left_anti")
-            val folded = Stats.compactCommittedStore(spark, edgesPath,
-              df => minusDeletedEdges(df)
-                .select(col("u"), col("v"), col("__b"))
-                .repartitionByRange(filesOut, col("u"), col("v"))
-                .sortWithinPartitions(col("u"), col("v")))
-            val view = spark.read.parquet(
+          graft.operators.Rounds.free(tomb.writeFresh(spark,
+            "graphRetractionSink", batchId)(
+            batch.select(col(id).cast("long").as("id"))))
+          // the opted-in stores rebuild from the edge view minus the
+          // set, before the set is cleared
+          def rebuild(deleted: Option[DataFrame]): Unit = {
+            val surviving = tomb.without(spark, spark.read.parquet(
                 Stats.committedViewDirs(spark, edgesPath): _*)
-              .select(col("u"), col("v"))
-            val surviving =
-              if (folded.isDefined) view else minusDeletedEdges(view)
+              .select(col("u"), col("v")), "u", "v")
             ccStorePath.foreach(p =>
               Graph.rebuildCCStore(surviving, col("u"), col("v"), p,
                 filesOut): Unit)
@@ -2119,7 +1868,7 @@ object StreamOps {
                 filesOut): Unit)
             landmarkStorePath.foreach(p =>
               Graph.rebuildLandmarkStore(surviving, col("u"),
-                col("v"), p, deletedNodes = Some(deleted),
+                col("v"), p, deletedNodes = deleted,
                 maxDepth = landmarkMaxDepth, filesOut = filesOut)
                 : Unit)
             triStorePath.foreach(p =>
@@ -2142,17 +1891,23 @@ object StreamOps {
                 IllegalArgumentException(
                   "labelStorePath requires labelSeeds"))
               // a retracted node's seed label is itself forgotten
-              val surv = seeds.join(
-                deleted.select(col("id").as(labelSeedId)),
-                Seq(labelSeedId), "left_anti")
               Graph.rebuildLabelState(surviving, col("u"), col("v"),
-                surv, col(labelSeedId), col(labelSeedLabel),
-                labelIters, p, filesOut): Unit
+                tomb.without(spark, seeds, labelSeedId),
+                col(labelSeedId), col(labelSeedLabel), labelIters, p,
+                filesOut): Unit
             }
-            if (folded.isDefined)
-              Stats.compactCommittedStore(spark, tombRoot,
-                _.where(lit(false)).select(col("id"), col("__b"))): Unit
           }
+          // edge store: physical drop of edges touching a deleted
+          // node. The fold is a no-op when the store is already one
+          // generation (nothing above the token to fold) — then the
+          // tombstones are KEPT for the next cycle instead of cleared,
+          // so a deletion can never silently survive.
+          if (compactEvery > 0 &&
+              batchId % compactEvery == compactEvery - 1)
+            tomb.foldWithout(spark, "graphRetractionSink", Seq((edgesPath,
+              Seq("u", "v"), _.select(col("u"), col("v"), col("__b"))
+                .repartitionByRange(filesOut, col("u"), col("v"))
+                .sortWithinPartitions(col("u"), col("v")))), rebuild): Unit
         }
       })
       .start())
@@ -2429,16 +2184,11 @@ object StreamOps {
   def compactEntityStoreGen(spark: SparkSession, storePath: String,
                             manifestPath: String,
                             filesOut: Int): Option[Long] =
-    graft.operators.Stats.withWriterLease(spark, Seq(storePath),
-      "compactEntityStoreGen(batch)") {
-      val tok = compactStoreMinusDeleted(spark, storePath, "eid")(
-        _.select(col("blkh"), col("eid"), col("nm"))
-          .repartitionByRange(filesOut, col("blkh"))
-          .sortWithinPartitions(col("blkh")))
-      if (tok.isDefined)
-        refreshStoreManifest(spark, storePath, manifestPath)
-      tok
-    }
+    compactGateStore(spark, storePath, "compactEntityStoreGen",
+        manifestPath, "eid")(
+      _.select(col("blkh"), col("eid"), col("nm"))
+        .repartitionByRange(filesOut, col("blkh"))
+        .sortWithinPartitions(col("blkh")))
 
   /** SNAPSHOT (as-of) read of any gate store or survivor output dir:
     * the committed state as of micro-batch `asOf` — the newest
@@ -2456,23 +2206,9 @@ object StreamOps {
   def gateStoreViewAsOf(spark: SparkSession, storePath: String,
                         cols: Seq[String], asOf: Long)
       : Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(p => hasCommittedParquet(fs, p))
-    val gens = dirs.filter(_.getName.startsWith("gen="))
-      .map(p => (p.getName.stripPrefix("gen=").toLong, p))
-      .filter(_._1 <= asOf)
-    val tok = if (gens.isEmpty) Long.MinValue else gens.map(_._1).max
-    val batches = dirs.filter(_.getName.startsWith("batch="))
-      .map(p => (p.getName.stripPrefix("batch=").toLong, p))
-      .filter(t => t._1 > tok && t._1 <= asOf)
-    val paths =
-      (gens.filter(_._1 == tok).map(_._2) ++ batches.map(_._2)).toSeq
+    val paths = Stats.viewDirsAt(spark, storePath, asOf)
     if (paths.isEmpty) None
-    else Some(spark.read.parquet(paths.map(_.toString): _*)
-      .select(cols.map(col): _*))
+    else Some(spark.read.parquet(paths: _*).select(cols.map(col): _*))
   }
 
   /** Streaming KMV NOVELTY gate — the per-ingest curation signal

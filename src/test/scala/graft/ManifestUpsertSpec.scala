@@ -60,4 +60,31 @@ class ManifestUpsertSpec extends SparkSuite {
       new java.net.URI(f).getPath).exists()),
       s"manifest names a vanished file: ${files.mkString(", ")}")
   }
+
+  test("a crashed first manifest write (only _temporary left) counts " +
+      "as no manifest: a KeyedStore still appends and serves pruned " +
+      "probes") {
+    import graft.operators.KeyedStore
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-mancrash-").toString + "/store"
+    val store = KeyedStore(root, "crashStore", Seq("id" -> "bigint"),
+      Seq("v" -> "bigint"), KeyedStore.NewestWins)
+    store.writeBase(spark, "spec", 1)((1L to 20L).toDF("id")
+      .withColumn("v", col("id") * 2))
+    // replace the manifest by what a crash in its first write leaves
+    val man = new java.io.File(root + "_manifest")
+    org.apache.commons.io.FileUtils.deleteDirectory(man)
+    val tmp = new java.io.File(man, "_temporary/0")
+    tmp.mkdirs()
+    java.nio.file.Files.write(new java.io.File(tmp, "part-0.parquet")
+      .toPath, "PAR1 crashed".getBytes("UTF-8"))
+    store.append(spark, "spec", 1L, 1)((21L to 30L).toDF("id")
+      .withColumn("v", col("id") * 2))
+    assert(spark.read.parquet(root + "_manifest").count() > 0,
+      "the append did not write a committed manifest")
+    val got = store.pruned(spark, "id", Seq(5L, 25L).toDF("id"))
+      .where(col("id").isin(5L, 25L))
+      .select(col("id"), col("v")).as[(Long, Long)].collect().toSet
+    assert(got == Set((5L, 10L), (25L, 50L)), s"got $got")
+  }
 }

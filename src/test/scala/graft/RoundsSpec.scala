@@ -165,6 +165,14 @@ class RoundsSpec extends SparkSuite {
     }
   }
 
+  test("landmarkDistances frees the empty BFS layer that ended the " +
+      "search: one call leaves the edge and pivot stages and the 7 " +
+      "non-empty layers") {
+    val (_, left, _) = measure(() => Graph.landmarkDistances(undirected,
+      col("a"), col("b"), landmarks = 2, maxDepth = 8))
+    assert(left == 9, s"persistent RDDs left: $left")
+  }
+
   test("connectedComponents: the star fallback keeps the caller's " +
       "broadcastLimit") {
     val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",

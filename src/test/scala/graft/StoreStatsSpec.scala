@@ -129,6 +129,25 @@ class StoreStatsSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("maintainStores counts the tombstone backlog of a family whose " +
+      "deleted-id set lives under <root>/deleted (kmv units)") {
+    import graft.operators.Overlap
+    val store = s"/tmp/graft-maint-kmv-${System.nanoTime()}/kmv"
+    Overlap.writeKmvUnitStore(
+      Seq(("g", 1L, "k1"), ("g", 2L, "k2"), ("g", 3L, "k3"))
+        .toDF("grp", "unit", "key"),
+      col("grp"), col("unit"), col("key"), k = 4, store)
+    Overlap.deleteKmvUnits(Seq(1L).toDF("unit"), store, 1L)
+    Overlap.deleteKmvUnits(Seq(2L).toDF("unit"), store, 2L)
+    val Seq(out) = Stats.maintainStores(spark,
+      Seq(store -> (() => Overlap.compactKmvUnitStore(spark, store))),
+      Stats.MaintenancePolicy(minDebt = 100, minTombstones = 2))
+    assert(out.action == "compacted" && out.tombstoneDebt == 2,
+      out.toString)
+    assert(Stats.storeStats(spark, Seq(s"$store/deleted")).head
+      .batchDirsAboveGen == 0, "the tombstone set was not cleared")
+  }
+
   test("compaction crashed between fold-commit and vacuum: readers " +
       "resolve exactly the new generation (never a mix), the debris " +
       "vacuums on the next cycle; crashed DURING the fold write: " +
