@@ -74,8 +74,8 @@ object StreamOps {
       .select(col(keyCol), col("sw.start").as("s_start"),
         col("sw.end").as("s_end"), col("n_events"))
 
-  /** Start a maintenance sink under the store-family writer fence:
-    * claim the lease on every root BEFORE the query launches (a
+  /** Claim the store-family writer fence for a sink about to start:
+    * take the lease on every root BEFORE the query launches (a
     * conflicting sink fails fast in the CALLER's thread with
     * [[graft.operators.Stats.ConcurrentWriterException]] — the quiesce
     * contract between ingestion gates and retraction sinks,
@@ -85,23 +85,11 @@ object StreamOps {
     * reclaim inside acquire, so a sequential resume never races the
     * listener bus.
     */
-  /** Wrap a foreachBatch body so the fenced batch mutators it calls
-    * (compactions, tombstone deletes, store rebuilds — each under
-    * [[graft.operators.Stats.withWriterLease]]) recognize the
-    * enclosing query's lease on `roots` instead of self-conflicting
-    * with it: the micro-batch runs on the stream-execution thread, so
-    * the held set must be marked there, not at [[leasedStart]] time.
-    */
-  private def heldBatch(roots: Seq[String])(
-      body: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
-    (b, i) => graft.operators.Stats.withHeldLeases(roots)(body(b, i))
-
   private def leasedStart(spark: SparkSession, roots: Seq[String],
                           owner: String)
                          (start: => org.apache.spark.sql.streaming
                            .StreamingQuery)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Stats
     val rs = roots.filter(_.nonEmpty)
     if (rs.isEmpty) return start
     // the pre-start window holds the lease under a unique sync-claim
@@ -155,6 +143,42 @@ object StreamOps {
     q
   }
 
+  /** The one start-up every leased gate sink shares: claim the
+    * writer lease on `roots` in the caller's thread ([[leasedStart]]),
+    * evaluate `body` under that claim (a sink may resolve state there,
+    * as [[retractionGateSink]] resolves its batch base), start the
+    * query with its checkpoint in append mode, and run each NON-EMPTY
+    * micro-batch with `roots` marked held on the stream-execution
+    * thread — so the fenced batch mutators a batch calls (compactions,
+    * tombstone deletes, store rebuilds, each under
+    * [[graft.operators.Stats.withWriterLease]]) ride the query's lease
+    * instead of self-conflicting with it. foreachBatch is serial, so
+    * in-sink maintenance can never race a reading batch.
+    */
+  private def gateSink(spark: SparkSession, stream: DataFrame,
+                       checkpoint: String, roots: Seq[String],
+                       owner: String)
+                      (body: => (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    leasedStart(spark, roots, owner) {
+      val onBatch = body
+      stream.writeStream
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          Stats.withHeldLeases(roots) {
+            if (!batch.isEmpty) onBatch(batch, batchId)
+          }
+        }
+        .start()
+    }
+
+  /** The `compactEvery` cadence every gate sink shares: fold after
+    * every `compactEvery`-th micro-batch (never when it is 0).
+    */
+  private def compactDue(compactEvery: Int, batchId: Long): Boolean =
+    compactEvery > 0 && batchId % compactEvery == compactEvery - 1
+
   /** Continuous-ingestion near-dup gate: every micro-batch is gated
     * against the PERSISTED MinHash signature store
     * ([[graft.operators.Dedup.minhashIncremental]]); survivors land in
@@ -199,37 +223,28 @@ object StreamOps {
                       compactEvery: Int = 0, compactFilesOut: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    leasedStart(spark, Seq(storePath),
-        "nearDupGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // ONE hash pass over the batch, materialized here and reused
-          // by the gate, the store write, and the regime count
-          val batchSigs = Dedup.minhashSigsNative(batch, col(id),
-            col(text), n, k).localCheckpoint()
-          val store = nearDupStoreView(spark, storePath)
-            .getOrElse(batchSigs.limit(0))
-          val survivors = Dedup.minhashIncrementalFromSigs(batch,
-              col(id), batchSigs, store, rowsPerBand, minEstJaccard)
-            .localCheckpoint()
-          // surviving subset of the same materialized pass — no second
-          // tokenize/hash of the text
-          batchSigs
-            .join(survivors.select(col(id).as("__sid")),
-              col("id") === col("__sid"), "left_semi")
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          survivors.write.mode("overwrite")
-            .parquet(s"$outPath/batch=$batchId")
-          // in-sink maintenance: foreachBatch is serial, so compacting
-          // here can never race a reading batch
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactNearDupStore(spark, storePath, compactFilesOut): Unit
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "nearDupGateSink") { (batch, batchId) =>
+      // ONE hash pass over the batch, materialized here and reused
+      // by the gate, the store write, and the regime count
+      val batchSigs = Dedup.minhashSigsNative(batch, col(id),
+        col(text), n, k).localCheckpoint()
+      val store = nearDupStoreView(spark, storePath)
+        .getOrElse(batchSigs.limit(0))
+      val survivors = Dedup.minhashIncrementalFromSigs(batch,
+          col(id), batchSigs, store, rowsPerBand, minEstJaccard)
+        .localCheckpoint()
+      // surviving subset of the same materialized pass — no second
+      // tokenize/hash of the text
+      batchSigs
+        .join(survivors.select(col(id).as("__sid")),
+          col("id") === col("__sid"), "left_semi")
+        .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      survivors.write.mode("overwrite")
+        .parquet(s"$outPath/batch=$batchId")
+      if (compactDue(compactEvery, batchId))
+        compactNearDupStore(spark, storePath, compactFilesOut): Unit
+    }
   }
 
   /** The signature store's current READ VIEW: the newest committed
@@ -240,9 +255,10 @@ object StreamOps {
     * (folded batch dirs are excluded by the id > t rule, so the
     * post-compaction duplicate window can never double-count a store
     * row). Commit state is judged per sub-directory by reader-visible
-    * parquet ([[hasCommittedParquet]]), so a crashed generation or
-    * batch write is ignored until its retry commits it. None = no
-    * committed store content (first-batch bootstrap).
+    * parquet ([[graft.operators.Stats.hasCommittedParquet]]), so a
+    * crashed generation or batch write is ignored until its retry
+    * commits it. None = no committed store content (first-batch
+    * bootstrap).
     */
   private[graft] def nearDupStoreView(spark: SparkSession,
                                           storePath: String)
@@ -265,7 +281,6 @@ object StreamOps {
     */
   def nearDupStoreViewAsOf(spark: SparkSession, storePath: String,
                            asOf: Long): Option[DataFrame] = {
-    import graft.operators.Stats
     val rf = Stats.retractionFloor(spark, storePath)
     if (asOf < rf)
       throw new Stats.SnapshotUnavailableException(
@@ -329,6 +344,92 @@ object StreamOps {
       tok
     }
 
+  /** A clustered gate-store layout, declared once: the columns its
+    * `batch=`/`gen=` dirs hold, the cluster key its files are
+    * range-partitioned and sorted by (the key the footer manifest
+    * prunes on), the public compactor whose name its folds carry, and
+    * the column its `_deleted` set matches. The append, the compaction
+    * and the pruned read all derive from it.
+    */
+  private final case class GateLayout(cols: Seq[String], key: Seq[String],
+                                      compactor: String,
+                                      idCol: String = "id") {
+    private def clustered(rows: DataFrame, files: Int): DataFrame =
+      rows.select(cols.map(col): _*)
+        .repartitionByRange(files, key.map(col): _*)
+        .sortWithinPartitions(key.map(col): _*)
+
+    /** Write `rows` as the store's `batch=<batchId>` dir in `files`
+      * clustered files (overwrite-idempotent: a retry rewrites the
+      * same dir), then upsert the manifest rows of that dir only
+      * ([[graft.operators.Stats.upsertManifestFor]] — no listing of
+      * the rest of the store).
+      */
+    def append(spark: SparkSession, storePath: String,
+               manifestPath: String, batchId: Long, files: Int)
+              (rows: DataFrame): Unit = {
+      val dir = s"$storePath/batch=$batchId"
+      clustered(rows, files).write.mode("overwrite").parquet(dir)
+      Stats.upsertManifestFor(spark, storePath, manifestPath, dir)
+    }
+
+    /** Fold the store into a clustered generation minus its `_deleted`
+      * set ([[compactGateStore]], as `compactor`) and refresh the whole
+      * manifest.
+      */
+    def compact(spark: SparkSession, storePath: String,
+                manifestPath: String, filesOut: Int): Option[Long] =
+      compactGateStore(spark, storePath, compactor, manifestPath, idCol)(
+        clustered(_, filesOut))
+
+    /** The store's committed, manifest-pruned slice for `probe` (a
+      * frame carrying the cluster key): the committed view's files the
+      * probe's key values can live in (all of them when no manifest is
+      * committed — manifest loss costs pruning, never rows), projected
+      * to `cols`, minus the `_deleted` set matched on `idCol`; `None`
+      * when the store is empty or no file can match.
+      */
+    def slice(spark: SparkSession, storePath: String,
+              manifestPath: String, probe: DataFrame): Option[DataFrame] = {
+      val viewDirs = Stats.committedViewDirs(spark, storePath)
+      val files =
+        if (viewDirs.isEmpty || !Stats.hasManifest(spark, manifestPath))
+          viewDirs
+        else key match {
+          case Seq(k) => Stats.touchedKeysKeptFilesUnder(spark, viewDirs,
+            manifestPath, k, probe)
+          case Seq(a, b) => Stats.touchedPairsKeptFilesUnder(spark,
+            viewDirs, manifestPath, a, b, probe)
+        }
+      if (files.isEmpty) None
+      else Some(gateTombstones(storePath).without(spark,
+        spark.read.parquet(files: _*).select(cols.map(col): _*), idCol))
+    }
+  }
+
+  /** Banded MinHash signatures, clustered by (band, bucket). */
+  private val BandedSigs = GateLayout(Seq("band", "bucket", "id", "sig"),
+    Seq("band", "bucket"), "compactNearDupStoreBanded")
+  /** Perceptual-hash windows (image/audio), clustered by (w, wk). */
+  private val MediaWindows = GateLayout(Seq("w", "wk", "id", "dhash"),
+    Seq("w", "wk"), "compactMediaStoreBanded")
+  /** Video frame hashes, clustered by fh. */
+  private val VideoFrames =
+    GateLayout(Seq("fh", "id"), Seq("fh"), "compactFrameStore")
+  /** Content-defined window fingerprints, clustered by fp. */
+  private val WindowFps =
+    GateLayout(Seq("fp", "id"), Seq("fp"), "compactWindowStoreGen")
+  /** The ER entity dictionary, clustered by blkh; tombstoned by eid. */
+  private val Entities = GateLayout(Seq("blkh", "eid", "nm"), Seq("blkh"),
+    "compactEntityStoreGen", "eid")
+
+  /** The footer manifest path of a gate store: `manifestPath` when
+    * given, else `<storePath>_manifest` (outside the store tree, so
+    * store reads never see it).
+    */
+  private def manifestOf(storePath: String, manifestPath: String): String =
+    if (manifestPath.nonEmpty) manifestPath else s"${storePath}_manifest"
+
   /** [[compactNearDupStore]] for a BANDED store
     * ([[nearDupGateSinkBanded]]): the generation is rewritten
     * range-clustered by (band, bucket) — the layout the manifest-pruned
@@ -339,11 +440,7 @@ object StreamOps {
   def compactNearDupStoreBanded(spark: SparkSession, storePath: String,
                                 manifestPath: String,
                                 filesOut: Int): Option[Long] =
-    compactGateStore(spark, storePath, "compactNearDupStoreBanded",
-        manifestPath)(
-      _.select(col("band"), col("bucket"), col("id"), col("sig"))
-        .repartitionByRange(filesOut, col("band"), col("bucket"))
-        .sortWithinPartitions(col("band"), col("bucket")))
+    BandedSigs.compact(spark, storePath, manifestPath, filesOut)
 
   /** TOMBSTONE deletes for ANY id-keyed gate store — the shared
     * retraction op of the whole dedup-gate family: a taken-down
@@ -389,8 +486,7 @@ object StreamOps {
   def storeFpsFor(spark: SparkSession, storePath: String,
                   manifestPath: String, probeFps: DataFrame)
       : DataFrame =
-    prunedKeysSlice(spark, storePath, manifestPath, "fp",
-        probeFps.select(col("fp")), Seq("fp", "id"))
+    WindowFps.slice(spark, storePath, manifestPath, probeFps)
       .getOrElse(probeFps.select(col("fp"), col("id")).limit(0))
 
   /** [[storeBandsFor]] for the ER gate's entity dictionary: the
@@ -401,8 +497,8 @@ object StreamOps {
   def erStoreSliceFor(spark: SparkSession, storePath: String,
                       manifestPath: String, probeBlkh: DataFrame,
                       empty: DataFrame): DataFrame =
-    prunedKeysSlice(spark, storePath, manifestPath, "blkh",
-        probeBlkh.select(col("blkh")), Seq("eid", "nm", "blkh"), "eid")
+    Entities.slice(spark, storePath, manifestPath, probeBlkh)
+      .map(_.select(col("eid"), col("nm"), col("blkh")))
       .getOrElse(empty)
 
   /** The banded signature store's TOMBSTONE-AWARE, manifest-pruned
@@ -416,9 +512,7 @@ object StreamOps {
   def storeBandsFor(spark: SparkSession, storePath: String,
                     manifestPath: String, newBands: DataFrame)
       : DataFrame =
-    prunedPairsSlice(spark, storePath, manifestPath, "band", "bucket",
-        newBands.select(col("band"), col("bucket")),
-        Seq("band", "bucket", "id", "sig"))
+    BandedSigs.slice(spark, storePath, manifestPath, newBands)
       .getOrElse(newBands.limit(0))
 
   /** [[nearDupGateSink]] over a BANDED, manifest-pruned store — the
@@ -447,43 +541,32 @@ object StreamOps {
                             appendFilesOut: Int = 2,
                             manifestPath: String = "")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Dedup, Stats}
-    val mPath =
-      if (manifestPath.nonEmpty) manifestPath else s"${storePath}_manifest"
-    leasedStart(spark, Seq(storePath),
-        "nearDupGateSinkBanded")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // ONE hash pass + ONE banding pass over the batch, reused by
-          // the prune probes, the gate, and the store append
-          val batchSigs = Dedup.minhashSigsNative(batch, col(id),
-            col(text), n, k).localCheckpoint()
-          val batchRows = batchSigs.count()
-          val newBands = Dedup.lshBuckets(batchSigs, rowsPerBand)
-            .select(col("band"), col("bucket"), col("id"), col("sig"))
-          val storeBands = storeBandsFor(spark, storePath, mPath,
-            newBands)
-          val survivors = Dedup.minhashIncrementalFromBands(batch,
-              col(id), newBands, storeBands, batchRows, minEstJaccard)
-            .localCheckpoint()
-          newBands
-            .join(survivors.select(col(id).as("__sid")),
-              col("id") === col("__sid"), "left_semi")
-            .repartitionByRange(appendFilesOut, col("band"), col("bucket"))
-            .sortWithinPartitions(col("band"), col("bucket"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          survivors.write.mode("overwrite")
-            .parquet(s"$outPath/batch=$batchId")
-          Stats.upsertManifest(spark, storePath, mPath)
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactNearDupStoreBanded(spark, storePath, mPath,
-              compactFilesOut): Unit
-        }
-      })
-      .start())
+    import graft.operators.Dedup
+    val mPath = manifestOf(storePath, manifestPath)
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "nearDupGateSinkBanded") { (batch, batchId) =>
+      // ONE hash pass + ONE banding pass over the batch, reused by
+      // the prune probes, the gate, and the store append
+      val batchSigs = Dedup.minhashSigsNative(batch, col(id),
+        col(text), n, k).localCheckpoint()
+      val batchRows = batchSigs.count()
+      val newBands = Dedup.lshBuckets(batchSigs, rowsPerBand)
+        .select(col("band"), col("bucket"), col("id"), col("sig"))
+      val storeBands = storeBandsFor(spark, storePath, mPath,
+        newBands)
+      val survivors = Dedup.minhashIncrementalFromBands(batch,
+          col(id), newBands, storeBands, batchRows, minEstJaccard)
+        .localCheckpoint()
+      BandedSigs.append(spark, storePath, mPath, batchId,
+          appendFilesOut)(
+        newBands.join(survivors.select(col(id).as("__sid")),
+          col("id") === col("__sid"), "left_semi"))
+      survivors.write.mode("overwrite")
+        .parquet(s"$outPath/batch=$batchId")
+      if (compactDue(compactEvery, batchId))
+        compactNearDupStoreBanded(spark, storePath, mPath,
+          compactFilesOut): Unit
+    }
   }
 
   /** Streaming substring-dedup gate: each micro-batch is gated against
@@ -513,65 +596,53 @@ object StreamOps {
                         appendFilesOut: Int = 2, manifestPath: String = "",
                         broadcastLimit: Long = 4000000L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Curation, Stats}
-    val mPath =
-      if (manifestPath.nonEmpty) manifestPath else s"${storePath}_manifest"
-    leasedStart(spark, Seq(storePath),
-        "substringGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // ONE fingerprint pass over the batch, reused by the prune
-          // probes, the gate, and the store append
-          val batchFps = Curation.windowFpRows(batch, col(id), col(text),
-            window, anchorLen, anchorMod).localCheckpoint()
-          val storeFps = storeFpsFor(spark, storePath, mPath,
-            batchFps).select(col("fp"))
-          // store-arm membership + within-batch min-id holder, then
-          // one per-doc distinct-fp count against both arms; every
-          // join side below is batch-bounded (the store side is first
-          // semi-joined down to the batch's own fp set). Measured
-          // regime gate: a normal micro-batch rides broadcasts; a
-          // backfill-sized batch degrades every one to shuffle-hash.
-          val small = batchFps.count() <= broadcastLimit
-          def bc(df: DataFrame): DataFrame =
-            if (small) broadcast(df) else df.hint("shuffle_hash")
-          val probe = batchFps.select(col("fp")).distinct()
-          val inStore = storeFps
-            .join(bc(probe), Seq("fp"), "left_semi")
-            .distinct().withColumn("__in_store", lit(true))
-          val minHolder = batchFps.groupBy(col("fp"))
-            .agg(min(col("id")).as("__min_id"))
-          val shared = batchFps
-            .join(bc(minHolder), Seq("fp"))
-            .join(bc(inStore), Seq("fp"), "left")
-            .where(col("__in_store").isNotNull ||
-              col("__min_id") < col("id"))
-            .groupBy(col("id"))
-            .agg(count(lit(1)).as("__n_shared"))
-          val dropIds = shared.where(col("__n_shared") >= minShared)
-            .select(col("id").as("__did"))
-          val survivors = batch
-            .join(bc(dropIds), col(id) === col("__did"), "left_anti")
-            .localCheckpoint()
-          batchFps
-            .join(survivors.select(col(id).as("__sid")),
-              col("id") === col("__sid"), "left_semi")
-            .select(col("fp"), col("id"))
-            .repartitionByRange(appendFilesOut, col("fp"))
-            .sortWithinPartitions(col("fp"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          survivors.write.mode("overwrite")
-            .parquet(s"$outPath/batch=$batchId")
-          Stats.upsertManifest(spark, storePath, mPath)
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactWindowStoreGen(spark, storePath, mPath,
-              compactFilesOut): Unit
-        }
-      })
-      .start())
+    import graft.operators.Curation
+    val mPath = manifestOf(storePath, manifestPath)
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "substringGateSink") { (batch, batchId) =>
+      // ONE fingerprint pass over the batch, reused by the prune
+      // probes, the gate, and the store append
+      val batchFps = Curation.windowFpRows(batch, col(id), col(text),
+        window, anchorLen, anchorMod).localCheckpoint()
+      val storeFps = storeFpsFor(spark, storePath, mPath,
+        batchFps).select(col("fp"))
+      // store-arm membership + within-batch min-id holder, then
+      // one per-doc distinct-fp count against both arms; every
+      // join side below is batch-bounded (the store side is first
+      // semi-joined down to the batch's own fp set). Measured
+      // regime gate: a normal micro-batch rides broadcasts; a
+      // backfill-sized batch degrades every one to shuffle-hash.
+      val small = batchFps.count() <= broadcastLimit
+      def bc(df: DataFrame): DataFrame =
+        if (small) broadcast(df) else df.hint("shuffle_hash")
+      val probe = batchFps.select(col("fp")).distinct()
+      val inStore = storeFps
+        .join(bc(probe), Seq("fp"), "left_semi")
+        .distinct().withColumn("__in_store", lit(true))
+      val minHolder = batchFps.groupBy(col("fp"))
+        .agg(min(col("id")).as("__min_id"))
+      val shared = batchFps
+        .join(bc(minHolder), Seq("fp"))
+        .join(bc(inStore), Seq("fp"), "left")
+        .where(col("__in_store").isNotNull ||
+          col("__min_id") < col("id"))
+        .groupBy(col("id"))
+        .agg(count(lit(1)).as("__n_shared"))
+      val dropIds = shared.where(col("__n_shared") >= minShared)
+        .select(col("id").as("__did"))
+      val survivors = batch
+        .join(bc(dropIds), col(id) === col("__did"), "left_anti")
+        .localCheckpoint()
+      WindowFps.append(spark, storePath, mPath, batchId,
+          appendFilesOut)(
+        batchFps.join(survivors.select(col(id).as("__sid")),
+          col("id") === col("__sid"), "left_semi"))
+      survivors.write.mode("overwrite")
+        .parquet(s"$outPath/batch=$batchId")
+      if (compactDue(compactEvery, batchId))
+        compactWindowStoreGen(spark, storePath, mPath,
+          compactFilesOut): Unit
+    }
   }
 
   /** [[compactNearDupStoreBanded]] for the substring gate's window-
@@ -582,20 +653,7 @@ object StreamOps {
   def compactWindowStoreGen(spark: SparkSession, storePath: String,
                             manifestPath: String,
                             filesOut: Int): Option[Long] =
-    compactGateStore(spark, storePath, "compactWindowStoreGen",
-        manifestPath)(
-      _.select(col("fp"), col("id"))
-        .repartitionByRange(filesOut, col("fp"))
-        .sortWithinPartitions(col("fp")))
-
-  /** True iff `root` holds at least one READER-VISIBLE committed
-    * parquet data file (the shared
-    * [[graft.operators.Stats.hasCommittedParquet]] probe).
-    */
-  private[streaming] def hasCommittedParquet(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Boolean =
-    graft.operators.Stats.hasCommittedParquet(fs, root)
+    WindowFps.compact(spark, storePath, manifestPath, filesOut)
 
   /** Streaming MEDIA near-dup gate: the [[nearDupGateSink]] protocol
     * on perceptual hashes — each micro-batch's binary payloads hash
@@ -628,39 +686,32 @@ object StreamOps {
                              .imageDHash(s, df).toDF())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Multimodal
-    leasedStart(spark, Seq(storePath),
-        "mediaDedupGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // ONE hash pass; dead-letters keep a null dhash
-          // alias to "payload" so the hashFn contract (imageDHash /
-          // audioFingerprint select col("payload") by name) holds for
-          // any input column name — the embedDedupGateSink treatment
-          val hashes = hashFn(spark,
-              batch.select(col(id).cast("long").as("media_id"),
-                col(payload).as("payload"))).localCheckpoint()
-          val store = mediaStoreView(spark, storePath)
-            .getOrElse(hashes.limit(0))
-          // exact blocked pairs with the batch on the larger-id side;
-          // the store prunes to BATCH-TOUCHED window keys before any
-          // pairing, so per-batch cost never scales with store² (store
-          // ids are smaller by the monotonicity contract)
-          val dropIds = Multimodal
-            .dhashPairsAgainst(store, hashes, maxDist, maxBucket)
-            .select(col("id_b").as("media_id")).distinct()
-          val survivors = hashes
-            .join(dropIds, Seq("media_id"), "left_anti")
-            .localCheckpoint()
-          survivors.where(col("dhash").isNotNull)
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          survivors.select(col("media_id"))
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "mediaDedupGateSink") { (batch, batchId) =>
+      // ONE hash pass; dead-letters keep a null dhash
+      // alias to "payload" so the hashFn contract (imageDHash /
+      // audioFingerprint select col("payload") by name) holds for
+      // any input column name — the embedDedupGateSink treatment
+      val hashes = hashFn(spark,
+          batch.select(col(id).cast("long").as("media_id"),
+            col(payload).as("payload"))).localCheckpoint()
+      val store = mediaStoreView(spark, storePath)
+        .getOrElse(hashes.limit(0))
+      // exact blocked pairs with the batch on the larger-id side;
+      // the store prunes to BATCH-TOUCHED window keys before any
+      // pairing, so per-batch cost never scales with store² (store
+      // ids are smaller by the monotonicity contract)
+      val dropIds = Multimodal
+        .dhashPairsAgainst(store, hashes, maxDist, maxBucket)
+        .select(col("id_b").as("media_id")).distinct()
+      val survivors = hashes
+        .join(dropIds, Seq("media_id"), "left_anti")
+        .localCheckpoint()
+      survivors.where(col("dhash").isNotNull)
+        .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      survivors.select(col("media_id"))
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
   }
 
   /** The media gate's committed store view ((media_id, dhash) rows):
@@ -702,46 +753,33 @@ object StreamOps {
                                appendFilesOut: Int = 2,
                                manifestPath: String = "")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Multimodal, Stats}
-    val mPath =
-      if (manifestPath.nonEmpty) manifestPath else s"${storePath}_manifest"
-    leasedStart(spark, Seq(storePath),
-        "mediaDedupGateSinkBanded")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // ONE hash pass + ONE window expansion, reused by the prune
-          // probes, the gate, and the store append
-          val hashes = hashFn(spark,
-              batch.select(col(id).cast("long").as("media_id"),
-                col(payload).as("payload"))).localCheckpoint()
-          val pw = Multimodal.dhashWindowRows(hashes)
-          val storeBands = prunedPairsSlice(spark, storePath, mPath, "w",
-              "wk", pw.select(col("w"), col("wk")),
-              Seq("w", "wk", "id", "dhash"))
-            .getOrElse(pw.limit(0))
-          val dropIds = Multimodal
-            .dhashPairsAgainstBands(storeBands, pw, maxDist, maxBucket)
-            .select(col("id_b").as("media_id")).distinct()
-          val survivors = hashes
-            .join(dropIds, Seq("media_id"), "left_anti")
-            .localCheckpoint()
-          Multimodal.dhashWindowRows(
-              survivors.where(col("dhash").isNotNull))
-            .repartitionByRange(appendFilesOut, col("w"), col("wk"))
-            .sortWithinPartitions(col("w"), col("wk"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          survivors.select(col("media_id"))
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          Stats.upsertManifest(spark, storePath, mPath)
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactMediaStoreBanded(spark, storePath, mPath,
-              compactFilesOut): Unit
-        }
-      })
-      .start())
+    import graft.operators.Multimodal
+    val mPath = manifestOf(storePath, manifestPath)
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "mediaDedupGateSinkBanded") { (batch, batchId) =>
+      // ONE hash pass + ONE window expansion, reused by the prune
+      // probes, the gate, and the store append
+      val hashes = hashFn(spark,
+          batch.select(col(id).cast("long").as("media_id"),
+            col(payload).as("payload"))).localCheckpoint()
+      val pw = Multimodal.dhashWindowRows(hashes)
+      val storeBands = MediaWindows.slice(spark, storePath, mPath, pw)
+        .getOrElse(pw.limit(0))
+      val dropIds = Multimodal
+        .dhashPairsAgainstBands(storeBands, pw, maxDist, maxBucket)
+        .select(col("id_b").as("media_id")).distinct()
+      val survivors = hashes
+        .join(dropIds, Seq("media_id"), "left_anti")
+        .localCheckpoint()
+      MediaWindows.append(spark, storePath, mPath, batchId,
+          appendFilesOut)(
+        Multimodal.dhashWindowRows(survivors.where(col("dhash").isNotNull)))
+      survivors.select(col("media_id"))
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      if (compactDue(compactEvery, batchId))
+        compactMediaStoreBanded(spark, storePath, mPath,
+          compactFilesOut): Unit
+    }
   }
 
   /** The VIDEO arm of the media gate family: shared-frame near-dup
@@ -775,49 +813,37 @@ object StreamOps {
                          appendFilesOut: Int = 2,
                          manifestPath: String = "")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Multimodal, Stats}
-    val mPath =
-      if (manifestPath.nonEmpty) manifestPath else s"${storePath}_manifest"
-    leasedStart(spark, Seq(storePath),
-        "videoDedupGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val media = batch.select(
-            col(id).cast("long").as("media_id"),
-            col(payload).as("payload"))
-          // ONE chunk+hash pass, reused by the prune probes, the
-          // gate, and the store append
-          val frames = Multimodal.videoFrameRows(media, frameBytes)
-            .localCheckpoint()
-          val storeFrames = prunedKeysSlice(spark, storePath, mPath,
-              "fh", frames.select(col("fh")).distinct(), Seq("fh", "id"))
-            .getOrElse(frames.select(col("fh"), col("id")).limit(0))
-          val dropIds = Multimodal
-            .frameDupPairsAgainstRows(storeFrames, frames, minShared,
-              maxBucket)
-            .select(col("id_b").as("media_id")).distinct()
-          val survivors = media.select(col("media_id")).distinct()
-            .join(dropIds, Seq("media_id"), "left_anti")
-            .localCheckpoint()
-          frames
-            .join(survivors.select(col("media_id").as("id")),
-              Seq("id"), "left_semi")
-            .select(col("fh"), col("id"))
-            .repartitionByRange(appendFilesOut, col("fh"))
-            .sortWithinPartitions(col("fh"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          survivors
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          Stats.upsertManifest(spark, storePath, mPath)
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactFrameStore(spark, storePath, mPath,
-              compactFilesOut): Unit
-        }
-      })
-      .start())
+    import graft.operators.Multimodal
+    val mPath = manifestOf(storePath, manifestPath)
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "videoDedupGateSink") { (batch, batchId) =>
+      val media = batch.select(
+        col(id).cast("long").as("media_id"),
+        col(payload).as("payload"))
+      // ONE chunk+hash pass, reused by the prune probes, the
+      // gate, and the store append
+      val frames = Multimodal.videoFrameRows(media, frameBytes)
+        .localCheckpoint()
+      val storeFrames = VideoFrames.slice(spark, storePath, mPath,
+          frames.select(col("fh")).distinct())
+        .getOrElse(frames.select(col("fh"), col("id")).limit(0))
+      val dropIds = Multimodal
+        .frameDupPairsAgainstRows(storeFrames, frames, minShared,
+          maxBucket)
+        .select(col("id_b").as("media_id")).distinct()
+      val survivors = media.select(col("media_id")).distinct()
+        .join(dropIds, Seq("media_id"), "left_anti")
+        .localCheckpoint()
+      VideoFrames.append(spark, storePath, mPath, batchId,
+          appendFilesOut)(
+        frames.join(survivors.select(col("media_id").as("id")),
+          Seq("id"), "left_semi"))
+      survivors
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      if (compactDue(compactEvery, batchId))
+        compactFrameStore(spark, storePath, mPath,
+          compactFilesOut): Unit
+    }
   }
 
   /** [[compactNearDupStoreBanded]] for the VIDEO frame store: fold
@@ -827,11 +853,7 @@ object StreamOps {
   def compactFrameStore(spark: SparkSession, storePath: String,
                         manifestPath: String,
                         filesOut: Int): Option[Long] =
-    compactGateStore(spark, storePath, "compactFrameStore",
-        manifestPath)(
-      _.select(col("fh"), col("id"))
-        .repartitionByRange(filesOut, col("fh"))
-        .sortWithinPartitions(col("fh")))
+    VideoFrames.compact(spark, storePath, manifestPath, filesOut)
 
   /** [[compactNearDupStoreBanded]] for the banded MEDIA store: fold
     * batch dirs into a (w, wk)-range-clustered generation and refresh
@@ -840,50 +862,7 @@ object StreamOps {
   def compactMediaStoreBanded(spark: SparkSession, storePath: String,
                               manifestPath: String,
                               filesOut: Int): Option[Long] =
-    compactGateStore(spark, storePath, "compactMediaStoreBanded",
-        manifestPath)(
-      _.select(col("w"), col("wk"), col("id"), col("dhash"))
-        .repartitionByRange(filesOut, col("w"), col("wk"))
-        .sortWithinPartitions(col("w"), col("wk")))
-
-  /** A gate store's committed, manifest-pruned slice — the store read
-    * every gate shares: the committed view's files that `kept` keeps
-    * (all of them when no manifest is committed — manifest loss costs
-    * pruning, never rows), projected to `cols`, minus the `_deleted`
-    * set matched on `idCol`; `None` when the store is empty or no file
-    * can match.
-    */
-  private def prunedSlice(spark: SparkSession, storePath: String,
-                          manifestPath: String, cols: Seq[String],
-                          idCol: String)
-                         (kept: Seq[String] => Seq[String])
-      : Option[DataFrame] = {
-    val viewDirs = Stats.committedViewDirs(spark, storePath)
-    val files =
-      if (viewDirs.isEmpty || !Stats.hasManifest(spark, manifestPath))
-        viewDirs
-      else kept(viewDirs)
-    if (files.isEmpty) None
-    else Some(gateTombstones(storePath).without(spark,
-      spark.read.parquet(files: _*).select(cols.map(col): _*), idCol))
-  }
-
-  /** [[prunedSlice]] for a probe over a (ka, kb) clustering key pair. */
-  private def prunedPairsSlice(spark: SparkSession, storePath: String,
-                               manifestPath: String, ka: String,
-                               kb: String, probe: DataFrame,
-                               cols: Seq[String]): Option[DataFrame] =
-    prunedSlice(spark, storePath, manifestPath, cols, "id")(
-      Stats.touchedPairsKeptFilesUnder(spark, _, manifestPath, ka, kb,
-        probe))
-
-  /** [[prunedSlice]] for a probe over a single clustering key. */
-  private def prunedKeysSlice(spark: SparkSession, storePath: String,
-                              manifestPath: String, key: String,
-                              probe: DataFrame, cols: Seq[String],
-                              idCol: String = "id"): Option[DataFrame] =
-    prunedSlice(spark, storePath, manifestPath, cols, idCol)(
-      Stats.touchedKeysKeptFilesUnder(spark, _, manifestPath, key, probe))
+    MediaWindows.compact(spark, storePath, manifestPath, filesOut)
 
   /** The UNIFIED cross-modal dedup gate — the streaming face of the
     * x_multimodal_dedup capstone: one stream whose rows carry ALL FOUR
@@ -931,112 +910,86 @@ object StreamOps {
                          appendFilesOut: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.{Dedup, Multimodal}
-    val (tStore, iStore, aStore, vStore) = (s"$storeRoot/text",
-      s"$storeRoot/img", s"$storeRoot/aud", s"$storeRoot/vid")
-    val (tMan, iMan, aMan, vMan) = (s"$storeRoot/text_manifest",
-      s"$storeRoot/img_manifest", s"$storeRoot/aud_manifest",
-      s"$storeRoot/vid_manifest")
-    leasedStart(spark, Seq(tStore, iStore, aStore, vStore),
-        "multimodalGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(tStore, iStore, aStore, vStore)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.select(col(id).cast("long").as("mid"),
-              col(text).as("text"), col(image).as("img"),
-              col(audio).as("aud"), col(video).as("vid"))
-            .localCheckpoint()
-          val batchRows = b.count()
-          // text arm: band once, prune store, edge set
-          val newBands = Dedup.lshBuckets(
-              Dedup.minhashSigsNative(b, col("mid"), col("text"), n, k),
-              rowsPerBand)
-            .select(col("band"), col("bucket"), col("id"), col("sig"))
-            .localCheckpoint()
-          val tSlice = prunedPairsSlice(spark, tStore, tMan, "band",
-              "bucket", newBands.select(col("band"), col("bucket")),
-              Seq("band", "bucket", "id", "sig"))
-            .getOrElse(newBands.limit(0))
-          val tDrop = Dedup.minhashCandidateEdgesFromBands(newBands,
-              tSlice, batchRows, minEstJaccard, maxBucket)
-            .select(col("id_b").as("mid"))
-          // image arm: hash once, window-expand once
-          val imgHashes = Multimodal.imageDHash(spark,
-              b.select(col("mid").as("media_id"),
-                col("img").as("payload"))).toDF().localCheckpoint()
-          val ipw = Multimodal.dhashWindowRows(
-            imgHashes.where(col("dhash").isNotNull))
-          val iSlice = prunedPairsSlice(spark, iStore, iMan, "w", "wk",
-              ipw.select(col("w"), col("wk")).distinct(),
-              Seq("w", "wk", "id", "dhash"))
-            .getOrElse(ipw.limit(0))
-          val iDrop = Multimodal.dhashPairsAgainstBands(iSlice, ipw,
-              imgMaxDist, maxBucket)
-            .select(col("id_b").as("mid"))
-          // audio arm: same window machinery over the acoustic bits
-          val audHashes = Multimodal.audioFingerprint(spark,
-              b.select(col("mid").as("media_id"),
-                col("aud").as("payload"))).toDF().localCheckpoint()
-          val apw = Multimodal.dhashWindowRows(
-            audHashes.where(col("dhash").isNotNull))
-          val aSlice = prunedPairsSlice(spark, aStore, aMan, "w", "wk",
-              apw.select(col("w"), col("wk")).distinct(),
-              Seq("w", "wk", "id", "dhash"))
-            .getOrElse(apw.limit(0))
-          val aDrop = Multimodal.dhashPairsAgainstBands(aSlice, apw,
-              audMaxDist, maxBucket)
-            .select(col("id_b").as("mid"))
-          // video arm: chunk+hash once
-          val frames = Multimodal.videoFrameRows(
-              b.select(col("mid").as("media_id"),
-                col("vid").as("payload")), frameBytes)
-            .localCheckpoint()
-          val vSlice = prunedKeysSlice(spark, vStore, vMan, "fh",
-              frames.select(col("fh")).distinct(), Seq("fh", "id"))
-            .getOrElse(frames.select(col("fh"), col("id")).limit(0))
-          val vDrop = Multimodal.frameDupPairsAgainstRows(vSlice,
-              frames, minShared, maxBucket)
-            .select(col("id_b").as("mid"))
-          // the union IS the cross-modal composition
-          val dropIds = tDrop.unionAll(iDrop).unionAll(aDrop)
-            .unionAll(vDrop).distinct()
-          val survivors = b.select(col("mid"))
-            .join(dropIds, Seq("mid"), "left_anti")
-            .localCheckpoint()
-          val keepIds = survivors.select(col("mid").as("id"))
-          newBands.join(keepIds, Seq("id"), "left_semi")
-            .repartitionByRange(appendFilesOut, col("band"), col("bucket"))
-            .sortWithinPartitions(col("band"), col("bucket"))
-            .write.mode("overwrite").parquet(s"$tStore/batch=$batchId")
-          ipw.join(keepIds, Seq("id"), "left_semi")
-            .repartitionByRange(appendFilesOut, col("w"), col("wk"))
-            .sortWithinPartitions(col("w"), col("wk"))
-            .write.mode("overwrite").parquet(s"$iStore/batch=$batchId")
-          apw.join(keepIds, Seq("id"), "left_semi")
-            .repartitionByRange(appendFilesOut, col("w"), col("wk"))
-            .sortWithinPartitions(col("w"), col("wk"))
-            .write.mode("overwrite").parquet(s"$aStore/batch=$batchId")
-          frames.join(keepIds, Seq("id"), "left_semi")
-            .select(col("fh"), col("id"))
-            .repartitionByRange(appendFilesOut, col("fh"))
-            .sortWithinPartitions(col("fh"))
-            .write.mode("overwrite").parquet(s"$vStore/batch=$batchId")
-          survivors.select(col("mid"))
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          Stats.upsertManifest(spark, tStore, tMan)
-          Stats.upsertManifest(spark, iStore, iMan)
-          Stats.upsertManifest(spark, aStore, aMan)
-          Stats.upsertManifest(spark, vStore, vMan)
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-            compactNearDupStoreBanded(spark, tStore, tMan, compactFilesOut)
-            compactMediaStoreBanded(spark, iStore, iMan, compactFilesOut)
-            compactMediaStoreBanded(spark, aStore, aMan, compactFilesOut)
-            compactFrameStore(spark, vStore, vMan, compactFilesOut): Unit
-          }
+    // one store per arm, each with its `<store>_manifest`
+    val arms = Seq(BandedSigs -> "text", MediaWindows -> "img",
+        MediaWindows -> "aud", VideoFrames -> "vid")
+      .map { case (layout, arm) => layout -> s"$storeRoot/$arm" }
+    val Seq(tStore, iStore, aStore, vStore) = arms.map(_._2)
+    def slice(layout: GateLayout, store: String, probe: DataFrame) =
+      layout.slice(spark, store, manifestOf(store, ""), probe)
+    gateSink(spark, stream, checkpoint, arms.map(_._2),
+        "multimodalGateSink") { (batch, batchId) =>
+      val b = batch.select(col(id).cast("long").as("mid"),
+          col(text).as("text"), col(image).as("img"),
+          col(audio).as("aud"), col(video).as("vid"))
+        .localCheckpoint()
+      val batchRows = b.count()
+      // text arm: band once, prune store, edge set
+      val newBands = Dedup.lshBuckets(
+          Dedup.minhashSigsNative(b, col("mid"), col("text"), n, k),
+          rowsPerBand)
+        .select(col("band"), col("bucket"), col("id"), col("sig"))
+        .localCheckpoint()
+      val tSlice = slice(BandedSigs, tStore, newBands)
+        .getOrElse(newBands.limit(0))
+      val tDrop = Dedup.minhashCandidateEdgesFromBands(newBands,
+          tSlice, batchRows, minEstJaccard, maxBucket)
+        .select(col("id_b").as("mid"))
+      // image arm: hash once, window-expand once
+      val imgHashes = Multimodal.imageDHash(spark,
+          b.select(col("mid").as("media_id"),
+            col("img").as("payload"))).toDF().localCheckpoint()
+      val ipw = Multimodal.dhashWindowRows(
+        imgHashes.where(col("dhash").isNotNull))
+      val iSlice = slice(MediaWindows, iStore,
+          ipw.select(col("w"), col("wk")).distinct())
+        .getOrElse(ipw.limit(0))
+      val iDrop = Multimodal.dhashPairsAgainstBands(iSlice, ipw,
+          imgMaxDist, maxBucket)
+        .select(col("id_b").as("mid"))
+      // audio arm: same window machinery over the acoustic bits
+      val audHashes = Multimodal.audioFingerprint(spark,
+          b.select(col("mid").as("media_id"),
+            col("aud").as("payload"))).toDF().localCheckpoint()
+      val apw = Multimodal.dhashWindowRows(
+        audHashes.where(col("dhash").isNotNull))
+      val aSlice = slice(MediaWindows, aStore,
+          apw.select(col("w"), col("wk")).distinct())
+        .getOrElse(apw.limit(0))
+      val aDrop = Multimodal.dhashPairsAgainstBands(aSlice, apw,
+          audMaxDist, maxBucket)
+        .select(col("id_b").as("mid"))
+      // video arm: chunk+hash once
+      val frames = Multimodal.videoFrameRows(
+          b.select(col("mid").as("media_id"),
+            col("vid").as("payload")), frameBytes)
+        .localCheckpoint()
+      val vSlice = slice(VideoFrames, vStore,
+          frames.select(col("fh")).distinct())
+        .getOrElse(frames.select(col("fh"), col("id")).limit(0))
+      val vDrop = Multimodal.frameDupPairsAgainstRows(vSlice,
+          frames, minShared, maxBucket)
+        .select(col("id_b").as("mid"))
+      // the union IS the cross-modal composition
+      val dropIds = tDrop.unionAll(iDrop).unionAll(aDrop)
+        .unionAll(vDrop).distinct()
+      val survivors = b.select(col("mid"))
+        .join(dropIds, Seq("mid"), "left_anti")
+        .localCheckpoint()
+      val keepIds = survivors.select(col("mid").as("id"))
+      arms.zip(Seq(newBands, ipw, apw, frames)).foreach {
+        case ((layout, store), rows) =>
+          layout.append(spark, store, manifestOf(store, ""), batchId,
+            appendFilesOut)(rows.join(keepIds, Seq("id"), "left_semi"))
+      }
+      survivors.select(col("mid"))
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      if (compactDue(compactEvery, batchId))
+        arms.foreach { case (layout, store) =>
+          layout.compact(spark, store, manifestOf(store, ""),
+            compactFilesOut): Unit
         }
-      })
-      .start())
+    }
   }
 
   /** Streaming EMBEDDING near-dup gate: the [[nearDupGateSink]]
@@ -1062,44 +1015,37 @@ object StreamOps {
                          compactFilesOut: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    leasedStart(spark, Seq(storePath),
-        "embedDedupGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val base = batch.select(col(id).cast("long").as("id"),
-            col(vec).as("vec")).localCheckpoint()
-          val tomb = gateTombstones(storePath)
-          val storeCodes = gateStoreView(spark, s"$storePath/codes",
-              Seq("id", "table", "bucket"))
-            .map(tomb.without(spark, _))
-            .getOrElse(Dedup.embeddingCodes(base.limit(0), col("id"),
-              col("vec"), planes, tables, dim))
-          val storeVecs = gateStoreView(spark, s"$storePath/vecs",
-              Seq("id", "vec"))
-            .map(tomb.without(spark, _))
-            .getOrElse(base.limit(0))
-          val dropIds = Dedup.embeddingIncremental(base, col("id"),
-              col("vec"), storeCodes, storeVecs, threshold, planes,
-              tables, multiprobe, dim)
-            .select(col("id_b").as("id")).distinct()
-          val survivors = base.join(dropIds, Seq("id"), "left_anti")
-            .localCheckpoint()
-          Dedup.embeddingCodes(survivors, col("id"), col("vec"),
-              planes, tables, dim)
-            .write.mode("overwrite")
-            .parquet(s"$storePath/codes/batch=$batchId")
-          survivors.write.mode("overwrite")
-            .parquet(s"$storePath/vecs/batch=$batchId")
-          survivors.select(col("id"))
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactEmbedStore(spark, storePath, compactFilesOut): Unit
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "embedDedupGateSink") { (batch, batchId) =>
+      val base = batch.select(col(id).cast("long").as("id"),
+        col(vec).as("vec")).localCheckpoint()
+      val tomb = gateTombstones(storePath)
+      val storeCodes = gateStoreView(spark, s"$storePath/codes",
+          Seq("id", "table", "bucket"))
+        .map(tomb.without(spark, _))
+        .getOrElse(Dedup.embeddingCodes(base.limit(0), col("id"),
+          col("vec"), planes, tables, dim))
+      val storeVecs = gateStoreView(spark, s"$storePath/vecs",
+          Seq("id", "vec"))
+        .map(tomb.without(spark, _))
+        .getOrElse(base.limit(0))
+      val dropIds = Dedup.embeddingIncremental(base, col("id"),
+          col("vec"), storeCodes, storeVecs, threshold, planes,
+          tables, multiprobe, dim)
+        .select(col("id_b").as("id")).distinct()
+      val survivors = base.join(dropIds, Seq("id"), "left_anti")
+        .localCheckpoint()
+      Dedup.embeddingCodes(survivors, col("id"), col("vec"),
+          planes, tables, dim)
+        .write.mode("overwrite")
+        .parquet(s"$storePath/codes/batch=$batchId")
+      survivors.write.mode("overwrite")
+        .parquet(s"$storePath/vecs/batch=$batchId")
+      survivors.select(col("id"))
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      if (compactDue(compactEvery, batchId))
+        compactEmbedStore(spark, storePath, compactFilesOut): Unit
+    }
   }
 
   /** [[compactNearDupStore]] for the embedding gate's TWO sibling
@@ -1157,7 +1103,7 @@ object StreamOps {
     *    overwrites `model=k` = (newest committed model < k) folded with
     *    its own counts — a Structured Streaming retry rewrites the same
     *    dir with the same content, never double-counts. Readers take
-    *    the newest COMMITTED dir ([[hasCommittedParquet]] — crashed
+    *    the newest COMMITTED dir ([[newestCumulative]] — crashed
     *    writes invisible), so the store survives mid-write failures.
     *  - Bootstrap: no committed model → the target-only table
     *    (`targetBt`, the [[graft.operators.Selection.dsirBucketTable]]
@@ -1174,36 +1120,29 @@ object StreamOps {
                    buckets: Int, minScore: Long)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Selection
-    leasedStart(spark, Seq(modelPath),
-        "dsirGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(modelPath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val feats = Selection.dsirFeatures(batch, col(id), col(text),
-            buckets).localCheckpoint()
-          val model = dsirModelView(spark, modelPath, batchId)
-            .getOrElse(targetBt.select(col("f"), col("tcnt"),
-              lit(0L).as("rcnt")))
-          // LEFT join + coalesce-0: a doc with no bucket overlap with
-          // the model (or no grams at all) has score 0 — absent
-          // buckets contribute qlog3(1) − qlog3(1) = 0 — and must
-          // survive when minScore <= 0, not be silently dropped by an
-          // inner join that produced no score row for it
-          val scores = Selection.dsirQuantizedScores(feats, model)
-          batch.join(scores.select(col("id").as("__sid"),
-                col("score")), col(id) === col("__sid"), "left")
-            .withColumn("score", coalesce(col("score"), lit(0L)))
-            .where(col("score") >= minScore)
-            .drop("__sid")
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          Selection.refreshBucketTable(model, feats)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$modelPath/model=$batchId")
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(modelPath),
+        "dsirGateSink") { (batch, batchId) =>
+      val feats = Selection.dsirFeatures(batch, col(id), col(text),
+        buckets).localCheckpoint()
+      val model = dsirModelView(spark, modelPath, batchId)
+        .getOrElse(targetBt.select(col("f"), col("tcnt"),
+          lit(0L).as("rcnt")))
+      // LEFT join + coalesce-0: a doc with no bucket overlap with
+      // the model (or no grams at all) has score 0 — absent
+      // buckets contribute qlog3(1) − qlog3(1) = 0 — and must
+      // survive when minScore <= 0, not be silently dropped by an
+      // inner join that produced no score row for it
+      val scores = Selection.dsirQuantizedScores(feats, model)
+      batch.join(scores.select(col("id").as("__sid"),
+            col("score")), col(id) === col("__sid"), "left")
+        .withColumn("score", coalesce(col("score"), lit(0L)))
+        .where(col("score") >= minScore)
+        .drop("__sid")
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Selection.refreshBucketTable(model, feats)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$modelPath/model=$batchId")
+    }
   }
 
   /** Newest committed cumulative DSIR model with id < `beforeBatch`
@@ -1211,18 +1150,28 @@ object StreamOps {
     * or previous `model=k` write). None = bootstrap.
     */
   private[graft] def dsirModelView(spark: SparkSession, modelPath: String,
-                                   beforeBatch: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(modelPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val committed = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("model=") &&
-        p.getName.drop(6).toLong < beforeBatch &&
-        hasCommittedParquet(fs, p))
-    if (committed.isEmpty) None
-    else Some(spark.read.parquet(
-      committed.maxBy(_.getName.drop(6).toLong).toString))
+                                   beforeBatch: Long): Option[DataFrame] =
+    newestCumulative(spark, modelPath, "model", beforeBatch)
+      .map(a => spark.read.parquet(a._2))
+
+  /** The newest cumulative artifact under `root`: the committed
+    * `<prefix>=<k>` dir with the largest k below `before`, as
+    * (k, path). Commit is judged by reader-visible parquet
+    * ([[graft.operators.Stats.hasCommittedParquet]]), so a crashed
+    * write is skipped for the next older one. None = nothing committed.
+    */
+  private def newestCumulative(spark: SparkSession, root: String,
+                               prefix: String,
+                               before: Long): Option[(Long, String)] = {
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(r)) None
+    else fs.listStatus(r).filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith(s"$prefix="))
+      .map(p => (p.getName.drop(prefix.length + 1).toLong, p))
+      .filter(_._1 < before).sortBy(-_._1)
+      .find(a => Stats.hasCommittedParquet(fs, a._2))
+      .map(a => (a._1, a._2.toString))
   }
 
   /** One cumulative-model retraction step — the shared shape of the
@@ -1252,16 +1201,9 @@ object StreamOps {
     * gate's base resolution reads.
     */
   private def dsirMaxModelId(spark: SparkSession,
-                             modelPath: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(modelPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Long.MinValue
-    val ids = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(p => p.getName.startsWith("model=") &&
-        hasCommittedParquet(fs, p))
-      .map(_.getName.drop(6).toLong)
-    if (ids.isEmpty) Long.MinValue else ids.max
-  }
+                             modelPath: String): Long =
+    newestCumulative(spark, modelPath, "model", Long.MaxValue)
+      .fold(Long.MinValue)(_._1)
 
   /** Streaming LM perplexity gate ([[graft.operators.LanguageModel]],
     * the CCNet-style quality filter as a running stream stage): every
@@ -1291,34 +1233,27 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.LanguageModel
     require(den > 0, "den must be > 0")
-    leasedStart(spark, Seq(modelPath),
-        "lmGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(modelPath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val feats = LanguageModel.lmFeatures(batch, col(id),
-            col(text)).localCheckpoint()
-          val model = dsirModelView(spark, modelPath, batchId)
-            .getOrElse(LanguageModel.lmModel(feats.limit(0)))
-          val scores = LanguageModel.lmScoreFromFeatures(feats, model)
-          batch.join(scores.select(col("id").as("__sid"),
-                col("n_bigrams"), col("score")),
-              col(id) === col("__sid"), "left")
-            .withColumn("score", coalesce(col("score"), lit(0L)))
-            .withColumn("n_bigrams",
-              coalesce(col("n_bigrams"), lit(0L)))
-            .where(col("score") * den >= lit(num) * col("n_bigrams"))
-            .drop("__sid")
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          LanguageModel.refreshModel(model, feats)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"$modelPath/model=$batchId")
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(modelPath),
+        "lmGateSink") { (batch, batchId) =>
+      val feats = LanguageModel.lmFeatures(batch, col(id),
+        col(text)).localCheckpoint()
+      val model = dsirModelView(spark, modelPath, batchId)
+        .getOrElse(LanguageModel.lmModel(feats.limit(0)))
+      val scores = LanguageModel.lmScoreFromFeatures(feats, model)
+      batch.join(scores.select(col("id").as("__sid"),
+            col("n_bigrams"), col("score")),
+          col(id) === col("__sid"), "left")
+        .withColumn("score", coalesce(col("score"), lit(0L)))
+        .withColumn("n_bigrams",
+          coalesce(col("n_bigrams"), lit(0L)))
+        .where(col("score") * den >= lit(num) * col("n_bigrams"))
+        .drop("__sid")
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      LanguageModel.refreshModel(model, feats)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(s"$modelPath/model=$batchId")
+    }
   }
 
   /** Streaming ENTITY-RESOLUTION gate
@@ -1348,50 +1283,39 @@ object StreamOps {
                  appendFilesOut: Int = 2, manifestPath: String = "",
                  broadcastLimit: Long = 4000000L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Resolution, Stats}
-    val mPath =
-      if (manifestPath.nonEmpty) manifestPath else s"${storePath}_manifest"
-    leasedStart(spark, Seq(storePath),
-        "erGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val batchRec = batch.select(col(id).cast("long").as("rid"),
-            col(name).as("nm")).localCheckpoint()
-          // ONE collapse + block-key pass, reused by the prune probe,
-          // the gate compare, and the store append
-          val batchK = Resolution.keyed(
-            Resolution.entities(batchRec, col("rid"), col("nm")),
-            Resolution.firstTokenBlock).localCheckpoint()
-          val small = batchK.count() <= broadcastLimit
-          def bc(df: DataFrame): DataFrame =
-            if (small) broadcast(df) else df.hint("shuffle_hash")
-          val storeSlice = erStoreSliceFor(spark, storePath, mPath,
-            batchK, batchK.limit(0))
-          val storeTouched = storeSlice
-            .join(bc(batchK.select(col("blkh")).distinct()),
-              Seq("blkh"), "left_semi")
-          val dropEids = erGateDropEids(storeTouched, batchK,
-            maxDist, maxBlock)
-          val survEnts = batchK
-            .join(bc(dropEids), Seq("eid"), "left_anti")
-            .localCheckpoint()
-          batchRec
-            .join(survEnts.select(col("nm")), Seq("nm"), "left_semi")
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          survEnts.select(col("blkh"), col("eid"), col("nm"))
-            .repartitionByRange(appendFilesOut, col("blkh"))
-            .sortWithinPartitions(col("blkh"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          Stats.upsertManifest(spark, storePath, mPath)
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactEntityStoreGen(spark, storePath, mPath,
-              compactFilesOut): Unit
-        }
-      })
-      .start())
+    import graft.operators.Resolution
+    val mPath = manifestOf(storePath, manifestPath)
+    gateSink(spark, stream, checkpoint, Seq(storePath),
+        "erGateSink") { (batch, batchId) =>
+      val batchRec = batch.select(col(id).cast("long").as("rid"),
+        col(name).as("nm")).localCheckpoint()
+      // ONE collapse + block-key pass, reused by the prune probe,
+      // the gate compare, and the store append
+      val batchK = Resolution.keyed(
+        Resolution.entities(batchRec, col("rid"), col("nm")),
+        Resolution.firstTokenBlock).localCheckpoint()
+      val small = batchK.count() <= broadcastLimit
+      def bc(df: DataFrame): DataFrame =
+        if (small) broadcast(df) else df.hint("shuffle_hash")
+      val storeSlice = erStoreSliceFor(spark, storePath, mPath,
+        batchK, batchK.limit(0))
+      val storeTouched = storeSlice
+        .join(bc(batchK.select(col("blkh")).distinct()),
+          Seq("blkh"), "left_semi")
+      val dropEids = erGateDropEids(storeTouched, batchK,
+        maxDist, maxBlock)
+      val survEnts = batchK
+        .join(bc(dropEids), Seq("eid"), "left_anti")
+        .localCheckpoint()
+      batchRec
+        .join(survEnts.select(col("nm")), Seq("nm"), "left_semi")
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      Entities.append(spark, storePath, mPath, batchId,
+        appendFilesOut)(survEnts)
+      if (compactDue(compactEvery, batchId))
+        compactEntityStoreGen(spark, storePath, mPath,
+          compactFilesOut): Unit
+    }
   }
 
   /** The ER gate's candidate pair expansion, BEFORE the levenshtein
@@ -1465,27 +1389,19 @@ object StreamOps {
                         batchIdBase: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Retrieval
-    leasedStart(spark, Seq(indexDir),
-        "bm25IndexGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(indexDir)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val sb = batchIdBase + batchId
-          if (sb == 0L)
-            Retrieval.writeBm25Index(batch, col(id), col(text),
-              indexDir, filesOut = appendFilesOut)
-          else
-            Retrieval.appendBm25Index(batch, col(id), col(text),
-              indexDir, sb, filesOut = appendFilesOut)
-          if (compactEvery > 0 &&
-              batchId % compactEvery == compactEvery - 1)
-            Retrieval.compactBm25Index(spark, indexDir,
-              compactFilesOut): Unit
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(indexDir),
+        "bm25IndexGateSink") { (batch, batchId) =>
+      val sb = batchIdBase + batchId
+      if (sb == 0L)
+        Retrieval.writeBm25Index(batch, col(id), col(text),
+          indexDir, filesOut = appendFilesOut)
+      else
+        Retrieval.appendBm25Index(batch, col(id), col(text),
+          indexDir, sb, filesOut = appendFilesOut)
+      if (compactDue(compactEvery, batchId))
+        Retrieval.compactBm25Index(spark, indexDir,
+          compactFilesOut): Unit
+    }
   }
 
   /** Streaming PCA-moment maintenance: each micro-batch of vectors
@@ -1504,21 +1420,13 @@ object StreamOps {
                          checkpoint: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
-    leasedStart(spark, Seq(storeDir),
-        "pcaMomentsGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storeDir)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          Similarity.appendPcaMoments(batch, col(vec), storeDir,
-            batchId)
-          if (compactEvery > 0 &&
-              batchId % compactEvery == compactEvery - 1)
-            Similarity.compactPcaMoments(spark, storeDir): Unit
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(storeDir),
+        "pcaMomentsGateSink") { (batch, batchId) =>
+      Similarity.appendPcaMoments(batch, col(vec), storeDir,
+        batchId)
+      if (compactDue(compactEvery, batchId))
+        Similarity.compactPcaMoments(spark, storeDir): Unit
+    }
   }
 
   /** Streaming CORESET maintenance: the first non-empty micro-batch
@@ -1537,23 +1445,16 @@ object StreamOps {
                       id: String, vec: String, k: Int, kNew: Int,
                       storeDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Similarity, Stats}
-    leasedStart(spark, Seq(storeDir),
-        "kCenterGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(storeDir)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          if (Stats.committedViewDirs(spark, storeDir).isEmpty)
-            Similarity.writeKCenterStore(batch, col(id), col(vec), k,
-              storeDir)
-          else
-            Similarity.kCenterExtend(batch, col(id), col(vec),
-              storeDir, batchId + 1, kNew): Unit
-        }
-      })
-      .start())
+    import graft.operators.Similarity
+    gateSink(spark, stream, checkpoint, Seq(storeDir),
+        "kCenterGateSink") { (batch, batchId) =>
+      if (Stats.committedViewDirs(spark, storeDir).isEmpty)
+        Similarity.writeKCenterStore(batch, col(id), col(vec), k,
+          storeDir)
+      else
+        Similarity.kCenterExtend(batch, col(id), col(vec),
+          storeDir, batchId + 1, kNew): Unit
+    }
   }
 
   /** Streaming RETRACTION gate — the takedown pipeline as a stream:
@@ -1634,8 +1535,7 @@ object StreamOps {
                          gateStorePaths: Seq[String] = Nil,
                          erStorePaths: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Overlap, Retrieval, Selection, Similarity,
-      Stats}
+    import graft.operators.{Overlap, Retrieval, Selection, Similarity}
     require(bm25IndexDir.isDefined || pqStoreDir.isDefined ||
       sigStorePath.isDefined || pcaStoreDir.isDefined ||
       kmvStoreDir.isDefined || dsirModelPath.isDefined ||
@@ -1664,108 +1564,102 @@ object StreamOps {
       sigStorePath.toSeq ++ pcaStoreDir.toSeq ++ kmvStoreDir.toSeq ++
       dsirModelPath.toSeq ++ lmModelPath.toSeq ++
       kcenterStoreDir.toSeq ++ gateStorePaths ++ erStorePaths
-    leasedStart(spark, fenceRoots, "retractionGateSink") {
-    // the batch base resolves UNDER the lease: no writer can commit
-    // between the head read and this sink's first write, so the
-    // resolved sequence position can never be stale
-    val base: Long = {
-      val roots = bm25IndexDir.map(p => s"$p/stats").toSeq ++
-        pqStoreDir.toSeq ++
-        (sigStorePath.toSeq ++ gateStorePaths ++ erStorePaths)
-          .flatMap(p => Seq(p, gateTombstones(p).root)) ++
-        (pcaStoreDir.toSeq ++ kmvStoreDir ++ kcenterStoreDir)
-          .flatMap(p => Seq(p, s"$p/deleted")) ++
-        (dsirModelPath.toSeq ++ lmModelPath.toSeq)
-          .map(p => s"$p/deleted")
-      val head = (roots.map { r =>
-        val (g, b) = Stats.committedTokens(spark, r)
-        math.max(g, b)
-      } ++ (dsirModelPath.toSeq ++ lmModelPath.toSeq)
-        .map(p => dsirMaxModelId(spark, p))).max
-      math.max(batchIdBase,
-        if (head == Long.MinValue) 0L else head + 1L)
-    }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(fenceRoots) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val ids = batch.select(col(id).as("id"))
-          val sb = base + batchId
-          bm25IndexDir.foreach(p =>
-            Retrieval.deleteBm25Docs(spark, p, ids, sb, filesOut))
-          pqStoreDir.foreach(p =>
-            Similarity.pqStoreDelete(ids, p, sb, filesOut))
-          sigStorePath.foreach(p =>
-            deleteFromNearDupStore(spark, p, ids, sb))
-          // any further id-keyed gate stores (substring fps, media/
-          // audio windows, video frames, embed codes+vecs, multimodal
-          // arms) share the same tombstone op; ER stores tombstone by
-          // entity id through the same set schema
-          (gateStorePaths ++ erStorePaths).foreach(p =>
-            deleteFromNearDupStore(spark, p, ids, sb))
-          pcaStoreDir.foreach(p =>
-            Similarity.deletePcaMoments(
-              pcaVecs.get.join(ids, Seq("id"), "left_semi"),
-              col("id"), col("vec"), p, sb))
-          kmvStoreDir.foreach(p =>
-            Overlap.deleteKmvUnits(ids.select(col("id").as("unit")),
-              p, sb))
-          dsirModelPath.foreach(p =>
-            retractCumulativeModel(spark, p, ids, sb) { (m, fresh) =>
-              Selection.retractBucketTable(m,
-                Selection.dsirFeatures(
-                  dsirDocs.get.join(fresh, Seq("id"), "left_semi"),
-                  col("id"), col("text"), dsirBuckets))
-            })
-          lmModelPath.foreach(p =>
-            retractCumulativeModel(spark, p, ids, sb) { (m, fresh) =>
-              graft.operators.LanguageModel.retractModel(m,
-                graft.operators.LanguageModel.lmFeatures(
-                  lmDocs.get.join(fresh, Seq("id"), "left_semi"),
-                  col("id"), col("text")))
-            })
-          kcenterStoreDir.foreach { p =>
-            // tombstone first (cumulative, PCA-style permanent set:
-            // every rebuild re-reads kcenterVecs, which still holds
-            // the retracted rows — retracted ids are unreinstatable
-            // through this gate); then rebuild ONLY on a center hit —
-            // a non-center deletion is provably a trace no-op
-            // (SimilaritySpec pins it), so the stored trace already
-            // equals the from-scratch trace over survivors
-            val tomb = KeyedStore.tombstones(p, "/deleted",
-              "kCenterDeletedIds")
-            graft.operators.Rounds.free(
-              tomb.writeFresh(spark, "retractionGateSink", sb)(ids))
-            val deleted = graft.operators.Checkpoints.stage(
-              tomb.deletedBefore(spark).get)
-            val centers = Similarity.kCenterStoreCenters(spark, p)
-            val hit = centers.join(deleted, Seq("id"), "left_semi")
-              .limit(1).count() > 0
-            if (hit) {
-              val k = centers.count().toInt
-              Similarity.rebuildKCenterStore(
-                kcenterVecs.get.join(deleted, Seq("id"), "left_anti"),
-                col("id"), col("vec"), k, p): Unit
-            }
-          }
-          if (compactEvery > 0 &&
-              batchId % compactEvery == compactEvery - 1) {
-            bm25IndexDir.foreach(p =>
-              Retrieval.compactBm25Index(spark, p, filesOut): Unit)
-            pqStoreDir.foreach(p =>
-              Similarity.compactPqCodeStore(spark, p, filesOut): Unit)
-            sigStorePath.foreach(p =>
-              compactNearDupStoreBanded(spark, p, s"${p}_manifest",
-                filesOut): Unit)
-            pcaStoreDir.foreach(p =>
-              Similarity.compactPcaMoments(spark, p): Unit)
-            kmvStoreDir.foreach(p =>
-              Overlap.compactKmvUnitStore(spark, p, filesOut): Unit)
+    gateSink(spark, stream, checkpoint, fenceRoots,
+        "retractionGateSink") {
+      // the batch base resolves UNDER the lease: no writer can commit
+      // between the head read and this sink's first write, so the
+      // resolved sequence position can never be stale
+      val base: Long = {
+        val roots = bm25IndexDir.map(p => s"$p/stats").toSeq ++
+          pqStoreDir.toSeq ++
+          (sigStorePath.toSeq ++ gateStorePaths ++ erStorePaths)
+            .flatMap(p => Seq(p, gateTombstones(p).root)) ++
+          (pcaStoreDir.toSeq ++ kmvStoreDir ++ kcenterStoreDir)
+            .flatMap(p => Seq(p, s"$p/deleted")) ++
+          (dsirModelPath.toSeq ++ lmModelPath.toSeq)
+            .map(p => s"$p/deleted")
+        val head = (roots.map { r =>
+          val (g, b) = Stats.committedTokens(spark, r)
+          math.max(g, b)
+        } ++ (dsirModelPath.toSeq ++ lmModelPath.toSeq)
+          .map(p => dsirMaxModelId(spark, p))).max
+        math.max(batchIdBase,
+          if (head == Long.MinValue) 0L else head + 1L)
+      }
+      (batch: DataFrame, batchId: Long) => {
+        val ids = batch.select(col(id).as("id"))
+        val sb = base + batchId
+        bm25IndexDir.foreach(p =>
+          Retrieval.deleteBm25Docs(spark, p, ids, sb, filesOut))
+        pqStoreDir.foreach(p =>
+          Similarity.pqStoreDelete(ids, p, sb, filesOut))
+        sigStorePath.foreach(p =>
+          deleteFromNearDupStore(spark, p, ids, sb))
+        // any further id-keyed gate stores (substring fps, media/
+        // audio windows, video frames, embed codes+vecs, multimodal
+        // arms) share the same tombstone op; ER stores tombstone by
+        // entity id through the same set schema
+        (gateStorePaths ++ erStorePaths).foreach(p =>
+          deleteFromNearDupStore(spark, p, ids, sb))
+        pcaStoreDir.foreach(p =>
+          Similarity.deletePcaMoments(
+            pcaVecs.get.join(ids, Seq("id"), "left_semi"),
+            col("id"), col("vec"), p, sb))
+        kmvStoreDir.foreach(p =>
+          Overlap.deleteKmvUnits(ids.select(col("id").as("unit")),
+            p, sb))
+        dsirModelPath.foreach(p =>
+          retractCumulativeModel(spark, p, ids, sb) { (m, fresh) =>
+            Selection.retractBucketTable(m,
+              Selection.dsirFeatures(
+                dsirDocs.get.join(fresh, Seq("id"), "left_semi"),
+                col("id"), col("text"), dsirBuckets))
+          })
+        lmModelPath.foreach(p =>
+          retractCumulativeModel(spark, p, ids, sb) { (m, fresh) =>
+            graft.operators.LanguageModel.retractModel(m,
+              graft.operators.LanguageModel.lmFeatures(
+                lmDocs.get.join(fresh, Seq("id"), "left_semi"),
+                col("id"), col("text")))
+          })
+        kcenterStoreDir.foreach { p =>
+          // tombstone first (cumulative, PCA-style permanent set:
+          // every rebuild re-reads kcenterVecs, which still holds
+          // the retracted rows — retracted ids are unreinstatable
+          // through this gate); then rebuild ONLY on a center hit —
+          // a non-center deletion is provably a trace no-op
+          // (SimilaritySpec pins it), so the stored trace already
+          // equals the from-scratch trace over survivors
+          val tomb = KeyedStore.tombstones(p, "/deleted",
+            "kCenterDeletedIds")
+          graft.operators.Rounds.free(
+            tomb.writeFresh(spark, "retractionGateSink", sb)(ids))
+          val deleted = graft.operators.Checkpoints.stage(
+            tomb.deletedBefore(spark).get)
+          val centers = Similarity.kCenterStoreCenters(spark, p)
+          val hit = centers.join(deleted, Seq("id"), "left_semi")
+            .limit(1).count() > 0
+          if (hit) {
+            val k = centers.count().toInt
+            Similarity.rebuildKCenterStore(
+              kcenterVecs.get.join(deleted, Seq("id"), "left_anti"),
+              col("id"), col("vec"), k, p): Unit
           }
         }
-      })
-      .start()
+        if (compactDue(compactEvery, batchId)) {
+          bm25IndexDir.foreach(p =>
+            Retrieval.compactBm25Index(spark, p, filesOut): Unit)
+          pqStoreDir.foreach(p =>
+            Similarity.compactPqCodeStore(spark, p, filesOut): Unit)
+          sigStorePath.foreach(p =>
+            compactNearDupStoreBanded(spark, p, s"${p}_manifest",
+              filesOut): Unit)
+          pcaStoreDir.foreach(p =>
+            Similarity.compactPcaMoments(spark, p): Unit)
+          kmvStoreDir.foreach(p =>
+            Overlap.compactKmvUnitStore(spark, p, filesOut): Unit)
+        }
+      }
     }
   }
 
@@ -1838,79 +1732,72 @@ object StreamOps {
                           labelIters: Int = 3,
                           compactEvery: Int = 0, filesOut: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Graph, Stats}
+    import graft.operators.Graph
     val tomb = KeyedStore.tombstones(edgesPath, "_deleted_nodes",
       "graphDeletedNodes", "id" -> "bigint")
     val fenceRoots = Seq(edgesPath) ++ ccStorePath ++
       sccStorePath ++ landmarkStorePath ++ triStorePath ++
       kcoreStorePath ++ prStorePath ++ hitsStorePath ++
       louvainStorePath ++ labelStorePath
-    leasedStart(spark, fenceRoots, "graphRetractionSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(fenceRoots) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Rounds.free(tomb.writeFresh(spark,
-            "graphRetractionSink", batchId)(
-            batch.select(col(id).cast("long").as("id"))))
-          // the opted-in stores rebuild from the edge view minus the
-          // set, before the set is cleared
-          def rebuild(deleted: Option[DataFrame]): Unit = {
-            val surviving = tomb.without(spark, spark.read.parquet(
-                Stats.committedViewDirs(spark, edgesPath): _*)
-              .select(col("u"), col("v")), "u", "v")
-            ccStorePath.foreach(p =>
-              Graph.rebuildCCStore(surviving, col("u"), col("v"), p,
-                filesOut): Unit)
-            sccStorePath.foreach(p =>
-              Graph.rebuildSccStore(surviving, col("u"), col("v"), p,
-                filesOut): Unit)
-            landmarkStorePath.foreach(p =>
-              Graph.rebuildLandmarkStore(surviving, col("u"),
-                col("v"), p, deletedNodes = deleted,
-                maxDepth = landmarkMaxDepth, filesOut = filesOut)
-                : Unit)
-            triStorePath.foreach(p =>
-              Graph.rebuildTriangleStore(surviving, col("u"),
-                col("v"), p, filesOut): Unit)
-            kcoreStorePath.foreach(p =>
-              Graph.rebuildKCoreStore(surviving, col("u"), col("v"),
-                kcoreK, p, filesOut): Unit)
-            prStorePath.foreach(p =>
-              Graph.rebuildPageRankStore(surviving, col("u"),
-                col("v"), prIters, p, filesOut): Unit)
-            hitsStorePath.foreach(p =>
-              Graph.rebuildHitsStore(surviving, col("u"), col("v"),
-                hitsIters, p, filesOut): Unit)
-            louvainStorePath.foreach(p =>
-              Graph.rebuildLouvainStore(surviving, col("u"),
-                col("v"), louvainRounds, p, filesOut): Unit)
-            labelStorePath.foreach { p =>
-              val seeds = labelSeeds.getOrElse(throw new
-                IllegalArgumentException(
-                  "labelStorePath requires labelSeeds"))
-              // a retracted node's seed label is itself forgotten
-              Graph.rebuildLabelState(surviving, col("u"), col("v"),
-                tomb.without(spark, seeds, labelSeedId),
-                col(labelSeedId), col(labelSeedLabel), labelIters, p,
-                filesOut): Unit
-            }
-          }
-          // edge store: physical drop of edges touching a deleted
-          // node. The fold is a no-op when the store is already one
-          // generation (nothing above the token to fold) — then the
-          // tombstones are KEPT for the next cycle instead of cleared,
-          // so a deletion can never silently survive.
-          if (compactEvery > 0 &&
-              batchId % compactEvery == compactEvery - 1)
-            tomb.foldWithout(spark, "graphRetractionSink", Seq((edgesPath,
-              Seq("u", "v"), _.select(col("u"), col("v"), col("__b"))
-                .repartitionByRange(filesOut, col("u"), col("v"))
-                .sortWithinPartitions(col("u"), col("v")))), rebuild): Unit
+    gateSink(spark, stream, checkpoint, fenceRoots,
+        "graphRetractionSink") { (batch, batchId) =>
+      graft.operators.Rounds.free(tomb.writeFresh(spark,
+        "graphRetractionSink", batchId)(
+        batch.select(col(id).cast("long").as("id"))))
+      // the opted-in stores rebuild from the edge view minus the
+      // set, before the set is cleared
+      def rebuild(deleted: Option[DataFrame]): Unit = {
+        val surviving = tomb.without(spark, spark.read.parquet(
+            Stats.committedViewDirs(spark, edgesPath): _*)
+          .select(col("u"), col("v")), "u", "v")
+        ccStorePath.foreach(p =>
+          Graph.rebuildCCStore(surviving, col("u"), col("v"), p,
+            filesOut): Unit)
+        sccStorePath.foreach(p =>
+          Graph.rebuildSccStore(surviving, col("u"), col("v"), p,
+            filesOut): Unit)
+        landmarkStorePath.foreach(p =>
+          Graph.rebuildLandmarkStore(surviving, col("u"),
+            col("v"), p, deletedNodes = deleted,
+            maxDepth = landmarkMaxDepth, filesOut = filesOut)
+            : Unit)
+        triStorePath.foreach(p =>
+          Graph.rebuildTriangleStore(surviving, col("u"),
+            col("v"), p, filesOut): Unit)
+        kcoreStorePath.foreach(p =>
+          Graph.rebuildKCoreStore(surviving, col("u"), col("v"),
+            kcoreK, p, filesOut): Unit)
+        prStorePath.foreach(p =>
+          Graph.rebuildPageRankStore(surviving, col("u"),
+            col("v"), prIters, p, filesOut): Unit)
+        hitsStorePath.foreach(p =>
+          Graph.rebuildHitsStore(surviving, col("u"), col("v"),
+            hitsIters, p, filesOut): Unit)
+        louvainStorePath.foreach(p =>
+          Graph.rebuildLouvainStore(surviving, col("u"),
+            col("v"), louvainRounds, p, filesOut): Unit)
+        labelStorePath.foreach { p =>
+          val seeds = labelSeeds.getOrElse(throw new
+            IllegalArgumentException(
+              "labelStorePath requires labelSeeds"))
+          // a retracted node's seed label is itself forgotten
+          Graph.rebuildLabelState(surviving, col("u"), col("v"),
+            tomb.without(spark, seeds, labelSeedId),
+            col(labelSeedId), col(labelSeedLabel), labelIters, p,
+            filesOut): Unit
         }
-      })
-      .start())
+      }
+      // edge store: physical drop of edges touching a deleted
+      // node. The fold is a no-op when the store is already one
+      // generation (nothing above the token to fold) — then the
+      // tombstones are KEPT for the next cycle instead of cleared,
+      // so a deletion can never silently survive.
+      if (compactDue(compactEvery, batchId))
+        tomb.foldWithout(spark, "graphRetractionSink", Seq((edgesPath,
+          Seq("u", "v"), _.select(col("u"), col("v"), col("__b"))
+            .repartitionByRange(filesOut, col("u"), col("v"))
+            .sortWithinPartitions(col("u"), col("v")))), rebuild): Unit
+    }
   }
 
   /** Streaming GRAPH-ANALYTICS maintenance — the foreachBatch gate for
@@ -1995,185 +1882,178 @@ object StreamOps {
                     sccStorePath: Option[String] = None,
                     batchIdBase: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Graph, Stats}
+    import graft.operators.Graph
     val fenceRoots = Seq(edgesPath, ccStorePath,
       labelStorePath) ++ triStorePath ++ kcoreStorePath ++
       prStorePath ++ hitsStorePath ++ louvainStorePath ++
       landmarkStorePath ++ sccStorePath
-    leasedStart(spark, fenceRoots, "graphGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(fenceRoots) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val edges = batch.select(col(a).as("u"), col(b).as("v"))
-          // edge/store ids ride batchIdBase + stream batch: set
-          // batchIdBase = Stats.supersedingToken over the family's
-          // stores to RESUME ingestion above a graphRetractionSink
-          // rebuild's generations (the shared monotone-sequence
-          // contract; the guards abort loudly on a violation)
-          val eb = batchIdBase + batchId
-          // retain the batch's edges FIRST (overwrite-idempotent; a
-          // crash before the analytics appends re-runs the whole
-          // batch, overwriting identically)
-          edges.withColumn("__b", lit(eb))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$edgesPath/batch=$eb")
-          // committed HISTORY (excluding a retry's own prior attempt)
-          // and the union edge list with this batch in-memory
-          val hist = spark.read
-            .parquet(Stats.committedViewDirs(spark, edgesPath): _*)
-            .where(col("__b") < eb)
-            .select(col("u"), col("v"))
-          val all = hist.unionByName(edges)
-          // store-batch ids are stream-batch + 1: batch=0 is reserved
-          // for each store's bootstrap base, and stream batch 0's
-          // append must still exceed it
-          val sb = eb + 1
-          val bootstrap = (batchIdBase == 0L && batchId == 0L) ||
-            Stats.committedViewDirs(spark, ccStorePath).isEmpty
-          if (bootstrap) {
-            Graph.writeCCStore(edges, col("u"), col("v"), ccStorePath,
-              filesOut)
-            Graph.writeLabelState(edges, col("u"), col("v"), seeds,
-              col(seedId), col(seedLabel), iters, labelStorePath,
-              filesOut)
-          } else {
-            Graph.connectedComponentsIncremental(edges, col("u"),
-              col("v"), ccStorePath, eb): Unit
-            Graph.labelPropagationIncremental(all, col("u"), col("v"),
-              edges, col("u"), col("v"), seeds, col(seedId),
-              col(seedLabel), iters, labelStorePath, eb): Unit
-          }
-          // triangle maintenance: unlike CC/label prop, a RE-SENT edge
-          // is not harmless here (it would re-count its triangles), so
-          // (a) the bootstrap base is built from HISTORY ONLY and the
-          // batch always rides the overwrite-idempotent incremental
-          // append — a crash-retry of the bootstrapping micro-batch
-          // replays identically instead of double-counting through a
-          // base that already absorbed it — and (b) the batch is
-          // exact-deduped against committed history (canonical
-          // endpoint order) before it counts
-          triStorePath.foreach { tp =>
-            if (Stats.committedViewDirs(spark, tp).isEmpty)
-              Graph.writeTriangleStore(hist, col("u"), col("v"), tp,
-                filesOut)
-            def canon(df: DataFrame): DataFrame =
-              df.select(least(col("u"), col("v")).as("u"),
-                greatest(col("u"), col("v")).as("v"))
-                .where(col("u") =!= col("v")).distinct()
-            val genuinelyNew =
-              canon(edges).join(canon(hist), Seq("u", "v"), "left_anti")
-            Graph.triangleCountsIncremental(all, col("u"), col("v"),
-              genuinelyNew, col("u"), col("v"), tp, sb): Unit
-          }
-          // k-core maintenance: re-sent edges are harmless (they seed
-          // closure from nodes that peel away), so the bootstrap may
-          // absorb the first batch and retries go incremental
-          kcoreStorePath.foreach { kp =>
-            if (Stats.committedViewDirs(spark, kp).isEmpty)
-              Graph.writeKCoreStore(all, col("u"), col("v"), kcoreK,
-                kp, filesOut)
-            else
-              Graph.kCoreIncremental(all, col("u"), col("v"), edges,
-                col("u"), col("v"), kcoreK, kp, sb): Unit
-          }
-          // PageRank maintenance: a cold `prIters` ladder on
-          // bootstrap, then `prRounds` warm rounds per batch from the
-          // stored vector over the union (directed edges as streamed;
-          // the round-count saving is PageRank's one sound
-          // incremental form — see pageRankWarm). Re-sent edges are
-          // harmless (the union edge list is distinct'd inside).
-          prStorePath.foreach { pp =>
-            if (Stats.committedViewDirs(spark, pp).isEmpty)
-              Graph.writePageRankStore(all, col("u"), col("v"),
-                prIters, pp, filesOut)
-            else
-              Graph.pageRankWarm(all, col("u"), col("v"), pp, sb,
-                prRounds, filesOut): Unit
-          }
-          // HITS maintenance: same contract as PageRank — a cold
-          // `hitsIters` ladder on bootstrap, then `hitsRounds` warm
-          // rounds per batch seeded from the stored hub vector over
-          // the union (re-sent edges harmless: the edge list is
-          // distinct'd inside)
-          hitsStorePath.foreach { hp =>
-            if (Stats.committedViewDirs(spark, hp).isEmpty)
-              Graph.writeHitsStore(all, col("u"), col("v"),
-                hitsIters, hp, filesOut)
-            else
-              Graph.hitsWarm(all, col("u"), col("v"), hp, sb,
-                hitsRounds, filesOut): Unit
-          }
-          // Louvain maintenance: a cold `louvainIters` ladder on
-          // bootstrap, then `louvainRounds` warm gain rounds per
-          // batch from the stored assignment over the union (edge
-          // multiplicity folds to weights inside; re-sent edges DO
-          // add weight — feed pre-deduped edges upstream if the
-          // stream can replay content)
-          louvainStorePath.foreach { lp =>
-            if (Stats.committedViewDirs(spark, lp).isEmpty)
-              Graph.writeLouvainStore(all, col("u"), col("v"),
-                louvainIters, lp, filesOut)
-            else
-              Graph.louvainWarm(all, col("u"), col("v"), lp, sb,
-                louvainRounds, filesOut): Unit
-          }
-          // Landmark-sketch maintenance: a cold multi-source BFS on
-          // bootstrap (landmarks FROZEN there — later smaller ids
-          // never re-pivot the store), then frontier relaxation from
-          // each batch's endpoints (re-sent edges are harmless:
-          // their candidates never beat the stored distances)
-          landmarkStorePath.foreach { mp =>
-            if (Stats.committedViewDirs(spark, mp).isEmpty)
-              Graph.writeLandmarkStore(all, col("u"), col("v"),
-                landmarkCount, landmarkDepth, mp, filesOut)
-            else
-              Graph.landmarkDistancesIncremental(all, col("u"),
-                col("v"), edges, col("u"), col("v"), mp, sb,
-                landmarkDepth, filesOut): Unit
-          }
-          // Incremental SCC — the ONE form that reads the edges
-          // DIRECTED (u → v): bootstrap assignment + condensation
-          // once, then condensation-level recompute per batch
-          // (insertion only merges SCCs; re-sent edges contract to
-          // self-loops or duplicate condensation rows — harmless,
-          // set semantics)
-          sccStorePath.foreach { sp =>
-            if (Stats.committedViewDirs(spark, s"$sp/assign").isEmpty)
-              Graph.writeSccStore(all, col("u"), col("v"), sp,
-                filesOut)
-            else
-              Graph.sccIncremental(edges, col("u"), col("v"), sp,
-                sb): Unit
-          }
-          if (!bootstrap && compactEvery > 0 &&
-              batchId % compactEvery == compactEvery - 1) {
-            Graph.compactCCStore(spark, ccStorePath, filesOut): Unit
-            Graph.compactLabelState(spark, labelStorePath,
-              filesOut): Unit
-            triStorePath.foreach(tp =>
-              Graph.compactTriangleStore(spark, tp, filesOut): Unit)
-            kcoreStorePath.foreach(kp =>
-              Graph.compactKCoreStore(spark, kp, filesOut): Unit)
-            prStorePath.foreach(pp =>
-              Graph.compactPageRankStore(spark, pp, filesOut): Unit)
-            hitsStorePath.foreach(hp =>
-              Graph.compactHitsStore(spark, hp, filesOut): Unit)
-            louvainStorePath.foreach(lp =>
-              Graph.compactLouvainStore(spark, lp, filesOut): Unit)
-            landmarkStorePath.foreach(mp =>
-              Graph.compactLandmarkStore(spark, mp, filesOut): Unit)
-            sccStorePath.foreach(sp =>
-              Graph.compactSccStore(spark, sp, filesOut): Unit)
-            Stats.compactCommittedStore(spark, edgesPath,
-              _.select(col("u"), col("v"), col("__b"))
-                .repartitionByRange(filesOut, col("u"), col("v"))
-                .sortWithinPartitions(col("u"), col("v"))): Unit
-          }
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, fenceRoots,
+        "graphGateSink") { (batch, batchId) =>
+      val edges = batch.select(col(a).as("u"), col(b).as("v"))
+      // edge/store ids ride batchIdBase + stream batch: set
+      // batchIdBase = Stats.supersedingToken over the family's
+      // stores to RESUME ingestion above a graphRetractionSink
+      // rebuild's generations (the shared monotone-sequence
+      // contract; the guards abort loudly on a violation)
+      val eb = batchIdBase + batchId
+      // retain the batch's edges FIRST (overwrite-idempotent; a
+      // crash before the analytics appends re-runs the whole
+      // batch, overwriting identically)
+      edges.withColumn("__b", lit(eb))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$edgesPath/batch=$eb")
+      // committed HISTORY (excluding a retry's own prior attempt)
+      // and the union edge list with this batch in-memory
+      val hist = spark.read
+        .parquet(Stats.committedViewDirs(spark, edgesPath): _*)
+        .where(col("__b") < eb)
+        .select(col("u"), col("v"))
+      val all = hist.unionByName(edges)
+      // store-batch ids are stream-batch + 1: batch=0 is reserved
+      // for each store's bootstrap base, and stream batch 0's
+      // append must still exceed it
+      val sb = eb + 1
+      val bootstrap = (batchIdBase == 0L && batchId == 0L) ||
+        Stats.committedViewDirs(spark, ccStorePath).isEmpty
+      if (bootstrap) {
+        Graph.writeCCStore(edges, col("u"), col("v"), ccStorePath,
+          filesOut)
+        Graph.writeLabelState(edges, col("u"), col("v"), seeds,
+          col(seedId), col(seedLabel), iters, labelStorePath,
+          filesOut)
+      } else {
+        Graph.connectedComponentsIncremental(edges, col("u"),
+          col("v"), ccStorePath, eb): Unit
+        Graph.labelPropagationIncremental(all, col("u"), col("v"),
+          edges, col("u"), col("v"), seeds, col(seedId),
+          col(seedLabel), iters, labelStorePath, eb): Unit
+      }
+      // triangle maintenance: unlike CC/label prop, a RE-SENT edge
+      // is not harmless here (it would re-count its triangles), so
+      // (a) the bootstrap base is built from HISTORY ONLY and the
+      // batch always rides the overwrite-idempotent incremental
+      // append — a crash-retry of the bootstrapping micro-batch
+      // replays identically instead of double-counting through a
+      // base that already absorbed it — and (b) the batch is
+      // exact-deduped against committed history (canonical
+      // endpoint order) before it counts
+      triStorePath.foreach { tp =>
+        if (Stats.committedViewDirs(spark, tp).isEmpty)
+          Graph.writeTriangleStore(hist, col("u"), col("v"), tp,
+            filesOut)
+        def canon(df: DataFrame): DataFrame =
+          df.select(least(col("u"), col("v")).as("u"),
+            greatest(col("u"), col("v")).as("v"))
+            .where(col("u") =!= col("v")).distinct()
+        val genuinelyNew =
+          canon(edges).join(canon(hist), Seq("u", "v"), "left_anti")
+        Graph.triangleCountsIncremental(all, col("u"), col("v"),
+          genuinelyNew, col("u"), col("v"), tp, sb): Unit
+      }
+      // k-core maintenance: re-sent edges are harmless (they seed
+      // closure from nodes that peel away), so the bootstrap may
+      // absorb the first batch and retries go incremental
+      kcoreStorePath.foreach { kp =>
+        if (Stats.committedViewDirs(spark, kp).isEmpty)
+          Graph.writeKCoreStore(all, col("u"), col("v"), kcoreK,
+            kp, filesOut)
+        else
+          Graph.kCoreIncremental(all, col("u"), col("v"), edges,
+            col("u"), col("v"), kcoreK, kp, sb): Unit
+      }
+      // PageRank maintenance: a cold `prIters` ladder on
+      // bootstrap, then `prRounds` warm rounds per batch from the
+      // stored vector over the union (directed edges as streamed;
+      // the round-count saving is PageRank's one sound
+      // incremental form — see pageRankWarm). Re-sent edges are
+      // harmless (the union edge list is distinct'd inside).
+      prStorePath.foreach { pp =>
+        if (Stats.committedViewDirs(spark, pp).isEmpty)
+          Graph.writePageRankStore(all, col("u"), col("v"),
+            prIters, pp, filesOut)
+        else
+          Graph.pageRankWarm(all, col("u"), col("v"), pp, sb,
+            prRounds, filesOut): Unit
+      }
+      // HITS maintenance: same contract as PageRank — a cold
+      // `hitsIters` ladder on bootstrap, then `hitsRounds` warm
+      // rounds per batch seeded from the stored hub vector over
+      // the union (re-sent edges harmless: the edge list is
+      // distinct'd inside)
+      hitsStorePath.foreach { hp =>
+        if (Stats.committedViewDirs(spark, hp).isEmpty)
+          Graph.writeHitsStore(all, col("u"), col("v"),
+            hitsIters, hp, filesOut)
+        else
+          Graph.hitsWarm(all, col("u"), col("v"), hp, sb,
+            hitsRounds, filesOut): Unit
+      }
+      // Louvain maintenance: a cold `louvainIters` ladder on
+      // bootstrap, then `louvainRounds` warm gain rounds per
+      // batch from the stored assignment over the union (edge
+      // multiplicity folds to weights inside; re-sent edges DO
+      // add weight — feed pre-deduped edges upstream if the
+      // stream can replay content)
+      louvainStorePath.foreach { lp =>
+        if (Stats.committedViewDirs(spark, lp).isEmpty)
+          Graph.writeLouvainStore(all, col("u"), col("v"),
+            louvainIters, lp, filesOut)
+        else
+          Graph.louvainWarm(all, col("u"), col("v"), lp, sb,
+            louvainRounds, filesOut): Unit
+      }
+      // Landmark-sketch maintenance: a cold multi-source BFS on
+      // bootstrap (landmarks FROZEN there — later smaller ids
+      // never re-pivot the store), then frontier relaxation from
+      // each batch's endpoints (re-sent edges are harmless:
+      // their candidates never beat the stored distances)
+      landmarkStorePath.foreach { mp =>
+        if (Stats.committedViewDirs(spark, mp).isEmpty)
+          Graph.writeLandmarkStore(all, col("u"), col("v"),
+            landmarkCount, landmarkDepth, mp, filesOut)
+        else
+          Graph.landmarkDistancesIncremental(all, col("u"),
+            col("v"), edges, col("u"), col("v"), mp, sb,
+            landmarkDepth, filesOut): Unit
+      }
+      // Incremental SCC — the ONE form that reads the edges
+      // DIRECTED (u → v): bootstrap assignment + condensation
+      // once, then condensation-level recompute per batch
+      // (insertion only merges SCCs; re-sent edges contract to
+      // self-loops or duplicate condensation rows — harmless,
+      // set semantics)
+      sccStorePath.foreach { sp =>
+        if (Stats.committedViewDirs(spark, s"$sp/assign").isEmpty)
+          Graph.writeSccStore(all, col("u"), col("v"), sp,
+            filesOut)
+        else
+          Graph.sccIncremental(edges, col("u"), col("v"), sp,
+            sb): Unit
+      }
+      if (!bootstrap && compactDue(compactEvery, batchId)) {
+        Graph.compactCCStore(spark, ccStorePath, filesOut): Unit
+        Graph.compactLabelState(spark, labelStorePath,
+          filesOut): Unit
+        triStorePath.foreach(tp =>
+          Graph.compactTriangleStore(spark, tp, filesOut): Unit)
+        kcoreStorePath.foreach(kp =>
+          Graph.compactKCoreStore(spark, kp, filesOut): Unit)
+        prStorePath.foreach(pp =>
+          Graph.compactPageRankStore(spark, pp, filesOut): Unit)
+        hitsStorePath.foreach(hp =>
+          Graph.compactHitsStore(spark, hp, filesOut): Unit)
+        louvainStorePath.foreach(lp =>
+          Graph.compactLouvainStore(spark, lp, filesOut): Unit)
+        landmarkStorePath.foreach(mp =>
+          Graph.compactLandmarkStore(spark, mp, filesOut): Unit)
+        sccStorePath.foreach(sp =>
+          Graph.compactSccStore(spark, sp, filesOut): Unit)
+        Stats.compactCommittedStore(spark, edgesPath,
+          _.select(col("u"), col("v"), col("__b"))
+            .repartitionByRange(filesOut, col("u"), col("v"))
+            .sortWithinPartitions(col("u"), col("v"))): Unit
+      }
+    }
   }
 
   /** [[compactWindowStoreGen]] for the ER gate's entity dictionary:
@@ -2184,11 +2064,7 @@ object StreamOps {
   def compactEntityStoreGen(spark: SparkSession, storePath: String,
                             manifestPath: String,
                             filesOut: Int): Option[Long] =
-    compactGateStore(spark, storePath, "compactEntityStoreGen",
-        manifestPath, "eid")(
-      _.select(col("blkh"), col("eid"), col("nm"))
-        .repartitionByRange(filesOut, col("blkh"))
-        .sortWithinPartitions(col("blkh")))
+    Entities.compact(spark, storePath, manifestPath, filesOut)
 
   /** SNAPSHOT (as-of) read of any gate store or survivor output dir:
     * the committed state as of micro-batch `asOf` — the newest
@@ -2233,7 +2109,7 @@ object StreamOps {
     * dir with the same content and the final store ≡ sketching all
     * batches from scratch (the merge-semigroup law, spec-pinned).
     * Readers take the newest COMMITTED dir with id < their own batch
-    * ([[hasCommittedParquet]]), so crashed writes are invisible and
+    * ([[newestCumulative]]), so crashed writes are invisible and
     * batch 0 always bootstraps empty. The store is ≤ #groups · k
     * longs — a planning artifact, never data-sized; history is never
     * re-read or re-shingled.
@@ -2245,47 +2121,40 @@ object StreamOps {
                          minNovelty: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Overlap
-    leasedStart(spark, Seq(sketchPath),
-        "kmvNoveltyGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(sketchPath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.localCheckpoint()
-          val shs = org.apache.spark.sql.GraftSqlBridge.toColumn(
-            graft.functions.ShinglesExpr(
-              org.apache.spark.sql.GraftSqlBridge
-                .toExpression(col(text)), n))
-          val keys = b.select(col(grp).as("grp"),
-            explode(shs).as("key"))
-          val batchSk = Overlap.kmvSketch(keys, col("grp"), col("key"),
-            k).localCheckpoint()
-          val hist = kmvSketchView(spark, sketchPath, batchId)
-          val novelty = hist match {
-            case Some(h) => Overlap.kmvContainment(h, batchSk, k)
-              .select(col("grp").as("__grp"), col("novelty"))
-            case None => batchSk.limit(0)
-              .select(col("grp").as("__grp"), lit(1.0).as("novelty"))
-          }
-          val withNv = b.join(novelty, col(grp) === col("__grp"),
-              "left")
-            .withColumn("novelty", coalesce(col("novelty"), lit(1.0)))
-            .drop("__grp")
-          withNv.where(col("novelty") >= minNovelty)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          withNv.where(col("novelty") < minNovelty)
-            .write.mode("overwrite").parquet(s"$lowPath/batch=$batchId")
-          val merged = hist match {
-            case Some(h) => Overlap.kmvMerge(h, batchSk, k)
-            case None => batchSk
-          }
-          merged.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"$sketchPath/sketch=$batchId")
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(sketchPath),
+        "kmvNoveltyGateSink") { (batch, batchId) =>
+      val b = batch.localCheckpoint()
+      val shs = org.apache.spark.sql.GraftSqlBridge.toColumn(
+        graft.functions.ShinglesExpr(
+          org.apache.spark.sql.GraftSqlBridge
+            .toExpression(col(text)), n))
+      val keys = b.select(col(grp).as("grp"),
+        explode(shs).as("key"))
+      val batchSk = Overlap.kmvSketch(keys, col("grp"), col("key"),
+        k).localCheckpoint()
+      val hist = kmvSketchView(spark, sketchPath, batchId)
+      val novelty = hist match {
+        case Some(h) => Overlap.kmvContainment(h, batchSk, k)
+          .select(col("grp").as("__grp"), col("novelty"))
+        case None => batchSk.limit(0)
+          .select(col("grp").as("__grp"), lit(1.0).as("novelty"))
+      }
+      val withNv = b.join(novelty, col(grp) === col("__grp"),
+          "left")
+        .withColumn("novelty", coalesce(col("novelty"), lit(1.0)))
+        .drop("__grp")
+      withNv.where(col("novelty") >= minNovelty)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      withNv.where(col("novelty") < minNovelty)
+        .write.mode("overwrite").parquet(s"$lowPath/batch=$batchId")
+      val merged = hist match {
+        case Some(h) => Overlap.kmvMerge(h, batchSk, k)
+        case None => batchSk
+      }
+      merged.coalesce(1)
+        .write.mode("overwrite")
+        .parquet(s"$sketchPath/sketch=$batchId")
+    }
   }
 
   /** Streaming corpus-profile drift gate — the continuous form of
@@ -2309,59 +2178,52 @@ object StreamOps {
                            outPath: String, checkpoint: String,
                            k: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Overlap, Stats}
+    import graft.operators.Overlap
     require(cols.nonEmpty, "cols must be non-empty")
-    leasedStart(spark, Seq(statePath),
-        "profileDriftGateSink")(
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(heldBatch(Seq(statePath)) { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.localCheckpoint()
-          val prof = Stats.profileTable(b, cols).localCheckpoint()
-          val keys = cols.map(c =>
-              b.select(lit(c).as("grp"), col(c).cast("string").as("key")))
-            .reduce(_ unionByName _)
-          val batchSk = Overlap.kmvSketch(keys, col("grp"), col("key"),
-            k).localCheckpoint()
-          val batchCounts = prof.select(col("column").as("grp"),
-            col("n_rows").as("n"), col("n_nulls").as("nulls"))
-          val prior = kmvSketchView(spark, statePath, batchId)
-          val (mergedSk, mergedCounts) = prior match {
-            case Some(p) =>
-              (Overlap.kmvMerge(p.select(col("grp"), col("sketch"))
-                  .where(size(col("sketch")) > 0), batchSk, k),
-                p.select(col("grp"), col("n"), col("nulls"))
-                  .unionByName(batchCounts)
-                  .groupBy(col("grp"))
-                  .agg(sum(col("n")).as("n"),
-                    sum(col("nulls")).as("nulls")))
-            case None => (batchSk, batchCounts)
-          }
-          // left join: an all-null column has NO sketch (null keys
-          // carry no distinct value) but must keep its count row
-          val state = mergedCounts
-            .join(mergedSk, Seq("grp"), "left")
-            .withColumn("sketch", coalesce(col("sketch"),
-              array().cast("array<long>")))
-            .localCheckpoint()
-          val cumNdv = Overlap.kmvDistinct(
-            state.select(col("grp"), col("sketch")), k)
-          prof.select(col("column"), col("n_rows").as("n_batch"),
-              col("n_nulls").as("nulls_batch"),
-              col("n_distinct").as("ndv_batch"))
-            .join(state.select(col("grp").as("column"),
-              col("n").as("n_total"), col("nulls").as("nulls_total")),
-              Seq("column"))
-            .join(cumNdv.select(col("grp").as("column"),
-              col("dhat").as("ndv_total_est")), Seq("column"))
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          state.coalesce(1).write.mode("overwrite")
-            .parquet(s"$statePath/sketch=$batchId")
-        }
-      })
-      .start())
+    gateSink(spark, stream, checkpoint, Seq(statePath),
+        "profileDriftGateSink") { (batch, batchId) =>
+      val b = batch.localCheckpoint()
+      val prof = Stats.profileTable(b, cols).localCheckpoint()
+      val keys = cols.map(c =>
+          b.select(lit(c).as("grp"), col(c).cast("string").as("key")))
+        .reduce(_ unionByName _)
+      val batchSk = Overlap.kmvSketch(keys, col("grp"), col("key"),
+        k).localCheckpoint()
+      val batchCounts = prof.select(col("column").as("grp"),
+        col("n_rows").as("n"), col("n_nulls").as("nulls"))
+      val prior = kmvSketchView(spark, statePath, batchId)
+      val (mergedSk, mergedCounts) = prior match {
+        case Some(p) =>
+          (Overlap.kmvMerge(p.select(col("grp"), col("sketch"))
+              .where(size(col("sketch")) > 0), batchSk, k),
+            p.select(col("grp"), col("n"), col("nulls"))
+              .unionByName(batchCounts)
+              .groupBy(col("grp"))
+              .agg(sum(col("n")).as("n"),
+                sum(col("nulls")).as("nulls")))
+        case None => (batchSk, batchCounts)
+      }
+      // left join: an all-null column has NO sketch (null keys
+      // carry no distinct value) but must keep its count row
+      val state = mergedCounts
+        .join(mergedSk, Seq("grp"), "left")
+        .withColumn("sketch", coalesce(col("sketch"),
+          array().cast("array<long>")))
+        .localCheckpoint()
+      val cumNdv = Overlap.kmvDistinct(
+        state.select(col("grp"), col("sketch")), k)
+      prof.select(col("column"), col("n_rows").as("n_batch"),
+          col("n_nulls").as("nulls_batch"),
+          col("n_distinct").as("ndv_batch"))
+        .join(state.select(col("grp").as("column"),
+          col("n").as("n_total"), col("nulls").as("nulls_total")),
+          Seq("column"))
+        .join(cumNdv.select(col("grp").as("column"),
+          col("dhat").as("ndv_total_est")), Seq("column"))
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      state.coalesce(1).write.mode("overwrite")
+        .parquet(s"$statePath/sketch=$batchId")
+    }
   }
 
   /** Newest committed cumulative sketch store with id < `beforeBatch`
@@ -2371,19 +2233,9 @@ object StreamOps {
     */
   private[graft] def kmvSketchView(spark: SparkSession,
                                    sketchPath: String,
-                                   beforeBatch: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(sketchPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val committed = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("sketch=") &&
-        p.getName.drop(7).toLong < beforeBatch &&
-        hasCommittedParquet(fs, p))
-    if (committed.isEmpty) None
-    else Some(spark.read.parquet(
-      committed.maxBy(_.getName.drop(7).toLong).toString))
-  }
+                                   beforeBatch: Long): Option[DataFrame] =
+    newestCumulative(spark, sketchPath, "sketch", beforeBatch)
+      .map(a => spark.read.parquet(a._2))
 
   /** foreachBatch MERGE sink: each micro-batch upserts into `table` by
     * `key` (last write per key wins within a batch via the batch's own

@@ -8,7 +8,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.{ListenerBusDrain, SparkThrowable}
+import org.apache.spark.{JobTags, ListenerBusDrain, SparkThrowable}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
@@ -191,13 +191,16 @@ class NightlyRefreshSpec extends SparkSuite {
     } finally reset("raw.swell_data", pres)
   }
 
-  /** Jobs started and plans executed while `body` runs. */
+  /** Jobs `body` started (those carrying its job tag) and plans
+    * executed while it runs.
+    */
   def traced(body: => Unit): (Int, Seq[QueryExecution]) = {
     val jobs = new AtomicInteger
     val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val tag = s"nightly-traced-${java.util.UUID.randomUUID()}"
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+        if (JobTags.of(e).contains(tag)) jobs.incrementAndGet(): Unit
     }
     val qeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -208,8 +211,10 @@ class NightlyRefreshSpec extends SparkSuite {
     ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(qeListener)
+    spark.sparkContext.addJobTag(tag)
     try body
     finally {
+      spark.sparkContext.removeJobTag(tag)
       ListenerBusDrain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(jobListener)
       spark.listenerManager.unregister(qeListener)

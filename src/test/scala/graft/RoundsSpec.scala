@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{JobTags, ListenerBusDrain}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -123,25 +123,30 @@ class RoundsSpec extends SparkSuite {
       }))
 
   /** Jobs run, persistent RDDs left and a result digest for one call
-    * (the call and the collect of its result). Every RDD persisted while
-    * the call runs is held strongly until the count, so one the call
-    * leaks cannot drop out of the context's weak registry first.
+    * (the call and the collect of its result). Only jobs carrying this
+    * call's job tag count, so jobs other threads run on the shared
+    * context do not. Every RDD persisted while the call runs is held
+    * strongly until the count, so one the call leaks cannot drop out of
+    * the context's weak registry first.
     */
   private def measure(call: () => DataFrame): (Int, Int, String) = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
     val held = java.util.concurrent.ConcurrentHashMap.newKeySet[RDD[_]]()
+    val tag = s"rounds-measure-${java.util.UUID.randomUUID()}"
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
+        if (JobTags.of(e).contains(tag)) jobs.incrementAndGet(): Unit
         sc.getPersistentRDDs.values.foreach(r => held.add(r): Unit)
       }
     }
     ListenerBusDrain(sc)
     val before = sc.getPersistentRDDs.keySet
     sc.addSparkListener(listener)
+    sc.addJobTag(tag)
     val got = try call().collect()
     finally {
+      sc.removeJobTag(tag)
       ListenerBusDrain(sc)
       sc.removeSparkListener(listener)
     }

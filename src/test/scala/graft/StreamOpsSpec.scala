@@ -1499,4 +1499,56 @@ class StreamOpsSpec extends SparkSuite {
       assert(gens == Set("sketch=0", "sketch=1", "sketch=2"))
     } finally q.stop()
   }
+
+  test("banded gate appends upsert the manifest for their own batch " +
+      "dir only: after three appends (no compaction) the manifest " +
+      "covers exactly the committed view's files, and a narrow probe " +
+      "still prunes") {
+    import graft.operators.{Dedup, Stats}
+    implicit val sc = spark.sqlContext
+    val base = s"/tmp/graft-ndmanifest-${System.nanoTime()}"
+    val (store, manifest) = (s"$base/store", s"$base/store_manifest")
+    val docs = Seq(
+      "the quick brown fox jumps over the lazy dog ",
+      "watermark semantics for stream joins explained simply ",
+      "bucketed table layouts and zero shuffle joins ",
+      "completely fresh content about parquet footer stats ",
+      "another novel document about shuffle partition sizing ",
+      "range partitioning keeps each file to a narrow key span ")
+      .map(_ * 8)
+    val in = MemoryStream[(Long, String)]
+    val q = StreamOps.nearDupGateSinkBanded(spark,
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text", store,
+      s"$base/out", s"$base/ckpt", appendFilesOut = 4)
+    try {
+      docs.grouped(2).zipWithIndex.foreach { case (pair, b) =>
+        in.addData(pair.zipWithIndex.map { case (d, i) =>
+          (10L * b + i + 1, d) }: _*)
+        q.processAllAvailable()
+      }
+      val viewDirs = Stats.committedViewDirs(spark, store)
+      assert(viewDirs.map(d => new org.apache.hadoop.fs.Path(d).getName)
+        .toSet == Set("batch=0", "batch=1", "batch=2"))
+      def norm(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+      val viewFiles = spark.read.parquet(viewDirs: _*).inputFiles
+        .map(norm).toSet
+      val manifestFiles = spark.read.parquet(manifest)
+        .select($"file").distinct().as[String].collect().map(norm).toSet
+      assert(manifestFiles == viewFiles)
+      // one (band, bucket) pair of the first doc: files whose band
+      // range excludes it are skipped, and its stored row is still read
+      val probe = Dedup.lshBuckets(Dedup.minhashSigsNative(
+          Seq((1L, docs.head)).toDF("doc_id", "text"), col("doc_id"),
+          col("text")), 4)
+        .where($"band" === 0).select($"band", $"bucket")
+      val kept = Stats.touchedPairsKeptFilesUnder(spark, viewDirs,
+        manifest, "band", "bucket", probe)
+      assert(kept.nonEmpty && kept.size < viewFiles.size,
+        s"pruning must drop files: kept ${kept.size} of ${viewFiles.size}")
+      val hit = StreamOps.storeBandsFor(spark, store, manifest, probe)
+        .join(probe, Seq("band", "bucket"))
+        .select($"id").as[Long].collect().toSet
+      assert(hit == Set(1L), s"got $hit")
+    } finally q.stop()
+  }
 }

@@ -617,6 +617,86 @@ class WriterLeaseSpec extends SparkSuite {
     Stats.releaseWriterLease(spark, Seq(held, free))
     assert(!new java.io.File(Stats.writerLeasePath(held)).exists)
   }
+
+  test("every leased gate sink refuses to start, naming itself, while " +
+      "an open sync claim holds its store root; the claim stays " +
+      "live-held") {
+    implicit val sc = spark.sqlContext
+    val base = s"/tmp/graft-alease-${System.nanoTime()}"
+    new java.io.File(base).mkdirs()
+    // the fence fires before the query is built, so one stream shape
+    // serves every sink
+    val st = MemoryStream[(Long, String)].toDF().toDF("id", "text")
+    def r(n: String) = s"$base/$n"
+    def ck(n: String) = s"$base/ckpt_$n"
+    def out(n: String) = s"$base/out_$n"
+    val df = Seq((1L, "en")).toDF("id", "text")
+    // (owner, the root the claim holds, start)
+    val sinks: Seq[(String, String, () => Any)] = Seq(
+      ("nearDupGateSink", r("nd"), () => StreamOps.nearDupGateSink(spark,
+        st, "id", "text", r("nd"), out("nd"), ck("nd"))),
+      ("nearDupGateSinkBanded", r("ndb"), () => StreamOps
+        .nearDupGateSinkBanded(spark, st, "id", "text", r("ndb"),
+          out("ndb"), ck("ndb"))),
+      ("substringGateSink", r("sub"), () => StreamOps.substringGateSink(
+        spark, st, "id", "text", r("sub"), out("sub"), ck("sub"))),
+      ("mediaDedupGateSink", r("med"), () => StreamOps.mediaDedupGateSink(
+        spark, st, "id", "text", r("med"), out("med"), ck("med"))),
+      ("mediaDedupGateSinkBanded", r("medb"), () => StreamOps
+        .mediaDedupGateSinkBanded(spark, st, "id", "text", r("medb"),
+          out("medb"), ck("medb"))),
+      ("videoDedupGateSink", r("vid"), () => StreamOps.videoDedupGateSink(
+        spark, st, "id", "text", r("vid"), out("vid"), ck("vid"))),
+      ("multimodalGateSink", r("mm/img"), () => StreamOps
+        .multimodalGateSink(spark, st, "id", "text", "text", "text",
+          "text", r("mm"), out("mm"), ck("mm"))),
+      ("embedDedupGateSink", r("emb"), () => StreamOps.embedDedupGateSink(
+        spark, st, "id", "text", r("emb"), out("emb"), ck("emb"))),
+      ("dsirGateSink", r("dsir"), () => StreamOps.dsirGateSink(spark, st,
+        "id", "text", df, r("dsir"), out("dsir"), ck("dsir"),
+        buckets = 16, minScore = 0L)),
+      ("lmGateSink", r("lm"), () => StreamOps.lmGateSink(spark, st, "id",
+        "text", r("lm"), out("lm"), ck("lm"), num = 0L, den = 1L)),
+      ("erGateSink", r("er"), () => StreamOps.erGateSink(spark, st, "id",
+        "text", r("er"), out("er"), ck("er"))),
+      ("bm25IndexGateSink", r("bm25"), () => StreamOps.bm25IndexGateSink(
+        spark, st, "id", "text", r("bm25"), ck("bm25"))),
+      ("pcaMomentsGateSink", r("pca"), () => StreamOps.pcaMomentsGateSink(
+        spark, st, "text", r("pca"), ck("pca"))),
+      ("kCenterGateSink", r("kc"), () => StreamOps.kCenterGateSink(spark,
+        st, "id", "text", 2, 1, r("kc"), ck("kc"))),
+      ("retractionGateSink", r("ret"), () => StreamOps.retractionGateSink(
+        spark, st, "id", None, None, ck("ret"),
+        gateStorePaths = Seq(r("ret")))),
+      ("graphRetractionSink", r("gre"), () => StreamOps
+        .graphRetractionSink(spark, st, "id", r("gre"), ck("gre"))),
+      ("graphGateSink", r("gcc"), () => StreamOps.graphGateSink(spark, st,
+        "id", "id", df, "id", "text", 1, r("ge"), r("gcc"), r("glp"),
+        ck("gg"))),
+      ("kmvNoveltyGateSink", r("kmv"), () => StreamOps.kmvNoveltyGateSink(
+        spark, st, "id", "text", r("kmv"), out("kmv"), s"$base/low",
+        ck("kmv"))),
+      ("profileDriftGateSink", r("prof"), () => StreamOps
+        .profileDriftGateSink(spark, st, Seq("text"), r("prof"),
+          out("prof"), ck("prof"))))
+    assert(sinks.map(_._1).distinct.size == 19)
+    sinks.foreach { case (owner, root, start) =>
+      val claim = Stats.newSyncClaim()
+      Stats.acquireWriterLease(spark, Seq(root), "holder", claim)
+      try {
+        val ex = intercept[Stats.ConcurrentWriterException](start())
+        assert(ex.getMessage.startsWith(s"$owner:") &&
+          ex.getMessage.contains("leased by"), ex.getMessage)
+        val (_, leased, live, holder, _) =
+          Stats.writerLeaseStatus(spark, Seq(root)).head
+        assert(leased && live && holder == claim.toString,
+          s"$owner disturbed the claim on $root")
+      } finally {
+        Stats.releaseWriterLeaseOwned(spark, Seq(root), claim)
+        Stats.dropSyncClaim(claim)
+      }
+    }
+  }
 }
 
 /** A local filesystem under the `vanishfs` scheme that, once armed,
