@@ -483,12 +483,12 @@ object Curation {
       .distinct()
 
   /** Persist a corpus's content-defined window fingerprints as the
-    * substring-dedup STORE: (fp, id) rows range-clustered by fp into
-    * `filesOut` files plus a footer-stats manifest — the same layout
-    * discipline as the banded MinHash store, on the single key the
-    * substring axis needs. A batch gate's store scan routed through
-    * [[graft.operators.Stats.readTouchedKeysManifest]] opens only the
-    * files whose fp range intersects the batch's fingerprints.
+    * substring-dedup STORE ([[Layout.WindowFps]]): (fp, id) rows
+    * range-clustered by fp into `filesOut` files plus a footer-stats
+    * manifest — the same layout discipline as the banded MinHash
+    * store, on the single key the substring axis needs. A batch gate's
+    * manifest-pruned store scan opens only the files whose fp range
+    * intersects the batch's fingerprints.
     */
   def writeWindowStore(df: DataFrame, id: Column, text: Column,
                        storeDir: String, manifestPath: String,
@@ -496,20 +496,15 @@ object Curation {
                        anchorLen: Int = 8, anchorMod: Int = 16): Unit =
     Stats.withWriterLease(df.sparkSession, Seq(storeDir),
         "writeWindowStore(batch)") {
-    val spark = df.sparkSession
-    windowFpRows(df, id, text, window, anchorLen, anchorMod)
-      .select(col("fp"), col("id"))
-      .repartitionByRange(filesOut, col("fp"))
-      .sortWithinPartitions(col("fp"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(storeDir)
-    Stats.writeManifest(spark, storeDir, manifestPath)
+    Layout.WindowFps.write(
+      windowFpRows(df, id, text, window, anchorLen, anchorMod),
+      storeDir, manifestPath, filesOut)
   }
 
   /** Append a batch's window fingerprints to an existing store
     * (continuous ingestion); the manifest refresh reads footers only
     * for the new files. Fold accumulated appends with
-    * [[Layout.compact]] (cluster by fp) on the usual cadence.
+    * [[compactWindowStore]] on the usual cadence.
     */
   def appendWindowStore(df: DataFrame, id: Column, text: Column,
                         storeDir: String, manifestPath: String,
@@ -517,14 +512,9 @@ object Curation {
                         anchorLen: Int = 8, anchorMod: Int = 16): Unit =
     Stats.withWriterLease(df.sparkSession, Seq(storeDir),
         "appendWindowStore(batch)") {
-    val spark = df.sparkSession
-    windowFpRows(df, id, text, window, anchorLen, anchorMod)
-      .select(col("fp"), col("id"))
-      .repartitionByRange(filesOut, col("fp"))
-      .sortWithinPartitions(col("fp"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
-    Stats.refreshManifest(spark, storeDir, manifestPath)
+    Layout.WindowFps.append(
+      windowFpRows(df, id, text, window, anchorLen, anchorMod),
+      storeDir, manifestPath, filesOut)
   }
 
   /** OPTIMIZE cycle for the window-fingerprint store: fold accumulated
@@ -540,7 +530,7 @@ object Curation {
         "compactWindowStore(batch)") {
     val side = s"$storeDir.compacting"
     val n = Layout.compact(spark, storeDir, side, filesOut,
-      clusterBy = Seq("fp"))
+      clusterBy = Layout.WindowFps.key)
     val fs = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(storeDir), true)
@@ -557,9 +547,8 @@ object Curation {
     * re-fingerprinted, never shuffled:
     * 1. the batch fingerprints once ([[cdcFingerprints]], staged);
     * 2. the store scan opens only touched-fp files
-    *    ([[graft.operators.Stats.readTouchedKeysManifest]] over the
-    *    fp-clustered layout — a stale/missing-coverage manifest costs
-    *    pruning, never rows);
+    *    ([[Layout.WindowFps]]' manifest-pruned read — a stale or
+    *    missing manifest costs pruning, never rows);
     * 3. the surviving store slice is row-filtered by a semi join on
     *    the batch's fp set, then counted per new doc. The join rides
     *    a batch-sized broadcast below `broadcastLimit` (the measured
@@ -573,13 +562,12 @@ object Curation {
                            window: Int = 40, anchorLen: Int = 8,
                            anchorMod: Int = 16,
                            broadcastLimit: Long = 4000000L): DataFrame = {
-    val spark = newDocs.sparkSession
     val (batchFps, nFps) = Checkpoints.stageCount(
       windowFpRows(newDocs, id, text, window, anchorLen, anchorMod))
     val small = nFps <= broadcastLimit
     val probe = batchFps.select(col("fp")).distinct()
-    val storeSlice = Stats.readTouchedKeysManifest(spark, storeDir,
-        manifestPath, "fp", probe)
+    val storeSlice = Layout.WindowFps.touched(Seq(storeDir),
+        manifestPath, probe)
       .select(col("fp"))
     val storeTouched =
       (if (small) storeSlice.join(broadcast(probe), Seq("fp"), "left_semi")
@@ -629,13 +617,12 @@ object Curation {
                                 anchorLen: Int = 8, anchorMod: Int = 16,
                                 broadcastLimit: Long = 4000000L)
       : DataFrame = {
-    val spark = newDocs.sparkSession
     val (batchFps, nFps) = Checkpoints.stageCount(
       windowFpRows(newDocs, id, text, window, anchorLen, anchorMod))
     val small = nFps <= broadcastLimit
     val probe = batchFps.select(col("fp")).distinct()
-    val storeSlice = Stats.readTouchedKeysManifest(spark, storeDir,
-        manifestPath, "fp", probe)
+    val storeSlice = Layout.WindowFps.touched(Seq(storeDir),
+        manifestPath, probe)
       .select(col("fp"), col("id").as("id_a"))
     val storeTouched =
       (if (small) storeSlice.join(broadcast(probe), Seq("fp"), "left_semi")

@@ -403,15 +403,12 @@ object Dedup {
                                          maxBucket: Int = 10000,
                                          broadcastLimit: Long = 4000000L)
       : DataFrame = {
-    val spark = newSigsIn.sparkSession
     val (newSigs, nNewSigs) = Checkpoints.stageCount(newSigsIn)
     val small = nNewSigs <= broadcastLimit
     val newBands = lshBuckets(newSigs, rowsPerBand)
       .select(col("band"), col("bucket"), col("id"), col("sig"))
-    val storeBands = Stats.readTouchedPairsManifest(spark, storeDir,
-        manifestPath, "band", "bucket",
-        newBands.select(col("band"), col("bucket")))
-      .select(col("band"), col("bucket"), col("id"), col("sig"))
+    val storeBands = Layout.BandedSigs.touched(Seq(storeDir), manifestPath,
+      newBands)
     bandedCandidateEdges(newBands, storeBands, small, minEstJaccard,
       maxBucket).distinct()
   }
@@ -419,52 +416,38 @@ object Dedup {
   // ---------- banded signature store (persisted, manifest-pruned) ----
 
   /** Persist `sigs` (the [[minhashSigsNative]] (id, sig) table) as the
-    * BANDED signature store: (band, bucket, id, sig) range-clustered by
-    * (band, bucket) into `filesOut` files, plus a footer-stats manifest
-    * ([[Stats.writeManifest]]). This is the store layout the scaladoc
-    * of [[minhashIncremental]] names: each file covers a narrow
-    * (band, bucket) range, so a batch's store scan — routed through
-    * [[Stats.readTouchedPairsManifest]] — OPENS only touched-bucket
-    * files instead of reading the store end to end. At 100 TB of
-    * history the store is ~300 GB; per-batch reads shrink to the
-    * touched slice.
+    * BANDED signature store ([[Layout.BandedSigs]]): (band, bucket, id,
+    * sig) range-clustered by (band, bucket) into `filesOut` files, plus
+    * a footer-stats manifest. This is the store layout the scaladoc of
+    * [[minhashIncremental]] names: each file covers a narrow
+    * (band, bucket) range, so a batch's manifest-pruned store scan
+    * OPENS only touched-bucket files instead of reading the store end
+    * to end. At 100 TB of history the store is ~300 GB; per-batch
+    * reads shrink to the touched slice.
     */
   def writeBandedSigStore(sigs: DataFrame, storeDir: String,
                           manifestPath: String, filesOut: Int,
                           rowsPerBand: Int = 4): Unit =
     Stats.withWriterLease(sigs.sparkSession, Seq(storeDir),
         "writeBandedSigStore(batch)") {
-    val spark = sigs.sparkSession
-    lshBuckets(sigs.select(col("id"), col("sig")), rowsPerBand)
-      .select(col("band"), col("bucket"), col("id"), col("sig"))
-      .repartitionByRange(filesOut, col("band"), col("bucket"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(storeDir)
-    Stats.writeManifest(spark, storeDir, manifestPath)
+    Layout.BandedSigs.write(
+      lshBuckets(sigs.select(col("id"), col("sig")), rowsPerBand),
+      storeDir, manifestPath, filesOut)
   }
 
   /** Append a batch's signatures to an existing banded store (the
     * continuous-ingestion write path): the appended slice is clustered
     * by (band, bucket) within its own files, and the manifest refresh
-    * reads footers ONLY for the new files ([[Stats.refreshManifest]]).
-    * Appends accumulate one file set per batch — fold them with
-    * [[Layout.compact]] (cluster by band, bucket) + [[Stats
-    * .writeManifest]] on the cadence listing cost warrants.
+    * reads footers ONLY for the new files.
     */
   def appendBandedSigStore(sigs: DataFrame, storeDir: String,
                            manifestPath: String, filesOut: Int,
                            rowsPerBand: Int = 4): Unit =
     Stats.withWriterLease(sigs.sparkSession, Seq(storeDir),
         "appendBandedSigStore(batch)") {
-    val spark = sigs.sparkSession
-    lshBuckets(sigs.select(col("id"), col("sig")), rowsPerBand)
-      .select(col("band"), col("bucket"), col("id"), col("sig"))
-      .repartitionByRange(filesOut, col("band"), col("bucket"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
-    Stats.refreshManifest(spark, storeDir, manifestPath)
+    Layout.BandedSigs.append(
+      lshBuckets(sigs.select(col("id"), col("sig")), rowsPerBand),
+      storeDir, manifestPath, filesOut)
   }
 
   /** [[minhashIncremental]] against a PERSISTED banded store written by
@@ -497,15 +480,12 @@ object Dedup {
                                        maxBucket: Int = 10000,
                                        broadcastLimit: Long = 4000000L)
       : DataFrame = {
-    val spark = newDocs.sparkSession
     val (newSigs, nNewSigs) = Checkpoints.stageCount(newSigsIn)
     val small = nNewSigs <= broadcastLimit
     val newBands = lshBuckets(newSigs, rowsPerBand)
       .select(col("band"), col("bucket"), col("id"), col("sig"))
-    val storeBands = Stats.readTouchedPairsManifest(spark, storeDir,
-        manifestPath, "band", "bucket",
-        newBands.select(col("band"), col("bucket")))
-      .select(col("band"), col("bucket"), col("id"), col("sig"))
+    val storeBands = Layout.BandedSigs.touched(Seq(storeDir), manifestPath,
+      newBands)
     bandedIncrementalCore(newDocs, id, newBands, storeBands, small,
       minEstJaccard, maxBucket)
   }
@@ -1036,41 +1016,28 @@ object Dedup {
   // ---------- persisted code store (manifest-pruned) ----------
 
   /** Persist an [[embeddingCodes]] (id, table, bucket) table as the
-    * clustered code store: range-clustered by (table, bucket) into
-    * `filesOut` files plus a footer-stats manifest — the embedding twin
-    * of [[writeBandedSigStore]]. Codes are stored UNEXPANDED (probes
-    * re-expand at read time), so storage stays ~0.1% of the vectors'
-    * bytes and multiprobe remains a read parameter.
+    * clustered code store ([[Layout.CodeBuckets]]): range-clustered by
+    * (table, bucket) into `filesOut` files plus a footer-stats
+    * manifest — the embedding twin of [[writeBandedSigStore]]. Codes
+    * are stored UNEXPANDED (probes re-expand at read time), so storage
+    * stays ~0.1% of the vectors' bytes and multiprobe remains a read
+    * parameter.
     */
   def writeCodeStore(codes: DataFrame, storeDir: String,
                      manifestPath: String, filesOut: Int): Unit =
     Stats.withWriterLease(codes.sparkSession, Seq(storeDir),
         "writeCodeStore(batch)") {
-    val spark = codes.sparkSession
-    codes.select(col("id"), col("table"), col("bucket"))
-      .repartitionByRange(filesOut, col("table"), col("bucket"))
-      .sortWithinPartitions(col("table"), col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(storeDir)
-    Stats.writeManifest(spark, storeDir, manifestPath)
+    Layout.CodeBuckets.write(codes, storeDir, manifestPath, filesOut)
   }
 
   /** Append a batch's codes to an existing clustered code store; the
-    * manifest refresh reads footers only for the new files. Compact on
-    * the cadence listing cost warrants ([[Layout.compact]] clustered by
-    * (table, bucket) + [[Stats.writeManifest]]).
+    * manifest refresh reads footers only for the new files.
     */
   def appendCodeStore(codes: DataFrame, storeDir: String,
                       manifestPath: String, filesOut: Int): Unit =
     Stats.withWriterLease(codes.sparkSession, Seq(storeDir),
         "appendCodeStore(batch)") {
-    val spark = codes.sparkSession
-    codes.select(col("id"), col("table"), col("bucket"))
-      .repartitionByRange(filesOut, col("table"), col("bucket"))
-      .sortWithinPartitions(col("table"), col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
-    Stats.refreshManifest(spark, storeDir, manifestPath)
+    Layout.CodeBuckets.append(codes, storeDir, manifestPath, filesOut)
   }
 
   /** [[embeddingIncremental]] against a PERSISTED clustered code store
@@ -1093,16 +1060,14 @@ object Dedup {
                                  maxBucket: Int = 100000,
                                  broadcastLimit: Long = 4000000L)
       : DataFrame = {
-    val spark = newEmbs.sparkSession
     val base = newEmbs.select(id.as("id"), vec.as("vec"))
     val (newCodes, nCodes) = Checkpoints.stageCount(
       embeddingCodes(base, col("id"), col("vec"), planes, tables, dim))
     val pruneProbes = expandProbes(
         expandProbes(newCodes, planes, multiprobe), planes, multiprobe)
       .select(col("table"), col("bucket"))
-    val storeCodes = Stats.readTouchedPairsManifest(spark, storeDir,
-        manifestPath, "table", "bucket", pruneProbes)
-      .select(col("id"), col("table"), col("bucket"))
+    val storeCodes = Layout.CodeBuckets.touched(Seq(storeDir), manifestPath,
+      pruneProbes)
     embeddingIncrementalFromCodes(base, newCodes, nCodes, storeCodes,
       storeVecs, threshold, planes, tables, multiprobe, maxBucket,
       broadcastLimit)

@@ -77,7 +77,7 @@ private[graft] final case class KeyedStore(
       .parquet(s"$root/$dir")
 
   private def refreshManifest(spark: SparkSession): Unit =
-    if (manifest) Stats.upsertManifest(spark, root, manifestPath)
+    if (manifest) Stats.refreshManifest(spark, root, manifestPath)
 
   /** Write `rows` as the store's base, `batch=0`. */
   def writeBase(spark: SparkSession, owner: String, filesOut: Int)
@@ -217,13 +217,13 @@ private[graft] final case class KeyedStore(
     Stats.committedViewDirs(spark, root)
 
   /** Raw committed rows in only the files `probes` (one `keyCol`
-    * column) can live in ([[Stats.readTouchedKeysUnder]]); a
-    * file-granular superset, so callers keep their row filters.
+    * column) can live in ([[Stats.readTouched]]); a file-granular
+    * superset, so callers keep their row filters.
     */
   def pruned(spark: SparkSession, keyCol: String,
              probes: DataFrame): DataFrame =
-    Stats.readTouchedKeysUnder(spark, committedDirs(spark), manifestPath,
-      keyCol, probes)
+    Stats.readTouched(spark, committedDirs(spark), manifestPath,
+      Seq(keyCol), probes)
 
   /** A reusable [[pruned]] reader ([[Stats.keyPruner]]). */
   def keyPruner(spark: SparkSession, keyCol: String): Stats.KeyPruner =

@@ -37,6 +37,85 @@ object Layout {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
+  /** A clustered store layout, declared once: the columns a store's
+    * files hold and the integer cluster key (one column or a pair)
+    * they are range-partitioned and sorted by — the key its footer
+    * manifest prunes on ([[Stats.touchedFiles]]). Each store's writes
+    * and its pruned read derive from the declaration: a flat store
+    * (base write, append) or a `batch=`/`gen=` store (batch append;
+    * the streaming gates add compaction and a tombstone-aware slice).
+    */
+  private[graft] final case class Clustered(cols: Seq[String],
+                                            key: Seq[String]) {
+    /** `rows` projected to `cols` in `files` range-partitioned,
+      * key-sorted partitions — one output file each.
+      */
+    def laidOut(rows: DataFrame, files: Int): DataFrame =
+      rows.select(cols.map(col): _*)
+        .repartitionByRange(files, key.map(col): _*)
+        .sortWithinPartitions(key.map(col): _*)
+
+    /** Write `rows` as the flat store at `dir`, replacing it, and its
+      * manifest from scratch ([[Stats.writeManifest]]).
+      */
+    def write(rows: DataFrame, dir: String, manifestPath: String,
+              files: Int): Unit = {
+      laidOut(rows, files).write.mode(SaveMode.Overwrite).parquet(dir)
+      Stats.writeManifest(rows.sparkSession, dir, manifestPath)
+    }
+
+    /** Append `rows` to the flat store at `dir`; the manifest refresh
+      * reads footers only for the new files ([[Stats.refreshManifest]]).
+      * Appends accumulate one file set each — fold them with
+      * [[Layout.compact]] on `key` on the cadence listing cost
+      * warrants.
+      */
+    def append(rows: DataFrame, dir: String, manifestPath: String,
+               files: Int): Unit = {
+      laidOut(rows, files).write.mode(SaveMode.Append).parquet(dir)
+      Stats.refreshManifest(rows.sparkSession, dir, manifestPath)
+    }
+
+    /** Write `rows` as `<root>/batch=<batchId>` (overwrite-idempotent:
+      * a retry rewrites the same dir), then upsert the manifest rows of
+      * that dir only ([[Stats.upsertManifestFor]] — no listing of the
+      * rest of the store).
+      */
+    def appendBatch(rows: DataFrame, root: String, manifestPath: String,
+                    batchId: Long, files: Int): Unit = {
+      val dir = s"$root/batch=$batchId"
+      laidOut(rows, files).write.mode(SaveMode.Overwrite).parquet(dir)
+      Stats.upsertManifestFor(rows.sparkSession, root, manifestPath, dir)
+    }
+
+    /** The store's rows (projected to `cols`) in only the files of
+      * `dirs` that `probes` (a frame carrying the key) can live in
+      * ([[Stats.readTouched]]): a file-granular superset, so callers
+      * keep their row filters.
+      */
+    def touched(dirs: Seq[String], manifestPath: String,
+                probes: DataFrame): DataFrame =
+      Stats.readTouched(probes.sparkSession, dirs, manifestPath, key,
+        probes).select(cols.map(col): _*)
+  }
+
+  /** Banded MinHash signatures, clustered by (band, bucket). */
+  private[graft] val BandedSigs = Clustered(
+    Seq("band", "bucket", "id", "sig"), Seq("band", "bucket"))
+  /** Unexpanded embedding LSH codes, clustered by (table, bucket). */
+  private[graft] val CodeBuckets = Clustered(
+    Seq("id", "table", "bucket"), Seq("table", "bucket"))
+  /** Perceptual-hash windows (image/audio), clustered by (w, wk). */
+  private[graft] val MediaWindows = Clustered(
+    Seq("w", "wk", "id", "dhash"), Seq("w", "wk"))
+  /** Video frame hashes, clustered by fh. */
+  private[graft] val VideoFrames = Clustered(Seq("fh", "id"), Seq("fh"))
+  /** Content-defined window fingerprints, clustered by fp. */
+  private[graft] val WindowFps = Clustered(Seq("fp", "id"), Seq("fp"))
+  /** The ER entity dictionary, clustered by blkh. */
+  private[graft] val Entities = Clustered(Seq("blkh", "eid", "nm"),
+    Seq("blkh"))
+
   /** Rewrite `sourceDir`'s parquet data into `destDir` as ~`filesOut`
     * files of row-count-balanced size, each internally sorted by
     * `clusterBy` (empty = no sort). Returns the rewritten row count.

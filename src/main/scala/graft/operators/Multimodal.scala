@@ -410,44 +410,31 @@ object Multimodal {
     * plus a footer-stats manifest — MULTI-hash per doc, the substring
     * window-fingerprint store's shape ([[graft.operators.Curation
     * .writeWindowStore]]), not the dhash store's one-hash-per-doc
-    * shape, because shared-frame evidence accumulates per frame. A
-    * probe batch's store scan, routed through
-    * [[Stats.readTouchedKeysManifest]], opens only files whose fh
-    * range the batch's own frames touch.
+    * shape, because shared-frame evidence accumulates per frame
+    * ([[Layout.VideoFrames]]). A probe batch's manifest-pruned store
+    * scan opens only files whose fh range the batch's own frames
+    * touch.
     */
   def writeFrameStore(media: DataFrame, storeDir: String,
                       manifestPath: String, filesOut: Int,
                       frameBytes: Int = 64): Unit =
     Stats.withWriterLease(media.sparkSession, Seq(storeDir),
         "writeFrameStore(batch)") {
-    val spark = media.sparkSession
-    videoFrameRows(media, frameBytes)
-      .select(col("fh"), col("id"))
-      .repartitionByRange(filesOut, col("fh"))
-      .sortWithinPartitions(col("fh"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(storeDir)
-    Stats.writeManifest(spark, storeDir, manifestPath)
+    Layout.VideoFrames.write(videoFrameRows(media, frameBytes), storeDir,
+      manifestPath, filesOut)
   }
 
   /** Append a batch's frame hashes to an existing frame store
     * (continuous ingestion); the manifest refresh reads footers only
-    * for the new files. Fold accumulated appends with
-    * [[Layout.compact]] (cluster by fh) on the usual cadence.
+    * for the new files.
     */
   def appendFrameStore(media: DataFrame, storeDir: String,
                        manifestPath: String, filesOut: Int,
                        frameBytes: Int = 64): Unit =
     Stats.withWriterLease(media.sparkSession, Seq(storeDir),
         "appendFrameStore(batch)") {
-    val spark = media.sparkSession
-    videoFrameRows(media, frameBytes)
-      .select(col("fh"), col("id"))
-      .repartitionByRange(filesOut, col("fh"))
-      .sortWithinPartitions(col("fh"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
-    Stats.refreshManifest(spark, storeDir, manifestPath)
+    Layout.VideoFrames.append(videoFrameRows(media, frameBytes), storeDir,
+      manifestPath, filesOut)
   }
 
   /** [[videoFrameDupPairs]] where the LARGER id side comes from
@@ -468,12 +455,9 @@ object Multimodal {
                                       minShared: Long = 2,
                                       maxBucket: Int = 10000)
       : DataFrame = {
-    val spark = probeMedia.sparkSession
     val batchFrames = videoFrameRows(probeMedia, frameBytes)
-    val storeSlice = Stats.readTouchedKeysManifest(spark, storeDir,
-        manifestPath, "fh",
-        batchFrames.select(col("fh")).distinct())
-      .select(col("fh"), col("id"))
+    val storeSlice = Layout.VideoFrames.touched(Seq(storeDir), manifestPath,
+      batchFrames.select(col("fh")).distinct())
     frameDupPairsAgainstRows(storeSlice, batchFrames, minShared,
       maxBucket)
   }
@@ -778,50 +762,35 @@ object Multimodal {
 
   // ---------- banded perceptual-hash store (persisted, pruned) ----
 
-  /** Persist (media_id, dhash) hashes as the BANDED media store:
-    * window-expanded to (w, wk, id, dhash) rows range-clustered by
-    * (w, wk) into `filesOut` files, plus a footer-stats manifest
-    * ([[graft.operators.Stats.writeManifest]]) — the
-    * [[Dedup.writeBandedSigStore]] treatment applied to perceptual
-    * hashes. A probe batch's store scan, routed through
-    * [[Stats.readTouchedPairsManifest]], OPENS only the files whose
-    * (w, wk) range its own windows touch: at 100 TB of history the
-    * store is a few hundred GB of 32-byte rows, and per-batch reads
-    * shrink to the touched slice. Null dhashes (dead-letters) carry no
-    * windows and are never stored.
+  /** Persist (media_id, dhash) hashes as the BANDED media store
+    * ([[Layout.MediaWindows]]): window-expanded to (w, wk, id, dhash)
+    * rows range-clustered by (w, wk) into `filesOut` files, plus a
+    * footer-stats manifest — the [[Dedup.writeBandedSigStore]]
+    * treatment applied to perceptual hashes. A probe batch's
+    * manifest-pruned store scan OPENS only the files whose (w, wk)
+    * range its own windows touch: at 100 TB of history the store is a
+    * few hundred GB of 32-byte rows, and per-batch reads shrink to the
+    * touched slice. Null dhashes (dead-letters) carry no windows and
+    * are never stored.
     */
   def writeDhashStore(hashes: DataFrame, storeDir: String,
                       manifestPath: String, filesOut: Int): Unit =
     Stats.withWriterLease(hashes.sparkSession, Seq(storeDir),
         "writeDhashStore(batch)") {
-    val spark = hashes.sparkSession
-    dhashWindows(hashes)
-      .select(col("w"), col("wk"), col("id"), col("dhash"))
-      .repartitionByRange(filesOut, col("w"), col("wk"))
-      .sortWithinPartitions(col("w"), col("wk"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(storeDir)
-    Stats.writeManifest(spark, storeDir, manifestPath)
+    Layout.MediaWindows.write(dhashWindows(hashes), storeDir,
+      manifestPath, filesOut)
   }
 
   /** Append a batch's window-expanded hashes to an existing banded
     * media store (continuous ingestion); the manifest refresh reads
-    * footers ONLY for the new files. Fold accumulated appends with
-    * [[Layout.compact]] (cluster by w, wk) + [[Stats.writeManifest]]
-    * on the usual maintenance cadence.
+    * footers ONLY for the new files.
     */
   def appendDhashStore(hashes: DataFrame, storeDir: String,
                        manifestPath: String, filesOut: Int): Unit =
     Stats.withWriterLease(hashes.sparkSession, Seq(storeDir),
         "appendDhashStore(batch)") {
-    val spark = hashes.sparkSession
-    dhashWindows(hashes)
-      .select(col("w"), col("wk"), col("id"), col("dhash"))
-      .repartitionByRange(filesOut, col("w"), col("wk"))
-      .sortWithinPartitions(col("w"), col("wk"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
-    Stats.refreshManifest(spark, storeDir, manifestPath)
+    Layout.MediaWindows.append(dhashWindows(hashes), storeDir,
+      manifestPath, filesOut)
   }
 
   /** [[dhashPairsAgainst]] against a PERSISTED banded store written by
@@ -836,12 +805,9 @@ object Multimodal {
   def dhashPairsAgainstStored(storeDir: String, manifestPath: String,
                               probe: DataFrame, maxDist: Int = 3,
                               maxBucket: Int = Int.MaxValue): DataFrame = {
-    val spark = probe.sparkSession
     val pw = dhashWindows(probe)
-    val sw = Stats.readTouchedPairsManifest(spark, storeDir,
-        manifestPath, "w", "wk",
-        pw.select(col("w"), col("wk")).distinct())
-      .select(col("w"), col("wk"), col("id"), col("dhash"))
+    val sw = Layout.MediaWindows.touched(Seq(storeDir), manifestPath,
+      pw.select(col("w"), col("wk")).distinct())
     dhashPairsAgainstBands(sw, pw, maxDist, maxBucket)
   }
 
@@ -876,12 +842,11 @@ object Multimodal {
   }
 
   /** The (w, wk, id, dhash) window expansion of a hash table — the
-    * banded media store's row shape, exposed for the streaming gate's
-    * hash-once store appends.
+    * banded media store's row shape ([[Layout.MediaWindows]]), exposed
+    * for the streaming gate's hash-once store appends.
     */
   private[graft] def dhashWindowRows(hashes: DataFrame): DataFrame =
-    dhashWindows(hashes).select(col("w"), col("wk"), col("id"),
-      col("dhash"))
+    dhashWindows(hashes).select(Layout.MediaWindows.cols.map(col): _*)
 
   /** Wrap any table's text column as a synthetic media table — exercises
     * the binary-column path with the data we have.

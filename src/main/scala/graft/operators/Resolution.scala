@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *  - **Incremental** ([[writeEntityStore]] / [[erIncrementalPairs]]):
   *    the entity dictionary persists blkh-range-clustered with a
   *    footer-stats manifest; a batch's store scan opens only
-  *    touched-block files ([[Stats.readTouchedKeysManifest]]), compares
+  *    touched-block files ([[Layout.Entities]]), compares
   *    store-slice×batch + batch×batch, and the accumulated edge sets
   *    reconcile by CC to the full-corpus clustering
   *    (x_er_incremental ≡ the batch oracle — the same
@@ -111,20 +111,16 @@ object Resolution {
   }
 
   /** Persist the entity dictionary blkh-range-clustered with a footer
-    * manifest — the store [[erIncrementalPairs]] prunes per batch.
+    * manifest ([[Layout.Entities]]) — the store [[erIncrementalPairs]]
+    * prunes per batch.
     */
   def writeEntityStore(ents: DataFrame, storeDir: String,
                        manifestPath: String, filesOut: Int,
                        block: Column => Column = firstTokenBlock): Unit =
     Stats.withWriterLease(ents.sparkSession, Seq(storeDir),
         "writeEntityStore(batch)") {
-    val spark = ents.sparkSession
-    keyed(ents, block)
-      .repartitionByRange(filesOut, col("blkh"))
-      .sortWithinPartitions(col("blkh"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(storeDir)
-    Stats.writeManifest(spark, storeDir, manifestPath)
+    Layout.Entities.write(keyed(ents, block), storeDir, manifestPath,
+      filesOut)
   }
 
   /** Candidate in-block pairs with at least one batch endpoint BY
@@ -180,13 +176,11 @@ object Resolution {
                          maxDist: Int = 3,
                          maxBlock: Int = Int.MaxValue,
                          broadcastLimit: Long = 4000000L): DataFrame = {
-    val spark = newEnts.sparkSession
     val (batch, nBatch) = Checkpoints.stageCount(keyed(newEnts, block))
     val small = nBatch <= broadcastLimit
     val probe = batch.select(col("blkh")).distinct()
-    val slice0 = Stats.readTouchedKeysManifest(spark, storeDir,
-      manifestPath, "blkh", probe)
-      .select(col("blkh"), col("eid"), col("nm"))
+    val slice0 = Layout.Entities.touched(Seq(storeDir), manifestPath,
+      probe)
     val slice =
       if (small) slice0.join(broadcast(probe), Seq("blkh"), "left_semi")
       else slice0.join(probe.hint("shuffle_hash"), Seq("blkh"),

@@ -128,18 +128,17 @@ object Retrieval {
                      indexDir: String, filesOut: Int = 16): Unit =
     Stats.withWriterLease(df.sparkSession, Seq(indexDir),
         "writeBm25Index(batch)") {
-    val spark = df.sparkSession
     writeBm25Batch(df, id, text, indexDir, batchId = 0L, filesOut)
-    Stats.writeManifest(spark, s"$indexDir/postings",
-      s"$indexDir/postings_manifest")
-    Stats.writeManifest(spark, s"$indexDir/doclen",
-      s"$indexDir/doclen_manifest")
+    for (art <- Seq("postings", "doclen"))
+      Stats.writeManifest(df.sparkSession, s"$indexDir/$art",
+        s"$indexDir/${art}_manifest")
   }
 
   /** Append a NEW batch of documents to an existing BM25 index (the
     * continuous-ingestion write path): postings, doc lengths, and the
     * batch's (n_docs, sum_dl) stats row land in `batch=<batchId>` dirs
-    * with mode Overwrite and footer-only manifest refreshes — each
+    * with mode Overwrite, and each manifest upserts the rows of its
+    * own new batch dir only ([[Stats.upsertManifestFor]]) — each
     * step is overwrite-idempotent, so a crash mid-append (or a retried
     * batch) can never double-append postings or double-fold stats;
     * history is never re-read or re-tokenized. `batchId` must be
@@ -163,10 +162,9 @@ object Retrieval {
     Stats.requireMonotoneBatch(spark, Seq(s"$indexDir/stats"), batchId,
       "appendBm25Index")
     writeBm25Batch(df, id, text, indexDir, batchId, filesOut)
-    Stats.refreshManifest(spark, s"$indexDir/postings",
-      s"$indexDir/postings_manifest")
-    Stats.refreshManifest(spark, s"$indexDir/doclen",
-      s"$indexDir/doclen_manifest")
+    for (art <- Seq("postings", "doclen"))
+      Stats.upsertManifestFor(spark, s"$indexDir/$art",
+        s"$indexDir/${art}_manifest", s"$indexDir/$art/batch=$batchId")
   }
 
   /** TOMBSTONE deletes for the BM25 index — the takedown /
@@ -207,8 +205,7 @@ object Retrieval {
     // reads only batches < batchId
     val fresh = bm25Tombstones(indexDir).writeFresh(spark,
       "deleteBm25Docs", batchId, Seq(s"$indexDir/stats"), filesOut)(ids)
-    readTouchedKeysView(spark, s"$indexDir/doclen",
-        s"$indexDir/doclen_manifest", "id", fresh)
+    indexTouched(spark, indexDir, "doclen", "id", fresh)
       .join(fresh, Seq("id"), "left_semi")
       .agg((-count(lit(1))).as("n_docs"),
         (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
@@ -254,12 +251,10 @@ object Retrieval {
           _.select(col("id"), col("dl"))
             .repartitionByRange(math.max(1, filesOut / 2), col("id"))
             .sortWithinPartitions(col("id")))))
-    if (tok.isDefined) {
-      Stats.refreshManifest(spark, s"$indexDir/postings",
-        s"$indexDir/postings_manifest")
-      Stats.refreshManifest(spark, s"$indexDir/doclen",
-        s"$indexDir/doclen_manifest")
-    }
+    if (tok.isDefined)
+      for (art <- Seq("postings", "doclen"))
+        Stats.refreshManifest(spark, s"$indexDir/$art",
+          s"$indexDir/${art}_manifest")
     tok
   }
 
@@ -276,6 +271,17 @@ object Retrieval {
         coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl"))
   }
 
+  /** The committed view of one index artifact (`postings` keyed on
+    * th, `doclen` on id), opening only the files `probes` can live in
+    * ([[Stats.readTouched]]).
+    */
+  private def indexTouched(spark: org.apache.spark.sql.SparkSession,
+                           indexDir: String, artifact: String, key: String,
+                           probes: DataFrame): DataFrame =
+    Stats.readTouched(spark,
+      Stats.committedViewDirs(spark, s"$indexDir/$artifact"),
+      s"$indexDir/${artifact}_manifest", Seq(key), probes)
+
   /** [[TextAnalysis.bm25TopK]] answered FROM the persisted index —
     * bit-identical results (shared [[TextAnalysis.bm25ScoreExpr]]
     * expression tree, same df/tf/dl integers, same (score desc, id)
@@ -285,22 +291,6 @@ object Retrieval {
     * a matched term), and doc lengths are fetched manifest-pruned for
     * candidates only. Per-query cost is postings-of-terms, not corpus.
     */
-  /** Manifest-pruned read of one index artifact's committed view
-    * (newest generation + newer batch dirs): opens only the files the
-    * probe key set can live in; empty kept set → schema-preserving
-    * empty result.
-    */
-  private def readTouchedKeysView(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, manifestPath: String,
-                                  c: String, probes: DataFrame): DataFrame = {
-    val dirs = Stats.committedViewDirs(spark, dir)
-    require(dirs.nonEmpty, s"bm25 index: no committed content under $dir")
-    val keep = Stats.touchedKeysKeptFilesUnder(spark, dirs, manifestPath,
-      c, probes)
-    if (keep.isEmpty) spark.read.parquet(dirs: _*).where(lit(false))
-    else spark.read.parquet(keep: _*)
-  }
-
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String, queryTerms: Seq[String], k: Int,
                       k1: Double = 1.2, b: Double = 0.75,
@@ -313,8 +303,7 @@ object Retrieval {
     // tombstoned docs drop BEFORE the df recovery below, so per-term
     // df is the SURVIVING document count
     val slice = Checkpoints.stage(bm25Tombstones(indexDir).without(spark,
-      readTouchedKeysView(spark, s"$indexDir/postings",
-          s"$indexDir/postings_manifest", "th", probe)
+      indexTouched(spark, indexDir, "postings", "th", probe)
         .where(col("term").isin(queryTerms: _*))
         .select(col("term"), col("id"), col("tf"))))
     val dfAggs = idx.map(i =>
@@ -325,8 +314,7 @@ object Retrieval {
       coalesce(max(when(col("term") === queryTerms(i), col("tf"))),
         lit(0L)).as(s"tf_$i"))
     val tfs = slice.groupBy(col("id")).agg(tfAggs.head, tfAggs.tail: _*)
-    val dl = readTouchedKeysView(spark, s"$indexDir/doclen",
-        s"$indexDir/doclen_manifest", "id",
+    val dl = indexTouched(spark, indexDir, "doclen", "id",
         tfs.select(col("id")))
       .select(col("id"), col("dl"))
     val consts = broadcast(
@@ -379,16 +367,14 @@ object Retrieval {
     val terms = q.select(col("term")).distinct()
     val probe = terms.select(xxhash64(col("term")).as("th"))
     val slice = Checkpoints.stage(bm25Tombstones(indexDir).without(spark,
-      readTouchedKeysView(spark, s"$indexDir/postings",
-          s"$indexDir/postings_manifest", "th", probe)
+      indexTouched(spark, indexDir, "postings", "th", probe)
         .join(broadcast(terms), Seq("term"), "left_semi")
         .select(col("term"), col("id"), col("tf").as("tf_0"))))
     // postings are unique per (id, term), so rows-per-term = docs
     // containing the term — the same df the single-query agg derives
     val dfs = slice.groupBy(col("term"))
       .agg(count(lit(1)).as("df_0"))
-    val dl = readTouchedKeysView(spark, s"$indexDir/doclen",
-        s"$indexDir/doclen_manifest", "id",
+    val dl = indexTouched(spark, indexDir, "doclen", "id",
         slice.select(col("id")).distinct())
       .select(col("id"), col("dl"))
     val stats = broadcast(bm25IndexStats(spark, indexDir))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet footer-stats manifest: per-file, per-column row counts,
@@ -256,10 +256,15 @@ object Stats {
   /** Incrementally refresh a persisted manifest after appends /
     * compactions / deletes: footer reads happen only for files not yet
     * in the manifest. Driver traffic is the file-name lists — the same
-    * O(files) any scan's file index pays.
+    * O(files) any scan's file index pays. With no committed manifest
+    * (never written, or only a crashed first write's `_temporary`
+    * leftovers) this is [[writeManifest]]: one full footer sweep.
     */
   def refreshManifest(spark: SparkSession, dir: String,
                       manifestPath: String): Unit = {
+    if (!hasManifest(spark, manifestPath)) {
+      writeManifest(spark, dir, manifestPath); return
+    }
     import spark.implicits._
     val current = listParquetFiles(spark, dir).toSet
     val old = spark.read.parquet(manifestPath)
@@ -279,20 +284,7 @@ object Stats {
     spark.catalog.refreshByPath(manifestPath)
   }
 
-  /** [[writeManifest]] when no committed manifest exists yet,
-    * [[refreshManifest]] otherwise — the one maintenance call every
-    * store append/compact site needs, tolerant of stores created before
-    * their manifest existed and of a crashed first manifest write
-    * (absent or uncommitted manifest = first write, full footer sweep
-    * once).
-    */
-  def upsertManifest(spark: SparkSession, dir: String,
-                     manifestPath: String): Unit =
-    if (hasManifest(spark, manifestPath))
-      refreshManifest(spark, dir, manifestPath)
-    else writeManifest(spark, dir, manifestPath)
-
-  /** [[upsertManifest]] scoped to ONE changed subdirectory — the
+  /** [[refreshManifest]] scoped to ONE changed subdirectory — the
     * batch-append fast path: manifest rows under `changedDir` are
     * replaced wholesale with fresh footer stats (exact under retry
     * overwrites, which swap that dir's files), every other row carries
@@ -333,26 +325,6 @@ object Stats {
     val p = new org.apache.hadoop.fs.Path(manifestPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && hasCommittedParquet(fs, p)
-  }
-
-  /** Manifest-pruned read of an EXPLICIT directory set keyed on one
-    * integer column — [[readTouchedKeysManifest]] for gen=/batch=
-    * stores ([[committedViewDirs]] supplies `dirs`), tolerant of an
-    * ABSENT manifest: no manifest = full read of `dirs`, pruning is
-    * only ever an optimization (the advisory-manifest contract —
-    * stale or missing costs reading, never rows). File-granular
-    * superset: callers keep their exact row-level filters.
-    */
-  def readTouchedKeysUnder(spark: SparkSession, dirs: Seq[String],
-                           manifestPath: String, c: String,
-                           probes: DataFrame): DataFrame = {
-    require(dirs.nonEmpty, "readTouchedKeysUnder: empty committed view")
-    if (!hasManifest(spark, manifestPath))
-      return spark.read.parquet(dirs: _*)
-    val keep = touchedKeysKeptFilesUnder(spark, dirs, manifestPath, c,
-      probes)
-    if (keep.isEmpty) spark.read.parquet(dirs: _*).where(lit(false))
-    else spark.read.parquet(keep: _*)
   }
 
   // ---------- committed gen=/batch= store protocol ----------
@@ -1372,12 +1344,14 @@ object Stats {
       skippableFilesEqFrom(spark.read.parquet(manifestPath), column, value),
       col(column) === value)
 
-  // ---------- touched-pair pruning (banded signature stores) ----------
+  // ---------- touched-key pruning (clustered stores) ----------
 
-  /** The data files of `dir` a probe SET over the integer cluster pair
-    * (c1, c2) cannot prune — the store-scan accounting unit of
-    * [[readTouchedPairsManifest]], exposed so tests and maintenance
-    * jobs can audit exactly which files a batch's store scan opens.
+  /** The files of `dirs` that probe rows over the integer cluster key
+    * `keys` — one column, or a (c1, c2) pair — can live in: the one
+    * answer every manifest-pruned store read is built on
+    * ([[readTouched]], [[Layout.Clustered]], [[KeyedStore.pruned]],
+    * [[KeyPruner]]), exposed so tests and maintenance jobs can audit
+    * exactly which files a batch's store scan opens.
     *
     * Soundness: a file with footer ranges [a_mn, a_mx] × [b_mn, b_mx]
     * can contain probe (p1, p2) only if p1 ∈ [a_mn, a_mx]; when the
@@ -1385,135 +1359,126 @@ object Stats {
     * (c1, c2)-range-clustered layout with more files than c1 values),
     * additionally only if p2 ∈ [b_mn, b_mx]. A file spanning several
     * c1 values is kept on the c1 test alone (its c2 footer range does
-    * not bound any single c1 slice). Files the manifest does not cover
-    * are ALWAYS kept — stale manifests cost pruning, never rows.
-    * Bounds come from the manifest's EXACT integral columns
-    * (`min_int`/`max_int` — boxed footer values merged numerically
-    * across row groups; `min_num`/`max_num` doubles are lossy past
-    * 2^53 for xxhash64 bucket keys, and the string stats merge
-    * lexicographically, which is wrong for decimal integer renders).
+    * not bound any single c1 slice); with one key that test is the
+    * whole rule. With no committed manifest ([[hasManifest]]) every
+    * file is kept, and a file the manifest does not cover, or whose
+    * bounds are absent, is ALWAYS kept — stale or lost manifests cost
+    * pruning, never rows. Bounds come from the manifest's EXACT
+    * integral columns (`min_int`/`max_int` — boxed footer values
+    * merged numerically across row groups; `min_num`/`max_num` doubles
+    * are lossy past 2^53 for xxhash64 bucket keys, and the string
+    * stats merge lexicographically, which is wrong for decimal integer
+    * renders).
     */
-  def touchedPairsKeptFiles(spark: SparkSession, dir: String,
-                            manifestPath: String, c1: String, c2: String,
-                            probes: DataFrame): Seq[String] =
-    touchedPairsKeptFilesUnder(spark, Seq(dir), manifestPath, c1, c2,
+  def touchedFiles(spark: SparkSession, dirs: Seq[String],
+                   manifestPath: String, keys: Seq[String],
+                   probes: DataFrame): Seq[String] = {
+    val files = dirs.flatMap(d => listParquetFiles(spark, d))
+    if (files.isEmpty || !hasManifest(spark, manifestPath)) files
+    else touchedFilesFrom(spark.read.parquet(manifestPath), files, keys,
       probes)
+  }
 
-  /** [[touchedPairsKeptFiles]] over an EXPLICIT set of directories —
-    * the streaming-store form, where the candidate files are the
-    * current generation view's dirs rather than everything under one
-    * root (a superseded generation awaiting vacuum must not be read
-    * even though the manifest may still cover it).
-    */
-  def touchedPairsKeptFilesUnder(spark: SparkSession, dirs: Seq[String],
-                                 manifestPath: String, c1: String,
-                                 c2: String,
-                                 probes: DataFrame): Seq[String] = {
-    val stats = spark.read.parquet(manifestPath)
-    def ranges(c: String, a: String): DataFrame =
+  // the [[touchedFiles]] rule over an already-loaded manifest and file
+  // listing (what [[KeyPruner]] pays once per call)
+  private def touchedFilesFrom(stats: DataFrame, files: Seq[String],
+                               keys: Seq[String],
+                               probes: DataFrame): Seq[String] = {
+    require(keys.size == 1 || keys.size == 2,
+      s"touchedFiles: one or two integer cluster keys, got $keys")
+    val tags = Seq("a", "b").take(keys.size)
+    def c(t: String, part: String) = col(s"__${t}_$part")
+    def ranges(key: String, t: String): DataFrame =
       stats
-        .where(col("column") === c &&
+        .where(col("column") === key &&
           col("ptype").isin("INT32", "INT64"))
-        .select(col("file"),
-          col("min_int").as(s"__${a}_mn"),
-          col("max_int").as(s"__${a}_mx"),
+        .select(col("file"), col("min_int").as(s"__${t}_mn"),
+          col("max_int").as(s"__${t}_mx"),
           (col("nulls") >= 0 && col("nulls") === col("rows"))
-            .as(s"__${a}_nul"))
-    val withStats = ranges(c1, "a").join(ranges(c2, "b"), "file")
+            .as(s"__${t}_nul"))
+    val withStats = keys.zip(tags)
+      .map { case (key, t) => ranges(key, t) }
+      .reduce(_.join(_, "file"))
     // all-null cluster columns cannot match any (non-null) probe; a
     // file with absent bounds is unprunable and simply never skipped
-    val prunable = withStats.where(
-      (!col("__a_nul") && !col("__b_nul") &&
-        col("__a_mn").isNotNull && col("__a_mx").isNotNull &&
-        col("__b_mn").isNotNull && col("__b_mx").isNotNull) ||
-        col("__a_nul") || col("__b_nul"))
+    val anyNul = tags.map(c(_, "nul")).reduce(_ || _)
+    val bounded = tags
+      .map(t => !c(t, "nul") && c(t, "mn").isNotNull &&
+        c(t, "mx").isNotNull)
+      .reduce(_ && _)
+    val prunable = withStats.where(bounded || anyNul)
     val p = probes
-      .select(col(c1).cast("long").as("__p1"),
-        col(c2).cast("long").as("__p2"))
-      .where(col("__p1").isNotNull && col("__p2").isNotNull)
+      .select(keys.zip(tags).map { case (key, t) =>
+        col(key).cast("long").as(s"__p$t") }: _*)
+      .where(tags.map(t => col(s"__p$t").isNotNull).reduce(_ && _))
       .distinct()
-    val hit = !col("__a_nul") && !col("__b_nul") &&
-      col("__p1") >= col("__a_mn") && col("__p1") <= col("__a_mx") &&
-      (col("__a_mn") < col("__a_mx") ||
-        (col("__p2") >= col("__b_mn") && col("__p2") <= col("__b_mx")))
+    def inRange(t: String): Column =
+      col(s"__p$t") >= c(t, "mn") && col(s"__p$t") <= c(t, "mx")
+    val trailing =
+      if (keys.size == 1) Nil
+      else Seq(c("a", "mn") < c("a", "mx") || inRange("b"))
+    val hit = (!anyNul +: inRange("a") +: trailing).reduce(_ && _)
     // metadata × batch-bounded probe set — never data-sized; collected
     // as file NAMES only (the prunedRead driver-traffic contract)
-    val skip = prunable.join(p, hit, "left_anti")
-      .select(col("file")).collect().map(_.getString(0)).toSet
-    dirs.flatMap(d => listParquetFiles(spark, d)).filterNot(skip)
-  }
-
-  /** Store scan pruned to the files a touched-(c1, c2) set can live in
-    * — the read path for incremental near-dup signature/code stores
-    * persisted range-clustered by (c1, c2) ([[Dedup.writeBandedSigStore]]
-    * / [[Dedup.writeCodeStore]]): a batch's store scan opens only
-    * touched-bucket files instead of the whole store. File-granular:
-    * the result is a SUPERSET of the touched rows, so callers keep
-    * their exact row-level filter (the incremental operators' touched
-    * semi join). Empty kept set → schema-preserving empty result.
-    */
-  def readTouchedPairsManifest(spark: SparkSession, dir: String,
-                               manifestPath: String, c1: String,
-                               c2: String, probes: DataFrame): DataFrame = {
-    val keep = touchedPairsKeptFiles(spark, dir, manifestPath, c1, c2,
-      probes)
-    if (keep.isEmpty) spark.read.parquet(dir).where(lit(false))
-    else spark.read.parquet(keep: _*)
-  }
-
-  // ---------- touched-key pruning (single-key stores) ----------
-
-  /** Single-key twin of [[touchedPairsKeptFilesUnder]]: the data files
-    * a probe SET over one integer column cannot prune — for stores
-    * range-clustered by a single key (the window-fingerprint store).
-    * Same soundness contract: a file the manifest does not cover, or
-    * whose bounds are absent, is always read.
-    */
-  def touchedKeysKeptFiles(spark: SparkSession, dir: String,
-                           manifestPath: String, c: String,
-                           probes: DataFrame): Seq[String] =
-    touchedKeysKeptFilesUnder(spark, Seq(dir), manifestPath, c, probes)
-
-  /** [[touchedKeysKeptFiles]] over an EXPLICIT set of directories —
-    * the streaming-store form (see [[touchedPairsKeptFilesUnder]]).
-    */
-  def touchedKeysKeptFilesUnder(spark: SparkSession, dirs: Seq[String],
-                                manifestPath: String, c: String,
-                                probes: DataFrame): Seq[String] =
-    touchedKeysKeptFilesFrom(spark.read.parquet(manifestPath),
-      dirs.flatMap(d => listParquetFiles(spark, d)), c, probes)
-
-  /** The pruning core over an ALREADY-LOADED stats table and file
-    * list — what [[KeyPruner]] calls per probe after paying the
-    * manifest read and the listing once.
-    */
-  def touchedKeysKeptFilesFrom(stats: DataFrame, files: Seq[String],
-                               c: String,
-                               probes: DataFrame): Seq[String] = {
-    val ranges = stats
-      .where(col("column") === c && col("ptype").isin("INT32", "INT64"))
-      .select(col("file"), col("min_int").as("__mn"),
-        col("max_int").as("__mx"),
-        (col("nulls") >= 0 && col("nulls") === col("rows")).as("__nul"))
-    val prunable = ranges.where(
-      (!col("__nul") && col("__mn").isNotNull && col("__mx").isNotNull)
-        || col("__nul"))
-    val p = probes.select(col(c).cast("long").as("__p"))
-      .where(col("__p").isNotNull).distinct()
-    val hit = !col("__nul") &&
-      col("__p") >= col("__mn") && col("__p") <= col("__mx")
     val skip = prunable.join(p, hit, "left_anti")
       .select(col("file")).collect().map(_.getString(0)).toSet
     files.filterNot(skip)
   }
 
+  // the committed rows of `keep`; an empty kept set reads as the
+  // schema-preserving empty frame of `dirs`
+  private def scanKept(spark: SparkSession, dirs: Seq[String],
+                       keep: Seq[String]): DataFrame =
+    if (keep.isEmpty) spark.read.parquet(dirs: _*).where(lit(false))
+    else spark.read.parquet(keep: _*)
+
+  /** Store scan of `dirs` opening only the [[touchedFiles]] — the read
+    * path of every clustered store (the incremental near-dup, media,
+    * substring and entity stores, the BM25 index, [[KeyedStore]]).
+    * File-granular: the result is a SUPERSET of the touched rows, so
+    * callers keep their exact row-level filter.
+    */
+  def readTouched(spark: SparkSession, dirs: Seq[String],
+                  manifestPath: String, keys: Seq[String],
+                  probes: DataFrame): DataFrame = {
+    require(dirs.nonEmpty, s"readTouched: no committed dirs to read " +
+      s"(manifest $manifestPath)")
+    scanKept(spark, dirs,
+      touchedFiles(spark, dirs, manifestPath, keys, probes))
+  }
+
+  /** [[touchedFiles]] of one directory over the (c1, c2) pair. */
+  def touchedPairsKeptFiles(spark: SparkSession, dir: String,
+                            manifestPath: String, c1: String, c2: String,
+                            probes: DataFrame): Seq[String] =
+    touchedFiles(spark, Seq(dir), manifestPath, Seq(c1, c2), probes)
+
+  /** [[touchedFiles]] over the (c1, c2) pair. */
+  def touchedPairsKeptFilesUnder(spark: SparkSession, dirs: Seq[String],
+                                 manifestPath: String, c1: String,
+                                 c2: String,
+                                 probes: DataFrame): Seq[String] =
+    touchedFiles(spark, dirs, manifestPath, Seq(c1, c2), probes)
+
+  /** [[touchedFiles]] of one directory over one key. */
+  def touchedKeysKeptFiles(spark: SparkSession, dir: String,
+                           manifestPath: String, c: String,
+                           probes: DataFrame): Seq[String] =
+    touchedFiles(spark, Seq(dir), manifestPath, Seq(c), probes)
+
+  /** [[touchedFiles]] over one key. */
+  def touchedKeysKeptFilesUnder(spark: SparkSession, dirs: Seq[String],
+                                manifestPath: String, c: String,
+                                probes: DataFrame): Seq[String] =
+    touchedFiles(spark, dirs, manifestPath, Seq(c), probes)
+
   /** Per-CALL cached key pruner: ONE manifest read (staged in memory)
     * and ONE store listing serve every later probe — the form the
     * ITERATIVE incremental operators need. k-core's closure and peel
     * loops probe the member store every round; routing each probe
-    * through [[readTouchedKeysUnder]] re-reads the manifest parquet
-    * and re-lists the store per round, a fixed cost that outweighed
-    * the pruning at bench scale (x_kcore_incremental 2.9× in the r11
+    * through [[readTouched]] re-reads the manifest parquet and
+    * re-lists the store per round, a fixed cost that outweighed the
+    * pruning at bench scale (x_kcore_incremental 2.9× in the r11
     * window — root-caused to exactly this). The capture is pinned at
     * construction: build one pruner per operator call, AFTER any
     * store write its probes must observe.
@@ -1539,37 +1504,19 @@ object Stats {
       if (!hasManifest(spark, manifestPath)) None
       else Some(Checkpoints.stage(spark.read.parquet(manifestPath)))
 
-    def keptFiles(probes: DataFrame): Seq[String] = stats match {
-      case None => files
-      case Some(st) => touchedKeysKeptFilesFrom(st, files, c, probes)
-    }
+    def keptFiles(probes: DataFrame): Seq[String] =
+      stats.fold(files)(touchedFilesFrom(_, files, Seq(c), probes))
 
-    /** Pruned store scan for one probe set — [[readTouchedKeysUnder]]
-      * semantics (uncovered files always read; file-granular superset,
-      * callers keep their row filter) at per-probe join cost only.
+    /** Pruned store scan for one probe set — [[readTouched]] semantics
+      * at per-probe join cost only.
       */
-    def read(probes: DataFrame): DataFrame = {
-      val keep = keptFiles(probes)
-      if (keep.isEmpty) spark.read.parquet(dirs: _*).where(lit(false))
-      else spark.read.parquet(keep: _*)
-    }
+    def read(probes: DataFrame): DataFrame =
+      scanKept(spark, dirs, keptFiles(probes))
   }
 
   def keyPruner(spark: SparkSession, dirs: Seq[String],
                 manifestPath: String, c: String): KeyPruner =
     new KeyPruner(spark, dirs, manifestPath, c)
-
-  /** Store scan pruned to the files a touched-key set can live in —
-    * single-key twin of [[readTouchedPairsManifest]]. File-granular
-    * superset: callers keep their exact row-level filter.
-    */
-  def readTouchedKeysManifest(spark: SparkSession, dir: String,
-                              manifestPath: String, c: String,
-                              probes: DataFrame): DataFrame = {
-    val keep = touchedKeysKeptFiles(spark, dir, manifestPath, c, probes)
-    if (keep.isEmpty) spark.read.parquet(dir).where(lit(false))
-    else spark.read.parquet(keep: _*)
-  }
 
   // ---------- per-file bloom manifest (point-lookup pruning) ----------
 

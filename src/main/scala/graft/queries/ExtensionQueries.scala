@@ -106,7 +106,7 @@ object ExtensionQueries {
     * corpus slice (doc_id < 400), written once per data dir — clustered
     * by (band, bucket) with a footer-stats manifest, so a batch's store
     * scan opens only touched-bucket files (Dedup.writeBandedSigStore /
-    * Stats.readTouchedPairsManifest). Returns (storeDir, manifestPath).
+    * Stats.readTouched). Returns (storeDir, manifestPath).
     */
   private[queries] def bandedSigStoreFor(s: SparkSession, d: String)
       : (String, String) = {
@@ -125,7 +125,7 @@ object ExtensionQueries {
     * per data dir — (w, wk, id, dhash) rows clustered by (w, wk) with
     * a footer manifest, so a probe batch's store scan opens only
     * touched-window files (Multimodal.writeDhashStore /
-    * Stats.readTouchedPairsManifest — the banded-MinHash-store
+    * Stats.readTouched — the banded-MinHash-store
     * treatment applied to media). Returns (storeDir, manifestPath).
     */
   private def dhashStoreFor(s: SparkSession, d: String)

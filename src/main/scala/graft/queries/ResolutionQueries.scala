@@ -73,13 +73,9 @@ object ResolutionQueries {
         parts(s, d).where(col("p_partkey") % 8 =!= 0),
         col("p_partkey"), col("p_name"))
       val root = ArtifactMemo.dirFor("erdelstore", d) { p =>
-        Resolution.keyed(hist, Resolution.firstTokenBlock)
-          .select(col("blkh"), col("eid"), col("nm"))
-          .repartitionByRange(8, col("blkh"))
-          .sortWithinPartitions(col("blkh"))
-          .write.mode("overwrite").parquet(s"$p/store/batch=0")
-        graft.operators.Stats.writeManifest(s, s"$p/store",
-          s"$p/manifest")
+        graft.operators.Layout.Entities.appendBatch(
+          Resolution.keyed(hist, Resolution.firstTokenBlock),
+          s"$p/store", s"$p/manifest", batchId = 0L, files = 8)
         StreamOps.deleteFromNearDupStore(s, s"$p/store",
           hist.where(col("eid") % 5 === 2).select(col("eid").as("id")),
           batchId = 1L)

@@ -136,14 +136,10 @@ object RetrievalQueries {
       import graft.streaming.StreamOps
       val corpus = passageCorpus(t(s, d, "documents"))
       val root = ArtifactMemo.dirFor("subdelstore", d) { p =>
-        Curation.windowFpRows(corpus.where(col("doc_id") < 400),
-            col("doc_id"), col("text"), 40, 8, 16)
-          .select(col("fp"), col("id"))
-          .repartitionByRange(8, col("fp"))
-          .sortWithinPartitions(col("fp"))
-          .write.mode("overwrite").parquet(s"$p/store/batch=0")
-        graft.operators.Stats.writeManifest(s, s"$p/store",
-          s"$p/manifest")
+        graft.operators.Layout.WindowFps.appendBatch(
+          Curation.windowFpRows(corpus.where(col("doc_id") < 400),
+            col("doc_id"), col("text"), 40, 8, 16),
+          s"$p/store", s"$p/manifest", batchId = 0L, files = 8)
         StreamOps.deleteFromNearDupStore(s, s"$p/store",
           corpus.where(col("doc_id") < 400 &&
               col("doc_id") % 11 === 0 && col("doc_id") % 3 === 2)

@@ -36,7 +36,7 @@ object TrainingQueries {
     * embedding slice (vec_id < 400) — written once per data dir,
     * clustered by (table, bucket) with a footer-stats manifest, so a
     * batch's store scan opens only collidable-bucket files
-    * (Dedup.writeCodeStore / Stats.readTouchedPairsManifest). Returns
+    * (Dedup.writeCodeStore / Stats.readTouched). Returns
     * (storeDir, manifestPath).
     */
   private def embedStoreFor(s: SparkSession, d: String)
@@ -52,16 +52,13 @@ object TrainingQueries {
   }
 
   private def manifestFor(s: SparkSession, dir: String): String =
-    manifestCache.compute(dir, (_, prev) =>
-      if (prev == null) {
-        val mp = java.nio.file.Files
-          .createTempDirectory("graft-manifest-").toString + "/manifest"
-        graft.operators.Stats.writeManifest(s, dir, mp)
-        mp
-      } else {
-        graft.operators.Stats.refreshManifest(s, dir, prev)
-        prev
-      })
+    manifestCache.compute(dir, (_, prev) => {
+      // a fresh manifest path is written from scratch by the refresh
+      val mp = Option(prev).getOrElse(java.nio.file.Files
+        .createTempDirectory("graft-manifest-").toString + "/manifest")
+      graft.operators.Stats.refreshManifest(s, dir, mp)
+      mp
+    })
 
   /** DuckDB CTE chain reproducing [[Dedup.embeddingNearDup]] BIT FOR
     * BIT — same hyperplane coefficients (embedded as literals;

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{KeyedStore, Stats, Upsert}
+import graft.operators.{KeyedStore, Layout, Stats, Upsert}
 
 /** Streaming counterparts of the batch pipeline operators: bounded-state
   * exact dedup, stream-static dimension enrichment, and an incremental
@@ -340,39 +340,19 @@ object StreamOps {
       val Seq(tok) = gateTombstones(storePath).foldWithout(spark, who,
         Seq((storePath, Seq(idCol), shape)))
       if (tok.isDefined && manifestPath.nonEmpty)
-        Stats.upsertManifest(spark, storePath, manifestPath)
+        Stats.refreshManifest(spark, storePath, manifestPath)
       tok
     }
 
-  /** A clustered gate-store layout, declared once: the columns its
-    * `batch=`/`gen=` dirs hold, the cluster key its files are
-    * range-partitioned and sorted by (the key the footer manifest
-    * prunes on), the public compactor whose name its folds carry, and
-    * the column its `_deleted` set matches. The append, the compaction
-    * and the pruned read all derive from it.
+  /** A clustered gate store: its shared layout declaration
+    * ([[graft.operators.Layout.Clustered]] — columns, cluster key and
+    * the `batch=<id>` append with its per-dir manifest upsert) plus
+    * what belongs to the gates: the public compactor whose name its
+    * folds carry and the column its `_deleted` set matches.
     */
-  private final case class GateLayout(cols: Seq[String], key: Seq[String],
+  private final case class GateLayout(layout: Layout.Clustered,
                                       compactor: String,
                                       idCol: String = "id") {
-    private def clustered(rows: DataFrame, files: Int): DataFrame =
-      rows.select(cols.map(col): _*)
-        .repartitionByRange(files, key.map(col): _*)
-        .sortWithinPartitions(key.map(col): _*)
-
-    /** Write `rows` as the store's `batch=<batchId>` dir in `files`
-      * clustered files (overwrite-idempotent: a retry rewrites the
-      * same dir), then upsert the manifest rows of that dir only
-      * ([[graft.operators.Stats.upsertManifestFor]] — no listing of
-      * the rest of the store).
-      */
-    def append(spark: SparkSession, storePath: String,
-               manifestPath: String, batchId: Long, files: Int)
-              (rows: DataFrame): Unit = {
-      val dir = s"$storePath/batch=$batchId"
-      clustered(rows, files).write.mode("overwrite").parquet(dir)
-      Stats.upsertManifestFor(spark, storePath, manifestPath, dir)
-    }
-
     /** Fold the store into a clustered generation minus its `_deleted`
       * set ([[compactGateStore]], as `compactor`) and refresh the whole
       * manifest.
@@ -380,48 +360,38 @@ object StreamOps {
     def compact(spark: SparkSession, storePath: String,
                 manifestPath: String, filesOut: Int): Option[Long] =
       compactGateStore(spark, storePath, compactor, manifestPath, idCol)(
-        clustered(_, filesOut))
+        layout.laidOut(_, filesOut))
 
     /** The store's committed, manifest-pruned slice for `probe` (a
       * frame carrying the cluster key): the committed view's files the
-      * probe's key values can live in (all of them when no manifest is
-      * committed — manifest loss costs pruning, never rows), projected
-      * to `cols`, minus the `_deleted` set matched on `idCol`; `None`
+      * probe's key values can live in ([[Stats.touchedFiles]] — all of
+      * them when no manifest is committed), projected to the layout's
+      * columns, minus the `_deleted` set matched on `idCol`; `None`
       * when the store is empty or no file can match.
       */
     def slice(spark: SparkSession, storePath: String,
               manifestPath: String, probe: DataFrame): Option[DataFrame] = {
-      val viewDirs = Stats.committedViewDirs(spark, storePath)
-      val files =
-        if (viewDirs.isEmpty || !Stats.hasManifest(spark, manifestPath))
-          viewDirs
-        else key match {
-          case Seq(k) => Stats.touchedKeysKeptFilesUnder(spark, viewDirs,
-            manifestPath, k, probe)
-          case Seq(a, b) => Stats.touchedPairsKeptFilesUnder(spark,
-            viewDirs, manifestPath, a, b, probe)
-        }
+      val files = Stats.touchedFiles(spark,
+        Stats.committedViewDirs(spark, storePath), manifestPath,
+        layout.key, probe)
       if (files.isEmpty) None
       else Some(gateTombstones(storePath).without(spark,
-        spark.read.parquet(files: _*).select(cols.map(col): _*), idCol))
+        spark.read.parquet(files: _*).select(layout.cols.map(col): _*),
+        idCol))
     }
   }
 
-  /** Banded MinHash signatures, clustered by (band, bucket). */
-  private val BandedSigs = GateLayout(Seq("band", "bucket", "id", "sig"),
-    Seq("band", "bucket"), "compactNearDupStoreBanded")
-  /** Perceptual-hash windows (image/audio), clustered by (w, wk). */
-  private val MediaWindows = GateLayout(Seq("w", "wk", "id", "dhash"),
-    Seq("w", "wk"), "compactMediaStoreBanded")
-  /** Video frame hashes, clustered by fh. */
+  private val BandedSigs =
+    GateLayout(Layout.BandedSigs, "compactNearDupStoreBanded")
+  private val MediaWindows =
+    GateLayout(Layout.MediaWindows, "compactMediaStoreBanded")
   private val VideoFrames =
-    GateLayout(Seq("fh", "id"), Seq("fh"), "compactFrameStore")
-  /** Content-defined window fingerprints, clustered by fp. */
+    GateLayout(Layout.VideoFrames, "compactFrameStore")
   private val WindowFps =
-    GateLayout(Seq("fp", "id"), Seq("fp"), "compactWindowStoreGen")
-  /** The ER entity dictionary, clustered by blkh; tombstoned by eid. */
-  private val Entities = GateLayout(Seq("blkh", "eid", "nm"), Seq("blkh"),
-    "compactEntityStoreGen", "eid")
+    GateLayout(Layout.WindowFps, "compactWindowStoreGen")
+  /** The ER entity dictionary is tombstoned by eid. */
+  private val Entities =
+    GateLayout(Layout.Entities, "compactEntityStoreGen", "eid")
 
   /** The footer manifest path of a gate store: `manifestPath` when
     * given, else `<storePath>_manifest` (outside the store tree, so
@@ -523,7 +493,7 @@ object StreamOps {
     * `<storePath>_manifest` — OUTSIDE the store tree, so store reads
     * never see it), and each micro-batch's store scan OPENS only the
     * files its touched buckets can live in
-    * ([[graft.operators.Stats.touchedPairsKeptFilesUnder]] over the
+    * ([[graft.operators.Stats.touchedFiles]] over the
     * current generation view). Everything else matches
     * [[nearDupGateSink]]: same gate semantics (the shared banded core),
     * same idempotent batch-keyed appends, same generation/vacuum
@@ -557,10 +527,10 @@ object StreamOps {
       val survivors = Dedup.minhashIncrementalFromBands(batch,
           col(id), newBands, storeBands, batchRows, minEstJaccard)
         .localCheckpoint()
-      BandedSigs.append(spark, storePath, mPath, batchId,
-          appendFilesOut)(
+      BandedSigs.layout.appendBatch(
         newBands.join(survivors.select(col(id).as("__sid")),
-          col("id") === col("__sid"), "left_semi"))
+          col("id") === col("__sid"), "left_semi"),
+        storePath, mPath, batchId, appendFilesOut)
       survivors.write.mode("overwrite")
         .parquet(s"$outPath/batch=$batchId")
       if (compactDue(compactEvery, batchId))
@@ -633,10 +603,10 @@ object StreamOps {
       val survivors = batch
         .join(bc(dropIds), col(id) === col("__did"), "left_anti")
         .localCheckpoint()
-      WindowFps.append(spark, storePath, mPath, batchId,
-          appendFilesOut)(
+      WindowFps.layout.appendBatch(
         batchFps.join(survivors.select(col(id).as("__sid")),
-          col("id") === col("__sid"), "left_semi"))
+          col("id") === col("__sid"), "left_semi"),
+        storePath, mPath, batchId, appendFilesOut)
       survivors.write.mode("overwrite")
         .parquet(s"$outPath/batch=$batchId")
       if (compactDue(compactEvery, batchId))
@@ -647,7 +617,7 @@ object StreamOps {
 
   /** [[compactNearDupStoreBanded]] for the substring gate's window-
     * fingerprint store: the generation is rewritten fp-range-clustered
-    * (the layout [[graft.operators.Stats.touchedKeysKeptFilesUnder]]
+    * (the layout [[graft.operators.Stats.touchedFiles]]
     * prunes) and the manifest refreshed afterwards.
     */
   def compactWindowStoreGen(spark: SparkSession, storePath: String,
@@ -730,7 +700,7 @@ object StreamOps {
     * layout), a footer manifest rides beside the store (default
     * `<storePath>_manifest`), and each micro-batch's store scan OPENS
     * only the files its own window keys can live in
-    * ([[graft.operators.Stats.touchedPairsKeptFilesUnder]] over the
+    * ([[graft.operators.Stats.touchedFiles]] over the
     * current generation view). Gate semantics are
     * [[mediaDedupGateSink]]'s exactly (the shared band-level core, so
     * results are micro-batch-boundary deterministic and exact for
@@ -771,9 +741,9 @@ object StreamOps {
       val survivors = hashes
         .join(dropIds, Seq("media_id"), "left_anti")
         .localCheckpoint()
-      MediaWindows.append(spark, storePath, mPath, batchId,
-          appendFilesOut)(
-        Multimodal.dhashWindowRows(survivors.where(col("dhash").isNotNull)))
+      MediaWindows.layout.appendBatch(
+        Multimodal.dhashWindowRows(survivors.where(col("dhash").isNotNull)),
+        storePath, mPath, batchId, appendFilesOut)
       survivors.select(col("media_id"))
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       if (compactDue(compactEvery, batchId))
@@ -792,7 +762,7 @@ object StreamOps {
     * smaller-id doc of the same batch; survivors' ids land in
     * `outPath` and survivors' (fh, id) rows append fh-clustered so
     * each later batch's store scan opens only touched-fh files
-    * ([[graft.operators.Stats.touchedKeysKeptFilesUnder]]).
+    * ([[graft.operators.Stats.touchedFiles]]).
     * EMPTY payloads chunk to no frames: they survive and are never
     * stored — the dead-letter stance. (A truncated payload's partial
     * prefix frame IS evidence, deliberately: re-muxed prefixes are the
@@ -834,10 +804,10 @@ object StreamOps {
       val survivors = media.select(col("media_id")).distinct()
         .join(dropIds, Seq("media_id"), "left_anti")
         .localCheckpoint()
-      VideoFrames.append(spark, storePath, mPath, batchId,
-          appendFilesOut)(
+      VideoFrames.layout.appendBatch(
         frames.join(survivors.select(col("media_id").as("id")),
-          Seq("id"), "left_semi"))
+          Seq("id"), "left_semi"),
+        storePath, mPath, batchId, appendFilesOut)
       survivors
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       if (compactDue(compactEvery, batchId))
@@ -978,9 +948,10 @@ object StreamOps {
         .localCheckpoint()
       val keepIds = survivors.select(col("mid").as("id"))
       arms.zip(Seq(newBands, ipw, apw, frames)).foreach {
-        case ((layout, store), rows) =>
-          layout.append(spark, store, manifestOf(store, ""), batchId,
-            appendFilesOut)(rows.join(keepIds, Seq("id"), "left_semi"))
+        case ((gate, store), rows) =>
+          gate.layout.appendBatch(rows.join(keepIds, Seq("id"),
+            "left_semi"), store, manifestOf(store, ""), batchId,
+            appendFilesOut)
       }
       survivors.select(col("mid"))
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
@@ -1021,7 +992,7 @@ object StreamOps {
         col(vec).as("vec")).localCheckpoint()
       val tomb = gateTombstones(storePath)
       val storeCodes = gateStoreView(spark, s"$storePath/codes",
-          Seq("id", "table", "bucket"))
+          Layout.CodeBuckets.cols)
         .map(tomb.without(spark, _))
         .getOrElse(Dedup.embeddingCodes(base.limit(0), col("id"),
           col("vec"), planes, tables, dim))
@@ -1059,8 +1030,9 @@ object StreamOps {
                         filesOut: Int): Option[Long] = {
     val Seq(tokC, tokV) = gateTombstones(storePath).foldWithout(spark,
       "compactEmbedStore", Seq(
-        (s"$storePath/codes", Seq("id"), _.select(col("id"), col("table"),
-          col("bucket")).repartition(filesOut)),
+        (s"$storePath/codes", Seq("id"),
+          _.select(Layout.CodeBuckets.cols.map(col): _*)
+            .repartition(filesOut)),
         (s"$storePath/vecs", Seq("id"),
           _.select(col("id"), col("vec")).repartition(filesOut))))
     tokC.orElse(tokV)
@@ -1268,7 +1240,7 @@ object StreamOps {
     * persists blkh-range-clustered `batch=<id>` dirs
     * (overwrite-idempotent) with a footer manifest, each batch's store
     * scan opens only touched-block files
-    * ([[graft.operators.Stats.touchedKeysKeptFilesUnder]]), the
+    * ([[graft.operators.Stats.touchedFiles]]), the
     * in-block compare is capped by `maxBlock` pre-counted over the
     * combined slice∪batch (the batch-twin cap semantics), and
     * `compactEvery` folds batch dirs into blkh-clustered generations
@@ -1310,8 +1282,8 @@ object StreamOps {
       batchRec
         .join(survEnts.select(col("nm")), Seq("nm"), "left_semi")
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      Entities.append(spark, storePath, mPath, batchId,
-        appendFilesOut)(survEnts)
+      Entities.layout.appendBatch(survEnts, storePath, mPath, batchId,
+        appendFilesOut)
       if (compactDue(compactEvery, batchId))
         compactEntityStoreGen(spark, storePath, mPath,
           compactFilesOut): Unit

@@ -264,4 +264,34 @@ class Bm25IndexSpec extends SparkSuite {
     assert(kept.nonEmpty && kept.size < all.size,
       s"kept ${kept.size} of ${all.size}")
   }
+
+  test("appendBm25Index upserts its own batch dirs only: after three " +
+      "appends each manifest covers exactly its committed view's " +
+      "files, and a one-term probe keeps fewer postings files") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-bm25man-").toString + "/idx"
+    Retrieval.writeBm25Index(corpus.where(col("doc_id") < 3),
+      col("doc_id"), col("text"), dir, filesOut = 4)
+    for ((b, lo) <- Seq((1L, 3L), (2L, 5L), (3L, 7L)))
+      Retrieval.appendBm25Index(corpus.where(col("doc_id") >= lo &&
+          col("doc_id") < lo + 2),
+        col("doc_id"), col("text"), dir, batchId = b)
+    def paths(files: Seq[String]): Set[String] =
+      files.map(f => new java.net.URI(f).getPath).toSet
+    def viewFiles(art: String): Set[String] =
+      paths(Stats.committedViewDirs(spark, s"$dir/$art")
+        .flatMap(p => spark.read.parquet(p).inputFiles))
+    for (art <- Seq("postings", "doclen")) {
+      val covered = paths(spark.read.parquet(s"$dir/${art}_manifest")
+        .select(col("file")).distinct().as[String].collect().toSeq)
+      assert(covered == viewFiles(art), s"$art manifest vs view")
+    }
+    val view = viewFiles("postings")
+    val kept = Stats.touchedKeysKeptFilesUnder(spark,
+      Stats.committedViewDirs(spark, s"$dir/postings"),
+      s"$dir/postings_manifest", "th",
+      Seq("merge").toDF("term").select(xxhash64(col("term")).as("th")))
+    assert(kept.nonEmpty && kept.size < view.size,
+      s"kept ${kept.size} of ${view.size}")
+  }
 }
