@@ -4,15 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One incremental keyed store on the shared `gen=`/`batch=` protocol —
-  * the module every graph store family declares its store(s) through,
-  * so the layout, the fold and the manifest policy live here once.
+  * the module every batch-sequenced store declares itself through (the
+  * graph families, the edge store, PQ codes, PCA moments, the k-center
+  * coreset, KMV units, BM25 stats and every deleted-id set), so the
+  * layout, the fold and the manifest policy live here once.
   *
   * Layout: appends land in `<root>/batch=<id>`, superseding rebuilds
   * and compaction folds in `<root>/gen=<tok>` ([[Stats
   * .committedViewDirs]] resolves the committed view). Every row carries
   * the batch that wrote it in `__b`. Files are range-partitioned on
   * `cluster` (default: the key) and sorted on `cluster ++ key` within
-  * each file, so a key's rows sit in few files. With `manifest` on, a
+  * each file, so a key's rows sit in few files; a keyless store is
+  * one file per write. With `manifest` on, a
   * sibling footer manifest `<root>_manifest` — outside the root, so
   * its own parquet never pollutes the store's recursive listings —
   * lets probes open only the files a key set can live in.
@@ -21,7 +24,11 @@ import org.apache.spark.sql.functions._
   * ([[Stats.openCommittedStore]] named `name`) and fold it per key
   * with `fold`; a view "before batch b" reads only rows with
   * `__b` < b, which is both the retry-stable prior state of an append
-  * and the as-of snapshot read.
+  * and the as-of snapshot read. A newest-wins store may declare a
+  * `deletedWhen` marker over its values: a key whose newest row
+  * matches it is left out of the view and dropped by compaction.
+  * A store with `hasBase` off has no `batch=0` base write, so its
+  * appends may start at batch 0.
   *
   * A family's deleted-id set is a KeyedStore too
   * ([[KeyedStore.tombstones]]): its verbs are the whole tombstone
@@ -41,14 +48,21 @@ private[graft] final case class KeyedStore(
     fold: KeyedStore.Fold,
     cluster: Seq[String] = Nil,
     manifest: Boolean = true,
-    leaseRoot: String = "") {
+    leaseRoot: String = "",
+    deletedWhen: Option[Column] = None,
+    hasBase: Boolean = true) {
   import KeyedStore._
 
   require(fold match {
     case NewestWins => values.nonEmpty
     case MinValue => values.size == 1
     case Membership | EarliestBatch => values.isEmpty
+    case Rows => true
+    case Sum => values.nonEmpty
   }, s"$name: fold $fold does not fit values $values")
+  require((key.nonEmpty || fold == Sum) &&
+    (deletedWhen.isEmpty || fold == NewestWins),
+    s"$name: fold $fold does not fit key $key")
 
   private val keyNames: Seq[String] = key.map(_._1)
   private val keyCols: Seq[Column] = keyNames.map(col)
@@ -63,9 +77,11 @@ private[graft] final case class KeyedStore(
     Stats.withWriterLease(spark, Seq(familyRoot), owner)(body)
 
   // the store's file layout: `parts` files range-partitioned on the
-  // cluster key, each sorted on cluster ++ key
+  // cluster key, each sorted on cluster ++ key; a keyless store is one
+  // file
   private def laidOut(rows: DataFrame, parts: Int): DataFrame =
-    rows.repartitionByRange(parts, clusterNames.map(col): _*)
+    if (clusterNames.isEmpty) rows.coalesce(1)
+    else rows.repartitionByRange(parts, clusterNames.map(col): _*)
       .sortWithinPartitions((clusterNames ++ keyNames).distinct.map(col): _*)
 
   // the declared columns tagged with batch `b`, laid out into `dir`
@@ -116,13 +132,15 @@ private[graft] final case class KeyedStore(
     }
 
   /** An append operation: `body` runs under the lease once `batchId` is
-    * checked to be above the base and on the monotone sequence of this
-    * store and `siblings` ([[Stats.requireMonotoneBatch]]).
+    * checked to be above the base (when the store has one) and on the
+    * monotone sequence of this store and `siblings`
+    * ([[Stats.requireMonotoneBatch]]).
     */
   def appending[T](spark: SparkSession, batchId: Long, who: String,
                    siblings: KeyedStore*)(body: => T): T =
     leased(spark, s"$who(batch)") {
-      require(batchId >= 1L, s"$who: batchId 0 is the store's base")
+      require(!hasBase || batchId >= 1L,
+        s"$who: batchId 0 is the store's base")
       Stats.requireMonotoneBatch(spark, (this +: siblings).map(_.root),
         batchId, who)
       body
@@ -147,26 +165,43 @@ private[graft] final case class KeyedStore(
     Stats.openCommittedStore(spark, root,
       key ++ values :+ ("__b" -> "bigint"), name)
 
-  /** Fold raw store rows written before `beforeBatch` to one view row
-    * per key (key and value columns, no `__b`).
+  /** Fold raw store rows written before `beforeBatch` to the view: one
+    * row per key, or every row for [[Rows]] (key and value columns, no
+    * `__b`).
     */
   def foldRows(raw: DataFrame, beforeBatch: Long): DataFrame = {
     val rows = raw.where(col("__b") < beforeBatch)
     fold match {
       case NewestWins =>
-        newest(rows).select(keyCols ++ valueNames.map(v =>
-          col(s"m.$v").as(v)): _*)
+        live(newest(rows).select(keyCols ++ valueNames.map(v =>
+          col(s"m.$v").as(v)): _*))
       case MinValue =>
         rows.groupBy(keyCols: _*)
           .agg(min(col(valueNames.head)).as(valueNames.head))
       case Membership | EarliestBatch =>
         rows.select(keyCols: _*).distinct()
+      case Rows =>
+        rows.select(keyCols ++ valueNames.map(col): _*)
+      case Sum => sums(rows)
     }
   }
 
   private def newest(rows: DataFrame): DataFrame =
     rows.groupBy(keyCols: _*)
       .agg(max(struct(("__b" +: valueNames).map(col): _*)).as("m"))
+
+  // newest-wins rows minus the keys whose newest row is a deletion
+  private def live(rows: DataFrame): DataFrame =
+    deletedWhen.fold(rows)(d => rows.where(!d))
+
+  // per-key (or, keyless, whole-store) sums in the declared types,
+  // plus `more` aggregates
+  private def sums(rows: DataFrame, more: Column*): DataFrame = {
+    val aggs = values.map { case (v, t) =>
+      coalesce(sum(col(v)), lit(0)).cast(t).as(v) } ++ more
+    if (keyCols.isEmpty) rows.agg(aggs.head, aggs.tail: _*)
+    else rows.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+  }
 
   /** The view as it stood before `beforeBatch`. */
   def view(spark: SparkSession, beforeBatch: Long): DataFrame =
@@ -182,12 +217,12 @@ private[graft] final case class KeyedStore(
     view(spark, asOf + 1)
   }
 
-  // the compaction fold: one row per key, keeping the `__b` the fold's
-  // retry and as-of reads depend on
+  // the compaction fold: one row per key (every row for Rows), keeping
+  // the `__b` the fold's retry and as-of reads depend on
   private def compacted(rows: DataFrame): DataFrame = fold match {
     case NewestWins =>
-      newest(rows).select(keyCols ++ valueNames.map(v =>
-        col(s"m.$v").as(v)) :+ col("m.__b").as("__b"): _*)
+      live(newest(rows).select(keyCols ++ valueNames.map(v =>
+        col(s"m.$v").as(v)) :+ col("m.__b").as("__b"): _*))
     case MinValue =>
       val v = valueNames.head
       rows.groupBy(keyCols: _*)
@@ -197,7 +232,16 @@ private[graft] final case class KeyedStore(
       rows.groupBy(keyCols: _*).agg(max(col("__b")).as("__b"))
     case EarliestBatch =>
       rows.groupBy(keyCols: _*).agg(min(col("__b")).as("__b"))
+    case Rows =>
+      rows.select(keyCols ++ valueNames.map(col) :+ col("__b"): _*)
+    case Sum => sums(rows, max(col("__b")).as("__b"))
   }
+
+  /** The store's compaction shape in `filesOut` files — what
+    * [[compact]] folds with, and a [[foldWithout]] member's shape.
+    */
+  def compaction(filesOut: Int): DataFrame => DataFrame =
+    rows => laidOut(compacted(rows), filesOut)
 
   /** Fold the committed view into one generation
     * ([[Stats.compactCommittedStore]]) in `filesOut` files and refresh
@@ -207,7 +251,7 @@ private[graft] final case class KeyedStore(
       : Option[Long] =
     leased(spark, owner) {
       val tok = Stats.compactCommittedStore(spark, root,
-        rows => laidOut(compacted(rows), filesOut))
+        compaction(filesOut))
       if (tok.isDefined) refreshManifest(spark)
       tok
     }
@@ -272,7 +316,8 @@ private[graft] final case class KeyedStore(
     }
 
   /** Fold each `(root, on, shape)` store's committed view minus the
-    * deleted ids (matched on `on`) through `shape`
+    * deleted ids (matched on `on`) through `shape` (a declared store's
+    * is its [[compaction]])
     * ([[Stats.compactCommittedStore]]), run `use` on the staged set,
     * then — when every store folded and a set is committed — clear the
     * set and, if it held ids, record the family's retraction floor at
@@ -302,8 +347,8 @@ private[graft] final case class KeyedStore(
 }
 
 private[graft] object KeyedStore {
-  /** How a store folds its rows to one view row per key. A closed set:
-    * the folds the graph families use, nothing else.
+  /** How a store folds its rows to its view. A closed set: the folds
+    * the declared stores use, nothing else.
     */
   sealed trait Fold
   /** Newest batch wins per key: `max(struct(__b, values…))`. */
@@ -322,6 +367,16 @@ private[graft] object KeyedStore {
     * predates it.
     */
   case object EarliestBatch extends Fold
+  /** No per-key fold: the view is every row written before the batch
+    * (keys never repeat across batches, or a repeat is meant as a
+    * second row); compaction keeps every row and its `__b`.
+    */
+  case object Rows extends Fold
+  /** Additive values: the view sums each key's values (the whole store
+    * when keyless) in their declared types; compaction keeps each key's
+    * largest `__b`.
+    */
+  case object Sum extends Fold
 
   /** Where a family's deleted-id set lives, relative to the family
     * root: `<root>_deleted` (the id-keyed gate stores), `<root>/deleted`

@@ -200,14 +200,17 @@ object Overlap {
   def writeKmvUnitStore(df: DataFrame, group: Column, unit: Column,
                         key: Column, k: Int, storeDir: String,
                         filesOut: Int = 2): Unit =
-    Stats.withWriterLease(df.sparkSession, Seq(storeDir),
-        "writeKmvUnitStore(batch)") {
-      kmvUnitSketches(df, group, unit, key, k)
-        .repartitionByRange(filesOut, col("grp"), col("unit"))
-        .sortWithinPartitions(col("grp"), col("unit"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$storeDir/batch=0")
-    }
+    kmvUnitStore(storeDir).writeBase(df.sparkSession,
+      "writeKmvUnitStore(batch)", filesOut)(
+      kmvUnitSketches(df, group, unit, key, k))
+
+  /** The sketch store: (grp, unit) → sketch; unit ids never repeat
+    * across batches, so the view is every row ([[KeyedStore.Rows]]).
+    */
+  private[graft] def kmvUnitStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "kmvUnitStore",
+      Seq("grp" -> "string", "unit" -> "bigint"),
+      Seq("sketch" -> "array<bigint>"), KeyedStore.Rows, manifest = false)
 
   /** Append a NEW batch's per-unit sketches (`batch=<id>`,
     * overwrite-idempotent, monotone-guarded). Unit ids must be new —
@@ -217,18 +220,13 @@ object Overlap {
   def appendKmvUnitSketches(batch: DataFrame, group: Column,
                             unit: Column, key: Column, k: Int,
                             storeDir: String, batchId: Long,
-                            filesOut: Int = 2): Unit =
-    Stats.withWriterLease(batch.sparkSession, Seq(storeDir),
-        "appendKmvUnitSketches(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeKmvUnitStore base")
-    Stats.requireMonotoneBatch(batch.sparkSession,
-      Seq(storeDir, kmvTombstones(storeDir).root), batchId,
-      "appendKmvUnitSketches")
-    kmvUnitSketches(batch, group, unit, key, k)
-      .repartitionByRange(filesOut, col("grp"), col("unit"))
-      .sortWithinPartitions(col("grp"), col("unit"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
+                            filesOut: Int = 2): Unit = {
+    val store = kmvUnitStore(storeDir)
+    store.appending(batch.sparkSession, batchId, "appendKmvUnitSketches",
+        kmvTombstones(storeDir)) {
+      store.append(batch.sparkSession, "appendKmvUnitSketches(batch)",
+        batchId, filesOut)(kmvUnitSketches(batch, group, unit, key, k))
+    }
   }
 
   /** TOMBSTONE retraction for the sketch store: the unit ids land in
@@ -242,10 +240,12 @@ object Overlap {
     */
   def deleteKmvUnits(ids: DataFrame, storeDir: String, batchId: Long,
                      filesOut: Int = 1): Unit = {
-    require(batchId >= 1L, "batchId 0 is the writeKmvUnitStore base")
     val tomb = kmvTombstones(storeDir)
-    Rounds.free(tomb.writeFresh(ids.sparkSession, "deleteKmvUnits",
-      batchId, Seq(storeDir, tomb.root), filesOut)(ids))
+    kmvUnitStore(storeDir).appending(ids.sparkSession, batchId,
+        "deleteKmvUnits", tomb) {
+      Rounds.free(tomb.writeFresh(ids.sparkSession, "deleteKmvUnits",
+        batchId, parts = filesOut)(ids))
+    }
   }
 
   // the store's `deleted/` unit set
@@ -260,9 +260,7 @@ object Overlap {
     */
   def kmvStoreSketches(spark: SparkSession, storeDir: String, k: Int)
       : DataFrame = {
-    val rows = Stats.openCommittedStore(spark, storeDir,
-      Seq("grp" -> "string", "unit" -> "bigint",
-        "sketch" -> "array<bigint>"), "kmvUnitStore")
+    val rows = kmvUnitStore(storeDir).current(spark)
     kmvTombstones(storeDir).without(spark, rows).groupBy(col("grp"))
       .agg(slice(array_sort(array_distinct(flatten(
         collect_list(col("sketch"))))), 1, k).as("sketch"))
@@ -278,7 +276,5 @@ object Overlap {
                           filesOut: Int = 2): Option[Long] =
     kmvTombstones(storeDir).foldWithout(spark, "compactKmvUnitStore",
       Seq((storeDir, Seq("unit"),
-        _.select(col("grp"), col("unit"), col("sketch"))
-          .repartitionByRange(filesOut, col("grp"), col("unit"))
-          .sortWithinPartitions(col("grp"), col("unit"))))).head
+        kmvUnitStore(storeDir).compaction(filesOut)))).head
 }

@@ -117,11 +117,10 @@ object Retrieval {
     // per-batch stats row; the GLOBAL (n_docs, sum_dl) is derived by
     // folding committed batch rows at read time ([[bm25IndexStats]]) —
     // no read-modify-overwrite step exists to race or double-fold
-    doclen.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexDir/stats/batch=$batchId")
+    bm25Stats(indexDir).append(df.sparkSession, "writeBm25Batch(batch)",
+        batchId, 1)(
+      doclen.agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("sum_dl")))
   }
 
   def writeBm25Index(df: DataFrame, id: Column, text: Column,
@@ -153,17 +152,11 @@ object Retrieval {
   def appendBm25Index(df: DataFrame, id: Column, text: Column,
                       indexDir: String, batchId: Long,
                       filesOut: Int = 4): Unit =
-    Stats.withWriterLease(df.sparkSession, Seq(indexDir),
-        "appendBm25Index(batch)") {
-    val spark = df.sparkSession
-    require(batchId > 0L, "appendBm25Index: batchId 0 is the base write")
-    // the stats store sees every append AND delete, so its newest
-    // token is the index's monotone sequence head
-    Stats.requireMonotoneBatch(spark, Seq(s"$indexDir/stats"), batchId,
-      "appendBm25Index")
+    bm25Stats(indexDir).appending(df.sparkSession, batchId,
+        "appendBm25Index") {
     writeBm25Batch(df, id, text, indexDir, batchId, filesOut)
     for (art <- Seq("postings", "doclen"))
-      Stats.upsertManifestFor(spark, s"$indexDir/$art",
+      Stats.upsertManifestFor(df.sparkSession, s"$indexDir/$art",
         s"$indexDir/${art}_manifest", s"$indexDir/$art/batch=$batchId")
   }
 
@@ -180,8 +173,8 @@ object Retrieval {
     * idempotent at the SEMANTIC level on top of the per-batch
     * overwrite idempotence. `batchId` shares the index's monotone
     * sequence: it must exceed every previously appended OR deleted
-    * batch (both write a `stats/batch=<id>` row — guarded by
-    * [[Stats.requireMonotoneBatch]]). Deletions apply at read time
+    * batch (both write a stats row — guarded by the stats store's
+    * [[KeyedStore.appending]]). Deletions apply at read time
     * until [[compactBm25Index]] drops the rows physically.
     *
     * A tombstoned doc id is UNREINSTATABLE: the read-time filter is
@@ -196,22 +189,18 @@ object Retrieval {
   def deleteBm25Docs(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String, ids: DataFrame,
                      batchId: Long, filesOut: Int = 1): Unit =
-    Stats.withWriterLease(spark, Seq(indexDir),
-        "deleteBm25Docs(batch)") {
-    require(batchId > 0L, "deleteBm25Docs: batchId 0 is the base write")
+    bm25Stats(indexDir).appending(spark, batchId, "deleteBm25Docs") {
     // the tombstone set FIRST, the stats correction second: the
     // correction is derived from exactly the fresh set, and a retry
     // (same batchId) recomputes the same set because the prior view
     // reads only batches < batchId
     val fresh = bm25Tombstones(indexDir).writeFresh(spark,
-      "deleteBm25Docs", batchId, Seq(s"$indexDir/stats"), filesOut)(ids)
-    indexTouched(spark, indexDir, "doclen", "id", fresh)
-      .join(fresh, Seq("id"), "left_semi")
-      .agg((-count(lit(1))).as("n_docs"),
-        (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexDir/stats/batch=$batchId")
+      "deleteBm25Docs", batchId, parts = filesOut)(ids)
+    bm25Stats(indexDir).append(spark, "deleteBm25Docs(batch)", batchId, 1)(
+      indexTouched(spark, indexDir, "doclen", "id", fresh)
+        .join(fresh, Seq("id"), "left_semi")
+        .agg((-count(lit(1))).as("n_docs"),
+          (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl")))
   }
 
   /** The index's tombstoned doc ids, `deleted/` (an index that has
@@ -219,6 +208,16 @@ object Retrieval {
     */
   private def bm25Tombstones(indexDir: String): KeyedStore =
     KeyedStore.tombstones(indexDir, "/deleted", "bm25DeletedIds")
+
+  /** The index's additive stats store, `stats/`: one keyless
+    * (n_docs, sum_dl) row per append or delete, summed at read time;
+    * leased on the index root. Its newest token is the index's
+    * monotone sequence head (it sees every append AND delete).
+    */
+  private[graft] def bm25Stats(indexDir: String): KeyedStore =
+    KeyedStore(s"$indexDir/stats", "bm25IndexStats", Nil,
+      Seq("n_docs" -> "bigint", "sum_dl" -> "bigint"), KeyedStore.Sum,
+      manifest = false, leaseRoot = indexDir)
 
   /** Fold accumulated postings/doclen batch appends into ONE clustered
     * generation each (`gen=<maxBatchId>`, the
@@ -263,13 +262,8 @@ object Retrieval {
     * corpus-sized).
     */
   private def bm25IndexStats(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String): DataFrame = {
-    Stats.openCommittedStore(spark, s"$indexDir/stats",
-        Seq("n_docs" -> "bigint", "sum_dl" -> "bigint"),
-        "bm25IndexStats")
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-        coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl"))
-  }
+                             indexDir: String): DataFrame =
+    bm25Stats(indexDir).current(spark)
 
   /** The committed view of one index artifact (`postings` keyed on
     * th, `doclen` on id), opening only the files `probes` can live in

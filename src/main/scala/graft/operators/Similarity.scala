@@ -643,6 +643,16 @@ object Similarity {
 
   // ---------- incremental PQ-code store ----------
 
+  /** The PQ-code store: (vb → cell, codes, rn), newest batch wins per
+    * vb, a newest row with `cell < 0` is a tombstone, files clustered
+    * on (cell, vb).
+    */
+  private[graft] def pqCodeStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "pqCodeStore", Seq("vb" -> "bigint"),
+      Seq("cell" -> "int", "codes" -> "array<int>", "rn" -> "double"),
+      KeyedStore.NewestWins, cluster = Seq("cell", "vb"),
+      manifest = false, deletedWhen = Some(col("cell") < 0))
+
   /** Persist a [[pqEncode]] artifact as `batch=0` of an incremental
     * store on the shared gen=/batch= protocol, alongside the FROZEN
     * fit (coarse centroids, codebooks, residual mode) every later
@@ -665,12 +675,8 @@ object Similarity {
     savePqCodebooks(spark, books, s"$storeDir/fit_books")
     Seq(residual).toDF("residual").coalesce(1)
       .write.mode("overwrite").parquet(s"$storeDir/fit_mode")
-    pqEncode(corpus, cents, books, residual)
-      .withColumn("__b", lit(0L))
-      .repartitionByRange(filesOut, col("cell"), col("vb"))
-      .sortWithinPartitions(col("cell"), col("vb"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=0")
+    pqCodeStore(storeDir).writeBase(spark, "writePqCodeStore(batch)",
+      filesOut)(pqEncode(corpus, cents, books, residual))
   }
 
   /** The store's frozen fit: (coarse centroids, codebooks, residual
@@ -691,23 +697,17 @@ object Similarity {
     * the encoded batch.
     */
   def pqStoreAppend(newVecs: DataFrame, storeDir: String,
-                    batchId: Long, filesOut: Int = 4): DataFrame =
-    Stats.withWriterLease(newVecs.sparkSession, Seq(storeDir),
-        "pqStoreAppend(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writePqCodeStore base")
+                    batchId: Long, filesOut: Int = 4): DataFrame = {
     val spark = newVecs.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "pqStoreAppend")
-    val (cents, books, residual) = pqStoreFit(spark, storeDir)
-    val enc = Checkpoints.stage(
-      pqEncode(newVecs, cents, books, residual))
-    enc.withColumn("__b", lit(batchId))
-      .repartitionByRange(filesOut, col("cell"), col("vb"))
-      .sortWithinPartitions(col("cell"), col("vb"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
-    // enc is staged, so its data predates the overwrite safely
-    enc
+    val store = pqCodeStore(storeDir)
+    store.appending(spark, batchId, "pqStoreAppend") {
+      val (cents, books, residual) = pqStoreFit(spark, storeDir)
+      val enc = Checkpoints.stage(
+        pqEncode(newVecs, cents, books, residual))
+      store.append(spark, "pqStoreAppend(batch)", batchId, filesOut)(enc)
+      // enc is staged, so its data predates the overwrite safely
+      enc
+    }
   }
 
   /** TOMBSTONE deletes for the PQ-code store — the retraction path a
@@ -726,19 +726,14 @@ object Similarity {
     * lower-id append would be invisible and vacuumed.
     */
   def pqStoreDelete(ids: DataFrame, storeDir: String,
-                    batchId: Long, filesOut: Int = 4): Unit =
-    Stats.withWriterLease(ids.sparkSession, Seq(storeDir),
-        "pqStoreDelete(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writePqCodeStore base")
-    Stats.requireMonotoneBatch(ids.sparkSession, Seq(storeDir), batchId,
-      "pqStoreDelete")
-    ids.select(col("id").as("vb"), lit(-1).as("cell"),
-        array().cast("array<int>").as("codes"),
-        lit(0.0).as("rn"), lit(batchId).as("__b"))
-      .repartitionByRange(filesOut, col("vb"))
-      .sortWithinPartitions(col("vb"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
+                    batchId: Long, filesOut: Int = 4): Unit = {
+    val store = pqCodeStore(storeDir)
+    store.appending(ids.sparkSession, batchId, "pqStoreDelete") {
+      store.append(ids.sparkSession, "pqStoreDelete(batch)", batchId,
+          filesOut)(
+        ids.select(col("id").as("vb"), lit(-1).as("cell"),
+          array().cast("array<int>").as("codes"), lit(0.0).as("rn")))
+    }
   }
 
   /** The PQ-code store's CURRENT view (newest batch wins per vb;
@@ -746,15 +741,7 @@ object Similarity {
     * `encoded` feed for [[ivfTopKPq]].
     */
   def pqStoreCodes(spark: SparkSession, storeDir: String): DataFrame =
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("vb" -> "bigint", "cell" -> "int", "codes" -> "array<int>",
-          "rn" -> "double", "__b" -> "bigint"), "pqCodeStore")
-      .groupBy(col("vb"))
-      .agg(max(struct(col("__b"), col("cell"), col("codes"),
-        col("rn"))).as("m"))
-      .where(col("m.cell") >= 0)
-      .select(col("vb"), col("m.cell").as("cell"),
-        col("m.codes").as("codes"), col("m.rn").as("rn"))
+    pqCodeStore(storeDir).current(spark)
 
   /** Fold the PQ-code store's batches (newest per vb) into one
     * cell-clustered generation. Tombstoned ids drop PHYSICALLY here:
@@ -763,19 +750,8 @@ object Similarity {
     */
   def compactPqCodeStore(spark: SparkSession, storeDir: String,
                          filesOut: Int = 4): Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactPqCodeStore(batch)") {
-    Stats.compactCommittedStore(spark, storeDir,
-      _.groupBy(col("vb"))
-        .agg(max(struct(col("__b"), col("cell"), col("codes"),
-          col("rn"))).as("m"))
-        .where(col("m.cell") >= 0)
-        .select(col("vb"), col("m.cell").as("cell"),
-          col("m.codes").as("codes"), col("m.rn").as("rn"),
-          col("m.__b").as("__b"))
-        .repartitionByRange(filesOut, col("cell"), col("vb"))
-        .sortWithinPartitions(col("cell"), col("vb")))
-    }
+    pqCodeStore(storeDir).compact(spark, "compactPqCodeStore(batch)",
+      filesOut)
 
   /** IVF-PQ top-k: coarse-quantize into IVF cells, shortlist inside
     * the probed cells on PQ-compressed codes (each candidate costs m
@@ -1034,16 +1010,13 @@ object Similarity {
     * data.
     */
   def appendPcaMoments(batch: DataFrame, vec: Column, storeDir: String,
-                       batchId: Long, scale: Long = 1L << 20): Unit =
-    Stats.withWriterLease(batch.sparkSession, Seq(storeDir),
-        "appendPcaMoments(batch)") {
-    Stats.requireMonotoneBatch(batch.sparkSession,
-      Seq(storeDir, pcaTombstones(storeDir).root), batchId,
-      "appendPcaMoments")
-    pcaMoments(batch, vec, scale)
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
+                       batchId: Long, scale: Long = 1L << 20): Unit = {
+    val store = pcaMomentStore(storeDir)
+    store.appending(batch.sparkSession, batchId, "appendPcaMoments",
+        pcaTombstones(storeDir)) {
+      store.append(batch.sparkSession, "appendPcaMoments(batch)",
+        batchId, 1)(pcaMoments(batch, vec, scale))
+    }
   }
 
   /** RETRACTION for the additive PCA moment store — the
@@ -1073,24 +1046,30 @@ object Similarity {
     */
   def deletePcaMoments(deleted: DataFrame, id: Column, vec: Column,
                        storeDir: String, batchId: Long,
-                       scale: Long = 1L << 20): Unit =
-    Stats.withWriterLease(deleted.sparkSession, Seq(storeDir),
-        "deletePcaMoments(batch)") {
-    val rows = deleted.select(id.as("id"), vec.as("__v"))
-    // tombstone set first, the negative moment row second: a retry
-    // (same batchId) recomputes the same fresh set because the prior
-    // view reads only batches < batchId
-    val tomb = pcaTombstones(storeDir)
-    val fresh = tomb.writeFresh(deleted.sparkSession, "deletePcaMoments",
-      batchId, Seq(storeDir, tomb.root))(rows)
-    pcaMoments(rows.join(fresh, Seq("id"), "left_semi"), col("__v"),
-        scale)
-      .select(col("i"), col("j"),
-        (-col("v")).cast("decimal(38,0)").as("v"))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
+                       scale: Long = 1L << 20): Unit = {
+    val spark = deleted.sparkSession
+    val (store, tomb) = (pcaMomentStore(storeDir), pcaTombstones(storeDir))
+    store.appending(spark, batchId, "deletePcaMoments", tomb) {
+      val rows = deleted.select(id.as("id"), vec.as("__v"))
+      // tombstone set first, the negative moment row second: a retry
+      // (same batchId) recomputes the same fresh set because the prior
+      // view reads only batches < batchId
+      val fresh = tomb.writeFresh(spark, "deletePcaMoments", batchId)(rows)
+      store.append(spark, "deletePcaMoments(batch)", batchId, 1)(
+        pcaMoments(rows.join(fresh, Seq("id"), "left_semi"), col("__v"),
+            scale)
+          .select(col("i"), col("j"),
+            (-col("v")).cast("decimal(38,0)").as("v")))
+    }
   }
+
+  /** The additive moment store: (i, j) → v, summed per key; no base
+    * write, so the first append may be batch 0.
+    */
+  private[graft] def pcaMomentStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "pcaMomentStore", Seq("i" -> "int", "j" -> "int"),
+      Seq("v" -> "decimal(38,0)"), KeyedStore.Sum, manifest = false,
+      hasBase = false)
 
   /** The moment store's tombstoned ids, `deleted/` — permanent: it is
     * compacted with the store, never cleared.
@@ -1102,15 +1081,11 @@ object Similarity {
     * [[pcaMoments]] over the union of all committed batches.
     */
   def pcaMomentsFromStore(spark: SparkSession, storeDir: String)
-      : DataFrame =
-    Stats.committedViewDirs(spark, storeDir) match {
-      case Nil => spark.emptyDataFrame
-      case _ => Stats.openCommittedStore(spark, storeDir,
-          Seq("i" -> "int", "j" -> "int", "v" -> "decimal(38,0)"),
-          "pcaMomentStore")
-        .groupBy(col("i"), col("j"))
-        .agg(sum(col("v")).cast("decimal(38,0)").as("v"))
-    }
+      : DataFrame = {
+    val store = pcaMomentStore(storeDir)
+    if (store.committedDirs(spark).isEmpty) spark.emptyDataFrame
+    else store.current(spark)
+  }
 
   /** OPTIMIZE for the moment store: folds committed batches into one
     * pre-summed generation via the shared compaction primitive —
@@ -1123,17 +1098,15 @@ object Similarity {
     * permanent double-delete guard (O(deleted ids) — tiny).
     */
   def compactPcaMoments(spark: SparkSession, storeDir: String)
-      : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storeDir),
-        "compactPcaMoments(batch)") {
-    val tok = Stats.compactCommittedStore(spark, storeDir, df =>
-      df.groupBy(col("i"), col("j"))
-        .agg(sum(col("v")).cast("decimal(38,0)").as("v"))
-        .coalesce(1))
-    if (tok.isDefined)
-      pcaTombstones(storeDir).compact(spark, "compactPcaMoments(batch)", 1)
-        : Unit
-    tok
+      : Option[Long] = {
+    val store = pcaMomentStore(storeDir)
+    store.leased(spark, "compactPcaMoments(batch)") {
+      val tok = store.compact(spark, "compactPcaMoments(batch)", 1)
+      if (tok.isDefined)
+        pcaTombstones(storeDir).compact(spark, "compactPcaMoments(batch)",
+          1): Unit
+      tok
+    }
   }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix —
@@ -1304,22 +1277,23 @@ object Similarity {
     */
   def writeKCenterStore(corpus: DataFrame, id: Column, vec: Column,
                         k: Int, storeDir: String): Unit =
-    Stats.withWriterLease(corpus.sparkSession, Seq(storeDir),
-        "writeKCenterStore(batch)") {
-      kCenterTrace(corpus, id, vec, k)
-        .withColumn("__b", lit(0L))
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$storeDir/batch=0")
-    }
+    kCenterStore(storeDir).writeBase(corpus.sparkSession,
+      "writeKCenterStore(batch)", 1)(kCenterTrace(corpus, id, vec, k))
+
+  /** The coreset store: rank → (id, __v, __dxx, radius), one file per
+    * write; ranks never repeat across batches, so the view is every
+    * row ([[KeyedStore.Rows]]).
+    */
+  private[graft] def kCenterStore(storeDir: String): KeyedStore =
+    KeyedStore(storeDir, "kCenterStore", Seq("rank" -> "int"),
+      Seq("id" -> "bigint", "__v" -> "array<float>",
+        "__dxx" -> "double", "radius" -> "double"),
+      KeyedStore.Rows, manifest = false)
 
   /** The store's current coreset: (rank, id, radius), rank-ordered. */
   def kCenterStoreCenters(spark: org.apache.spark.sql.SparkSession,
                           storeDir: String): DataFrame =
-    Stats.openCommittedStore(spark, storeDir,
-        Seq("rank" -> "int", "id" -> "bigint",
-          "__v" -> "array<float>", "__dxx" -> "double",
-          "radius" -> "double", "__b" -> "bigint"), "kCenterStore")
+    kCenterStore(storeDir).current(spark)
       .select(col("rank"), col("id"), col("radius"))
 
   /** RETRACTION for the k-center coreset store — the trace twist on
@@ -1341,17 +1315,9 @@ object Similarity {
   def rebuildKCenterStore(survivingCorpus: DataFrame, id: Column,
                           vec: Column, k: Int, storeDir: String)
       : Long =
-    Stats.withWriterLease(survivingCorpus.sparkSession, Seq(storeDir),
-        "rebuildKCenterStore(batch)") {
-    val spark = survivingCorpus.sparkSession
-    val tok = Stats.supersedingToken(spark, Seq(storeDir))
-    kCenterTrace(survivingCorpus, id, vec, k)
-      .withColumn("__b", lit(tok))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/gen=$tok")
-    tok
-  }
+    kCenterStore(storeDir).supersede(survivingCorpus.sparkSession,
+      "rebuildKCenterStore(batch)", 1)(
+      kCenterTrace(survivingCorpus, id, vec, k))
 
   /** INCREMENTAL k-center coreset maintenance: extend the STORED
     * coreset with `kNew` farthest-first picks drawn from the new
@@ -1375,19 +1341,12 @@ object Similarity {
     */
   def kCenterExtend(batch: DataFrame, id: Column, vec: Column,
                     storeDir: String, batchId: Long, kNew: Int)
-      : DataFrame =
-    Stats.withWriterLease(batch.sparkSession, Seq(storeDir),
-        "kCenterExtend(batch)") {
-    require(batchId >= 1L, "batchId 0 is the writeKCenterStore base")
-    require(kNew >= 1, "kNew must be >= 1")
+      : DataFrame = {
     val spark = batch.sparkSession
-    Stats.requireMonotoneBatch(spark, Seq(storeDir), batchId,
-      "kCenterExtend")
-    val stored = Checkpoints.stage(
-      spark.read.parquet(Stats.committedViewDirs(spark, storeDir): _*)
-        .where(col("__b") < batchId)
-        .select(col("rank"), col("id"), col("__v"), col("__dxx"),
-          col("radius")))
+    val store = kCenterStore(storeDir)
+    store.appending(spark, batchId, "kCenterExtend") {
+    require(kNew >= 1, "kNew must be >= 1")
+    val stored = Checkpoints.stage(store.view(spark, batchId))
     val ranks = stored.select(col("rank"))
       .as[Int](org.apache.spark.sql.Encoders.scalaInt)
       .collect().sorted
@@ -1430,12 +1389,10 @@ object Similarity {
       i += 1
     }
     val added = Checkpoints.stage(newCenters.reduce(_.unionAll(_)))
-    added.withColumn("__b", lit(batchId))
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch=$batchId")
+    store.append(spark, "kCenterExtend(batch)", batchId, 1)(added)
     stored.select(col("rank"), col("id"), col("radius"))
       .unionAll(added.select(col("rank"), col("id"), col("radius")))
+    }
   }
 
   // ---------- Late interaction (MaxSim, ColBERT-style) ----------

@@ -193,9 +193,9 @@ object Stats {
     */
   def readSkipping(spark: SparkSession, dir: String, column: String,
                    lo: Double, hi: Double): DataFrame =
-    prunedRead(spark, dir,
-      skippableFiles(spark, dir, column, lo, hi),
-      col(column) >= lo && col(column) <= hi)
+    scanKept(spark, Seq(dir), unskipped(spark, dir,
+        Some(skippableFiles(spark, dir, column, lo, hi))))
+      .where(col(column) >= lo && col(column) <= hi)
 
   /** Categorical twin of [[readSkipping]]: `column = value` over a
     * string column, pruning on footer string ranges — the read path
@@ -204,28 +204,31 @@ object Stats {
     */
   def readSkippingEq(spark: SparkSession, dir: String, column: String,
                      value: String): DataFrame =
-    prunedRead(spark, dir,
-      skippableFilesEq(spark, dir, column, value),
-      col(column) === value)
+    scanKept(spark, Seq(dir), unskipped(spark, dir,
+        Some(skippableFilesEq(spark, dir, column, value))))
+      .where(col(column) === value)
 
-  /** Read `dir` minus the files `skippable` names, then apply `pred`
-    * row-exactly. Files the skip report does not mention are ALWAYS
-    * read — so a stale or partial stats source can only lose pruning,
-    * never rows.
+  /** The files of `dir` the skip report `skippable` does not name —
+    * every file when there is no report (no committed manifest). Files
+    * the report does not mention are ALWAYS read, so a stale, partial
+    * or lost stats source can only lose pruning, never rows.
     */
-  private def prunedRead(spark: SparkSession, dir: String,
-                         skippable: DataFrame,
-                         pred: org.apache.spark.sql.Column): DataFrame = {
+  private def unskipped(spark: SparkSession, dir: String,
+                        skippable: Option[DataFrame]): Seq[String] = {
     val all = listParquetFiles(spark, dir)
-    val skip = skippable
-      .select(col("file")).collect().map(_.getString(0)).toSet
-    val keep = all.filterNot(skip)
-    if (keep.isEmpty)
-      // schema-preserving empty result (every file pruned)
-      spark.read.parquet(dir).where(lit(false))
-    else
-      spark.read.parquet(keep: _*).where(pred)
+    skippable.fold(all) { s =>
+      val skip = s.select(col("file")).collect().map(_.getString(0)).toSet
+      all.filterNot(skip)
+    }
   }
+
+  // the committed manifest at `manifestPath`; None when none is
+  // committed (missing, or only a crashed first write's leftovers)
+  private def manifestAt(spark: SparkSession,
+                         manifestPath: String): Option[DataFrame] =
+    if (hasManifest(spark, manifestPath))
+      Some(spark.read.parquet(manifestPath))
+    else None
 
   // ---------- persisted manifest ----------
 
@@ -631,9 +634,9 @@ object Stats {
     * read the FS-metadata health (no data rows touched), and when the
     * policy says the family is due, run its compactor — the
     * ALREADY-FENCED family compactor (compactNearDupStoreBanded,
-    * compactEmbedStore, compactPqCodeStore, …) or a bare
-    * `() => compactCommittedStore(spark, root, shape)` for plain
-    * stores; the thunk returns the new generation token. Below
+    * compactEmbedStore, compactPqCodeStore, …) or a declared
+    * [[KeyedStore]]'s `() => store.compact(spark, owner, filesOut)`;
+    * the thunk returns the new generation token. Below
     * threshold the family is untouched (not even listed beyond the
     * stats read). A family whose lease is held by a live writer is
     * reported, not thrown — quiesce the gate (or let its own in-sink
@@ -1309,9 +1312,10 @@ object Stats {
   def readSkippingManifest(spark: SparkSession, dir: String,
                            column: String, lo: Double, hi: Double,
                            manifestPath: String): DataFrame =
-    prunedRead(spark, dir,
-      skippableFilesFrom(spark.read.parquet(manifestPath), column, lo, hi),
-      col(column) >= lo && col(column) <= hi)
+    scanKept(spark, Seq(dir), unskipped(spark, dir,
+        manifestAt(spark, manifestPath)
+          .map(skippableFilesFrom(_, column, lo, hi))))
+      .where(col(column) >= lo && col(column) <= hi)
 
   /** Conjunctive multi-range pruned read through a persisted manifest:
     * `c₁ BETWEEN lo₁ AND hi₁ AND c₂ BETWEEN lo₂ AND hi₂ AND …`. A file
@@ -1326,23 +1330,23 @@ object Stats {
                               ranges: Seq[(String, Double, Double)],
                               manifestPath: String): DataFrame = {
     require(ranges.nonEmpty, "readSkippingAndManifest: need >= 1 range")
-    val stats = spark.read.parquet(manifestPath)
-    val skippable = ranges
+    val skippable = manifestAt(spark, manifestPath).map(stats => ranges
       .map { case (c, lo, hi) => skippableFilesFrom(stats, c, lo, hi) }
-      .reduce(_ unionByName _)
-    val pred = ranges
-      .map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
-      .reduce(_ && _)
-    prunedRead(spark, dir, skippable, pred)
+      .reduce(_ unionByName _))
+    scanKept(spark, Seq(dir), unskipped(spark, dir, skippable))
+      .where(ranges
+        .map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
+        .reduce(_ && _))
   }
 
   /** Categorical twin of [[readSkippingManifest]]. */
   def readSkippingEqManifest(spark: SparkSession, dir: String,
                              column: String, value: String,
                              manifestPath: String): DataFrame =
-    prunedRead(spark, dir,
-      skippableFilesEqFrom(spark.read.parquet(manifestPath), column, value),
-      col(column) === value)
+    scanKept(spark, Seq(dir), unskipped(spark, dir,
+        manifestAt(spark, manifestPath)
+          .map(skippableFilesEqFrom(_, column, value))))
+      .where(col(column) === value)
 
   // ---------- touched-key pruning (clustered stores) ----------
 
@@ -1374,9 +1378,9 @@ object Stats {
                    manifestPath: String, keys: Seq[String],
                    probes: DataFrame): Seq[String] = {
     val files = dirs.flatMap(d => listParquetFiles(spark, d))
-    if (files.isEmpty || !hasManifest(spark, manifestPath)) files
-    else touchedFilesFrom(spark.read.parquet(manifestPath), files, keys,
-      probes)
+    if (files.isEmpty) files
+    else manifestAt(spark, manifestPath)
+      .fold(files)(touchedFilesFrom(_, files, keys, probes))
   }
 
   // the [[touchedFiles]] rule over an already-loaded manifest and file
@@ -1501,8 +1505,7 @@ object Stats {
     val totalBytes: Long = sized.map(_._2).sum
 
     private lazy val stats: Option[DataFrame] =
-      if (!hasManifest(spark, manifestPath)) None
-      else Some(Checkpoints.stage(spark.read.parquet(manifestPath)))
+      manifestAt(spark, manifestPath).map(Checkpoints.stage)
 
     def keptFiles(probes: DataFrame): Seq[String] =
       stats.fold(files)(touchedFilesFrom(_, files, Seq(c), probes))
@@ -1586,21 +1589,22 @@ object Stats {
       s"point-lookup probe set exceeds $maxProbes keys — " +
         "use the clustered/manifest range paths for batch probes")
     val hs = guarded
-    val man = spark.read.parquet(manifestPath)
-      .select(col("file"), col("m"), col("k"), col("bloom"))
-      .as[(String, Int, Int, Array[Byte])]
-    // `input_file_name()` (build side) renders file:///p, the Hadoop
-    // listing (probe side) file:/p — compare through Path, which
-    // normalizes both to one form
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toString
-    val covered = man.map(_._1).collect().map(norm).toSet
-    val hit = man.filter { r =>
-      hs.exists(h =>
-        graft.functions.BloomFilters.mightContain(r._4, r._2, r._3, h))
-    }.map(_._1).collect().map(norm).toSet
-    dirs.flatMap(d => listParquetFiles(spark, d))
-      .filter(f => !covered(norm(f)) || hit(norm(f)))
+    val files = dirs.flatMap(d => listParquetFiles(spark, d))
+    manifestAt(spark, manifestPath).fold(files) { stats =>
+      val man = stats.select(col("file"), col("m"), col("k"), col("bloom"))
+        .as[(String, Int, Int, Array[Byte])]
+      // `input_file_name()` (build side) renders file:///p, the Hadoop
+      // listing (probe side) file:/p — compare through Path, which
+      // normalizes both to one form
+      def norm(s: String): String =
+        new org.apache.hadoop.fs.Path(s).toString
+      val covered = man.map(_._1).collect().map(norm).toSet
+      val hit = man.filter { r =>
+        hs.exists(h =>
+          graft.functions.BloomFilters.mightContain(r._4, r._2, r._3, h))
+      }.map(_._1).collect().map(norm).toSet
+      files.filter(f => !covered(norm(f)) || hit(norm(f)))
+    }
   }
 
   /** Point-lookup read through the bloom manifest: the probed rows of
@@ -1612,13 +1616,10 @@ object Stats {
                       manifestPath: String, c: String,
                       probes: DataFrame,
                       maxProbes: Int = 65536): DataFrame = {
-    val keep = pointLookupKeptFiles(spark, Seq(dir), manifestPath, c,
-      probes, maxProbes)
-    val base =
-      if (keep.isEmpty) spark.read.parquet(dir).where(lit(false))
-      else spark.read.parquet(keep: _*)
-    base.join(broadcast(probes.select(col(c)).distinct()),
-      Seq(c), "left_semi")
+    scanKept(spark, Seq(dir), pointLookupKeptFiles(spark, Seq(dir),
+        manifestPath, c, probes, maxProbes))
+      .join(broadcast(probes.select(col(c)).distinct()),
+        Seq(c), "left_semi")
   }
 
   // ---------- snapshot diff ----------

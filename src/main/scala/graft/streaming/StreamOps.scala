@@ -1705,6 +1705,7 @@ object StreamOps {
                           compactEvery: Int = 0, filesOut: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Graph
+    val store = graphEdgeStore(edgesPath)
     val tomb = KeyedStore.tombstones(edgesPath, "_deleted_nodes",
       "graphDeletedNodes", "id" -> "bigint")
     val fenceRoots = Seq(edgesPath) ++ ccStorePath ++
@@ -1719,9 +1720,8 @@ object StreamOps {
       // the opted-in stores rebuild from the edge view minus the
       // set, before the set is cleared
       def rebuild(deleted: Option[DataFrame]): Unit = {
-        val surviving = tomb.without(spark, spark.read.parquet(
-            Stats.committedViewDirs(spark, edgesPath): _*)
-          .select(col("u"), col("v")), "u", "v")
+        val surviving = tomb.without(spark, store.current(spark),
+          "u", "v")
         ccStorePath.foreach(p =>
           Graph.rebuildCCStore(surviving, col("u"), col("v"), p,
             filesOut): Unit)
@@ -1766,11 +1766,17 @@ object StreamOps {
       // so a deletion can never silently survive.
       if (compactDue(compactEvery, batchId))
         tomb.foldWithout(spark, "graphRetractionSink", Seq((edgesPath,
-          Seq("u", "v"), _.select(col("u"), col("v"), col("__b"))
-            .repartitionByRange(filesOut, col("u"), col("v"))
-            .sortWithinPartitions(col("u"), col("v")))), rebuild): Unit
+          Seq("u", "v"), store.compaction(filesOut))), rebuild): Unit
     }
   }
+
+  /** The graph gates' edge store: (u, v) rows, every row kept — a
+    * re-sent edge is a second row, which Louvain counts as weight
+    * ([[KeyedStore.Rows]]); files clustered on (u, v).
+    */
+  private[graft] def graphEdgeStore(edgesPath: String): KeyedStore =
+    KeyedStore(edgesPath, "graphEdgeStore", Seq("u" -> "*", "v" -> "*"),
+      Nil, KeyedStore.Rows, manifest = false)
 
   /** Streaming GRAPH-ANALYTICS maintenance — the foreachBatch gate for
     * the warm-start graph stores, completing the symmetry with the
@@ -1797,7 +1803,8 @@ object StreamOps {
     * prior attempt), and `compactEvery` folds all three stores
     * serially between micro-batches ([[graft.operators.Graph
     * .compactCCStore]] / [[graft.operators.Graph.compactLabelState]] +
-    * a distinct-edge fold) — mid-stream OPTIMIZE never changes answers
+    * the edge store's fold, which keeps every row — a re-sent edge
+    * stays a second row) — mid-stream OPTIMIZE never changes answers
     * (spec-pinned ≡ from-scratch). Read the current state between
     * batches via [[graft.operators.Graph.ccStoreLabels]] /
     * [[graft.operators.Graph.labelStoreLabels]]. Edges re-sent across
@@ -1855,6 +1862,7 @@ object StreamOps {
                     batchIdBase: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Graph
+    val store = graphEdgeStore(edgesPath)
     val fenceRoots = Seq(edgesPath, ccStorePath,
       labelStorePath) ++ triStorePath ++ kcoreStorePath ++
       prStorePath ++ hitsStorePath ++ louvainStorePath ++
@@ -1871,15 +1879,10 @@ object StreamOps {
       // retain the batch's edges FIRST (overwrite-idempotent; a
       // crash before the analytics appends re-runs the whole
       // batch, overwriting identically)
-      edges.withColumn("__b", lit(eb))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$edgesPath/batch=$eb")
+      store.append(spark, "graphGateSink", eb, filesOut)(edges)
       // committed HISTORY (excluding a retry's own prior attempt)
       // and the union edge list with this batch in-memory
-      val hist = spark.read
-        .parquet(Stats.committedViewDirs(spark, edgesPath): _*)
-        .where(col("__b") < eb)
-        .select(col("u"), col("v"))
+      val hist = store.view(spark, eb)
       val all = hist.unionByName(edges)
       // store-batch ids are stream-batch + 1: batch=0 is reserved
       // for each store's bootstrap base, and stream batch 0's
@@ -2020,10 +2023,7 @@ object StreamOps {
           Graph.compactLandmarkStore(spark, mp, filesOut): Unit)
         sccStorePath.foreach(sp =>
           Graph.compactSccStore(spark, sp, filesOut): Unit)
-        Stats.compactCommittedStore(spark, edgesPath,
-          _.select(col("u"), col("v"), col("__b"))
-            .repartitionByRange(filesOut, col("u"), col("v"))
-            .sortWithinPartitions(col("u"), col("v"))): Unit
+        store.compact(spark, "graphGateSink", filesOut): Unit
       }
     }
   }

@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Graph, KeyedStore, Stats}
+import graft.operators.{Graph, KeyedStore, Overlap, Retrieval,
+  Similarity, Stats}
 
-/** The nine graph store families, one table: every family's store
-  * registration takes the same gen=/batch= round trip through its
-  * public verbs — write the base, append one batch, read the view,
-  * compact, read the view again — so each family's declared fold,
-  * layout and schema guard is exercised, including the compaction and
-  * as-of verbs no other spec calls.
+/** The nine graph store families and the PQ-code, PCA-moment and
+  * KMV-unit stores, one table: every family's store registration takes
+  * the same gen=/batch= round trip through its public verbs — write the
+  * base, append one batch, read the view, compact, read the view
+  * again — so each family's declared fold, layout and schema guard is
+  * exercised, including the compaction and as-of verbs no other spec
+  * calls. The k-center coreset and BM25 stats stores have a case each.
   */
 class KeyedStoreSpec extends SparkSuite {
   import spark.implicits._
@@ -26,6 +28,24 @@ class KeyedStoreSpec extends SparkSuite {
   private lazy val all = (baseEdges ++ newEdges).toDF("a", "b")
   private lazy val seeds = Seq((1L, 10L), (7L, 70L)).toDF("id", "label")
   private val (a, b) = (col("a"), col("b"))
+
+  // 4-dim vectors for the PQ and PCA stores: ids below 8 are the base,
+  // 8 until 12 the appended batch
+  private lazy val vecs = (0L until 12L).map(i => (i,
+      Array(i.toFloat, (i % 3).toFloat, (i % 5).toFloat, 1.0f)))
+    .toDF("id", "vec")
+  private lazy val (vecBase, vecBatch) =
+    (vecs.where(col("id") < 8L), vecs.where(col("id") >= 8L))
+  private lazy val pqFit = {
+    val cents = Similarity.fitCentroids(vecBase, k = 2, iters = 1, dim = 4)
+    (cents, Similarity.fitPqCodebooks(vecBase, m = 2, ks = 2, iters = 1,
+      dim = 4))
+  }
+  // KMV units: (grp, unit, key) items; units 1-4 base, 5-6 the batch
+  private lazy val items = (1L to 6L).flatMap(u =>
+      (0 until 5).map(j => (if (u % 2 == 0) "even" else "odd", u,
+        s"k${u * 3 + j}")))
+    .toDF("grp", "unit", "key")
 
   /** One family: its store registration and its public verbs. */
   private case class Family(
@@ -86,7 +106,25 @@ class KeyedStoreSpec extends SparkSuite {
       d => Graph.kCoreIncremental(all, a, b, batch, a, b, 2, d, 1L): Unit,
       d => Graph.kCoreStoreMembers(spark, d),
       d => Graph.compactKCoreStore(spark, d),
-      Some(Graph.kCoreStoreMembersAsOf(spark, _, _))))
+      Some(Graph.kCoreStoreMembersAsOf(spark, _, _))),
+    Family("pqCodes", Similarity.pqCodeStore,
+      d => Similarity.writePqCodeStore(vecBase, pqFit._1, pqFit._2, d),
+      d => Similarity.pqStoreAppend(vecBatch, d, 1L): Unit,
+      d => Similarity.pqStoreCodes(spark, d),
+      d => Similarity.compactPqCodeStore(spark, d)),
+    // no base write: the base is the append at batch 0
+    Family("pcaMoments", Similarity.pcaMomentStore,
+      d => Similarity.appendPcaMoments(vecBase, col("vec"), d, 0L),
+      d => Similarity.appendPcaMoments(vecBatch, col("vec"), d, 1L),
+      d => Similarity.pcaMomentsFromStore(spark, d),
+      d => Similarity.compactPcaMoments(spark, d)),
+    Family("kmvUnits", Overlap.kmvUnitStore,
+      d => Overlap.writeKmvUnitStore(items.where(col("unit") <= 4L),
+        col("grp"), col("unit"), col("key"), 4, d),
+      d => Overlap.appendKmvUnitSketches(items.where(col("unit") > 4L),
+        col("grp"), col("unit"), col("key"), 4, d, 1L),
+      d => Overlap.kmvStoreSketches(spark, d, 4),
+      d => Overlap.compactKmvUnitStore(spark, d)))
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -120,5 +158,59 @@ class KeyedStoreSpec extends SparkSuite {
       val ex = intercept[Stats.StoreSchemaException](f.read(bad))
       assert(ex.getMessage.contains(store.name), ex.getMessage)
     }
+  }
+
+  test("kCenter store: write, extend, supersede, then extend above " +
+      "the generation; every view is the stored rows") {
+    val dir = s"/tmp/graft-keyed-kcenter-${System.nanoTime()}"
+    val store = Similarity.kCenterStore(dir)
+    def trace(df: DataFrame): Seq[(Int, Long, Double)] =
+      df.orderBy(col("rank")).select(col("rank"), col("id"),
+        col("radius")).as[(Int, Long, Double)].collect().toSeq
+    Similarity.writeKCenterStore(vecBase, col("id"), col("vec"), 2, dir)
+    val base = trace(store.current(spark))
+    assert(base.map(_._1) == Seq(1, 2))
+    val ext = trace(Similarity.kCenterExtend(vecBatch, col("id"),
+      col("vec"), dir, 1L, 1))
+    assert(ext.take(2) == base && ext.map(_._1) == Seq(1, 2, 3))
+    assert(trace(store.current(spark)) == ext)
+    assert(trace(store.asOf(spark, 0L)) == base)
+    // a rebuild supersedes every batch above the base
+    val tok = Similarity.rebuildKCenterStore(vecs, col("id"),
+      col("vec"), 3, dir)
+    assert(tok == 2L)
+    val rebuilt = trace(Similarity.kCenterStoreCenters(spark, dir))
+    assert(rebuilt == trace(Similarity.kCenterSelect(vecs, col("id"),
+      col("vec"), 3)))
+    // extensions continue above the generation; at it they are refused
+    intercept[IllegalArgumentException] {
+      Similarity.kCenterExtend(vecBatch, col("id"), col("vec"), dir,
+        tok, 1)
+    }
+    val more = trace(Similarity.kCenterExtend(
+      Seq((20L, Array(40.0f, 0.0f, 0.0f, 1.0f))).toDF("id", "vec"),
+      col("id"), col("vec"), dir, tok + 1L, 1))
+    assert(more.take(3) == rebuilt && more.last._1 == 4 &&
+      more.last._2 == 20L)
+    assert(trace(store.current(spark)) == more)
+  }
+
+  test("bm25 stats store: after an append and a delete the keyless " +
+      "sum equals the doclen view's count and sum of dl") {
+    val dir = s"/tmp/graft-keyed-bm25stats-${System.nanoTime()}"
+    val docs = (0L until 10L).map(i => (i, s"doc $i" + " w" * i.toInt))
+      .toDF("id", "text")
+    Retrieval.writeBm25Index(docs.where(col("id") < 6L), col("id"),
+      col("text"), dir, filesOut = 2)
+    Retrieval.appendBm25Index(docs.where(col("id") >= 6L), col("id"),
+      col("text"), dir, 1L, filesOut = 2)
+    Retrieval.deleteBm25Docs(spark, dir, Seq(2L, 7L).toDF("id"), 2L)
+    val got = Retrieval.bm25Stats(dir).current(spark)
+      .as[(Long, Long)].collect().toSeq
+    val want = spark.read.parquet(
+        Stats.committedViewDirs(spark, s"$dir/doclen"): _*)
+      .where(!col("id").isin(2L, 7L))
+      .agg(count(lit(1)), sum(col("dl"))).as[(Long, Long)].collect().toSeq
+    assert(got == want && want.head._1 == 8L, s"got $got, want $want")
   }
 }

@@ -210,4 +210,50 @@ class ManifestUpsertSpec extends SparkSuite {
       assert(rows(read()) == want, s"$name: crashed manifest")
     }
   }
+
+  test("a missing or crashed manifest costs pruning, never rows: the " +
+      "range, conjunctive-range, categorical and bloom point reads " +
+      "answer the same rows with their manifest, without it, and with " +
+      "only a crashed first write") {
+    import org.apache.spark.sql.DataFrame
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-skiploss-").toString
+    val dir = root + "/store"
+    (0L until 80L).map(i => (i, i % 7, Seq("de", "en", "es", "fr")(
+        (i / 20).toInt))).toDF("id", "x", "lang")
+      .repartitionByRange(4, col("id")).sortWithinPartitions(col("id"))
+      .write.parquet(dir)
+    def rows(df: DataFrame): Set[String] =
+      df.collect().map(_.mkString("|")).toSet
+    // each reader gets its own manifest, written before its first read
+    def footer(tag: String): String = {
+      val m = s"$root/$tag"; Stats.writeManifest(spark, dir, m); m
+    }
+    def bloom(tag: String): String = {
+      val m = s"$root/$tag"
+      Stats.writeKeyBloomManifest(spark, dir, "id", m); m
+    }
+    val cases: Seq[(String, String, String => DataFrame)] = Seq(
+      ("readSkippingManifest", footer("range"),
+        Stats.readSkippingManifest(spark, dir, "id", 10, 20, _)),
+      ("readSkippingAndManifest", footer("and"),
+        Stats.readSkippingAndManifest(spark, dir,
+          Seq(("id", 10.0, 50.0), ("x", 2.0, 3.0)), _)),
+      ("readSkippingEqManifest", footer("eq"),
+        Stats.readSkippingEqManifest(spark, dir, "lang", "es", _)),
+      ("pointLookupKeptFiles", bloom("bloom"),
+        Stats.readPointLookup(spark, dir, _, "id",
+          Seq(5L, 47L).toDF("id"))))
+    for ((name, man, read) <- cases) {
+      val want = rows(read(man))
+      assert(want.nonEmpty, s"$name: the fixture must answer rows")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(man))
+      assert(rows(read(man)) == want, s"$name: manifest deleted")
+      val tmp = new java.io.File(man, "_temporary/0")
+      tmp.mkdirs()
+      java.nio.file.Files.write(new java.io.File(tmp, "part-0.parquet")
+        .toPath, "PAR1 crashed".getBytes("UTF-8"))
+      assert(rows(read(man)) == want, s"$name: crashed manifest")
+    }
+  }
 }
