@@ -26,22 +26,6 @@ object GraftSqlBridge {
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
   }
 
-  /** Task-side access to the session's Hadoop configuration: wraps it
-    * in Spark's (private[spark]) SerializableConfiguration and
-    * broadcasts once — the returned thunk is a small serializable
-    * closure executors can call per partition. Without this, task-side
-    * `new Configuration()` would drop the session's object-store
-    * credentials and site overrides.
-    */
-  def hadoopConfAccessor(spark: SparkSession)
-      : () => org.apache.hadoop.conf.Configuration = {
-    val bc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.asInstanceOf[classic.SparkSession].sessionState
-          .newHadoopConf()))
-    () => bc.value.value
-  }
-
   /** Checkpoint (local or reliable) PRESERVING the materialized
     * partitioning/ordering metadata. `Dataset.checkpoint` tries to
     * carry the executed plan's outputPartitioning into the resulting

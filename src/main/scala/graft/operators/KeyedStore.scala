@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * each file, so a key's rows sit in few files; a keyless store is
   * one file per write. With `manifest` on, a
   * sibling footer manifest `<root>_manifest` — outside the root, so
-  * its own parquet never pollutes the store's recursive listings —
-  * lets probes open only the files a key set can live in.
+  * its own parquet never pollutes the store's recursive listings;
+  * one slice per dir, written with the dir — lets probes open only
+  * the files a key set can live in.
   *
   * Reads open the committed view under the family's schema guard
   * ([[Stats.openCommittedStore]] named `name`) and fold it per key
@@ -84,23 +85,24 @@ private[graft] final case class KeyedStore(
     else rows.repartitionByRange(parts, clusterNames.map(col): _*)
       .sortWithinPartitions((clusterNames ++ keyNames).distinct.map(col): _*)
 
-  // the declared columns tagged with batch `b`, laid out into `dir`
-  private def write(rows: DataFrame, b: Long, parts: Int,
-                    dir: String): Unit =
+  // the declared columns tagged with batch `b`, laid out into `dir`,
+  // then (manifest on and `indexed`) the dir's manifest slice
+  private def write(rows: DataFrame, b: Long, parts: Int, dir: String,
+                    indexed: Boolean = true): Unit = {
     laidOut(rows.select(keyCols ++ valueNames.map(col) :+
         lit(b).as("__b"): _*), parts)
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$root/$dir")
-
-  private def refreshManifest(spark: SparkSession): Unit =
-    if (manifest) Stats.refreshManifest(spark, root, manifestPath)
+    if (manifest && indexed)
+      Stats.upsertManifestFor(rows.sparkSession, root, manifestPath,
+        s"$root/$dir")
+  }
 
   /** Write `rows` as the store's base, `batch=0`. */
   def writeBase(spark: SparkSession, owner: String, filesOut: Int)
                (rows: => DataFrame): Unit =
     leased(spark, owner) {
       write(rows, 0L, filesOut, "batch=0")
-      refreshManifest(spark)
     }
 
   /** The next generation token above every committed dir of this store
@@ -117,7 +119,6 @@ private[graft] final case class KeyedStore(
                filesOut: Int)(rows: => DataFrame): Unit =
     leased(spark, owner) {
       write(rows, tok, filesOut, s"gen=$tok")
-      refreshManifest(spark)
     }
 
   /** Rebuild the store from `rows` as a superseding generation; returns
@@ -147,17 +148,14 @@ private[graft] final case class KeyedStore(
     }
 
   /** Append `rows` as `batch=<batchId>` in `parts` files
-    * (overwrite-idempotent: a retry rewrites the same dir). The
-    * manifest is upserted for the new dir unless `indexed` is false —
-    * a stale manifest is sound, uncovered files always read.
+    * (overwrite-idempotent: a retry rewrites the same dir). The new
+    * dir's manifest slice is written unless `indexed` is false — a
+    * missing slice is sound, uncovered files always read.
     */
   def append(spark: SparkSession, owner: String, batchId: Long,
              parts: Int, indexed: Boolean = true)(rows: DataFrame): Unit =
     leased(spark, owner) {
-      write(rows, batchId, parts, s"batch=$batchId")
-      if (manifest && indexed)
-        Stats.upsertManifestFor(spark, root, manifestPath,
-          s"$root/batch=$batchId")
+      write(rows, batchId, parts, s"batch=$batchId", indexed)
     }
 
   // the committed view's raw rows, schema-guarded
@@ -252,7 +250,8 @@ private[graft] final case class KeyedStore(
     leased(spark, owner) {
       val tok = Stats.compactCommittedStore(spark, root,
         compaction(filesOut))
-      if (tok.isDefined) refreshManifest(spark)
+      if (tok.isDefined && manifest)
+        Stats.refreshManifest(spark, root, manifestPath)
       tok
     }
 

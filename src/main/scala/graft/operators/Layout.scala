@@ -77,9 +77,9 @@ object Layout {
     }
 
     /** Write `rows` as `<root>/batch=<batchId>` (overwrite-idempotent:
-      * a retry rewrites the same dir), then upsert the manifest rows of
-      * that dir only ([[Stats.upsertManifestFor]] — no listing of the
-      * rest of the store).
+      * a retry rewrites the same dir), then write that dir's manifest
+      * slice only ([[Stats.upsertManifestFor]] — no listing of the rest
+      * of the store).
       */
     def appendBatch(rows: DataFrame, root: String, manifestPath: String,
                     batchId: Long, files: Int): Unit = {

@@ -136,7 +136,7 @@ object Retrieval {
   /** Append a NEW batch of documents to an existing BM25 index (the
     * continuous-ingestion write path): postings, doc lengths, and the
     * batch's (n_docs, sum_dl) stats row land in `batch=<batchId>` dirs
-    * with mode Overwrite, and each manifest upserts the rows of its
+    * with mode Overwrite, and each manifest writes the slice of its
     * own new batch dir only ([[Stats.upsertManifestFor]]) — each
     * step is overwrite-idempotent, so a crash mid-append (or a retried
     * batch) can never double-append postings or double-fold stats;

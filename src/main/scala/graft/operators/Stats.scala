@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Parquet footer-stats manifest: per-file, per-column row counts,
   * null counts, and min/max — the metadata a scan's row-group skipping
@@ -18,21 +21,154 @@ import org.apache.spark.sql.functions._
   * here it is computed from the footers that plain parquet already
   * carries.
   *
-  * Scale shape: the file listing is the only driver-side work; footer
-  * reads (a few KB each) are distributed over executors, one task per
-  * file batch. Nothing reads data pages.
+  * Scale shape: footers (a few KB each) are read on the driver beside
+  * the file listing it already pays; nothing reads data pages, and no
+  * metadata work runs as a Spark job. The manifest and every store
+  * read declare their schemas (the manifest's columns, or a store
+  * file's own footer), so no read here runs Spark's schema-inference
+  * job either.
   */
 object Stats {
 
-  /** Per-(file, leaf column) footer statistics. Columns:
+  /** The footer-stats manifest's columns: per (file, leaf column) —
     * file, column (dotted path), ptype (parquet physical type), rows,
-    * nulls, min_str / max_str (string render, null when absent), and
-    * min_num / max_num (doubles for numeric physical types, null
-    * otherwise — usable for range-skipping arithmetic in SQL).
+    * nulls (-1 when the footer carries no stats), min_str / max_str
+    * (string render, null when absent), min_num / max_num (doubles for
+    * numeric physical types, null otherwise — usable for
+    * range-skipping arithmetic in SQL) and min_int / max_int (exact
+    * integral bounds for INT32/INT64 columns).
     */
-  /** Recursive data-file listing (partitioned tables nest files under
-    * dt=... dirs). Driver-side, O(files) — the same cost any scan's
-    * file index already pays.
+  private[graft] val ManifestSchema: StructType = StructType(Seq(
+    "file" -> StringType, "column" -> StringType, "ptype" -> StringType,
+    "rows" -> LongType, "nulls" -> LongType,
+    "min_str" -> StringType, "max_str" -> StringType,
+    "min_num" -> DoubleType, "max_num" -> DoubleType,
+    "min_int" -> LongType, "max_int" -> LongType)
+    .map { case (n, t) => StructField(n, t) })
+
+  // the manifest's columns as the parquet schema its slice files carry
+  private lazy val sliceType: org.apache.parquet.schema.MessageType = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
+      Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    ManifestSchema.fields.foldLeft[Types.GroupBuilder[MessageType]](
+        Types.buildMessage()) { (b, f) =>
+      f.dataType match {
+        case StringType => b.optional(BINARY)
+          .as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case LongType => b.optional(INT64).named(f.name)
+        case _ => b.optional(DOUBLE).named(f.name)
+      }
+    }.named("manifest")
+  }
+
+  // one manifest row: a file's leaf column, row groups merged
+  private final case class ColumnStats(file: String, column: String,
+                                       ptype: String, rows: Long,
+                                       nulls: Long,
+                                       minStr: Option[String],
+                                       maxStr: Option[String],
+                                       minNum: Option[Double],
+                                       maxNum: Option[Double],
+                                       minInt: Option[Long],
+                                       maxInt: Option[Long]) {
+    def merge(o: ColumnStats): ColumnStats = {
+      // strings compare as UTF-8 bytes, the order of parquet's UTF8
+      // stats and of Spark's string comparison
+      val utf8 = Ordering.fromLessThan[String]((x, y) =>
+        java.util.Arrays.compareUnsigned(x.getBytes("UTF-8"),
+          y.getBytes("UTF-8")) < 0)
+      val dbl = Ordering.Double.TotalOrdering
+      copy(rows = rows + o.rows, nulls = nulls + o.nulls,
+        minStr = (minStr ++ o.minStr).minOption(utf8),
+        maxStr = (maxStr ++ o.maxStr).maxOption(utf8),
+        minNum = (minNum ++ o.minNum).minOption(dbl),
+        maxNum = (maxNum ++ o.maxNum).maxOption(dbl),
+        minInt = (minInt ++ o.minInt).minOption,
+        maxInt = (maxInt ++ o.maxInt).maxOption)
+    }
+
+    def row: Row = Row(file, column, ptype, rows, nulls, minStr.orNull,
+      maxStr.orNull, minNum.orNull, maxNum.orNull, minInt.orNull,
+      maxInt.orNull)
+  }
+
+  private def readFooter(conf: org.apache.hadoop.conf.Configuration,
+                         file: String)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new Path(file), conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  // `file`'s manifest rows, read from its footer on the driver
+  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
+                          file: String): Seq[ColumnStats] = {
+    val chunks = readFooter(conf, file).getBlocks.asScala
+      .flatMap(_.getColumns.asScala)
+    chunks.map { cc =>
+      val st = cc.getStatistics
+      val has = st != null && !st.isEmpty
+      val hasVals = has && st.hasNonNullValue
+      def bound(v: => Comparable[_]): AnyRef =
+        if (hasVals) v.asInstanceOf[AnyRef] else null
+      val (mn, mx) = (bound(st.genericGetMin), bound(st.genericGetMax))
+      def num(v: AnyRef): Option[Double] = v match {
+        case n: java.lang.Number => Some(n.doubleValue())
+        case _ => None
+      }
+      // exact integral bounds: INT32/INT64 stats surface as boxed
+      // Integer/Long — kept as Long so 64-bit hash keys (xxhash64
+      // buckets) never round through a double, and row groups merge
+      // NUMERICALLY (the string min/max merge is lexicographic —
+      // correct for UTF8 stats, wrong for decimal renders of integers)
+      def intg(v: AnyRef): Option[Long] = v match {
+        case n: java.lang.Integer => Some(n.longValue())
+        case n: java.lang.Long => Some(n.longValue())
+        case _ => None
+      }
+      ColumnStats(file, cc.getPath.toDotString,
+        cc.getPrimitiveType.getPrimitiveTypeName.name(),
+        cc.getValueCount, if (has) st.getNumNulls else -1L,
+        if (hasVals) Option(st.minAsString) else None,
+        if (hasVals) Option(st.maxAsString) else None,
+        num(mn), num(mx), intg(mn), intg(mx))
+    }.groupBy(s => (s.column, s.ptype)).values.map(_.reduce(_ merge _))
+      .toSeq.sortBy(s => (s.column, s.ptype))
+  }
+
+  // reader-visible: no path component below `root` starts with `_` or
+  // `.` (a crashed write's `_temporary/` attempt dirs, `_SUCCESS`,
+  // checksum and hidden files are invisible to Spark's parquet reader)
+  private def readerVisible(root: Path, p: Path): Boolean = {
+    var cur = p
+    while (cur != null && cur != root) {
+      val nm = cur.getName
+      if (nm.startsWith("_") || nm.startsWith(".")) return false
+      cur = cur.getParent
+    }
+    true
+  }
+
+  // the reader-visible parquet data files under `dir`, recursively
+  // (partitioned tables nest files under dt=... dirs); none when `dir`
+  // is missing
+  private def visibleFiles(fs: FileSystem, dir: Path): Seq[LocatedFileStatus] = {
+    val q = fs.makeQualified(dir)
+    if (!fs.exists(q)) Nil
+    else {
+      val it = fs.listFiles(q, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(f => isDataFile(f) && readerVisible(q, f.getPath)).toSeq
+    }
+  }
+
+  private def isDataFile(f: FileStatus): Boolean =
+    f.isFile && f.getLen > 0 && f.getPath.getName.endsWith(".parquet")
+
+  /** Recursive data-file listing. Driver-side, O(files) — the same cost
+    * any scan's file index already pays.
     */
   private def listParquetFiles(spark: SparkSession,
                                dir: String): Seq[String] =
@@ -41,90 +177,44 @@ object Stats {
   private def listParquetFilesWithSize(spark: SparkSession,
                                        dir: String)
       : Seq[(String, Long)] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next())
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet") &&
-        f.getLen > 0)
-      .map(f => (f.getPath.toString, f.getLen)).toSeq
+    val path = new Path(dir)
+    visibleFiles(path.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      path).map(f => (f.getPath.toString, f.getLen))
   }
 
-  def parquetFileStats(spark: SparkSession, dir: String): DataFrame =
-    statsForFiles(spark, listParquetFiles(spark, dir))
-
-  /** Footer stats for an explicit file list — the unit of incremental
-    * manifest maintenance.
+  /** The footer stats of every data file under `dir` ([[ManifestSchema]]
+    * rows), read on the driver.
     */
-  private def statsForFiles(spark: SparkSession,
-                            files: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val confAccess =
-      org.apache.spark.sql.GraftSqlBridge.hadoopConfAccessor(spark)
-    spark.createDataset(files)
-      .repartition(math.max(1, math.min(files.size, 64)))
-      .mapPartitions { paths =>
-        val conf = confAccess()
-        paths.flatMap { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            val blocks = reader.getFooter.getBlocks
-            (0 until blocks.size()).flatMap { b =>
-              val cols = blocks.get(b).getColumns
-              (0 until cols.size()).map { c =>
-                val cc = cols.get(c)
-                val st = cc.getStatistics
-                val has = st != null && !st.isEmpty
-                val hasVals = has && st.hasNonNullValue
-                def num(v: AnyRef): Option[Double] = v match {
-                  case n: java.lang.Number => Some(n.doubleValue())
-                  case _ => None
-                }
-                // exact integral bounds: INT32/INT64 stats surface as
-                // boxed Integer/Long — kept as Long so 64-bit hash keys
-                // (xxhash64 buckets) never round through a double, and
-                // row groups merge NUMERICALLY (the string min/max
-                // merge below is lexicographic — correct for UTF8
-                // stats, wrong for decimal renders of integers)
-                def intg(v: AnyRef): Option[Long] = v match {
-                  case n: java.lang.Integer => Some(n.longValue())
-                  case n: java.lang.Long => Some(n.longValue())
-                  case _ => None
-                }
-                (p, cc.getPath.toDotString,
-                  cc.getPrimitiveType.getPrimitiveTypeName.name(),
-                  cc.getValueCount,
-                  if (has) st.getNumNulls else -1L,
-                  if (hasVals) Option(st.minAsString) else None,
-                  if (hasVals) Option(st.maxAsString) else None,
-                  if (hasVals) num(st.genericGetMin.asInstanceOf[AnyRef])
-                  else None,
-                  if (hasVals) num(st.genericGetMax.asInstanceOf[AnyRef])
-                  else None,
-                  if (hasVals) intg(st.genericGetMin.asInstanceOf[AnyRef])
-                  else None,
-                  if (hasVals) intg(st.genericGetMax.asInstanceOf[AnyRef])
-                  else None)
-              }
-            }.iterator
-          } finally reader.close()
-        }
-      }
-      .toDF("file", "column", "ptype", "rows", "nulls",
-        "min_str", "max_str", "min_num", "max_num",
-        "min_int", "max_int")
-      // one row per (file, column): merge row groups
-      .groupBy($"file", $"column", $"ptype")
-      .agg(sum($"rows").as("rows"),
-        sum($"nulls").as("nulls"),
-        min($"min_str").as("min_str"), max($"max_str").as("max_str"),
-        min($"min_num").as("min_num"), max($"max_num").as("max_num"),
-        min($"min_int").as("min_int"), max($"max_int").as("max_int"))
+  def parquetFileStats(spark: SparkSession, dir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    spark.createDataFrame(listParquetFiles(spark, dir)
+      .flatMap(footerStats(conf, _)).map(_.row).asJava, ManifestSchema)
   }
+
+  // ---------- store reads: schemas from driver-read footers ----------
+
+  // the Spark row schema Spark's own inference reads from `file`'s
+  // footer — the same types, so "*" columns and int widths resolve as
+  // an inferring read would resolve them
+  private def footerSchema(spark: SparkSession, file: String): StructType =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFooterBridge
+      .schema(spark, new org.apache.parquet.hadoop.Footer(new Path(file),
+        readFooter(spark.sparkContext.hadoopConfiguration, file)))
+
+  // the first data file by path of each of `dirs` — the order Spark's
+  // inference picks its footer by
+  private def firstFiles(spark: SparkSession,
+                         dirs: Seq[String]): Seq[String] =
+    dirs.flatMap(d => listParquetFiles(spark, d).minOption)
+
+  // `paths` read under the schema of the first of `files` (their data
+  // files, or one first file per dir), the footer an inferring read
+  // would take — with no inference job; no files reads as before
+  private def readAs(spark: SparkSession, files: Seq[String],
+                     paths: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.read.parquet(paths: _*)
+    else spark.read.schema(footerSchema(spark, files.min))
+      .parquet(paths: _*)
 
   /** Files a `column BETWEEN lo AND hi` predicate would skip entirely
     * (footer range disjoint from [lo, hi], or the column is all null).
@@ -222,12 +312,14 @@ object Stats {
     }
   }
 
-  // the committed manifest at `manifestPath`; None when none is
+  // the committed manifest at `manifestPath` read under its declared
+  // `schema` (the footer manifest's by default); None when none is
   // committed (missing, or only a crashed first write's leftovers)
-  private def manifestAt(spark: SparkSession,
-                         manifestPath: String): Option[DataFrame] =
+  private def manifestAt(spark: SparkSession, manifestPath: String,
+                         schema: StructType = ManifestSchema)
+      : Option[DataFrame] =
     if (hasManifest(spark, manifestPath))
-      Some(spark.read.parquet(manifestPath))
+      Some(spark.read.schema(schema).parquet(manifestPath))
     else None
 
   // ---------- persisted manifest ----------
@@ -239,82 +331,153 @@ object Stats {
     * query at 100 TB; the persisted manifest makes pruning a read of
     * an O(files × columns) table instead.
     *
+    * Layout: one flat parquet directory of SLICE files, one per data
+    * dir — `slice-<name>.parquet` for each child dir of `dir` (a
+    * store's `batch=<id>` / `gen=<tok>`, a table's `dt=...`) and
+    * `slice.parquet` for files directly in `dir` — each built from its
+    * files' footers, read on the driver, and written under a hidden
+    * name then renamed into place. `spark.read.parquet` of the
+    * manifest path reads every slice at once ([[ManifestSchema]]).
+    *
     * Contract: data files are IMMUTABLE once written (the parquet/data
-    * -lake convention — appends add files, compaction writes new ones);
-    * the manifest is keyed by file name, so [[refreshManifest]] carries
-    * existing rows verbatim, reads footers ONLY for files it has not
-    * seen, and drops rows for files that vanished. Consumers treat the
-    * manifest as advisory: [[readSkippingManifest]] never prunes a
-    * file the manifest does not cover, so a stale manifest costs
-    * pruning, never correctness.
+    * -lake convention — appends add files, compaction writes new ones,
+    * a retried batch writes new file names). A commit touches only the
+    * slice of the dir it wrote ([[upsertManifestFor]]); no other
+    * manifest row is read or rewritten. Consumers treat the manifest as
+    * advisory: pruned reads never skip a file the manifest does not
+    * cover, so a missing slice (a crash between a data commit and its
+    * slice) or a stale one costs pruning, never correctness.
+    *
+    * This writes every slice from scratch and drops every other file
+    * the manifest dir holds (vanished dirs' slices, or the `part-*`
+    * files of a manifest written as one Spark table).
     */
   def writeManifest(spark: SparkSession, dir: String,
-                    manifestPath: String): Unit = {
-    parquetFileStats(spark, dir).write.mode("overwrite")
-      .parquet(manifestPath)
-    // drop any cached listing of the (just-replaced) manifest files
-    spark.catalog.refreshByPath(manifestPath)
-  }
+                    manifestPath: String): Unit =
+    syncSlices(spark, dir, manifestPath, rewrite = true)
 
-  /** Incrementally refresh a persisted manifest after appends /
-    * compactions / deletes: footer reads happen only for files not yet
-    * in the manifest. Driver traffic is the file-name lists — the same
-    * O(files) any scan's file index pays. With no committed manifest
-    * (never written, or only a crashed first write's `_temporary`
-    * leftovers) this is [[writeManifest]]: one full footer sweep.
+  /** Bring a persisted manifest up to date after appends / compactions
+    * / deletes, slice by slice: a data dir whose slice names exactly
+    * its files is left alone; otherwise its slice is rewritten with
+    * the rows of its files the slice already covers carried verbatim
+    * and footers read only for the files it has not seen. Slices of
+    * vanished dirs are deleted — a compaction's refresh writes its
+    * generation's slice and drops the slices of the dirs it vacuumed.
+    * With no committed manifest this is [[writeManifest]].
     */
   def refreshManifest(spark: SparkSession, dir: String,
-                      manifestPath: String): Unit = {
-    if (!hasManifest(spark, manifestPath)) {
-      writeManifest(spark, dir, manifestPath); return
-    }
-    import spark.implicits._
-    val current = listParquetFiles(spark, dir).toSet
-    val old = spark.read.parquet(manifestPath)
-    val known = old.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val fresh = (current -- known).toSeq.sorted
-    val kept = old.join(
-      broadcast(spark.createDataset(current.toSeq).toDF("file")),
-      Seq("file"), "left_semi")
-    val refreshed =
-      (if (fresh.isEmpty) kept
-       else kept.unionByName(statsForFiles(spark, fresh)))
-        // manifest-sized, not data-sized: materialize before the
-        // self-overwrite (Spark cannot overwrite a path mid-read)
-        .transform(Checkpoints.stage)
-    refreshed.write.mode("overwrite").parquet(manifestPath)
-    spark.catalog.refreshByPath(manifestPath)
-  }
+                      manifestPath: String): Unit =
+    syncSlices(spark, dir, manifestPath, rewrite = false)
 
-  /** [[refreshManifest]] scoped to ONE changed subdirectory — the
-    * batch-append fast path: manifest rows under `changedDir` are
-    * replaced wholesale with fresh footer stats (exact under retry
-    * overwrites, which swap that dir's files), every other row carries
-    * verbatim, and nothing else is listed or footer-read. A store-wide
-    * [[refreshManifest]] pays a full recursive listing plus a
-    * known-file collect per append; this pays one small-dir listing.
-    * Falls back to a full [[writeManifest]] when no committed manifest
-    * exists.
+  /** The commit path of a `batch=<id>` / `gen=<tok>` write: replace the
+    * slice of `changedDir` (a child dir of `dir`) with its files'
+    * footer stats — exact under retry overwrites, which swap that
+    * dir's files — and nothing else: no other dir is listed,
+    * footer-read or rewritten.
     */
   def upsertManifestFor(spark: SparkSession, dir: String,
                         manifestPath: String,
                         changedDir: String): Unit = {
-    if (!hasManifest(spark, manifestPath)) {
-      writeManifest(spark, dir, manifestPath); return
+    val changed = new Path(changedDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = changed.getFileSystem(conf)
+    writeSlice(fs, conf, slicePath(manifestPath, changed.getName),
+      visibleFiles(fs, changed).flatMap(f =>
+        footerStats(conf, f.getPath.toString)))
+    spark.catalog.refreshByPath(manifestPath)
+  }
+
+  // the slice covering child dir `name` of a manifest's data dir ("" =
+  // the files directly in it)
+  private def slicePath(manifestPath: String, name: String): Path =
+    new Path(manifestPath,
+      if (name.isEmpty) "slice.parquet" else s"slice-$name.parquet")
+
+  // replace the slice at `to` by `rows` (none: delete it); written
+  // under a hidden name and renamed, so a crash leaves the old slice,
+  // none, or the whole new one
+  private def writeSlice(fs: FileSystem,
+                         conf: org.apache.hadoop.conf.Configuration,
+                         to: Path, rows: Seq[ColumnStats]): Unit =
+    if (rows.isEmpty) fs.delete(to, false): Unit
+    else {
+      val tmp = new Path(to.getParent,
+        s".${to.getName}-${java.util.UUID.randomUUID()}")
+      val out = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+          .fromPath(tmp, conf))
+        .withType(sliceType)
+        .withConf(new org.apache.hadoop.conf.Configuration(conf)).build()
+      val groups =
+        new org.apache.parquet.example.data.simple.SimpleGroupFactory(
+          sliceType)
+      try rows.foreach { r =>
+        val g = groups.newGroup()
+        ManifestSchema.fieldNames.zip(r.row.toSeq).foreach {
+          case (_, null) =>
+          case (n, v: String) => g.add(n, v)
+          case (n, v: Long) => g.add(n, v)
+          case (n, v: Double) => g.add(n, v)
+        }
+        out.write(g)
+      } finally out.close()
+      fs.delete(to, false)
+      fs.rename(tmp, to): Unit
     }
-    val p = new org.apache.hadoop.fs.Path(changedDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = fs.makeQualified(p).toString.stripSuffix("/") + "/"
-    val files = listParquetFiles(spark, changedDir)
-    val kept = spark.read.parquet(manifestPath)
-      .where(!col("file").startsWith(prefix))
-    val refreshed =
-      (if (files.isEmpty) kept
-       else kept.unionByName(statsForFiles(spark, files)))
-        // manifest-sized; materialize before the self-overwrite
-        .transform(Checkpoints.stage)
-    refreshed.write.mode("overwrite").parquet(manifestPath)
+
+  // the rows of the slice at `p`, read on the driver
+  private def sliceRows(conf: org.apache.hadoop.conf.Configuration,
+                        p: Path): Seq[ColumnStats] = {
+    val in = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
+      .withConf(new org.apache.hadoop.conf.Configuration(conf)).build()
+    try Iterator.continually(in.read()).takeWhile(_ != null).map { g =>
+      def opt[T](n: String)(get: String => T): Option[T] =
+        if (g.getFieldRepetitionCount(n) > 0) Some(get(n)) else None
+      def str(n: String) = g.getString(n, 0)
+      def long(n: String) = g.getLong(n, 0)
+      def dbl(n: String) = g.getDouble(n, 0)
+      ColumnStats(str("file"), str("column"), str("ptype"), long("rows"),
+        long("nulls"), opt("min_str")(str), opt("max_str")(str),
+        opt("min_num")(dbl), opt("max_num")(dbl), opt("min_int")(long),
+        opt("max_int")(long))
+    }.toVector
+    finally in.close()
+  }
+
+  // the manifest brought level with `dir`'s data dirs, one slice per
+  // dir (all rewritten from footers when `rewrite`); every other
+  // reader-visible file of the manifest dir is deleted
+  private def syncSlices(spark: SparkSession, dir: String,
+                         manifestPath: String, rewrite: Boolean): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(conf)
+    val root = fs.makeQualified(new Path(dir))
+    val man = new Path(manifestPath)
+    val held = if (!fs.exists(man)) Set.empty[String]
+      else fs.listStatus(man).map(_.getPath.getName).toSet
+    val units: Seq[(String, Seq[FileStatus])] =
+      if (!fs.exists(root)) Nil
+      else {
+        val (subdirs, own) = fs.listStatus(root).toSeq
+          .filter(s => readerVisible(root, s.getPath))
+          .partition(_.isDirectory)
+        ("" -> own.filter(isDataFile)) +:
+          subdirs.map(s => s.getPath.getName -> visibleFiles(fs, s.getPath))
+      }.filter(_._2.nonEmpty)
+    val live = units.map { case (name, files) =>
+      val to = slicePath(manifestPath, name)
+      val listed = files.map(_.getPath.toString).toSet
+      val old =
+        if (rewrite || !held(to.getName)) Nil else sliceRows(conf, to)
+      val seen = old.map(_.file).toSet
+      if (seen != listed)
+        writeSlice(fs, conf, to, old.filter(r => listed(r.file)) ++
+          (listed -- seen).toSeq.sorted.flatMap(footerStats(conf, _)))
+      to.getName
+    }.toSet
+    held.filterNot(n => live(n) || n.startsWith("_") || n.startsWith("."))
+      .foreach(n => fs.delete(new Path(man, n), true))
     spark.catalog.refreshByPath(manifestPath)
   }
 
@@ -344,20 +507,9 @@ object Stats {
   def hasCommittedParquet(fs: org.apache.hadoop.fs.FileSystem,
                           root: org.apache.hadoop.fs.Path): Boolean = {
     val qRoot = fs.makeQualified(root)
-    def readerVisible(p: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != qRoot) {
-        val nm = cur.getName
-        if (nm.startsWith("_") || nm.startsWith(".")) return false
-        cur = cur.getParent
-      }
-      true
-    }
     val it = fs.listFiles(qRoot, true)
     Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .exists(f => f.isFile && f.getLen > 0 &&
-        f.getPath.getName.endsWith(".parquet") &&
-        readerVisible(f.getPath))
+      .exists(f => isDataFile(f) && readerVisible(qRoot, f.getPath))
   }
 
   /** The committed READ VIEW of a `gen=`/`batch=` store: the newest
@@ -540,7 +692,7 @@ object Stats {
                              who: String): Option[DataFrame] = {
     val dirs = committedViewDirsAsOf(spark, root, asOf)
     if (dirs.isEmpty) None
-    else Some(guardSchema(spark.read.parquet(dirs: _*), expected, who,
+    else Some(openGuarded(spark, dirs, expected, who,
       s"snapshot of $root as of $asOf", ""))
   }
 
@@ -756,24 +908,42 @@ object Stats {
     * emptiness contract, not this). An expected type of `"*"` checks
     * the column's PRESENCE only — for payload columns whose type
     * legitimately follows the corpus (e.g. a label store's label).
+    * Every committed dir is checked, on its first file's footer read
+    * on the driver, before the read; the read takes the schema of the
+    * view's first file — the one Spark's inference would sample — so
+    * no inference job runs.
     */
   def openCommittedStore(spark: SparkSession, root: String,
                          expected: Seq[(String, String)],
                          who: String): DataFrame =
-    guardSchema(spark.read.parquet(committedViewDirs(spark, root): _*),
-      expected, who, s"store at $root", " (a drifted store dir would " +
-        "otherwise surface as an unrelated mid-query analysis error, " +
-        "or silently cast)")
+    openGuarded(spark, committedViewDirs(spark, root), expected, who,
+      s"store at $root", " (a drifted store dir would otherwise " +
+        "surface as an unrelated mid-query analysis error, or silently " +
+        "cast)")
+
+  // `dirs` read after each dir's first footer passes the guard, under
+  // the schema of the first footer of all
+  private def openGuarded(spark: SparkSession, dirs: Seq[String],
+                          expected: Seq[(String, String)], who: String,
+                          subject: String, why: String): DataFrame = {
+    val footers = firstFiles(spark, dirs).map(f => f -> footerSchema(spark, f))
+    footers.foreach { case (f, schema) =>
+      guardSchema(schema, expected, who,
+        s"$subject (dir ${new Path(f).getParent.getName})", why)
+    }
+    if (footers.isEmpty) spark.read.parquet(dirs: _*)
+    else spark.read.schema(footers.minBy(_._1)._2).parquet(dirs: _*)
+  }
 
   // the store schema guard: column names as a set, types compared with
   // every integer width equivalent ("*" accepts any type)
-  private def guardSchema(df: DataFrame, expected: Seq[(String, String)],
-                          who: String, subject: String,
-                          why: String): DataFrame = {
+  private def guardSchema(schema: StructType,
+                          expected: Seq[(String, String)], who: String,
+                          subject: String, why: String): Unit = {
     val intWidths = Set("tinyint", "smallint", "int", "bigint")
     def canon(t: String): String =
       if (intWidths(t)) "integral" else t
-    val found = df.schema.fields
+    val found = schema.fields
       .map(f => f.name -> f.dataType.simpleString).toSeq
     val foundM = found.map { case (n, t) => n -> canon(t) }.toMap
     val ok = foundM.keySet == expected.map(_._1).toSet &&
@@ -787,7 +957,6 @@ object Stats {
           "}, found {" +
           found.map { case (n, t) => s"$n: $t" }.mkString(", ") +
           s"}; refusing the read$why")
-    df
   }
 
   // ---------- writer fence (store-family leases) ----------
@@ -1287,7 +1456,7 @@ object Stats {
         val newTok = foldable.map(_._1).max
         val viewPaths = (gens.filter(_._1 == prevTok).map(_._2) ++
           foldable.map(_._2)).map(_.toString).toSeq
-        shape(spark.read.parquet(viewPaths: _*))
+        shape(readAs(spark, firstFiles(spark, viewPaths), viewPaths))
           .write.mode("overwrite").parquet(s"$root/gen=$newTok")
         // crash seam: fires between the fold commit and the vacuum —
         // lets a spec kill the compactor at the protocol's most
@@ -1433,8 +1602,9 @@ object Stats {
   // schema-preserving empty frame of `dirs`
   private def scanKept(spark: SparkSession, dirs: Seq[String],
                        keep: Seq[String]): DataFrame =
-    if (keep.isEmpty) spark.read.parquet(dirs: _*).where(lit(false))
-    else spark.read.parquet(keep: _*)
+    if (keep.isEmpty)
+      readAs(spark, firstFiles(spark, dirs), dirs).where(lit(false))
+    else readAs(spark, keep, keep)
 
   /** Store scan of `dirs` opening only the [[touchedFiles]] — the read
     * path of every clustered store (the incremental near-dup, media,
@@ -1547,7 +1717,7 @@ object Stats {
                             numHashes: Int = 6): Unit = {
     import spark.implicits._
     require(bitsPerKey >= 1 && numHashes >= 1)
-    val keyed = spark.read.parquet(dir)
+    val keyed = readAs(spark, firstFiles(spark, Seq(dir)), Seq(dir))
       .where(col(c).isNotNull)
       .select(input_file_name().as("file"), xxhash64(col(c)).as("__h"))
     val maxKeys = keyed.groupBy(col("file"))
@@ -1565,6 +1735,12 @@ object Stats {
       .write.mode("overwrite").parquet(manifestPath)
     spark.catalog.refreshByPath(manifestPath)
   }
+
+  // the bloom manifest's columns, as [[writeKeyBloomManifest]] writes them
+  private val BloomManifestSchema: StructType = StructType(Seq(
+    StructField("file", StringType), StructField("bloom", BinaryType),
+    StructField("n_keys", LongType), StructField("m", IntegerType),
+    StructField("k", IntegerType)))
 
   /** The data files a POINT-PROBE set over `c` can possibly touch,
     * per the bloom manifest: a file is kept iff some probe's k bit
@@ -1590,7 +1766,7 @@ object Stats {
         "use the clustered/manifest range paths for batch probes")
     val hs = guarded
     val files = dirs.flatMap(d => listParquetFiles(spark, d))
-    manifestAt(spark, manifestPath).fold(files) { stats =>
+    manifestAt(spark, manifestPath, BloomManifestSchema).fold(files) { stats =>
       val man = stats.select(col("file"), col("m"), col("k"), col("bloom"))
         .as[(String, Int, Int, Array[Byte])]
       // `input_file_name()` (build side) renders file:///p, the Hadoop

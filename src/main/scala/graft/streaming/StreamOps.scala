@@ -354,8 +354,9 @@ object StreamOps {
                                       compactor: String,
                                       idCol: String = "id") {
     /** Fold the store into a clustered generation minus its `_deleted`
-      * set ([[compactGateStore]], as `compactor`) and refresh the whole
-      * manifest.
+      * set ([[compactGateStore]], as `compactor`) and refresh the
+      * manifest (the generation's slice written, the vacuumed dirs'
+      * slices dropped).
       */
     def compact(spark: SparkSession, storePath: String,
                 manifestPath: String, filesOut: Int): Option[Long] =

@@ -213,4 +213,60 @@ class KeyedStoreSpec extends SparkSuite {
       .agg(count(lit(1)), sum(col("dl"))).as[(Long, Long)].collect().toSeq
     assert(got == want && want.head._1 == 8L, s"got $got, want $want")
   }
+
+  /** The first-stage names of the jobs `body` runs, counted by this
+    * call's job tag (so other threads' jobs on the shared context never
+    * enter).
+    */
+  private def jobNames(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tag = s"keyed-jobs-${java.util.UUID.randomUUID()}"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (org.apache.spark.JobTags.of(e).contains(tag))
+          names.add(e.stageInfos.minBy(_.stageId).name): Unit
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try body
+    finally {
+      sc.removeJobTag(tag)
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    names.toArray(Array.empty[String]).toSeq
+  }
+
+  test("the store path runs no metadata job: writeBase, append, compact, " +
+      "current and asOf run no parquet job at Stats, and an indexed " +
+      "append runs as many jobs as an unindexed one") {
+    val dir = s"/tmp/graft-keyed-nometa-${System.nanoTime()}"
+    def store(d: String) = KeyedStore(d, "noMetaStore",
+      Seq("id" -> "bigint"), Seq("v" -> "bigint"), KeyedStore.NewestWins)
+    def rowsOf(lo: Long, hi: Long) =
+      (lo to hi).toDF("id").withColumn("v", col("id") * 3)
+    val s = store(dir)
+    val names = Seq(
+      jobNames(s.writeBase(spark, "spec", 2)(rowsOf(1L, 40L))),
+      jobNames(s.append(spark, "spec", 1L, 2)(rowsOf(30L, 60L))),
+      jobNames(s.compact(spark, "spec", 2): Unit),
+      jobNames(s.current(spark).collect(): Unit),
+      jobNames(s.asOf(spark, 1L).collect(): Unit)).flatten
+    assert(names.nonEmpty, "no job was tagged")
+    assert(!names.exists(_.startsWith("parquet at Stats.scala")),
+      names.mkString("; "))
+    assert(rows(s.current(spark)) == rows(rowsOf(1L, 60L)))
+    // the same base twice; one indexed append, one not
+    val (on, off) = (store(s"$dir-on"), store(s"$dir-off"))
+    Seq(on, off).foreach(_.writeBase(spark, "spec", 2)(rowsOf(1L, 40L)))
+    val indexed = jobNames(on.append(spark, "spec", 1L, 2)(rowsOf(30L, 60L)))
+    val unindexed = jobNames(off.append(spark, "spec", 1L, 2,
+      indexed = false)(rowsOf(30L, 60L)))
+    assert(indexed.size == unindexed.size,
+      s"indexed: ${indexed.mkString("; ")} vs unindexed: " +
+        unindexed.mkString("; "))
+  }
 }

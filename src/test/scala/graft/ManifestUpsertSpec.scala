@@ -256,4 +256,134 @@ class ManifestUpsertSpec extends SparkSuite {
       assert(rows(read(man)) == want, s"$name: crashed manifest")
     }
   }
+
+  // ---------- the slice protocol: one manifest file per data dir ----------
+
+  import scala.jdk.CollectionConverters._
+
+  private def keyed(root: String) = graft.operators.KeyedStore(root,
+    "sliceStore", Seq("id" -> "bigint"), Seq("v" -> "bigint"),
+    graft.operators.KeyedStore.NewestWins)
+
+  private def idRows(lo: Long, hi: Long) =
+    (lo to hi).toDF("id").withColumn("v", col("id") * 2)
+
+  private def freshRoot(tag: String): String = java.nio.file.Files
+    .createTempDirectory(s"graft-slice-$tag-").toString + "/store"
+
+  // reader-visible file names of a manifest dir
+  private def manifestFiles(man: String): Set[String] =
+    Option(new java.io.File(man).listFiles()).toSeq.flatten.map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+
+  // the data files of `dirs` as local paths
+  private def dataFiles(dirs: Seq[String]): Set[String] =
+    dirs.flatMap { d =>
+      org.apache.commons.io.FileUtils.listFiles(
+        new java.io.File(new java.net.URI(d).getPath), Array("parquet"),
+        true).asScala.map(_.getPath)
+    }.filterNot(_.split("/").exists(c => c.startsWith("_") ||
+      c.startsWith("."))).toSet
+
+  private def manifestNames(man: String): Set[String] =
+    spark.read.parquet(man).select("file").distinct().as[String]
+      .collect().map(f => new java.net.URI(f).getPath).toSet
+
+  test("a data commit whose slice write crashed answers the same rows " +
+      "and reads that dir unpruned") {
+    val root = freshRoot("crash")
+    val store = keyed(root)
+    store.writeBase(spark, "spec", 2)(idRows(1L, 40L))
+    store.append(spark, "spec", 1L, 1)(idRows(41L, 60L))
+    store.append(spark, "spec", 2L, 2)(idRows(61L, 80L))
+    val probe = Seq(5L, 70L).toDF("id")
+    def answer = store.pruned(spark, "id", probe)
+      .where(col("id").isin(5L, 70L)).select("id", "v")
+      .as[(Long, Long)].collect().toSet
+    val want = answer
+    assert(want == Set((5L, 10L), (70L, 140L)), s"got $want")
+    // the crash: batch=2 committed, its slice never renamed into place
+    val man = root + "_manifest"
+    val slice = new java.io.File(man, "slice-batch=2.parquet")
+    assert(slice.delete(), s"no slice at $slice")
+    new java.io.File(man, ".slice-batch=2.parquet.crc").delete()
+    java.nio.file.Files.write(new java.io.File(man,
+      ".slice-batch=2.parquet-crashed").toPath, "PAR1".getBytes("UTF-8"))
+    assert(answer == want)
+    val kept = Stats.touchedFiles(spark, store.committedDirs(spark), man,
+      Seq("id"), Seq(5L).toDF("id")).map(f => new java.net.URI(f).getPath)
+    val batch2 = dataFiles(Seq(s"$root/batch=2"))
+    assert(batch2.size == 2 && batch2.subsetOf(kept.toSet),
+      s"uncovered batch=2 files must be read: kept $kept")
+    assert(dataFiles(Seq(s"$root/batch=1")).intersect(kept.toSet).isEmpty,
+      s"covered batch=1 must still prune: kept $kept")
+  }
+
+  test("a retried batch overwrite leaves one slice for that dir, and the " +
+      "manifest covers exactly the view's files") {
+    val root = freshRoot("retry")
+    val store = keyed(root)
+    val man = root + "_manifest"
+    store.writeBase(spark, "spec", 2)(idRows(1L, 40L))
+    store.append(spark, "spec", 1L, 1)(idRows(41L, 50L))
+    store.append(spark, "spec", 1L, 3)(idRows(41L, 70L))
+    assert(manifestFiles(man) ==
+      Set("slice-batch=0.parquet", "slice-batch=1.parquet"),
+      manifestFiles(man).mkString(", "))
+    assert(manifestNames(man) == dataFiles(store.committedDirs(spark)))
+    assert(dataFiles(Seq(s"$root/batch=1")).size == 3)
+  }
+
+  test("after compaction no manifest row names a vanished file, and the " +
+      "vacuumed dirs' slices are gone") {
+    val root = freshRoot("compact")
+    val store = keyed(root)
+    val man = root + "_manifest"
+    store.writeBase(spark, "spec", 2)(idRows(1L, 40L))
+    store.append(spark, "spec", 1L, 1)(idRows(41L, 50L))
+    assert(store.compact(spark, "spec", 2).contains(1L))
+    store.append(spark, "spec", 2L, 1)(idRows(51L, 60L))
+    assert(store.compact(spark, "spec", 2).contains(2L))
+    // the second fold vacuumed batch=0 and batch=1
+    assert(!new java.io.File(s"$root/batch=0").exists())
+    val names = manifestNames(man)
+    assert(names.forall(f => new java.io.File(f).exists()),
+      s"manifest names a vanished file: $names")
+    assert(manifestFiles(man) == Set("slice-gen=1.parquet",
+      "slice-gen=2.parquet", "slice-batch=2.parquet"),
+      manifestFiles(man).mkString(", "))
+    assert(dataFiles(store.committedDirs(spark)).subsetOf(names))
+    assert(store.current(spark).count() == 60L)
+  }
+
+  test("a manifest written as one Spark table (part-* files) still " +
+      "prunes and answers; the next refresh replaces it by slices") {
+    val root = freshRoot("legacy")
+    val store = keyed(root)
+    val man = root + "_manifest"
+    store.writeBase(spark, "spec", 2)(idRows(1L, 40L))
+    store.append(spark, "spec", 1L, 1)(idRows(41L, 60L))
+    // the one-table form: every row in Spark-written part files
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(man))
+    Stats.parquetFileStats(spark, root).write.parquet(man)
+    assert(manifestFiles(man).forall(_.startsWith("part-")))
+    val probe = Seq(5L, 45L).toDF("id")
+    val kept = Stats.touchedFiles(spark, store.committedDirs(spark), man,
+      Seq("id"), Seq(45L).toDF("id")).map(f => new java.net.URI(f).getPath)
+    assert(kept.toSet == dataFiles(Seq(s"$root/batch=1")),
+      s"the one-table manifest must prune: kept $kept")
+    assert(store.pruned(spark, "id", probe).where(col("id").isin(5L, 45L))
+      .select("id", "v").as[(Long, Long)].collect().toSet ==
+      Set((5L, 10L), (45L, 90L)))
+    // a commit adds its slice beside the part files; the answer holds
+    store.append(spark, "spec", 2L, 1)(idRows(61L, 70L))
+    assert(manifestFiles(man).contains("slice-batch=2.parquet"))
+    assert(store.pruned(spark, "id", Seq(65L).toDF("id"))
+      .where(col("id") === 65L).count() == 1L)
+    // compaction's refresh leaves slices only
+    assert(store.compact(spark, "spec", 2).isDefined)
+    assert(manifestFiles(man).forall(_.startsWith("slice-")),
+      manifestFiles(man).mkString(", "))
+    assert(manifestNames(man) == dataFiles(Seq(root)))
+  }
 }

@@ -88,4 +88,25 @@ class StoreSchemaSpec extends SparkSuite {
     assert(ex.getMessage.contains(s"$base/store") &&
       ex.getMessage.contains("missing"), ex.getMessage)
   }
+
+  test("a drifted LATER batch dir fails at open too: a renamed or a " +
+      "retyped column in batch=1 beside a healthy base raises the named " +
+      "error, not a silent null or a mid-query read failure") {
+    val base = s"/tmp/graft-laterdrift-${System.nanoTime()}"
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v")
+    val drifts = Seq(
+      "renamed" -> Seq((1L, 5L, 1L)).toDF("id", "cnt", "__b"),
+      "retyped" -> Seq((1L, "5", 1L)).toDF("id", "n_tri", "__b"))
+    for ((tag, rows) <- drifts) {
+      val dir = s"$base/$tag"
+      Graph.writeTriangleStore(edges, col("u"), col("v"), dir)
+      rows.write.parquet(s"$dir/batch=1")
+      val ex = intercept[Stats.StoreSchemaException] {
+        Graph.triangleStoreCounts(spark, dir)
+      }
+      assert(ex.getMessage.contains("triangleStore") &&
+        ex.getMessage.contains(s"store at $dir") &&
+        ex.getMessage.contains("batch=1"), s"$tag: ${ex.getMessage}")
+    }
+  }
 }
