@@ -54,8 +54,9 @@ object Ingest {
 
   /** Append sink (S5): idempotent table bootstrap + append, replacing the
     * reference's `CREATE TABLE IF NOT EXISTS` + `INSERT`
-    * (`open_meteo.py:62-76`). Parquet-backed catalog table; at 100 TB this
-    * is partitioned by ingest date so daily reruns prune.
+    * (`open_meteo.py:62-76`). Parquet-backed catalog table, not
+    * partitioned: each append adds files to the one table directory, and
+    * every reader (the nightly refresh included) scans all of them.
     *
     * The per-location row counts are observed on the append job itself
     * (Observation metrics ride its task results), so the batch runs once.

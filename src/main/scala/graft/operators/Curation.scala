@@ -224,20 +224,19 @@ object Curation {
     *
     * The candidate-hash set is boilerplate-sized by the op's premise,
     * but the premise is MEASURED, not assumed (the charTrigram gate
-    * pattern): the staged hash set is counted, and only under
-    * `broadcastCandLimit` does it broadcast into the confirm semi
+    * pattern): the staged hash set is counted, and only when the count
+    * fits [[Regime]] does it broadcast into the confirm semi
     * join — a duplicate-heavy corpus with a low maxDf (candidates ≈
     * distinct lines) takes a shuffle-hash semi join instead of an
     * over-limit broadcast.
     */
   private[graft] def confirmedFrequentLines(
-      src: DataFrame, pat: String, maxDf: Long,
-      broadcastCandLimit: Long = 4000000L): DataFrame = {
+      src: DataFrame, pat: String, maxDf: Long): DataFrame = {
     val lines = src.select(explode(split(col("__t"), pat)).as("line"))
     val (candHashes, nCand) =
       Checkpoints.stageCount(lineHashFrequencies(src, pat, maxDf))
     val candSide =
-      if (nCand <= broadcastCandLimit) broadcast(candHashes)
+      if (Regime.fits(nCand)) broadcast(candHashes)
       else candHashes.hint("shuffle_hash")
     lines
       .join(candSide, xxhash64(col("line")) === col("lh"), "left_semi")
@@ -292,8 +291,7 @@ object Curation {
     * the two aggregates either way.
     */
   def charTrigramFamiliarity(df: DataFrame, id: Column, text: Column,
-                             minCount: Long = 1L,
-                             broadcastVocabLimit: Long = 4000000L)
+                             minCount: Long = 1L)
       : DataFrame = {
     require(minCount >= 1, "minCount must be >= 1")
     // Two corpus passes (count, then score) of per-row-expensive
@@ -305,7 +303,7 @@ object Curation {
     val (counts, vocab) = Checkpoints.stageCount(
       if (minCount > 1) all.where(col("c") >= minCount) else all)
     val joined =
-      if (vocab <= broadcastVocabLimit) tri.join(broadcast(counts), Seq("tg"))
+      if (Regime.fits(vocab)) tri.join(broadcast(counts), Seq("tg"))
       else tri.join(counts.hint("shuffle_hash"), Seq("tg"))
     joined.groupBy(col("id"))
       .agg(count(lit(1)).as("n_tri"), sum(col("c")).as("fam"))
@@ -551,8 +549,8 @@ object Curation {
     *    missing manifest costs pruning, never rows);
     * 3. the surviving store slice is row-filtered by a semi join on
     *    the batch's fp set, then counted per new doc. The join rides
-    *    a batch-sized broadcast below `broadcastLimit` (the measured
-    *    regime gate of the MinHash incremental path) and degrades to
+    *    a batch-sized broadcast when the batch fits [[Regime]] (the
+    *    measured regime gate of the MinHash incremental path) and degrades to
     *    shuffle-hash above it.
     * Returns (id, n_shared), n_shared > 0 — the x_decontaminate shape;
     * gate downstream by dropping or routing flagged docs.
@@ -560,11 +558,10 @@ object Curation {
   def substringIncremental(newDocs: DataFrame, id: Column, text: Column,
                            storeDir: String, manifestPath: String,
                            window: Int = 40, anchorLen: Int = 8,
-                           anchorMod: Int = 16,
-                           broadcastLimit: Long = 4000000L): DataFrame = {
+                           anchorMod: Int = 16): DataFrame = {
     val (batchFps, nFps) = Checkpoints.stageCount(
       windowFpRows(newDocs, id, text, window, anchorLen, anchorMod))
-    val small = nFps <= broadcastLimit
+    val small = Regime.fits(nFps)
     val probe = batchFps.select(col("fp")).distinct()
     val storeSlice = Layout.WindowFps.touched(Seq(storeDir),
         manifestPath, probe)
@@ -614,12 +611,11 @@ object Curation {
   def substringIncrementalPairs(newDocs: DataFrame, id: Column,
                                 text: Column, storeDir: String,
                                 manifestPath: String, window: Int = 40,
-                                anchorLen: Int = 8, anchorMod: Int = 16,
-                                broadcastLimit: Long = 4000000L)
+                                anchorLen: Int = 8, anchorMod: Int = 16)
       : DataFrame = {
     val (batchFps, nFps) = Checkpoints.stageCount(
       windowFpRows(newDocs, id, text, window, anchorLen, anchorMod))
-    val small = nFps <= broadcastLimit
+    val small = Regime.fits(nFps)
     val probe = batchFps.select(col("fp")).distinct()
     val storeSlice = Layout.WindowFps.touched(Seq(storeDir),
         manifestPath, probe)

@@ -239,7 +239,7 @@ object Dedup {
     *
     * Regime gate: the batch's signatures are materialized once
     * (batch-sized localCheckpoint, reused across every join below) and
-    * COUNTED; at ≤ `broadcastLimit` rows the batch side rides
+    * COUNTED; when the count fits [[Regime]] the batch side rides
     * broadcasts end to end (steady-state ingestion — the store never
     * shuffles), above it every broadcast degrades to a shuffle join
     * (a 10 TB backfill "batch" must not be broadcast). Both arms are
@@ -249,11 +249,10 @@ object Dedup {
                          storeSigs: DataFrame, n: Int = 3, k: Int = 32,
                          rowsPerBand: Int = 4,
                          minEstJaccard: Double = 0.8,
-                         maxBucket: Int = 10000,
-                         broadcastLimit: Long = 4000000L): DataFrame =
+                         maxBucket: Int = 10000): DataFrame =
     minhashIncrementalFromSigs(newDocs, id,
       minhashSigsNative(newDocs, id, text, n, k), storeSigs,
-      rowsPerBand, minEstJaccard, maxBucket, broadcastLimit)
+      rowsPerBand, minEstJaccard, maxBucket)
 
   /** [[minhashIncremental]] over PRE-COMPUTED batch signatures — the
     * form callers that also persist the batch's signatures use (e.g.
@@ -267,11 +266,10 @@ object Dedup {
                                  storeSigs: DataFrame,
                                  rowsPerBand: Int = 4,
                                  minEstJaccard: Double = 0.8,
-                                 maxBucket: Int = 10000,
-                                 broadcastLimit: Long = 4000000L)
+                                 maxBucket: Int = 10000)
       : DataFrame = {
     val (newSigs, nNewSigs) = Checkpoints.stageCount(newSigsIn)
-    val small = nNewSigs <= broadcastLimit
+    val small = Regime.fits(nNewSigs)
     val newBands = lshBuckets(newSigs, rowsPerBand)
       .select(col("band"), col("bucket"), col("id"), col("sig"))
     val storeBands = lshBuckets(storeSigs.select(col("id"), col("sig")),
@@ -317,11 +315,10 @@ object Dedup {
                                   newBands: DataFrame,
                                   storeBands: DataFrame, batchRows: Long,
                                   minEstJaccard: Double = 0.8,
-                                  maxBucket: Int = 10000,
-                                  broadcastLimit: Long = 4000000L)
+                                  maxBucket: Int = 10000)
       : DataFrame =
     bandedIncrementalCore(newDocs, id, newBands, storeBands,
-      batchRows <= broadcastLimit, minEstJaccard, maxBucket)
+      Regime.fits(batchRows), minEstJaccard, maxBucket)
 
   /** [[bandedCandidateEdges]] over caller-owned banded inputs — the
     * edge-level face of [[minhashIncrementalFromBands]] for gates that
@@ -335,11 +332,10 @@ object Dedup {
                                      storeBands: DataFrame,
                                      batchRows: Long,
                                      minEstJaccard: Double = 0.8,
-                                     maxBucket: Int = 10000,
-                                     broadcastLimit: Long = 4000000L)
+                                     maxBucket: Int = 10000)
       : DataFrame =
     bandedCandidateEdges(newBands, storeBands,
-      batchRows <= broadcastLimit, minEstJaccard, maxBucket)
+      Regime.fits(batchRows), minEstJaccard, maxBucket)
 
   /** The candidate EDGES behind the incremental gates, pre-distinct:
     * (id_a, id_b, est_jaccard) with the new doc on the id_b side.
@@ -400,11 +396,10 @@ object Dedup {
                                          manifestPath: String,
                                          rowsPerBand: Int = 4,
                                          minEstJaccard: Double = 0.8,
-                                         maxBucket: Int = 10000,
-                                         broadcastLimit: Long = 4000000L)
+                                         maxBucket: Int = 10000)
       : DataFrame = {
     val (newSigs, nNewSigs) = Checkpoints.stageCount(newSigsIn)
-    val small = nNewSigs <= broadcastLimit
+    val small = Regime.fits(nNewSigs)
     val newBands = lshBuckets(newSigs, rowsPerBand)
       .select(col("band"), col("bucket"), col("id"), col("sig"))
     val storeBands = Layout.BandedSigs.touched(Seq(storeDir), manifestPath,
@@ -462,11 +457,10 @@ object Dedup {
                                manifestPath: String, n: Int = 3,
                                k: Int = 32, rowsPerBand: Int = 4,
                                minEstJaccard: Double = 0.8,
-                               maxBucket: Int = 10000,
-                               broadcastLimit: Long = 4000000L): DataFrame =
+                               maxBucket: Int = 10000): DataFrame =
     minhashIncrementalBandedFromSigs(newDocs, id,
       minhashSigsNative(newDocs, id, text, n, k), storeDir, manifestPath,
-      rowsPerBand, minEstJaccard, maxBucket, broadcastLimit)
+      rowsPerBand, minEstJaccard, maxBucket)
 
   /** [[minhashIncrementalBanded]] over pre-computed batch signatures
     * (the hash-once form the streaming gate uses).
@@ -477,11 +471,10 @@ object Dedup {
                                        manifestPath: String,
                                        rowsPerBand: Int = 4,
                                        minEstJaccard: Double = 0.8,
-                                       maxBucket: Int = 10000,
-                                       broadcastLimit: Long = 4000000L)
+                                       maxBucket: Int = 10000)
       : DataFrame = {
     val (newSigs, nNewSigs) = Checkpoints.stageCount(newSigsIn)
-    val small = nNewSigs <= broadcastLimit
+    val small = Regime.fits(nNewSigs)
     val newBands = lshBuckets(newSigs, rowsPerBand)
       .select(col("band"), col("bucket"), col("id"), col("sig"))
     val storeBands = Layout.BandedSigs.touched(Seq(storeDir), manifestPath,
@@ -935,22 +928,21 @@ object Dedup {
     * partners' vectors are ever fetched from it).
     *
     * Regime gate, as in [[minhashIncremental]]: the batch's codes are
-    * materialized once and counted; batches over `broadcastLimit`
-    * entries trade every broadcast for a shuffle join (both arms
+    * materialized once and counted; batches over the [[Regime]]
+    * threshold trade every broadcast for a shuffle join (both arms
     * row-identical).
     */
   def embeddingIncremental(newEmbs: DataFrame, id: Column, vec: Column,
                            storeCodes: DataFrame, storeVecs: DataFrame,
                            threshold: Double, planes: Int = 8,
                            tables: Int = 8, multiprobe: Int = 1,
-                           dim: Int = 64, maxBucket: Int = 100000,
-                           broadcastLimit: Long = 4000000L): DataFrame = {
+                           dim: Int = 64,
+                           maxBucket: Int = 100000): DataFrame = {
     val base = newEmbs.select(id.as("id"), vec.as("vec"))
     val (newCodes, nCodes) = Checkpoints.stageCount(
       embeddingCodes(base, col("id"), col("vec"), planes, tables, dim))
     embeddingIncrementalFromCodes(base, newCodes, nCodes, storeCodes,
-      storeVecs, threshold, planes, tables, multiprobe, maxBucket,
-      broadcastLimit)
+      storeVecs, threshold, planes, tables, multiprobe, maxBucket)
   }
 
   /** The shared tail of the incremental embedding gates: `base` is the
@@ -964,12 +956,9 @@ object Dedup {
                                             storeVecs: DataFrame,
                                             threshold: Double, planes: Int,
                                             tables: Int, multiprobe: Int,
-                                            maxBucket: Int,
-                                            broadcastLimit: Long)
+                                            maxBucket: Int)
       : DataFrame = {
-    val small = nCodes <= broadcastLimit
-    def batchSide(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    def batchSide(df: DataFrame): DataFrame = Regime.gate(nCodes)(df)
     val newEnt = expandProbes(newCodes, planes, multiprobe)
     val touched = newEnt.select(col("table"), col("bucket"))
     // store entries in touched buckets (map-side semi filter in the
@@ -1057,8 +1046,7 @@ object Dedup {
                                  storeVecs: DataFrame, threshold: Double,
                                  planes: Int = 8, tables: Int = 8,
                                  multiprobe: Int = 1, dim: Int = 64,
-                                 maxBucket: Int = 100000,
-                                 broadcastLimit: Long = 4000000L)
+                                 maxBucket: Int = 100000)
       : DataFrame = {
     val base = newEmbs.select(id.as("id"), vec.as("vec"))
     val (newCodes, nCodes) = Checkpoints.stageCount(
@@ -1069,8 +1057,7 @@ object Dedup {
     val storeCodes = Layout.CodeBuckets.touched(Seq(storeDir), manifestPath,
       pruneProbes)
     embeddingIncrementalFromCodes(base, newCodes, nCodes, storeCodes,
-      storeVecs, threshold, planes, tables, multiprobe, maxBucket,
-      broadcastLimit)
+      storeVecs, threshold, planes, tables, multiprobe, maxBucket)
   }
 
   /** Precision/recall audit of the MinHash+LSH near-dup pipeline

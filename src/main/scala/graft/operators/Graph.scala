@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import Regime.gate
+
 /** Distributed graph operators needed by the dedup pipeline.
   *
   * The one that matters at 100 TB: near-duplicate candidate pairs
@@ -13,13 +15,6 @@ import org.apache.spark.sql.functions._
   * keep-min is the standard resolution.
   */
 object Graph {
-
-  /** The measured broadcast gate every operator here shares: `df`
-    * broadcasts when `n`, the row count it was measured at, is within
-    * `limit`.
-    */
-  private def gate(n: Long, limit: Long)(df: DataFrame): DataFrame =
-    if (n <= limit) broadcast(df) else df
 
   /** Connected components by iterative min-label propagation with a
     * contraction fallback: `comp(v) ← min(comp(v), min over neighbors
@@ -45,8 +40,7 @@ object Graph {
     */
   def connectedComponents(edges: DataFrame, a: Column, b: Column,
                           maxIter: Int = 25,
-                          switchAfter: Int = 8,
-                          broadcastLimit: Long = 4000000L): DataFrame = {
+                          switchAfter: Int = 8): DataFrame = {
     val e = edges.select(a.cast("long").as("src"), b.cast("long").as("dst"))
     // pre-partitioned on src: each round's neighbor-min aggregate
     // (groupBy src over the dst-keyed labels join) reuses the
@@ -64,7 +58,7 @@ object Graph {
     val labels0 = Rounds.stage("connectedComponents.labels",
       sym.select(col("src").as("id")).distinct()
         .withColumn("comp", col("id")), Rounds.Rows)
-    val vSized = gate(labels0.count, broadcastLimit) _
+    val n = labels0.count
     val propagationRounds = math.min(maxIter, switchAfter)
     // labels only ever decrease, so the fixpoint is reached exactly
     // when the label sum stops falling (a decimal(38,0) sum observed
@@ -73,13 +67,13 @@ object Graph {
         propagationRounds, Rounds.Sum("comp"),
         done = (p, c) => p.index > 0 && p.sum.compareTo(c.sum) == 0) { t =>
       val labels = t.last.df
-      val lbl = vSized(labels)
+      val lbl = gate(n)(labels)
       val nbrMin = sym
         .join(lbl, sym("dst") === lbl("id"))
         .groupBy(sym("src").as("id"))
         .agg(min(col("comp")).as("__nbr"))
       val prop = labels
-        .join(vSized(nbrMin), Seq("id"), "left")
+        .join(gate(n)(nbrMin), Seq("id"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("__nbr"), col("comp")))
             .as("comp"))
@@ -94,7 +88,7 @@ object Graph {
       t.stage(
         if (t.index == 1) prop
         else prop
-          .join(vSized(labels.select(col("id").as("__cid"),
+          .join(gate(n)(labels.select(col("id").as("__cid"),
             col("comp").as("__cc"))), prop("comp") === col("__cid"),
             "left")
           .select(prop("id").as("id"),
@@ -108,9 +102,9 @@ object Graph {
         // components, (usually far) fewer vertices — and finish with
         // star contraction.
         val relab = sym
-          .join(vSized(labels.select(col("id"), col("comp").as("cu"))),
+          .join(gate(n)(labels.select(col("id"), col("comp").as("cu"))),
             sym("src") === col("id")).drop("id")
-          .join(vSized(labels.select(col("id"), col("comp").as("cv"))),
+          .join(gate(n)(labels.select(col("id"), col("comp").as("cv"))),
             sym("dst") === col("id")).drop("id")
           .select(col("cu").as("src"), col("cv").as("dst"))
           .where(col("src") =!= col("dst"))
@@ -119,11 +113,11 @@ object Graph {
         // and starRounds would label straight off the UNCONVERGED edges
         // (duplicate ids with conflicting comps); give the fallback at
         // least one round and let its convergence guard fail loudly if
-        // that isn't enough. The caller's broadcast limit carries over.
+        // that isn't enough.
         val (roots, _) = starRounds(relab, col("src"), col("dst"),
-          math.max(1, maxIter - propagationRounds), broadcastLimit)
+          math.max(1, maxIter - propagationRounds))
         val joined = Checkpoints.stage(labels
-          .join(vSized(roots.select(col("id").as("__rid"),
+          .join(gate(n)(roots.select(col("id").as("__rid"),
             col("comp").as("__rc"))),
             labels("comp") === col("__rid"), "left")
           .select(labels("id"),
@@ -163,8 +157,7 @@ object Graph {
     * rounds it took — exposed for convergence-bound tests.
     */
   def starRounds(edges: DataFrame, a: Column, b: Column,
-                 maxIter: Int = 20,
-                 broadcastLimit: Long = 4000000L): (DataFrame, Int) = {
+                 maxIter: Int = 20): (DataFrame, Int) = {
     val e0 = Rounds.stage("starRounds.edges", edges
       .select(a.cast("long").as("u"), b.cast("long").as("v"))
       .where(col("u") =!= col("v"))
@@ -183,7 +176,7 @@ object Graph {
         .select(col("mu"), least(col("mu"), col("mv")).as("m"))
       // no distinct here: smallStar's groupBy/distinct dedups right
       // after, and skipping it saves a full shuffle per round
-      sym.join(gate(nE, broadcastLimit)(mins), sym("u") === col("mu"))
+      sym.join(gate(nE)(mins), sym("u") === col("mu"))
         .where(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v"))
@@ -193,7 +186,7 @@ object Graph {
       val o = e.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       val mins = o.groupBy(col("u").as("mu")).agg(min(col("v")).as("m"))
-      o.join(gate(nE, broadcastLimit)(mins), o("u") === col("mu"))
+      o.join(gate(nE)(mins), o("u") === col("mu"))
         .where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins.select(col("mu").as("u"), col("m").as("v")))
@@ -257,7 +250,7 @@ object Graph {
     * Scale shape: each iteration is one shuffle (contribution
     * aggregate on dst) plus the ranks⋈edges join. The join strategy is
     * gated on the MEASURED node count (already in hand for the base
-    * term): at or below `broadcastLimit` the |V|-sized rank and outdeg
+    * term): when it fits [[Regime]] the |V|-sized rank and outdeg
     * tables broadcast, so the |E|-sized edge list never crosses the
     * wire — the domain-authority regime (|V| = #domains ≪ |E|). Above
     * the limit it degrades to shuffle joins, correct at any |V|.
@@ -268,7 +261,6 @@ object Graph {
   def pageRank(edges: DataFrame, src: Column, dst: Column,
                iters: Int = 5, dampNum: Long = 85, dampDen: Long = 100,
                scale: Long = 1000000L,
-               broadcastLimit: Long = 4000000L,
                start: Option[DataFrame] = None): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
@@ -295,7 +287,6 @@ object Graph {
           .select(col("id"),
             coalesce(col("__r0"), lit(scale / n)).as("rank"))
     })
-    val vSized = gate(n, broadcastLimit) _
     Rounds.iterate("pageRank.round", ranks0, iters) { t =>
       // contrib is |V|-sized (one row per in-degree-bearing node) —
       // under the gate it broadcasts like every other round state, so
@@ -303,7 +294,7 @@ object Graph {
       // partitioning; above the gate this degrades to the shuffle
       // join as before)
       t.stage(nodes
-        .join(vSized(inflow(e, t.last.df, vSized)), Seq("id"), "left")
+        .join(gate(n)(inflow(e, t.last.df, n)), Seq("id"), "left")
         .select(col("id"),
           (lit(base) +
             expr(s"($dampNum * coalesce(inflow, 0L)) DIV $dampDen"))
@@ -337,8 +328,8 @@ object Graph {
     * out-edges ([[rankEdges]]) and summed per destination.
     */
   private def inflow(e: DataFrame, ranks: DataFrame,
-                     vSized: DataFrame => DataFrame): DataFrame =
-    e.join(vSized(ranks.withColumnRenamed("id", "src")), Seq("src"))
+                     n: Long): DataFrame =
+    e.join(gate(n)(ranks.withColumnRenamed("id", "src")), Seq("src"))
       .select(col("dst").as("id"), expr("rank DIV outdeg").as("share"))
       .groupBy(col("id"))
       .agg(sum(col("share")).as("inflow"))
@@ -360,8 +351,8 @@ object Graph {
   def pageRankPersonalized(edges: DataFrame, src: Column, dst: Column,
                            seeds: DataFrame, seedId: Column,
                            iters: Int = 5, dampNum: Long = 85,
-                           dampDen: Long = 100, scale: Long = 1000000L,
-                           broadcastLimit: Long = 4000000L): DataFrame = {
+                           dampDen: Long = 100,
+                           scale: Long = 1000000L): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       "need 0 <= dampNum <= dampDen")
@@ -374,9 +365,8 @@ object Graph {
         .union(sd.select(col("id"))).distinct())
     require(ns > 0, "empty seed set")
     val base = scale * (dampDen - dampNum) / (dampDen * ns)
-    val vSized = gate(n, broadcastLimit) _
     def seeded(rank: Long): DataFrame = nodes
-      .join(vSized(sd.withColumn("__s", lit(1))), Seq("id"), "left")
+      .join(gate(n)(sd.withColumn("__s", lit(1))), Seq("id"), "left")
       .select(col("id"),
         when(col("__s").isNotNull, lit(rank)).otherwise(lit(0L))
           .as("__seed_term"))
@@ -387,7 +377,7 @@ object Graph {
     Rounds.iterate("ppr.round", ranks0, iters) { t =>
       // |V|-sized inflow broadcasts under the gate (see [[pageRank]])
       t.stage(baseTerms
-        .join(vSized(inflow(e, t.last.df, vSized)), Seq("id"), "left")
+        .join(gate(n)(inflow(e, t.last.df, n)), Seq("id"), "left")
         .select(col("id"),
           (col("__seed_term") +
             expr(s"($dampNum * coalesce(inflow, 0L)) DIV $dampDen"))
@@ -429,8 +419,8 @@ object Graph {
                      seeds: DataFrame, seedId: Column,
                      rounds: Int = 4, alphaNum: Long = 15,
                      alphaDen: Long = 100, epsNum: Long = 1,
-                     epsDen: Long = 10000L, scale: Long = 1000000L,
-                     broadcastLimit: Long = 4000000L): DataFrame = {
+                     epsDen: Long = 10000L,
+                     scale: Long = 1000000L): DataFrame = {
     require(rounds >= 0 && alphaDen > 0 && alphaNum >= 0 &&
       alphaNum <= alphaDen && epsDen > 0 && epsNum >= 0 && scale > 0,
       "need 0 <= alphaNum <= alphaDen, epsDen > 0, scale > 0")
@@ -455,14 +445,13 @@ object Graph {
     Rounds.iterate("pprForwardPush.round", state0,
         if (state0.count > 0) rounds else 0, Rounds.Rows,
         done = (_, c) => c.count == 0) { t =>
-      val state = t.last.df
-      val gated = gate(t.last.count, broadcastLimit) _
+      val (state, n) = (t.last.df, t.last.count)
       // the degree table narrows to the ACTIVE slice through a
       // broadcast semi join (a scan of the staged deg table, never a
       // |V|-sized shuffle), then joins state at state size
-      val degActive = deg.join(gated(state.select(col("id"))),
+      val degActive = deg.join(gate(n)(state.select(col("id"))),
         Seq("id"), "left_semi")
-      val st = state.join(gated(degActive), Seq("id"), "left")
+      val st = state.join(gate(n)(degActive), Seq("id"), "left")
         .select(col("id"), col("p"), col("r"),
           coalesce(col("deg"), lit(0L)).as("deg"))
       val pusher = col("r") > 0 &&
@@ -480,7 +469,8 @@ object Graph {
             s" - (r - ($alphaNum * r) DIV $alphaDen) DIV 2) DIV deg"))
           .otherwise(lit(0L)).as("give"),
         pusher.as("__push"))
-      val shares = gated(updated.where(col("__push") && col("give") > 0)
+      val shares = gate(n)(updated
+          .where(col("__push") && col("give") > 0)
           .select(col("id").as("src"), col("give")))
         .join(sym, Seq("src"))
         .groupBy(col("dst")).agg(sum(col("give")).as("inc"))
@@ -520,7 +510,6 @@ object Graph {
     */
   def hits(edges: DataFrame, src: Column, dst: Column,
            iters: Int = 5, scale: Long = 1000000L,
-           broadcastLimit: Long = 4000000L,
            start: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // pre-partitioned on dst: the auth half-step's inflow aggregate
@@ -534,7 +523,6 @@ object Graph {
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
     require(n > 0, "empty graph")
-    val vSized = gate(n, broadcastLimit) _
     def normalized(raw: DataFrame, out: String): DataFrame = {
       val m = raw.agg(greatest(max(col("raw")), lit(1L)).as("__m"))
       raw.crossJoin(broadcast(m))
@@ -561,7 +549,7 @@ object Graph {
     def half(prev: DataFrame, score: String, via: String, to: String,
              out: String): DataFrame =
       normalized(nodes.join(
-          vSized(e.join(vSized(prev.withColumnRenamed("id", via)),
+          gate(n)(e.join(gate(n)(prev.withColumnRenamed("id", via)),
               Seq(via))
             .groupBy(col(to)).agg(sum(col(score)).as("__x"))
             .withColumnRenamed(to, "id")),
@@ -602,8 +590,7 @@ object Graph {
     * |V|·walksPerNode rows regardless of step count.
     */
   def randomWalks(edges: DataFrame, src: Column, dst: Column,
-                  walksPerNode: Int = 2, len: Int = 4,
-                  broadcastLimit: Long = 4000000L): DataFrame = {
+                  walksPerNode: Int = 2, len: Int = 4): DataFrame = {
     require(walksPerNode >= 1 && len >= 0, "need walks >= 1, len >= 0")
     val e = Checkpoints.stage(
       edges.select(src.as("src"), dst.as("dst")).distinct())
@@ -617,7 +604,6 @@ object Graph {
     val (nodes, n) = Checkpoints.stageCount(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
-    val vSized = gate(n, broadcastLimit) _
     val walks0 = Rounds.stage("randomWalks.start", nodes
       .select(col("id").as("start"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("walk"))
@@ -629,11 +615,11 @@ object Graph {
       val key = concat_ws("_", col("start"), col("walk"), lit(t.index),
         col("node"))
       t.stage(t.last.df
-        .join(vSized(od), col("node") === col("__ds"))
+        .join(gate(n)(od), col("node") === col("__ds"))
         .select(col("start"), col("walk"),
           pmod(TextAnalysis.fingerprint(key), col("deg")).as("__i"),
           col("node"))
-        .join(vSized(nbr),
+        .join(gate(n)(nbr),
           col("node") === col("__ns") && col("__i") === col("idx"))
         .select(col("start"), col("walk"), lit(t.index).as("step"),
           col("__nd").as("node")))
@@ -844,7 +830,7 @@ object Graph {
       allEdges: DataFrame, a: Column, b: Column,
       newEdges: DataFrame, na: Column, nb: Column,
       storeDir: String, batchId: Long, maxDepth: Int = 6,
-      filesOut: Int = 4, broadcastLimit: Long = 4000000L)
+      filesOut: Int = 4)
       : DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
     val spark = allEdges.sparkSession
@@ -889,7 +875,7 @@ object Graph {
             .groupBy(col("id"), col("lm"))
             .agg(min(col("dist")).as("__imp"))
           withSt.join(
-            gate(improved.map(_.count).sum, broadcastLimit)(impMin),
+            gate(improved.map(_.count).sum)(impMin),
             Seq("id", "lm"), "left")
         }
       // least() skips nulls, so missing-on-both-sides = infinity
@@ -908,7 +894,7 @@ object Graph {
         done = (_, c) => c.count == 0) { t =>
       // frontier-sized probe side broadcasts under the gate, so the
       // staged edge table is never shuffled per round (guide §3.1)
-      val fSized = gate(t.last.count, broadcastLimit)(t.last.df)
+      val fSized = gate(t.last.count)(t.last.df)
       t.stage(improving(t.kept,
         fSized.join(sym, col("id") === col("src"))
           .select(col("dst").as("id"), col("lm"),
@@ -1018,8 +1004,7 @@ object Graph {
   def node2vecWalks(edges: DataFrame, src: Column, dst: Column,
                     walksPerNode: Int = 2, len: Int = 4,
                     wReturn: Long = 1L, wCommon: Long = 4L,
-                    wExplore: Long = 2L,
-                    broadcastLimit: Long = 4000000L): DataFrame = {
+                    wExplore: Long = 2L): DataFrame = {
     require(walksPerNode >= 1 && len >= 0, "need walks >= 1, len >= 0")
     require(wReturn >= 1 && wCommon >= 1 && wExplore >= 1,
       "weights must be >= 1")
@@ -1032,7 +1017,6 @@ object Graph {
     val (nodes, n) = Checkpoints.stageCount(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct())
-    val vSized = gate(n, broadcastLimit) _
     val prevEdge = e.select(col("src").as("__pu"),
       col("dst").as("__pc"), lit(true).as("__adj"))
     // walk state: (start, walk, step, prev, node); prev = -1 at step 0
@@ -1047,14 +1031,14 @@ object Graph {
     val run = Rounds.iterate("node2vecWalks.step", walks0, len,
         keep = Rounds.All) { t =>
       val cands = t.last.df
-        .join(vSized(nbr), col("node") === col("__ns"))
+        .join(gate(n)(nbr), col("node") === col("__ns"))
         .select(col("start"), col("walk"), col("prev"), col("node"),
           col("__nd").as("cand"), col("idx"))
       val weighted = (
           if (t.index == 1)
             cands.withColumn("__w", lit(1L))
           else
-            cands.join(vSized(prevEdge),
+            cands.join(gate(n)(prevEdge),
                 col("prev") === col("__pu") &&
                   col("cand") === col("__pc"), "left")
               .withColumn("__w",
@@ -1127,8 +1111,7 @@ object Graph {
     * caller wanting it can weight downstream.
     */
   def negativeSamples(pairs: DataFrame, center: Column,
-                      context: Column, k: Int,
-                      broadcastLimit: Long = 4000000L): DataFrame = {
+                      context: Column, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val p = Checkpoints.stage(
       pairs.select(center.as("center"), context.as("context")))
@@ -1136,13 +1119,12 @@ object Graph {
       .union(p.select(col("context").as("id"))).distinct()
     val (idx, n) = Checkpoints.stageCount(Training.withPrefixSum(
       nodes, Seq(col("id")), lit(1L), "__idx"))
-    val vSized = gate(n, broadcastLimit) _
     p.select(col("center"), col("context"),
         explode(sequence(lit(0), lit(k - 1))).as("j"))
       .withColumn("__draw",
         pmod(TextAnalysis.fingerprint(concat_ws("_", col("center"),
           col("context"), col("j"))), lit(n)))
-      .join(vSized(idx.select(col("__idx"), col("id").as("neg"))),
+      .join(gate(n)(idx.select(col("__idx"), col("id").as("neg"))),
         col("__draw") === col("__idx"))
       .where(col("neg") =!= col("center") &&
         col("neg") =!= col("context"))
@@ -1164,12 +1146,10 @@ object Graph {
   def writePageRankStore(edges: DataFrame, src: Column, dst: Column,
                          iters: Int, storeDir: String,
                          filesOut: Int = 4, dampNum: Long = 85,
-                         dampDen: Long = 100, scale: Long = 1000000L,
-                         broadcastLimit: Long = 4000000L): Unit =
+                         dampDen: Long = 100, scale: Long = 1000000L): Unit =
     pageRankStore(storeDir).writeBase(edges.sparkSession,
         "writePageRankStore(batch)", filesOut) {
-      pageRank(edges, src, dst, iters, dampNum, dampDen, scale,
-        broadcastLimit)
+      pageRank(edges, src, dst, iters, dampNum, dampDen, scale)
     }
 
   /** RETRACTION for the PageRank store — the value-iteration twist
@@ -1186,12 +1166,10 @@ object Graph {
   def rebuildPageRankStore(survivingEdges: DataFrame, src: Column,
                            dst: Column, iters: Int, storeDir: String,
                            filesOut: Int = 4, dampNum: Long = 85,
-                           dampDen: Long = 100, scale: Long = 1000000L,
-                           broadcastLimit: Long = 4000000L): Long =
+                           dampDen: Long = 100, scale: Long = 1000000L): Long =
     pageRankStore(storeDir).supersede(survivingEdges.sparkSession,
         "rebuildPageRankStore(batch)", filesOut) {
-      pageRank(survivingEdges, src, dst, iters, dampNum, dampDen, scale,
-        broadcastLimit)
+      pageRank(survivingEdges, src, dst, iters, dampNum, dampDen, scale)
     }
 
   /** The PageRank store's CURRENT ranks (newest batch wins per id). */
@@ -1225,14 +1203,13 @@ object Graph {
   def pageRankWarm(allEdges: DataFrame, src: Column, dst: Column,
                    storeDir: String, batchId: Long, rounds: Int = 2,
                    filesOut: Int = 4, dampNum: Long = 85,
-                   dampDen: Long = 100, scale: Long = 1000000L,
-                   broadcastLimit: Long = 4000000L): DataFrame = {
+                   dampDen: Long = 100, scale: Long = 1000000L): DataFrame = {
     val spark = allEdges.sparkSession
     val store = pageRankStore(storeDir)
     store.appending(spark, batchId, "pageRankWarm") {
       val ranks = Checkpoints.stage(
         pageRank(allEdges, src, dst, rounds, dampNum, dampDen, scale,
-          broadcastLimit, start = Some(store.view(spark, batchId))))
+          start = Some(store.view(spark, batchId))))
       store.append(spark, "pageRankWarm(batch)", batchId, filesOut)(ranks)
       // ranks is staged, so its data predates the overwrite safely
       ranks
@@ -1259,11 +1236,10 @@ object Graph {
     */
   def writeHitsStore(edges: DataFrame, src: Column, dst: Column,
                      iters: Int, storeDir: String, filesOut: Int = 4,
-                     scale: Long = 1000000L,
-                     broadcastLimit: Long = 4000000L): Unit =
+                     scale: Long = 1000000L): Unit =
     hitsStore(storeDir).writeBase(edges.sparkSession,
         "writeHitsStore(batch)", filesOut) {
-      hits(edges, src, dst, iters, scale, broadcastLimit)
+      hits(edges, src, dst, iters, scale)
     }
 
   /** RETRACTION for the HITS store — [[rebuildPageRankStore]]'s
@@ -1273,11 +1249,10 @@ object Graph {
     */
   def rebuildHitsStore(survivingEdges: DataFrame, src: Column,
                        dst: Column, iters: Int, storeDir: String,
-                       filesOut: Int = 4, scale: Long = 1000000L,
-                       broadcastLimit: Long = 4000000L): Long =
+                       filesOut: Int = 4, scale: Long = 1000000L): Long =
     hitsStore(storeDir).supersede(survivingEdges.sparkSession,
         "rebuildHitsStore(batch)", filesOut) {
-      hits(survivingEdges, src, dst, iters, scale, broadcastLimit)
+      hits(survivingEdges, src, dst, iters, scale)
     }
 
   /** The HITS store's CURRENT scores (newest batch wins per id). */
@@ -1305,13 +1280,12 @@ object Graph {
     */
   def hitsWarm(allEdges: DataFrame, src: Column, dst: Column,
                storeDir: String, batchId: Long, rounds: Int = 2,
-               filesOut: Int = 4, scale: Long = 1000000L,
-               broadcastLimit: Long = 4000000L): DataFrame = {
+               filesOut: Int = 4, scale: Long = 1000000L): DataFrame = {
     val spark = allEdges.sparkSession
     val store = hitsStore(storeDir)
     store.appending(spark, batchId, "hitsWarm") {
       val scores = Checkpoints.stage(
-        hits(allEdges, src, dst, rounds, scale, broadcastLimit,
+        hits(allEdges, src, dst, rounds, scale,
           start = Some(store.view(spark, batchId))))
       store.append(spark, "hitsWarm(batch)", batchId, filesOut)(scores)
       // scores is staged, so its data predates the overwrite safely
@@ -1356,7 +1330,7 @@ object Graph {
     * Scale: per round — one |C|-sized community-degree aggregate, one
     * edge-sized neighbor-community sum, one candidate argmax
     * aggregate (all map-side-partial; the |V|-sized label table
-    * broadcast-gated below `broadcastLimit` measured nodes); no
+    * broadcast-gated on the measured node count by [[Regime]]); no
     * windows, state staged and freed per round. Multi-level Louvain
     * composes this with [[contractGraph]]: run a level, contract
     * communities to super-nodes — internal mass becomes SELF-LOOPS
@@ -1368,10 +1342,8 @@ object Graph {
     */
   def louvain(edges: DataFrame, a: Column, b: Column,
               rounds: Int = 3, weight: Option[Column] = None,
-              broadcastLimit: Long = 4000000L,
               start: Option[DataFrame] = None): DataFrame =
-    louvainRounds(edges, a, b, rounds, weight, broadcastLimit,
-      start)._1
+    louvainRounds(edges, a, b, rounds, weight, start)._1
 
   /** [[louvain]] plus the number of rounds actually executed — the
     * early-exit observability hook the convergence spec pins
@@ -1381,7 +1353,6 @@ object Graph {
   private[graft] def louvainRounds(
       edges: DataFrame, a: Column, b: Column,
       rounds: Int = 3, weight: Option[Column] = None,
-      broadcastLimit: Long = 4000000L,
       start: Option[DataFrame] = None,
       earlyExit: Boolean = true): (DataFrame, Int) = {
     require(rounds >= 1, "rounds must be >= 1")
@@ -1406,7 +1377,6 @@ object Graph {
     val n = nm.getLong(0)
     require(n > 0, "empty graph")
     val m2 = nm.getLong(1)
-    val vSized = gate(n, broadcastLimit) _
     val dec = "decimal(38,0)"
     // `start` WARM-STARTS the rounds from a stored assignment (the
     // [[louvainWarm]] contract): known ids keep their stored
@@ -1435,12 +1405,12 @@ object Graph {
         Rounds.Of(movers), done = (_, c) => earlyExit && c.count == 0L) { t =>
       val comm = t.last.df
       // community weighted-degree sums (|C|-sized)
-      val dc = comm.join(vSized(deg), Seq("id"))
+      val dc = comm.join(gate(n)(deg), Seq("id"))
         .groupBy(col("c")).agg(sum(col("d")).as("dc"))
         .select(col("c").as("cand"), col("dc"))
       // w(i, C): weight from each node into each neighbor community
       val wic = sym
-        .join(vSized(comm.select(col("id").as("v"), col("c").as("cand"))),
+        .join(gate(n)(comm.select(col("id").as("v"), col("c").as("cand"))),
           Seq("v"))
         .groupBy(col("u"), col("cand")).agg(sum(col("w")).as("wi"))
         .select(col("u").as("id"), col("cand"), col("wi"))
@@ -1451,9 +1421,9 @@ object Graph {
           "left_anti")
         .select(col("id"), col("cand"), lit(0L).as("wi"))
       val scored = wic.unionAll(own)
-        .join(vSized(deg), Seq("id"))
-        .join(vSized(dc), Seq("cand"))
-        .join(vSized(comm.select(col("id"), col("c").as("__cur"))),
+        .join(gate(n)(deg), Seq("id"))
+        .join(gate(n)(dc), Seq("cand"))
+        .join(gate(n)(comm.select(col("id"), col("c").as("__cur"))),
           Seq("id"))
         .select(col("id"), col("cand"), col("__cur"),
           (lit(m2).cast(dec) * col("wi").cast(dec) -
@@ -1549,11 +1519,10 @@ object Graph {
   def writeLouvainStore(edges: DataFrame, a: Column, b: Column,
                         rounds: Int, storeDir: String,
                         filesOut: Int = 4,
-                        weight: Option[Column] = None,
-                        broadcastLimit: Long = 4000000L): Unit =
+                        weight: Option[Column] = None): Unit =
     louvainStore(storeDir).writeBase(edges.sparkSession,
         "writeLouvainStore(batch)", filesOut) {
-      louvain(edges, a, b, rounds, weight, broadcastLimit)
+      louvain(edges, a, b, rounds, weight)
         .withColumnRenamed("community", "c")
     }
 
@@ -1567,11 +1536,10 @@ object Graph {
   def rebuildLouvainStore(survivingEdges: DataFrame, a: Column,
                           b: Column, rounds: Int, storeDir: String,
                           filesOut: Int = 4,
-                          weight: Option[Column] = None,
-                          broadcastLimit: Long = 4000000L): Long =
+                          weight: Option[Column] = None): Long =
     louvainStore(storeDir).supersede(survivingEdges.sparkSession,
         "rebuildLouvainStore(batch)", filesOut) {
-      louvain(survivingEdges, a, b, rounds, weight, broadcastLimit)
+      louvain(survivingEdges, a, b, rounds, weight)
         .withColumnRenamed("community", "c")
     }
 
@@ -1596,13 +1564,13 @@ object Graph {
     */
   def louvainWarm(allEdges: DataFrame, a: Column, b: Column,
                   storeDir: String, batchId: Long, rounds: Int = 1,
-                  filesOut: Int = 4, weight: Option[Column] = None,
-                  broadcastLimit: Long = 4000000L): DataFrame = {
+                  filesOut: Int = 4,
+                  weight: Option[Column] = None): DataFrame = {
     val spark = allEdges.sparkSession
     val store = louvainStore(storeDir)
     store.appending(spark, batchId, "louvainWarm") {
       val asg = Checkpoints.stage(
-        louvain(allEdges, a, b, rounds, weight, broadcastLimit,
+        louvain(allEdges, a, b, rounds, weight,
           start = Some(store.view(spark, batchId))))
       store.append(spark, "louvainWarm(batch)", batchId, filesOut)(
         asg.withColumnRenamed("community", "c"))
@@ -1663,7 +1631,7 @@ object Graph {
     * Scale shape: one map-side-combined (node, label) count shuffle
     * per round — the argmax over (count, label) folds into the SAME
     * aggregation via max(struct) — plus the |V|-sized label join,
-    * broadcast below `broadcastLimit` measured node count (the
+    * broadcast when the measured node count fits [[Regime]] (the
     * pageRank gate). Lineage cut per round via [[Checkpoints.stage]].
     *
     * `seeds`: (id, label) with non-null labels; ids absent from the
@@ -1675,11 +1643,10 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, a: Column, b: Column,
                        seeds: DataFrame, seedId: Column, seedLabel: Column,
-                       iters: Int = 3,
-                       broadcastLimit: Long = 4000000L): DataFrame = {
+                       iters: Int = 3): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    labelRounds(edges, a, b, seeds, seedId, seedLabel, iters,
-      broadcastLimit, keep = 1).last.df.select(col("id"), col("label"))
+    labelRounds(edges, a, b, seeds, seedId, seedLabel, iters, keep = 1)
+      .last.df.select(col("id"), col("label"))
   }
 
   /** The [[labelPropagation]] loop: round 0 is the seed labeling,
@@ -1689,7 +1656,7 @@ object Graph {
   private def labelRounds(edges: DataFrame, a: Column, b: Column,
                           seeds: DataFrame, seedId: Column,
                           seedLabel: Column, iters: Int,
-                          broadcastLimit: Long, keep: Int): Rounds.Run = {
+                          keep: Int): Rounds.Run = {
     val e0 = edges.select(a.as("src"), b.as("dst"))
     // pre-partitioned on dst: BOTH per-round vote aggregates
     // (groupBy (dst,label) then groupBy dst) are satisfied by the
@@ -1709,9 +1676,8 @@ object Graph {
         .union(sym.select(col("dst").as("id")))
         .union(sd.select(col("id")))
         .distinct())
-    val vSized = gate(n, broadcastLimit) _
     val labels0 = Rounds.stage("labelPropagation.start",
-      nodes.join(vSized(sd), Seq("id"), "left")
+      nodes.join(gate(n)(sd), Seq("id"), "left")
         .select(col("id"), col("__seed").as("label"),
           col("__seed").isNotNull.as("__fixed")))
     Rounds.iterate("labelPropagation.round", labels0, iters,
@@ -1720,7 +1686,7 @@ object Graph {
       // (dst, label) neighbor counts and their argmax in ONE shuffle:
       // max(struct(cnt, label)) = max count, then max label on ties.
       val best = sym
-        .join(vSized(labels.where(col("label").isNotNull)
+        .join(gate(n)(labels.where(col("label").isNotNull)
           .select(col("id").as("src"), col("label").as("__l"))),
           Seq("src"))
         .groupBy(col("dst"), col("__l"))
@@ -1729,7 +1695,7 @@ object Graph {
         .agg(max(struct(col("__c"), col("__l"))).as("__b"))
         .select(col("dst").as("id"), col("__b.__l").as("__nl"))
       t.stage(labels
-        .join(vSized(best), Seq("id"), "left")
+        .join(gate(n)(best), Seq("id"), "left")
         .select(col("id"),
           when(col("__fixed"), col("label"))
             .otherwise(coalesce(col("__nl"), col("label"))).as("label"),
@@ -1766,12 +1732,10 @@ object Graph {
   def writeLabelState(edges: DataFrame, a: Column, b: Column,
                       seeds: DataFrame, seedId: Column, seedLabel: Column,
                       iters: Int, storeDir: String,
-                      filesOut: Int = 4,
-                      broadcastLimit: Long = 4000000L): Unit =
+                      filesOut: Int = 4): Unit =
     labelStore(storeDir).writeBase(edges.sparkSession,
         "writeLabelState(batch)", filesOut) {
-      labelStateRoundSlices(edges, a, b, seeds, seedId, seedLabel,
-        iters, broadcastLimit)
+      labelStateRoundSlices(edges, a, b, seeds, seedId, seedLabel, iters)
     }
 
   /** RETRACTION for the label-propagation state store — the
@@ -1787,23 +1751,21 @@ object Graph {
   def rebuildLabelState(survivingEdges: DataFrame, a: Column,
                         b: Column, survivingSeeds: DataFrame,
                         seedId: Column, seedLabel: Column, iters: Int,
-                        storeDir: String, filesOut: Int = 4,
-                        broadcastLimit: Long = 4000000L): Long =
+                        storeDir: String, filesOut: Int = 4): Long =
     labelStore(storeDir).supersede(survivingEdges.sparkSession,
         "rebuildLabelState(batch)", filesOut) {
       labelStateRoundSlices(survivingEdges, a, b, survivingSeeds,
-        seedId, seedLabel, iters, broadcastLimit)
+        seedId, seedLabel, iters)
     }
 
   // every round of the [[labelPropagation]] run as (__round, id, label)
   // slices, rounds 1..iters
   private def labelStateRoundSlices(
       edges: DataFrame, a: Column, b: Column, seeds: DataFrame,
-      seedId: Column, seedLabel: Column, iters: Int,
-      broadcastLimit: Long): DataFrame = {
+      seedId: Column, seedLabel: Column, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     labelRounds(edges, a, b, seeds, seedId, seedLabel, iters,
-        broadcastLimit, keep = Rounds.All)
+        keep = Rounds.All)
       .kept.tail
       .map(r => r.df.select(lit(r.index).as("__round"), col("id"),
         col("label")))
@@ -1849,8 +1811,7 @@ object Graph {
                                   newEdges: DataFrame, na: Column, nb: Column,
                                   seeds: DataFrame, seedId: Column,
                                   seedLabel: Column, iters: Int,
-                                  storeDir: String, batchId: Long,
-                                  broadcastLimit: Long = 4000000L)
+                                  storeDir: String, batchId: Long)
       : DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val spark = allEdges.sparkSession
@@ -1890,7 +1851,7 @@ object Graph {
         if (r == 1) sd.select(col("id"), col("__seed").as("label"))
         else state.where(col("__round") === (r - 1))
           .select(col("id"), col("label"))
-          .join(gate(dirty.count, broadcastLimit)(dirty.df.select(col("id"))),
+          .join(gate(dirty.count)(dirty.df.select(col("id"))),
             Seq("id"), "left_anti")
           .unionByName(t.last.df)
       // frontier for THIS round: last round's dirty set plus its
@@ -1901,7 +1862,7 @@ object Graph {
         else {
           t.scratch(dirty.df)
           Rounds.stage("labelPropagationIncremental.dirty",
-            sym.join(gate(dirty.count, broadcastLimit)(
+            sym.join(gate(dirty.count)(
                 dirty.df.select(col("id").as("src"))), Seq("src"), "left_semi")
               .select(col("dst").as("id"))
               .union(dirty.df.select(col("id")))
@@ -1911,7 +1872,7 @@ object Graph {
       // votes only for dirty nodes: edge scan pruned to edges INTO the
       // frontier, labels joined on the source side
       val votes = sym
-        .join(gate(nNow, broadcastLimit)(
+        .join(gate(nNow)(
             dirtyNow.df.select(col("id").as("dst"))), Seq("dst"), "left_semi")
         .join(prevLabels.where(col("label").isNotNull)
           .select(col("id").as("src"), col("label").as("__l")),
@@ -1924,7 +1885,7 @@ object Graph {
       // current (round r-1) labels of the dirty nodes themselves
       val cur =
         if (r == 1)
-          dirty.df.join(gate(nSd, broadcastLimit)(sd), Seq("id"), "left")
+          dirty.df.join(gate(nSd)(sd), Seq("id"), "left")
             .select(col("id"), col("__seed").as("__cur"))
         else dirtyNow.df
           .join(prevLabels.select(col("id"), col("label").as("__cur")),
@@ -1932,8 +1893,8 @@ object Graph {
           .select(col("id"), col("__cur"))
       dirty = dirtyNow
       t.stage(cur
-        .join(gate(nNow, broadcastLimit)(votes), Seq("id"), "left")
-        .join(gate(nNow, broadcastLimit)(sd), Seq("id"), "left")
+        .join(gate(nNow)(votes), Seq("id"), "left")
+        .join(gate(nNow)(sd), Seq("id"), "left")
         .select(col("id"),
           when(col("__seed").isNotNull, col("__seed"))
             .otherwise(coalesce(col("__nl"), col("__cur")))
@@ -1952,7 +1913,7 @@ object Graph {
     // so a retry's overwrite cannot invalidate its file listing)
     state.where(col("__round") === iters)
       .select(col("id"), col("label"))
-      .join(gate(dirty.count, broadcastLimit)(dirty.df.select(col("id"))),
+      .join(gate(dirty.count)(dirty.df.select(col("id"))),
         Seq("id"), "left_anti")
       .unionByName(run.last.df.select(col("id"), col("label")))
   }}
@@ -1995,7 +1956,7 @@ object Graph {
     * all three corners.
     *
     * Scale shape: one degree aggregate (|V|-sized, broadcast-gated
-    * below `broadcastLimit` measured nodes), one wedge self-join on
+    * on the measured node count by [[Regime]]), one wedge self-join on
     * the oriented apex, one closing semi-equality join against the
     * oriented edge set, one corner-credit aggregate. Deterministic:
     * pure counting, no tie-breaks.
@@ -2004,8 +1965,7 @@ object Graph {
     * nodes included — their absence would make "no triangles" and
     * "not in the graph" indistinguishable to the caller).
     */
-  def triangleCounts(edges: DataFrame, a: Column, b: Column,
-                     broadcastLimit: Long = 4000000L): DataFrame = {
+  def triangleCounts(edges: DataFrame, a: Column, b: Column): DataFrame = {
     val e0 = edges.select(a.as("u"), b.as("v"))
     // undirected canonical edges, self-loops dropped
     val e = Checkpoints.stage(
@@ -2017,12 +1977,11 @@ object Graph {
       .unionAll(e.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
     val (degS, n) = Checkpoints.stageCount(deg)
-    val vSized = gate(n, broadcastLimit) _
     // orient from the (degree, id)-smaller endpoint
     val oriented = Checkpoints.stage(e
-      .join(vSized(degS.select(col("id").as("u"), col("d").as("du"))),
+      .join(gate(n)(degS.select(col("id").as("u"), col("d").as("du"))),
         Seq("u"))
-      .join(vSized(degS.select(col("id").as("v"), col("d").as("dv"))),
+      .join(gate(n)(degS.select(col("id").as("v"), col("d").as("dv"))),
         Seq("v"))
       .select(
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
@@ -2073,11 +2032,10 @@ object Graph {
     * warm-start batches open only touched-id files.
     */
   def writeTriangleStore(edges: DataFrame, a: Column, b: Column,
-                         storeDir: String, filesOut: Int = 4,
-                         broadcastLimit: Long = 4000000L): Unit =
+                         storeDir: String, filesOut: Int = 4): Unit =
     triangleStore(storeDir).writeBase(edges.sparkSession,
         "writeTriangleStore(batch)", filesOut) {
-      triangleCounts(edges, a, b, broadcastLimit)
+      triangleCounts(edges, a, b)
     }
 
   /** The triangle store's CURRENT per-node totals (newest committed
@@ -2132,8 +2090,7 @@ object Graph {
   def triangleCountsIncremental(allEdges: DataFrame, a: Column, b: Column,
                                 newEdges: DataFrame, na: Column,
                                 nb: Column, storeDir: String,
-                                batchId: Long,
-                                broadcastLimit: Long = 4000000L)
+                                batchId: Long)
       : DataFrame = {
     val spark = allEdges.sparkSession
     val store = triangleStore(storeDir)
@@ -2149,7 +2106,6 @@ object Graph {
     val all =
       if (allEdges eq newEdges) n
       else Checkpoints.stage(canon(allEdges, a, b))
-    val gated = gate(nCnt, broadcastLimit) _
     val old = all.join(n, Seq("u", "v"), "left_anti")
     val tagged = old.withColumn("__new", lit(false))
       .unionByName(n.withColumn("__new", lit(true)))
@@ -2164,7 +2120,7 @@ object Graph {
     val newTris = adjRows
       .select(col("p").as("u"), col("w"),
         col("ce").as("eu"), col("__new").as("nu"))
-      .join(gated(n), Seq("u"))
+      .join(gate(nCnt)(n), Seq("u"))
       .where(col("w") =!= col("v") && col("w") =!= col("u"))
       .join(adjRows.select(col("p").as("v"), col("w"),
         col("ce").as("ev"), col("__new").as("nv")), Seq("v", "w"))
@@ -2188,7 +2144,7 @@ object Graph {
     // one of its rows survives
     val prior = store.foldRows(store.pruned(spark, "id", touched),
       batchId)
-    val priorTouched = prior.join(gated(touched), Seq("id"), "left_semi")
+    val priorTouched = prior.join(gate(nCnt)(touched), Seq("id"), "left_semi")
     val slice = Checkpoints.stage(touched
       .join(priorTouched, Seq("id"), "left")
       .join(credits, Seq("id"), "left")
@@ -2202,7 +2158,7 @@ object Graph {
     // before it (slice itself is staged, so its data predates the
     // overwrite safely)
     store.view(spark, batchId)
-      .join(gated(touched), Seq("id"), "left_anti")
+      .join(gate(nCnt)(touched), Seq("id"), "left_anti")
       .unionByName(slice)
   }}
 
@@ -2216,11 +2172,10 @@ object Graph {
     */
   def rebuildTriangleStore(survivingEdges: DataFrame, a: Column,
                            b: Column, storeDir: String,
-                           filesOut: Int = 4,
-                           broadcastLimit: Long = 4000000L): Long =
+                           filesOut: Int = 4): Long =
     triangleStore(storeDir).supersede(survivingEdges.sparkSession,
         "rebuildTriangleStore(batch)", filesOut) {
-      triangleCounts(survivingEdges, a, b, broadcastLimit)
+      triangleCounts(survivingEdges, a, b)
     }
 
   /** Fold the triangle store's delta batches, newest batch winning per
@@ -2243,8 +2198,7 @@ object Graph {
     * could not be. Returns (id, comp) in the original key type.
     */
   def connectedComponentsGeneric(edges: DataFrame, a: Column,
-                                 b: Column,
-                                 broadcastLimit: Long = 4000000L)
+                                 b: Column)
       : DataFrame = {
     val e = Checkpoints.stage(
       edges.select(a.as("ga"), b.as("gb")).distinct())
@@ -2255,8 +2209,7 @@ object Graph {
     val coded = Checkpoints.stage(
       Training.withPrefixSum(vocab, Seq(col("__cat")), lit(1L),
         "__code"))
-    val side =
-      gate(nVocab, broadcastLimit)(coded)
+    val side = gate(nVocab)(coded)
     val codedEdges = e
       .join(side.select(col("__cat").as("ga"),
         col("__code").as("ca")), Seq("ga"))
@@ -2285,8 +2238,8 @@ object Graph {
     * are identity.
     *
     * Scale shape: per round, two semi joins restrict edges to
-    * surviving nodes (the |V|-sized survivor set broadcast below
-    * `broadcastLimit` measured nodes) and one map-side-combined degree
+    * surviving nodes (the |V|-sized survivor set broadcast when its
+    * measured count fits [[Regime]]) and one map-side-combined degree
     * count; rounds are bounded by `maxRounds` with an early exit on
     * the measured survivor count, and lineage is cut per round
     * ([[Checkpoints.stage]]). Synchronous peeling converges in at most
@@ -2296,8 +2249,7 @@ object Graph {
     * Returns the surviving nodes: (id).
     */
   def kCore(edges: DataFrame, a: Column, b: Column, k: Int,
-            maxRounds: Int = 50,
-            broadcastLimit: Long = 4000000L): DataFrame = {
+            maxRounds: Int = 50): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val e = Checkpoints.stage(
@@ -2311,12 +2263,11 @@ object Graph {
     Rounds.iterate("kCore.round", nodes0,
         if (nodes0.count > 0) maxRounds else 0, Rounds.Rows,
         done = (p, c) => c.count == p.count || c.count == 0) { t =>
-      val nodes = t.last.df
-      val vSized = gate(t.last.count, broadcastLimit) _
+      val (nodes, n) = (t.last.df, t.last.count)
       val live = e
-        .join(vSized(nodes.select(col("id").as("u"))), Seq("u"),
+        .join(gate(n)(nodes.select(col("id").as("u"))), Seq("u"),
           "left_semi")
-        .join(vSized(nodes.select(col("id").as("v"))), Seq("v"),
+        .join(gate(n)(nodes.select(col("id").as("v"))), Seq("v"),
           "left_semi")
       t.stage(live.select(col("u").as("id"))
         .unionAll(live.select(col("v").as("id")))
@@ -2381,8 +2332,7 @@ object Graph {
     */
   def stronglyConnectedComponents(edges: DataFrame, src: Column,
                                   dst: Column, maxRounds: Int = 0,
-                                  maxInner: Int = 0,
-                                  broadcastLimit: Long = 4000000L)
+                                  maxInner: Int = 0)
       : DataFrame = {
     val e0 = Rounds.stage("scc.edges",
       edges.select(src.cast("long").as("src"),
@@ -2400,7 +2350,6 @@ object Graph {
     // frontiers, retirement sets): below the gate every per-round
     // join is a broadcast hash join — an AQE exchange stage is its
     // own JOB, so each removed exchange removes a per-round barrier
-    val gated = gate(nAll, broadcastLimit) _
     // FB-retired SCCs only. Trim-retired and edge-drained nodes are
     // singleton SCCs by construction, filled in ONCE at the end via
     // allNodes ∖ (FB-found) — the per-trim-layer staged singleton
@@ -2429,8 +2378,8 @@ object Graph {
         val hasIn = remE.select(col("dst").as("src"))
         val hasOut = remE.select(col("src").as("dst"))
         tt.stage(remE
-          .join(gated(hasIn), Seq("src"), "left_semi")
-          .join(gated(hasOut), Seq("dst"), "left_semi"))
+          .join(gate(nAll)(hasIn), Seq("src"), "left_semi")
+          .join(gate(nAll)(hasOut), Seq("dst"), "left_semi"))
       }.last
       // trimming drained the remainder: the outer round ends here
       if (remE.count == 0) remE
@@ -2473,7 +2422,7 @@ object Graph {
               dirE.groupBy(col("dst").as("id"))
                 .agg(min(col("src")).as("__nbr"))
             else dirE
-              .join(gated(f.select(col("id").as("src"),
+              .join(gate(nAll)(f.select(col("id").as("src"),
                 col("f").as("__nf"))), Seq("src"))
               .groupBy(col("dst").as("id"))
               .agg(min(col("__nf")).as("__nbr"))
@@ -2481,7 +2430,7 @@ object Graph {
             if (f eq null) rem.select(col("id"), col("id").as("f"))
             else f
           val prop = fBase
-            .join(gated(nbrMin), Seq("id"), "left")
+            .join(gate(nAll)(nbrMin), Seq("id"), "left")
             .select(col("id"),
               least(col("f"), coalesce(col("__nbr"), col("f")))
                 .as("f"))
@@ -2490,7 +2439,7 @@ object Graph {
           ct.stage(
             if (f eq null) prop
             else prop
-              .join(gated(f.select(col("id").as("__jid"),
+              .join(gate(nAll)(f.select(col("id").as("__jid"),
                 col("f").as("__jf"))),
                 prop("f") === col("__jid"), "left")
               .select(prop("id").as("id"),
@@ -2503,9 +2452,9 @@ object Graph {
         // 2. reach back to the pivot INSIDE each color class (against
         // the round's coloring direction)
         val ce = Checkpoints.stage(dirE
-          .join(gated(f.select(col("id").as("src"),
+          .join(gate(nAll)(f.select(col("id").as("src"),
             col("f").as("__fs"))), Seq("src"))
-          .join(gated(f.select(col("id").as("dst"),
+          .join(gate(nAll)(f.select(col("id").as("dst"),
             col("f").as("__fd"))), Seq("dst"))
           .where(col("__fs") === col("__fd"))
           .select(col("src"), col("dst")))
@@ -2520,25 +2469,25 @@ object Graph {
             innerBudget, Rounds.Rows, keep = Rounds.All,
             done = (_, c) => c.count == 0) { rt =>
           rt.stage(
-            ce.join(gated(rt.last.df.select(col("id").as("dst"))),
+            ce.join(gate(nAll)(rt.last.df.select(col("id").as("dst"))),
                 Seq("dst"), "left_semi")
               .select(col("src").as("id"))
               .distinct()
-              .join(gated(Rounds.union(rt.kept)), Seq("id"), "left_anti"))
+              .join(gate(nAll)(Rounds.union(rt.kept)), Seq("id"), "left_anti"))
         }
         require(reach.converged, s"scc: backward reach did not " +
           s"converge in $innerBudget rounds (outer $outer)")
         // 3. retire the found SCCs; surviving edges re-color next round
         val scc = Checkpoints.stage(
-          f.join(gated(Rounds.union(reach.untilDone)), Seq("id"),
+          f.join(gate(nAll)(Rounds.union(reach.untilDone)), Seq("id"),
             "left_semi")
             .select(col("id"), col("f").as("scc")))
         found += scc
         t.scratch(Seq(ce, f, remE.df) ++ reach.kept.map(_.df): _*)
         t.stage(remE.df
-          .join(gated(scc.select(col("id").as("src"))), Seq("src"),
+          .join(gate(nAll)(scc.select(col("id").as("src"))), Seq("src"),
             "left_anti")
-          .join(gated(scc.select(col("id").as("dst"))), Seq("dst"),
+          .join(gate(nAll)(scc.select(col("id").as("dst"))), Seq("dst"),
             "left_anti"))
       }
     }
@@ -2552,7 +2501,7 @@ object Graph {
     else {
       val fb = found.reduce(_ unionAll _)
       fb.unionAll(
-        allNodes.join(gated(fb.select(col("id"))), Seq("id"),
+        allNodes.join(gate(nAll)(fb.select(col("id"))), Seq("id"),
           "left_anti")
           .select(col("id"), col("id").as("scc")))
     }
@@ -2757,8 +2706,7 @@ object Graph {
     * rebuild-on-retract posture.
     */
   def sccIncremental(newEdges: DataFrame, src: Column, dst: Column,
-                     storeDir: String, batchId: Long,
-                     broadcastLimit: Long = 4000000L): DataFrame = {
+                     storeDir: String, batchId: Long): DataFrame = {
     val spark = newEdges.sparkSession
     val (assign, cedges) = (sccAssignStore(storeDir), sccCedgesStore(storeDir))
     val owner = "sccIncremental(batch)"
@@ -2768,14 +2716,13 @@ object Graph {
           dst.cast("long").as("dst"))
         .where(col("src") =!= col("dst"))
         .distinct())
-    val gated = gate(nNew, broadcastLimit) _
     val stored = Checkpoints.stage(assign.view(spark, batchId))
     val ids = en.select(col("src").as("id"))
       .union(en.select(col("dst").as("id"))).distinct()
     val mapped = Checkpoints.stage(en
-      .join(gated(stored.select(col("id").as("src"),
+      .join(gate(nNew)(stored.select(col("id").as("src"),
         col("scc").as("__cu"))), Seq("src"), "left")
-      .join(gated(stored.select(col("id").as("dst"),
+      .join(gate(nNew)(stored.select(col("id").as("dst"),
         col("scc").as("__cv"))), Seq("dst"), "left")
       .select(coalesce(col("__cu"), col("src")).as("src"),
         coalesce(col("__cv"), col("dst")).as("dst"))
@@ -2792,27 +2739,27 @@ object Graph {
         .select(col("id").as("__old"), col("scc").as("__new")))
     // merged SCCs' stored members relabel; winners keep their rows
     val losers = stored
-      .join(gated(remap), col("scc") === col("__old"))
+      .join(gate(nNew)(remap), col("scc") === col("__old"))
       .select(col("id"), col("__new").as("scc"))
     // the batch's NEW nodes: their super-node is their own id
     val newNodes = ids
-      .join(gated(stored.select(col("id"))), Seq("id"), "left_anti")
-      .join(gated(remap), col("id") === col("__old"), "left")
+      .join(gate(nNew)(stored.select(col("id"))), Seq("id"), "left_anti")
+      .join(gate(nNew)(remap), col("id") === col("__old"), "left")
       .select(col("id"), coalesce(col("__new"), col("id")).as("scc"))
     val slice = Checkpoints.stage(newNodes.unionByName(losers))
     assign.append(spark, owner, batchId, 1)(slice)
     // the batch's own cross-SCC edges, under the POST-batch labels
     cedges.append(spark, owner, batchId, 1)(mapped
-      .join(gated(remap.select(col("__old").as("src"),
+      .join(gate(nNew)(remap.select(col("__old").as("src"),
         col("__new").as("__ns"))), Seq("src"), "left")
-      .join(gated(remap.select(col("__old").as("dst"),
+      .join(gate(nNew)(remap.select(col("__old").as("dst"),
         col("__new").as("__nd"))), Seq("dst"), "left")
       .select(coalesce(col("__ns"), col("src")).as("src"),
         coalesce(col("__nd"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct())
     stored
-      .join(gated(slice.select(col("id"))), Seq("id"), "left_anti")
+      .join(gate(nNew)(slice.select(col("id"))), Seq("id"), "left_anti")
       .unionByName(slice.select(col("id"), col("scc")))
   }}
 
@@ -2989,7 +2936,6 @@ object Graph {
   def connectedComponentsIncremental(newEdges: DataFrame, na: Column,
                                      nb: Column, storeDir: String,
                                      batchId: Long,
-                                     broadcastLimit: Long = 4000000L,
                                      smallStoreBytes: Long = 32L << 20)
       : DataFrame = {
     val spark = newEdges.sparkSession
@@ -3001,7 +2947,6 @@ object Graph {
       newEdges.select(na.cast("long").as("u"), nb.cast("long").as("v"))
         .where(col("u") =!= col("v"))
         .distinct())
-    val gated = gate(nNew, broadcastLimit) _
     // relabel batch endpoints through the stored components; unknown
     // (new) nodes keep their own id — the store scan OPENS only the
     // files the batch endpoints can live in (sibling footer manifest
@@ -3022,11 +2967,11 @@ object Graph {
       else idPruner.read(probe)
     val touchedState = Checkpoints.stage(
       main.foldRows(idProbeView(ids), batchId)
-        .join(gated(ids), Seq("id"), "left_semi"))
+        .join(gate(nNew)(ids), Seq("id"), "left_semi"))
     val relabeled = en
-      .join(gated(touchedState.select(col("id").as("u"),
+      .join(gate(nNew)(touchedState.select(col("id").as("u"),
         col("comp").as("cu"))), Seq("u"), "left")
-      .join(gated(touchedState.select(col("id").as("v"),
+      .join(gate(nNew)(touchedState.select(col("id").as("v"),
         col("comp").as("cv"))), Seq("v"), "left")
       .select(coalesce(col("cu"), col("u")).as("ca"),
         coalesce(col("cv"), col("v")).as("cb"))
@@ -3049,18 +2994,18 @@ object Graph {
     val losers =
       if (!hasProjection || smallStore)
         main.view(spark, batchId)
-          .join(gated(merged), col("comp") === col("__old"))
+          .join(gate(nNew)(merged), col("comp") === col("__old"))
           .select(col("id"), col("__new").as("comp"))
       else {
         val loserComps = merged.select(col("__old").as("comp"))
         val candIds = Checkpoints.stage(
           byComp.pruned(spark, "comp", loserComps)
             .where(col("__b") < batchId)
-            .join(gated(loserComps), Seq("comp"), "left_semi")
+            .join(gate(nNew)(loserComps), Seq("comp"), "left_semi")
             .select(col("id")).distinct())
         main.foldRows(idPruner.read(candIds)
             .join(candIds, Seq("id"), "left_semi"), batchId)
-          .join(gated(merged), col("comp") === col("__old"))
+          .join(gate(nNew)(merged), col("comp") === col("__old"))
           .select(col("id"), col("__new").as("comp"))
       }
     // the batch's NEW nodes: absent from the store, so each appears in
@@ -3068,9 +3013,9 @@ object Graph {
     // its merged remap (when its contracted node lost) or itself (it
     // is the min of its merged group, or untouched)
     val newNodes = ids
-      .join(gated(touchedState.select(col("id"))), Seq("id"),
+      .join(gate(nNew)(touchedState.select(col("id"))), Seq("id"),
         "left_anti")
-      .join(gated(merged), col("id") === col("__old"), "left")
+      .join(gate(nNew)(merged), col("id") === col("__old"), "left")
       .select(col("id"), coalesce(col("__new"), col("id")).as("comp"))
     val slice = Checkpoints.stage(newNodes.unionByName(losers))
     // projection mirror FIRST, main store second: a committed main row
@@ -3088,7 +3033,7 @@ object Graph {
       byComp.append(spark, owner, batchId, 1, indexed = !smallStore)(slice)
     main.append(spark, owner, batchId, 1, indexed = !smallStore)(slice)
     main.view(spark, batchId)
-      .join(gated(slice.select(col("id"))), Seq("id"), "left_anti")
+      .join(gate(nNew)(slice.select(col("id"))), Seq("id"), "left_anti")
       .unionByName(slice.select(col("id"), col("comp")))
   }}
 
@@ -3127,11 +3072,10 @@ object Graph {
     */
   def writeKCoreStore(edges: DataFrame, a: Column, b: Column, k: Int,
                       storeDir: String, filesOut: Int = 4,
-                      maxRounds: Int = 50,
-                      broadcastLimit: Long = 4000000L): Unit =
+                      maxRounds: Int = 50): Unit =
     kCoreStore(storeDir).writeBase(edges.sparkSession,
         "writeKCoreStore(batch)", filesOut) {
-      kCore(edges, a, b, k, maxRounds, broadcastLimit)
+      kCore(edges, a, b, k, maxRounds)
     }
 
   /** RETRACTION for the k-core store — the monotone-union twist on
@@ -3146,11 +3090,10 @@ object Graph {
     */
   def rebuildKCoreStore(survivingEdges: DataFrame, a: Column,
                         b: Column, k: Int, storeDir: String,
-                        filesOut: Int = 4, maxRounds: Int = 50,
-                        broadcastLimit: Long = 4000000L): Long =
+                        filesOut: Int = 4, maxRounds: Int = 50): Long =
     kCoreStore(storeDir).supersede(survivingEdges.sparkSession,
         "rebuildKCoreStore(batch)", filesOut) {
-      kCore(survivingEdges, a, b, k, maxRounds, broadcastLimit)
+      kCore(survivingEdges, a, b, k, maxRounds)
     }
 
   /** The k-core store's CURRENT member set (union of committed member
@@ -3195,7 +3138,6 @@ object Graph {
                        newEdges: DataFrame, na: Column, nb: Column,
                        k: Int, storeDir: String, batchId: Long,
                        maxRounds: Int = 50,
-                       broadcastLimit: Long = 4000000L,
                        smallStoreBytes: Long = 32L << 20)
       : DataFrame = {
     require(k >= 1, "k must be >= 1")
@@ -3268,10 +3210,10 @@ object Graph {
         done = (p, c) => c.count <= p.count) { t =>
       val (cand, nc) = (t.last.df, t.last.count)
       val nbrs = e.join(
-          gate(nc, broadcastLimit)(cand.select(col("id").as("u"))),
+          gate(nc)(cand.select(col("id").as("u"))),
           Seq("u"), "left_semi")
         .select(col("v").as("id"))
-        .union(e.join(gate(nc, broadcastLimit)(cand.select(col("id").as("v"))),
+        .union(e.join(gate(nc)(cand.select(col("id").as("v"))),
           Seq("v"), "left_semi")
           .select(col("u").as("id")))
       t.stage(cand.unionByName(eligibleOf(nbrs.distinct())).distinct())
@@ -3287,11 +3229,11 @@ object Graph {
       val (surv, ns) = (t.last.df, t.last.count)
       // one (c, w) row per candidate endpoint of each incident edge
       // (a candidate–candidate edge credits both endpoints)
-      val inc = e.join(gate(ns, broadcastLimit)(surv.select(col("id").as("u"))),
+      val inc = e.join(gate(ns)(surv.select(col("id").as("u"))),
           Seq("u"))
         .select(col("u").as("c"), col("v").as("w"))
         .unionAll(e.join(
-          gate(ns, broadcastLimit)(surv.select(col("id").as("v"))),
+          gate(ns)(surv.select(col("id").as("v"))),
           Seq("v"))
           .select(col("v").as("c"), col("u").as("w")))
       val nbrIds = inc.select(col("w").as("id")).distinct()

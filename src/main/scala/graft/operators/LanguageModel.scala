@@ -87,22 +87,20 @@ object LanguageModel {
     * caller's left-join-coalesce treats them as score 0
     * (vacuously predictable — route by token count separately).
     *
-    * The model join is measured: ≤ `broadcastLimit` model rows ride a
-    * broadcast; above, both sides shuffle-hash on the 8-byte key.
+    * The model join is measured: a model whose row count fits
+    * [[Regime]] rides a broadcast; above, both sides shuffle-hash on
+    * the 8-byte key.
     */
   def lmScoreQuantized(docs: DataFrame, id: Column, text: Column,
-                       model: DataFrame,
-                       broadcastLimit: Long = 4000000L): DataFrame =
-    lmScoreFromFeatures(lmFeatures(docs, id, text), model,
-      broadcastLimit)
+                       model: DataFrame): DataFrame =
+    lmScoreFromFeatures(lmFeatures(docs, id, text), model)
 
   /** [[lmScoreQuantized]] from pre-extracted features — the streaming
     * gate's form (one featurize pass per micro-batch, shared between
     * scoring and the model fold).
     */
-  def lmScoreFromFeatures(feats: DataFrame, model: DataFrame,
-                          broadcastLimit: Long = 4000000L): DataFrame = {
-    val (joined, vRow) = joinModel(feats, model, broadcastLimit)
+  def lmScoreFromFeatures(feats: DataFrame, model: DataFrame): DataFrame = {
+    val (joined, vRow) = joinModel(feats, model)
     joined.crossJoin(broadcast(vRow))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -115,11 +113,10 @@ object LanguageModel {
     * joined to bigram and context counts (measured broadcast vs
     * shuffle-hash regime) plus the 1-row context-vocabulary aggregate.
     */
-  private def joinModel(feats: DataFrame, model: DataFrame,
-                        broadcastLimit: Long)
+  private def joinModel(feats: DataFrame, model: DataFrame)
       : (DataFrame, DataFrame) = {
     val (staged, nModel) = Checkpoints.stageCount(model)
-    val small = nModel <= broadcastLimit
+    val small = Regime.fits(nModel)
     val uni = staged.where(col("kind") === 1)
       .select(col("h").as("h1"), col("cnt").as("c1"))
     val big = staged.where(col("kind") === 2)
@@ -140,10 +137,8 @@ object LanguageModel {
     * the quantized arm; doubles, spec-checked for rank agreement.
     */
   def lmLogProb(docs: DataFrame, id: Column, text: Column,
-                model: DataFrame,
-                broadcastLimit: Long = 4000000L): DataFrame = {
-    val (joined, vRow) = joinModel(lmFeatures(docs, id, text), model,
-      broadcastLimit)
+                model: DataFrame): DataFrame = {
+    val (joined, vRow) = joinModel(lmFeatures(docs, id, text), model)
     joined.crossJoin(broadcast(vRow))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_bigrams"),

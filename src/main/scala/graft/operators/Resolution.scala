@@ -174,10 +174,9 @@ object Resolution {
                          manifestPath: String,
                          block: Column => Column = firstTokenBlock,
                          maxDist: Int = 3,
-                         maxBlock: Int = Int.MaxValue,
-                         broadcastLimit: Long = 4000000L): DataFrame = {
+                         maxBlock: Int = Int.MaxValue): DataFrame = {
     val (batch, nBatch) = Checkpoints.stageCount(keyed(newEnts, block))
-    val small = nBatch <= broadcastLimit
+    val small = Regime.fits(nBatch)
     val probe = batch.select(col("blkh")).distinct()
     val slice0 = Layout.Entities.touched(Seq(storeDir), manifestPath,
       probe)

@@ -175,14 +175,12 @@ object TimeSeries {
     * must also fall within the horizon after stage k−1.
     */
   def funnel(df: DataFrame, user: Column, ts: Column, etype: Column,
-             stages: Seq[String], horizonMicros: Long = Long.MaxValue,
-             broadcastLimit: Long = 4000000L): DataFrame = {
+             stages: Seq[String],
+             horizonMicros: Long = Long.MaxValue): DataFrame = {
     require(stages.nonEmpty, "stages must be non-empty")
     val spark = df.sparkSession
     val ev = df.select(user.as("user"), ts.as("ts"),
       etype.as("etype"))
-    def gated(d: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastLimit) broadcast(d) else d
     var reached = graft.operators.Checkpoints.stage(
       ev.where(col("etype") === stages.head)
         .groupBy(col("user")).agg(min(col("ts")).as("t")))
@@ -190,8 +188,8 @@ object TimeSeries {
       lit(stages.head).as("stage_name"), col("t").as("ts"))
     var k = 2
     while (k <= stages.length) {
-      val prev = gated(reached.select(col("user"),
-        col("t").as("__pt")), reached.count())
+      val prev = Regime.gate(reached.count())(reached.select(col("user"),
+        col("t").as("__pt")))
       // the horizon predicate is built only when bounded — timestampadd
       // stays off the plan (and off NTZ type checking) otherwise
       val ordered = col("ts") > col("__pt")
@@ -243,17 +241,14 @@ object TimeSeries {
     * (user, week), one broadcast-gated join on the measured user
     * count, one counting aggregate — no windows.
     */
-  def cohortRetention(df: DataFrame, user: Column, ts: Column,
-                      broadcastLimit: Long = 4000000L): DataFrame = {
+  def cohortRetention(df: DataFrame, user: Column,
+                      ts: Column): DataFrame = {
     val ev = df.select(user.as("user"),
       to_date(date_trunc("week", ts)).as("wk"))
     val (firsts, nFirsts) = graft.operators.Checkpoints.stageCount(
       ev.groupBy(col("user")).agg(min(col("wk")).as("cohort")))
     val active = ev.distinct()
-    val side =
-      if (nFirsts <= broadcastLimit) broadcast(firsts)
-      else firsts
-    active.join(side, Seq("user"))
+    active.join(Regime.gate(nFirsts)(firsts), Seq("user"))
       .groupBy(col("cohort"),
         (datediff(col("wk"), col("cohort")) / 7).cast("long")
           .as("week_offset"))

@@ -117,8 +117,8 @@ object Training {
     * rank (no global window), and a broadcast-gated join back on the
     * MEASURED vocab size.
     */
-  def encodeCategorical(df: DataFrame, value: Column, out: String,
-                        broadcastLimit: Long = 4000000L): DataFrame = {
+  def encodeCategorical(df: DataFrame, value: Column,
+                        out: String): DataFrame = {
     // __cat, not __v: withPrefixSum claims __v internally
     val (vocab, nVocab) = Checkpoints.stageCount(
       df.select(value.as("__cat")).where(col("__cat").isNotNull)
@@ -127,9 +127,8 @@ object Training {
     // documented 1-based codes
     val coded = withPrefixSum(vocab, Seq(col("__cat")), lit(1L), out)
       .withColumn(out, col(out) + 1)
-    val side =
-      if (nVocab <= broadcastLimit) broadcast(coded) else coded
-    df.join(side, value <=> col("__cat"), "left").drop("__cat")
+    df.join(Regime.gate(nVocab)(coded), value <=> col("__cat"), "left")
+      .drop("__cat")
   }
 
   /** Incremental [[encodeCategorical]] with STABLE codes — the
@@ -145,8 +144,7 @@ object Training {
     * Returns the encoded batch through the REFRESHED vocabulary.
     */
   def encodeCategoricalIncremental(df: DataFrame, value: Column,
-                                   out: String, storeDir: String,
-                                   broadcastLimit: Long = 4000000L)
+                                   out: String, storeDir: String)
       : DataFrame = {
     val spark = df.sparkSession
     val fs = new org.apache.hadoop.fs.Path(storeDir)
@@ -193,10 +191,9 @@ object Training {
     val vocabNow = spark.read.parquet(storeDir)
       .where(col("__cat").isNotNull) // retracted rows encode nothing
       .select(col("__cat"), col("__code").as(out))
-    val side =
-      if (vocabNow.count() <= broadcastLimit) broadcast(vocabNow)
-      else vocabNow
-    df.join(side, value <=> col("__cat"), "left").drop("__cat")
+    df.join(Regime.gate(vocabNow.count())(vocabNow), value <=> col("__cat"),
+        "left")
+      .drop("__cat")
   }
 
   /** RETRACTION for the categorical vocabulary — the APPEND-ONLY-INDEX
@@ -559,18 +556,14 @@ object Training {
     * data-sized shuffle beyond the groupBy; the turn table itself is
     * never globally sorted.
     */
-  def packConversations(turns: DataFrame, budget: Long,
-                        broadcastLimit: Long = 4000000L): DataFrame = {
+  def packConversations(turns: DataFrame, budget: Long): DataFrame = {
     val (convLens, nConv) = Checkpoints.stageCount(
       turns.groupBy(col("conv").as("__pconv"))
         .agg(max(col("end")).as("__clen")))
     val packed = packBinsWithOffsets(convLens, Seq(col("__pconv")),
         col("__clen"), budget)
       .select(col("__pconv"), col("start").as("__cstart"))
-    val side =
-      if (nConv <= broadcastLimit) broadcast(packed)
-      else packed
-    turns.join(side, col("conv") === col("__pconv"))
+    turns.join(Regime.gate(nConv)(packed), col("conv") === col("__pconv"))
       .select(col("conv"), col("turn"), col("role"),
         expr(s"(__cstart + start) div ${budget}L").as("bin"),
         (col("__cstart") + col("start")).as("offset"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Similarity, Training, Upsert}
+import graft.operators.{Curation, Regime, Similarity, Training, Upsert}
 import ParityQueries.t
 
 /** Round-6 curation tier: raw-crawl → training-corpus operators (HTML
@@ -170,14 +170,14 @@ object CurationQueries {
         .select(col("id").as("doc_id"), col("n_tri"), col("fam"))
         .orderBy(col("doc_id"))),
 
-    // The same familiarity score through the NON-broadcast arm
-    // (broadcastVocabLimit = 0 forces the shuffle-hash join the
+    // The same familiarity score through the NON-broadcast arm (a
+    // zero-row broadcast threshold forces the shuffle-hash join the
     // measured-vocab gate picks on a multilingual 100 TB vocabulary) —
     // hash-equal to x_charlm_score: the gate changes the plan, never
     // the answer.
     "x_charlm_shuffle" -> ((s, d) =>
-      Curation.charTrigramFamiliarity(t(s, d, "documents"),
-          col("doc_id"), col("text"), broadcastVocabLimit = 0L)
+      Regime.forcing(0L)(Curation.charTrigramFamiliarity(
+          t(s, d, "documents"), col("doc_id"), col("text")))
         .select(col("id").as("doc_id"), col("n_tri"), col("fam"))
         .orderBy(col("doc_id"))),
 

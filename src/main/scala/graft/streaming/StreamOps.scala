@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{KeyedStore, Layout, Stats, Upsert}
+import graft.operators.{KeyedStore, Layout, Regime, Stats, Upsert}
 
 /** Streaming counterparts of the batch pipeline operators: bounded-state
   * exact dedup, stream-static dimension enrichment, and an incremental
@@ -564,8 +564,7 @@ object StreamOps {
                         window: Int = 40, anchorLen: Int = 8,
                         anchorMod: Int = 16, minShared: Long = 1L,
                         compactEvery: Int = 0, compactFilesOut: Int = 4,
-                        appendFilesOut: Int = 2, manifestPath: String = "",
-                        broadcastLimit: Long = 4000000L)
+                        appendFilesOut: Int = 2, manifestPath: String = "")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Curation
     val mPath = manifestOf(storePath, manifestPath)
@@ -583,7 +582,7 @@ object StreamOps {
       // semi-joined down to the batch's own fp set). Measured
       // regime gate: a normal micro-batch rides broadcasts; a
       // backfill-sized batch degrades every one to shuffle-hash.
-      val small = batchFps.count() <= broadcastLimit
+      val small = Regime.fits(batchFps.count())
       def bc(df: DataFrame): DataFrame =
         if (small) broadcast(df) else df.hint("shuffle_hash")
       val probe = batchFps.select(col("fp")).distinct()
@@ -1253,8 +1252,7 @@ object StreamOps {
                  outPath: String, checkpoint: String,
                  maxDist: Int = 3, maxBlock: Int = Int.MaxValue,
                  compactEvery: Int = 0, compactFilesOut: Int = 4,
-                 appendFilesOut: Int = 2, manifestPath: String = "",
-                 broadcastLimit: Long = 4000000L)
+                 appendFilesOut: Int = 2, manifestPath: String = "")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Resolution
     val mPath = manifestOf(storePath, manifestPath)
@@ -1267,7 +1265,7 @@ object StreamOps {
       val batchK = Resolution.keyed(
         Resolution.entities(batchRec, col("rid"), col("nm")),
         Resolution.firstTokenBlock).localCheckpoint()
-      val small = batchK.count() <= broadcastLimit
+      val small = Regime.fits(batchK.count())
       def bc(df: DataFrame): DataFrame =
         if (small) broadcast(df) else df.hint("shuffle_hash")
       val storeSlice = erStoreSliceFor(spark, storePath, mPath,

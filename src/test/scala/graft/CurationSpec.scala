@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Similarity, Training, Upsert}
+import graft.operators.{Curation, Regime, Similarity, Training, Upsert}
 
 class CurationSpec extends SparkSuite {
 
@@ -301,8 +301,8 @@ class CurationSpec extends SparkSuite {
         (0x4E00 + d * 31 + i).toChar).mkString)
     }.toDF("id", "t")
     val bArm = Curation.charTrigramFamiliarity(wide, col("id"), col("t"))
-    val sArm = Curation.charTrigramFamiliarity(wide, col("id"), col("t"),
-      broadcastVocabLimit = 10L) // measured vocab (~880) exceeds this
+    val sArm = Regime.forcing(10L)( // measured vocab (~880) exceeds this
+      Curation.charTrigramFamiliarity(wide, col("id"), col("t")))
     val nodes = graft.pipeline.PlanLint.nodes(sArm)
     assert(!nodes.exists(_.isInstanceOf[
       org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),

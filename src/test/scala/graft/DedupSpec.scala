@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Regime, Similarity}
 
 /** Near-dup operators verified on constructed duplicates (the synthetic
   * corpus is near-unique, so recall is asserted here, not in the driver's
@@ -325,9 +325,9 @@ class DedupSpec extends SparkSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      def run(limit: Long) = Dedup.minhashIncremental(batchIncr,
-        col("doc_id"), col("text"), storeOf(histIncr),
-        broadcastLimit = limit)
+      def run(limit: Long) = Regime.forcing(limit)(
+        Dedup.minhashIncremental(batchIncr, col("doc_id"), col("text"),
+          storeOf(histIncr)))
       val bc = run(Long.MaxValue)
       val sh = run(0L)
       assert(sh.select($"doc_id").as[Long].collect().toSet ==
@@ -412,9 +412,9 @@ class DedupSpec extends SparkSuite {
     val batchDf = batch.toDF("id", "vec")
     val store = Dedup.embeddingCodes(histDf, col("id"), col("vec"),
       planes = 16, tables = 8)
-    def run(limit: Long) = Dedup.embeddingIncremental(batchDf, col("id"),
-        col("vec"), store, histDf, 0.9, planes = 16, tables = 8,
-        multiprobe = 1, broadcastLimit = limit)
+    def run(limit: Long) = Regime.forcing(limit)(
+        Dedup.embeddingIncremental(batchDf, col("id"), col("vec"), store,
+          histDf, 0.9, planes = 16, tables = 8, multiprobe = 1))
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     val bc = run(Long.MaxValue)
     assert(run(0L) == bc)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.LanguageModel
+import graft.operators.{LanguageModel, Regime}
 
 /** Bigram LM scoring ([[graft.operators.LanguageModel]]): feature
   * extraction, hand-computed quantized scores, the monoid refresh law,
@@ -116,8 +116,8 @@ class LanguageModelSpec extends SparkSuite {
     val a = LanguageModel.lmScoreQuantized(docs, col("doc_id"),
         col("text"), model)
       .as[(Long, Long, Long)].collect().toSet
-    val b = LanguageModel.lmScoreQuantized(docs, col("doc_id"),
-        col("text"), model, broadcastLimit = 0L)
+    val b = Regime.forcing(0L)(LanguageModel.lmScoreQuantized(docs,
+        col("doc_id"), col("text"), model))
       .as[(Long, Long, Long)].collect().toSet
     assert(a == b && a.nonEmpty)
   }

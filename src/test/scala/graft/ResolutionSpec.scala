@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Resolution, Stats}
+import graft.operators.{Regime, Resolution, Stats}
 
 /** Entity resolution ([[graft.operators.Resolution]]): exact collapse,
   * blocked + thresholded confirm, block skew cap, record
@@ -184,8 +184,8 @@ class ResolutionSpec extends SparkSuite {
     val a = Resolution.erIncrementalPairs(batchEnts, s"$dir/store",
         s"$dir/manifest", maxDist = 3)
       .select("eid_a", "eid_b").as[(Long, Long)].collect().toSet
-    val b = Resolution.erIncrementalPairs(batchEnts, s"$dir/store",
-        s"$dir/manifest", maxDist = 3, broadcastLimit = 0L)
+    val b = Regime.forcing(0L)(Resolution.erIncrementalPairs(batchEnts,
+        s"$dir/store", s"$dir/manifest", maxDist = 3))
       .select("eid_a", "eid_b").as[(Long, Long)].collect().toSet
     assert(a == b && a.nonEmpty)
   }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Graph, Retrieval, TextAnalysis, Training}
+import graft.operators.{Curation, Graph, Regime, Retrieval, TextAnalysis,
+  Training}
 
 /** Round-8 retrieval/training tier: BM25 (both idf arms), content-
   * defined-chunk substring dedup (vs an independent in-memory
@@ -332,9 +333,9 @@ class RetrievalSpec extends SparkSuite {
     val (store, manifest) = (s"$dir/store", s"$dir/manifest")
     Curation.writeWindowStore(hist.toDF("id", "text"), col("id"),
       col("text"), store, manifest, filesOut = 8)
-    def run(limit: Long) = Curation.substringIncrementalPairs(
-        batch.toDF("id", "text"), col("id"), col("text"), store, manifest,
-        broadcastLimit = limit)
+    def run(limit: Long) = Regime.forcing(limit)(
+        Curation.substringIncrementalPairs(batch.toDF("id", "text"),
+          col("id"), col("text"), store, manifest))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (for {
       (hi, ht) <- hist; (bi, bt) <- batch
@@ -352,9 +353,9 @@ class RetrievalSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("winstore-spec2-").toString
     Curation.writeWindowStore(hist.toDF("id", "text"), col("id"),
       col("text"), s"$dir/store", s"$dir/manifest", filesOut = 4)
-    def run(limit: Long) = Curation.substringIncremental(
-        batch.toDF("id", "text"), col("id"), col("text"),
-        s"$dir/store", s"$dir/manifest", broadcastLimit = limit)
+    def run(limit: Long) = Regime.forcing(limit)(
+        Curation.substringIncremental(batch.toDF("id", "text"), col("id"),
+          col("text"), s"$dir/store", s"$dir/manifest"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(run(4000000L) == run(0L))
     assert(run(0L).nonEmpty)
@@ -546,8 +547,8 @@ class RetrievalSpec extends SparkSuite {
       .toDF("src", "dst")
     val bcast = Graph.pageRank(edges, col("src"), col("dst"), iters = 4)
       .collect().toSet
-    val shuffled = Graph.pageRank(edges, col("src"), col("dst"),
-      iters = 4, broadcastLimit = 0).collect().toSet
+    val shuffled = Regime.forcing(0L)(Graph.pageRank(edges, col("src"),
+      col("dst"), iters = 4)).collect().toSet
     assert(bcast == shuffled)
   }
 

@@ -1,14 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.{JobTags, ListenerBusDrain}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
-import graft.operators.{Graph, Rounds}
+import graft.operators.{Graph, Regime, Rounds}
 
 /** The iterative [[Graph]] operators, each on a small fixture, through
   * the one round driver ([[Rounds]]). Per operator and round budget:
@@ -122,21 +120,29 @@ class RoundsSpec extends SparkSuite {
           col("l"), iters = n, dir, batchId = 1L)
       }))
 
-  /** Jobs run, persistent RDDs left and a result digest for one call
-    * (the call and the collect of its result). Only jobs carrying this
-    * call's job tag count, so jobs other threads run on the shared
-    * context do not. Every RDD persisted while the call runs is held
-    * strongly until the count, so one the call leaks cannot drop out of
-    * the context's weak registry first.
+  /** What one call (the call and the collect of its result) ran and
+    * left: its jobs, each as its id and stage names, the persistent RDDs
+    * it left, and a digest of its result.
     */
-  private def measure(call: () => DataFrame): (Int, Int, String) = {
+  private final case class Measured(jobs: Seq[String], left: Int,
+                                    digest: String)
+
+  /** Measure one call. Only jobs carrying this call's job tag count, so
+    * jobs other threads run on the shared context do not. Every RDD
+    * persisted while the call runs is held strongly until the count, so
+    * one the call leaks cannot drop out of the context's weak registry
+    * first.
+    */
+  private def measure(call: () => DataFrame): Measured = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val held = java.util.concurrent.ConcurrentHashMap.newKeySet[RDD[_]]()
     val tag = s"rounds-measure-${java.util.UUID.randomUUID()}"
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (JobTags.of(e).contains(tag)) jobs.incrementAndGet(): Unit
+        if (JobTags.of(e).contains(tag))
+          jobs.add(s"job ${e.jobId}: " +
+            e.stageInfos.map(_.name).mkString(" | ")): Unit
         sc.getPersistentRDDs.values.foreach(r => held.add(r): Unit)
       }
     }
@@ -155,38 +161,42 @@ class RoundsSpec extends SparkSuite {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(got.map(_.toString).sorted.mkString("\n").getBytes("UTF-8"))
       .take(6).map("%02x".format(_)).mkString
-    (jobs.get, left, digest)
+    Measured(jobs.toArray(Array.empty[String]).toSeq, left, digest)
   }
 
   rows.foreach { r =>
     test(s"${r.name}: jobs and result unchanged; RDDs left do not " +
         "depend on the budget") {
-      val (j1, left1, d1) = measure(r.call(r.budgets._1))
-      val (j2, left2, d2) = measure(r.call(r.budgets._2))
-      assert((d1, d2) == r.digests, "result changed")
-      assert((j1, j2) == r.jobs, "job count changed")
-      assert(left1 == left2, s"persistent RDDs left: $left1 at budget " +
-        s"${r.budgets._1}, $left2 at budget ${r.budgets._2}")
+      val m1 = measure(r.call(r.budgets._1))
+      val m2 = measure(r.call(r.budgets._2))
+      assert((m1.digest, m2.digest) == r.digests, "result changed")
+      assert((m1.jobs.size, m2.jobs.size) == r.jobs, "job count changed; " +
+        Seq(r.budgets._1 -> m1, r.budgets._2 -> m2).map { case (b, m) =>
+          s"tagged jobs at budget $b:\n  " + m.jobs.mkString("\n  ")
+        }.mkString("\n"))
+      assert(m1.left == m2.left, s"persistent RDDs left: ${m1.left} at " +
+        s"budget ${r.budgets._1}, ${m2.left} at budget ${r.budgets._2}")
     }
   }
 
   test("landmarkDistances frees the empty BFS layer that ended the " +
       "search: one call leaves the edge and pivot stages and the 7 " +
       "non-empty layers") {
-    val (_, left, _) = measure(() => Graph.landmarkDistances(undirected,
-      col("a"), col("b"), landmarks = 2, maxDepth = 8))
+    val left = measure(() => Graph.landmarkDistances(undirected,
+      col("a"), col("b"), landmarks = 2, maxDepth = 8)).left
     assert(left == 9, s"persistent RDDs left: $left")
   }
 
-  test("connectedComponents: the star fallback keeps the caller's " +
-      "broadcastLimit") {
+  test("connectedComponents: the star fallback keeps a forced " +
+      "broadcast threshold") {
     val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
     val saved = thresholds.map(k => k -> spark.conf.getOption(k))
     val broadcastRounds = scala.collection.mutable.Set.empty[String]
     val tags = scala.collection.mutable.Set.empty[String]
-    def labels(limit: Long) = Graph.connectedComponents(path12, col("a"),
-        col("b"), switchAfter = 1, broadcastLimit = limit)
+    def labels(limit: Long) = Regime.forcing(limit)(
+        Graph.connectedComponents(path12, col("a"), col("b"),
+          switchAfter = 1))
       .as[(Long, Long)].collect().toMap
     val default = labels(4000000L)
     try {
