@@ -4,10 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One incremental keyed store on the shared `gen=`/`batch=` protocol —
-  * the module every batch-sequenced store declares itself through (the
-  * graph families, the edge store, PQ codes, PCA moments, the k-center
-  * coreset, KMV units, BM25 stats and every deleted-id set), so the
-  * layout, the fold and the manifest policy live here once.
+  * the module the keyed batch-sequenced stores declare themselves
+  * through (the graph families, the edge store, PQ codes, PCA moments,
+  * the k-center coreset, KMV units, BM25 stats and every deleted-id
+  * set), so the layout, the fold and the manifest policy live here
+  * once. Two store kinds stay outside it. The streaming gates' stores
+  * (signatures, hash windows, frames, fingerprints, codes, vectors,
+  * entities) are declared in StreamOps' `GateLayout`: their rows carry
+  * no `__b`, a gate reads its whole committed view rather than a
+  * before-batch fold, their column types follow the corpus (a view is
+  * guarded on names only), and the family's `_deleted` set — a
+  * KeyedStore — is their retraction. BM25 postings and doc lengths are
+  * a th-clustered layout, not a keyed fold.
   *
   * Layout: appends land in `<root>/batch=<id>`, superseding rebuilds
   * and compaction folds in `<root>/gen=<tok>` ([[Stats

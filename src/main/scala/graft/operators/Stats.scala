@@ -216,6 +216,15 @@ object Stats {
     else spark.read.schema(footerSchema(spark, files.min))
       .parquet(paths: _*)
 
+  /** Committed data dirs (a store view's `gen=`/`batch=` dirs, or one
+    * cumulative artifact) read under the schema of their first file's
+    * footer, the one an inferring read would take — with no inference
+    * job.
+    */
+  private[graft] def readDirs(spark: SparkSession,
+                              dirs: Seq[String]): DataFrame =
+    readAs(spark, firstFiles(spark, dirs), dirs)
+
   /** Files a `column BETWEEN lo AND hi` predicate would skip entirely
     * (footer range disjoint from [lo, hi], or the column is all null).
     * The report that licenses a clustered rewrite: on a range-clustered
@@ -622,6 +631,16 @@ object Stats {
     */
   def committedViewDirsAsOf(spark: SparkSession, root: String,
                             asOf: Long): Seq[String] = {
+    requireSnapshot(spark, root, asOf)
+    viewDirsAt(spark, root, asOf)
+  }
+
+  /** Throw [[SnapshotUnavailableException]], citing the floor, when
+    * `asOf` predates [[snapshotFloor]] — the refusal every floored
+    * as-of read makes before it resolves dirs.
+    */
+  private[graft] def requireSnapshot(spark: SparkSession, root: String,
+                                     asOf: Long): Unit = {
     val floor = snapshotFloor(spark, root)
     if (asOf < floor)
       throw new SnapshotUnavailableException(
@@ -630,7 +649,6 @@ object Stats {
           "(one-cycle grace keeps exactly the dirs above the " +
           "second-newest generation); re-run against a token >= " +
           s"$floor, or retain more history by compacting less often")
-    viewDirsAt(spark, root, asOf)
   }
 
   private def retractionFloorPath(root: String) =
@@ -978,6 +996,61 @@ object Stats {
   def writerLeasePath(root: String): String =
     s"${root.stripSuffix("/")}__writer_lease"
 
+  /** One lease file's I/O. The body of a `file:` lease is claimed,
+    * read, rewritten and deleted through java.nio: the claim is one
+    * atomic `CREATE_NEW` (Hadoop's local create checks, creates and
+    * then forks `chmod`, which a same-JVM release can race into a stray
+    * IOException), and no ChecksumFileSystem `.crc` sidecar can
+    * disagree with a body written outside it. Every other scheme goes
+    * through its Hadoop FileSystem, whose `create(overwrite = false)`
+    * is the arbiter. Existence and mtime (the heartbeat) are read
+    * through Hadoop on every scheme; neither touches the body.
+    */
+  private final class LeaseFile(path: String,
+                                conf: org.apache.hadoop.conf.Configuration) {
+    import java.nio.file.{Files, StandardOpenOption => Open}
+    private val hp = new Path(path)
+    private val fs = hp.getFileSystem(conf)
+    private val local = if (fs.getScheme != "file") None
+      else Some(java.nio.file.Paths.get(fs.makeQualified(hp).toUri))
+
+    def exists: Boolean = fs.exists(hp)
+    def modifiedMs: Long = fs.getFileStatus(hp).getModificationTime
+
+    def read(): String = local.fold {
+      val in = fs.open(hp)
+      try org.apache.commons.io.IOUtils.toString(in, "UTF-8") finally in.close()
+    }(p => new String(Files.readAllBytes(p), "UTF-8"))
+
+    /** Create the file holding `body`; false when it already exists. */
+    def create(body: String): Boolean = local match {
+      case Some(p) =>
+        Files.createDirectories(p.getParent) // as Hadoop's create does
+        try {
+          Files.write(p, body.getBytes("UTF-8"), Open.CREATE_NEW, Open.WRITE)
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      case None =>
+        val out = try fs.create(hp, false) catch {
+          case e: java.io.IOException =>
+            if (fs.exists(hp)) return false else throw e
+        }
+        try out.write(body.getBytes("UTF-8")) finally out.close()
+        true
+    }
+
+    def overwrite(body: String): Unit = local.fold {
+      val out = fs.create(hp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }(Files.write(_, body.getBytes("UTF-8")): Unit)
+
+    def delete(): Unit =
+      local.fold(fs.delete(hp, false))(Files.deleteIfExists(_)): Unit
+  }
+
+  private def leaseFile(spark: SparkSession, path: String): LeaseFile =
+    new LeaseFile(path, spark.sessionState.newHadoopConf())
+
   // intra-process holder registry: lease file path → the claim id
   // holding it (the streaming query's UUID once it launches; a unique
   // sync-claim id during a fenced batch mutation or a sink's pre-start
@@ -1104,13 +1177,11 @@ object Stats {
     * registry's putIfAbsent/CAS is the arbiter between two writers of
     * one JVM — the common deployment, one driver per store family) and
     * cross-process (the arbiter is a create-if-absent of the lease
-    * file — `fs.create(path, overwrite = false)`, atomic on HDFS and
-    * on object stores with conditional create; on a LOCAL filesystem
-    * Hadoop's ChecksumFileSystem implements it as exists-then-create,
-    * so the cross-process arm is best-effort there — local FS is the
-    * single-driver deployment, where the intra-process registry is the
-    * real arbiter — and a file that appears between the inspection and
-    * the create still loses us the claim instead of being clobbered).
+    * file: on a LOCAL filesystem java.nio's atomic `CREATE_NEW`, on
+    * HDFS and object stores with conditional create
+    * `fs.create(path, overwrite = false)` — see [[LeaseFile]]; a file
+    * that appears between the inspection and the create loses us the
+    * claim instead of being clobbered).
     * Throws [[ConcurrentWriterException]] when a root is held by a
     * LIVE writer; ANY failure — conflict or I/O — rolls back every
     * registry entry and lease file this call placed, and never touches
@@ -1166,8 +1237,7 @@ object Stats {
         }
         claimRegistry()
         registered += p
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+        val lease = leaseFile(spark, p)
         // cross-process inspection — on EVERY path, including the
         // intra-process reclaim: a lease file from another app is
         // reclaimed ONLY when its heartbeat (mtime) is stale past the
@@ -1181,17 +1251,13 @@ object Stats {
         // live lease: the create below still arbitrates.
         def inspect[T](read: => T, unreadable: T): Option[T] =
           try Some(read) catch {
-            case _: Throwable => if (fs.exists(hp)) Some(unreadable) else None
+            case _: Throwable => if (lease.exists) Some(unreadable) else None
           }
-        if (fs.exists(hp)) {
-          val body = inspect({
-            val in = fs.open(hp)
-            try org.apache.commons.io.IOUtils.toString(in, "UTF-8")
-            finally in.close()
-          }, "")
+        if (lease.exists) {
+          val body = inspect(lease.read(), "")
           body.filterNot(_.contains(s"app=$appId")).foreach { b =>
             val hbAge = inspect(System.currentTimeMillis() -
-              fs.getFileStatus(hp).getModificationTime, 0L)
+              lease.modifiedMs, 0L)
             hbAge.filter(_ <= leaseStaleGraceMs).foreach { age =>
               fail(p, if (b.isEmpty) "an unreadable lease"
                 else s"$b (heartbeat ${age}ms old — a live " +
@@ -1199,22 +1265,14 @@ object Stats {
                   s"$leaseStaleGraceMs ms)")
             }
           }
-          fs.delete(hp, false): Unit
+          lease.delete()
         }
         leaseClaimTestHook(p)
         // cross-process arbiter: atomic create-if-absent — a file
         // that appeared since the inspection means another process
         // claimed the family first
-        val out = try fs.create(hp, false) catch {
-          case e: java.io.IOException =>
-            if (fs.exists(hp))
-              fail(p, "a lease file created concurrently by " +
-                "another process")
-            else throw e
-        }
-        try out.write(
-          s"owner=$owner;app=$appId;holder=$holder".getBytes("UTF-8"))
-        finally out.close()
+        if (!lease.create(s"owner=$owner;app=$appId;holder=$holder"))
+          fail(p, "a lease file created concurrently by another process")
         created += p
       }
       leaseHadoopConf = spark.sessionState.newHadoopConf()
@@ -1226,11 +1284,8 @@ object Stats {
         // registry entries this call placed (conditional on `holder`,
         // so a successor's claim is never clobbered), then rethrow
         created.foreach { p =>
-          try {
-            val hp = new org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(spark.sessionState.newHadoopConf())
-              .delete(hp, false): Unit
-          } catch { case _: Throwable => () }
+          try leaseFile(spark, p).delete()
+          catch { case _: Throwable => () }
         }
         registered.foreach(p => leaseHolders.remove(p, holder): Unit)
         throw t
@@ -1252,29 +1307,17 @@ object Stats {
     roots.map(writerLeasePath).distinct.foreach { p =>
       if (leaseHolders.replace(p, from, to)) {
         try {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-          val body = try {
-            val in = fs.open(hp)
-            try org.apache.commons.io.IOUtils.toString(in, "UTF-8")
-            finally in.close()
-          } catch { case _: Throwable => "" }
-          if (body.contains(s"holder=$from")) {
-            val out = fs.create(hp, true)
-            try out.write(
-              body.replace(s"holder=$from", s"holder=$to")
-                .getBytes("UTF-8"))
-            finally out.close()
-          }
+          val lease = leaseFile(spark, p)
+          val body = try lease.read() catch { case _: Throwable => "" }
+          if (body.contains(s"holder=$from"))
+            lease.overwrite(body.replace(s"holder=$from", s"holder=$to"))
         } catch { case _: Throwable => () }
       }
     }
 
   private def releaseLease(spark: SparkSession, path: String): Unit = {
     leaseHolders.remove(path)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(hp, false): Unit
+    leaseFile(spark, path).delete()
   }
 
   /** Release (or operator-break) the writer leases on `roots`.
@@ -1307,15 +1350,9 @@ object Stats {
     roots.map(writerLeasePath).distinct.foreach { p =>
       if (leaseHolders.remove(p, holder)) {
         try {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-          val body = try {
-            val in = fs.open(hp)
-            try org.apache.commons.io.IOUtils.toString(in, "UTF-8")
-            finally in.close()
-          } catch { case _: Throwable => "" }
-          if (body.contains(s"holder=$holder"))
-            fs.delete(hp, false): Unit
+          val lease = leaseFile(spark, p)
+          val body = try lease.read() catch { case _: Throwable => "" }
+          if (body.contains(s"holder=$holder")) lease.delete()
         } catch { case _: Throwable => () }
       }
     }
@@ -1335,15 +1372,10 @@ object Stats {
     roots.filter(_.nonEmpty).distinct.map { r =>
       val p = writerLeasePath(r)
       val holder = Option(leaseHolders.get(p))
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+      val lease = leaseFile(spark, p)
       val body =
-        if (!fs.exists(hp)) ""
-        else try {
-          val in = fs.open(hp)
-          try org.apache.commons.io.IOUtils.toString(in, "UTF-8")
-          finally in.close()
-        } catch { case _: Throwable => "<unreadable>" }
+        if (!lease.exists) ""
+        else try lease.read() catch { case _: Throwable => "<unreadable>" }
       (r, holder.isDefined || body.nonEmpty,
         holder.exists(leaseIsLive(spark, _)),
         holder.map(_.toString).getOrElse(""), body)
@@ -1456,7 +1488,7 @@ object Stats {
         val newTok = foldable.map(_._1).max
         val viewPaths = (gens.filter(_._1 == prevTok).map(_._2) ++
           foldable.map(_._2)).map(_.toString).toSeq
-        shape(readAs(spark, firstFiles(spark, viewPaths), viewPaths))
+        shape(readDirs(spark, viewPaths))
           .write.mode("overwrite").parquet(s"$root/gen=$newTok")
         // crash seam: fires between the fold commit and the vacuum —
         // lets a spec kill the compactor at the protocol's most
@@ -1603,7 +1635,7 @@ object Stats {
   private def scanKept(spark: SparkSession, dirs: Seq[String],
                        keep: Seq[String]): DataFrame =
     if (keep.isEmpty)
-      readAs(spark, firstFiles(spark, dirs), dirs).where(lit(false))
+      readDirs(spark, dirs).where(lit(false))
     else readAs(spark, keep, keep)
 
   /** Store scan of `dirs` opening only the [[touchedFiles]] — the read

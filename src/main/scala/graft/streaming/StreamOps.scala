@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{KeyedStore, Layout, Regime, Stats, Upsert}
 
@@ -150,8 +150,8 @@ object StreamOps {
     * query with its checkpoint in append mode, and run each NON-EMPTY
     * micro-batch with `roots` marked held on the stream-execution
     * thread — so the fenced batch mutators a batch calls (compactions,
-    * tombstone deletes, store rebuilds, each under
-    * [[graft.operators.Stats.withWriterLease]]) ride the query's lease
+    * tombstone deletes, store rebuilds, each under the family's writer
+    * lease) ride the query's lease
     * instead of self-conflicting with it. foreachBatch is serial, so
     * in-sink maintenance can never race a reading batch.
     */
@@ -178,6 +178,20 @@ object StreamOps {
     */
   private def compactDue(compactEvery: Int, batchId: Long): Boolean =
     compactEvery > 0 && batchId % compactEvery == compactEvery - 1
+
+  /** `<root>/batch=<batchId>`: a gate store's or a gate output's
+    * micro-batch dir.
+    */
+  private def batchDir(root: String, batchId: Long): String =
+    s"$root/batch=$batchId"
+
+  /** Write a micro-batch's gate output (survivors, or a report) as
+    * `<outPath>/batch=<batchId>`, overwrite-idempotent: a retry
+    * rewrites the same dir.
+    */
+  private def writeOutput(rows: DataFrame, outPath: String,
+                          batchId: Long): Unit =
+    rows.write.mode(SaveMode.Overwrite).parquet(batchDir(outPath, batchId))
 
   /** Continuous-ingestion near-dup gate: every micro-batch is gated
     * against the PERSISTED MinHash signature store
@@ -236,12 +250,10 @@ object StreamOps {
         .localCheckpoint()
       // surviving subset of the same materialized pass — no second
       // tokenize/hash of the text
-      batchSigs
+      PlainSigs.append(batchSigs
         .join(survivors.select(col(id).as("__sid")),
-          col("id") === col("__sid"), "left_semi")
-        .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-      survivors.write.mode("overwrite")
-        .parquet(s"$outPath/batch=$batchId")
+          col("id") === col("__sid"), "left_semi"), storePath, batchId)
+      writeOutput(survivors, outPath, batchId)
       if (compactDue(compactEvery, batchId))
         compactNearDupStore(spark, storePath, compactFilesOut): Unit
     }
@@ -263,13 +275,12 @@ object StreamOps {
   private[graft] def nearDupStoreView(spark: SparkSession,
                                           storePath: String)
       : Option[DataFrame] =
-    gateStoreView(spark, storePath, Seq("id", "sig"))
-      .map(gateTombstones(storePath).without(spark, _))
+    PlainSigs.live(spark, storePath)
 
   /** SNAPSHOT readout of the near-dup store: the corpus exactly as
     * the committed view resolved it when the sequence head was
-    * `asOf` ([[graft.operators.Stats.committedViewDirsAsOf]] — named
-    * refusal below the vacuum floor), MINUS the family's CURRENT
+    * `asOf` (named refusal below the vacuum floor,
+    * [[graft.operators.Stats.requireSnapshot]]), MINUS the family's CURRENT
     * deleted set: a PENDING (unfolded) takedown is anti-joined out of
     * every snapshot, and once a takedown has been FOLDED (tombstones
     * applied and cleared), snapshots below that fold refuse by name
@@ -289,10 +300,8 @@ object StreamOps {
           "takedown fold is retraction-scrubbed (time travel never " +
           "resurrects a taken-down row); re-run against a token >= " +
           s"$rf")
-    val paths = Stats.committedViewDirsAsOf(spark, storePath, asOf)
-    if (paths.isEmpty) None
-    else Some(gateTombstones(storePath).without(spark,
-      spark.read.parquet(paths: _*).select(col("id"), col("sig"))))
+    Stats.requireSnapshot(spark, storePath, asOf)
+    PlainSigs.live(spark, storePath, asOf)
   }
 
   /** Fold the near-dup gate's per-micro-batch `batch=<id>` store
@@ -314,8 +323,7 @@ object StreamOps {
     */
   def compactNearDupStore(spark: SparkSession, storePath: String,
                           filesOut: Int): Option[Long] =
-    compactGateStore(spark, storePath, "compactNearDupStore")(
-      _.select(col("id"), col("sig")).repartition(filesOut))
+    PlainSigs.compact(spark, storePath, "", filesOut)
 
   /** The `<store>_deleted` set every id-keyed gate store shares (text
     * sigs, substring fps, media/audio windows, video frames, embedding
@@ -324,82 +332,155 @@ object StreamOps {
   private def gateTombstones(storePath: String): KeyedStore =
     KeyedStore.tombstones(storePath, "_deleted", "nearDupDeletedIds")
 
-  /** The compactor every id-keyed gate store shares: fold the committed
-    * view minus the `_deleted` set (matched on `idCol`) through
-    * `shape`, clear the set ([[KeyedStore.foldWithout]] — the
-    * physical-drop half of the retraction contract; the read-time half
-    * is [[KeyedStore.without]]), then upsert the footer manifest at
-    * `manifestPath` when one is kept.
+  /** A gate store, declared once: the columns a reader takes from its
+    * dirs, where they sit under the family root (`sub`: the embedding
+    * gate keeps `codes/` and `vecs/` under one root), the column the
+    * family's `_deleted` set matches, the public compactor its folds
+    * are named after, and — for a clustered store — its shared
+    * [[graft.operators.Layout.Clustered]] declaration (range-clustered
+    * appends with a `<dir>_manifest` footer manifest, clustered folds
+    * and a manifest-pruned slice). The `batch=<id>` append, the
+    * committed and as-of views, the pruned slice and the
+    * tombstone-aware compaction of every gate store come from here;
+    * every read takes its schema from a driver-read footer, so
+    * building one runs no Spark job.
+    *
+    * Gate stores are not [[KeyedStore]]s: their rows carry no `__b`
+    * (a gate reads its whole committed view, never a before-batch
+    * fold, and retraction is the family's `_deleted` set), and their
+    * column types follow the corpus, so a view is guarded on column
+    * names only.
     */
-  private def compactGateStore(spark: SparkSession, storePath: String,
-                               who: String, manifestPath: String = "",
-                               idCol: String = "id")
-                              (shape: DataFrame => DataFrame)
-      : Option[Long] =
-    Stats.withWriterLease(spark, Seq(storePath), s"$who(batch)") {
-      val Seq(tok) = gateTombstones(storePath).foldWithout(spark, who,
-        Seq((storePath, Seq(idCol), shape)))
-      if (tok.isDefined && manifestPath.nonEmpty)
-        Stats.refreshManifest(spark, storePath, manifestPath)
-      tok
+  private final case class GateLayout(cols: Seq[String],
+                                      compactor: String = "",
+                                      idCol: String = "id",
+                                      clustered: Option[Layout.Clustered] =
+                                        None,
+                                      sub: String = "") {
+    private def dir(storePath: String): String =
+      if (sub.isEmpty) storePath else s"$storePath/$sub"
+
+    /** The store's footer manifest: `<dir>_manifest`, outside the store
+      * tree, so store reads never see it.
+      */
+    def manifest(storePath: String): String = s"${dir(storePath)}_manifest"
+
+    /** Write `rows` as the store's `batch=<batchId>` dir
+      * (overwrite-idempotent: a retry rewrites the same dir). A
+      * clustered store lays them out in `files` files and writes the
+      * dir's manifest slice; any other store writes `rows` as given.
+      */
+    def append(rows: DataFrame, storePath: String, batchId: Long,
+               files: Int = 1): Unit = clustered match {
+      case Some(l) =>
+        l.appendBatch(rows, dir(storePath), manifest(storePath), batchId,
+          files)
+      case None =>
+        rows.write.mode(SaveMode.Overwrite)
+          .parquet(batchDir(dir(storePath), batchId))
     }
 
-  /** A clustered gate store: its shared layout declaration
-    * ([[graft.operators.Layout.Clustered]] — columns, cluster key and
-    * the `batch=<id>` append with its per-dir manifest upsert) plus
-    * what belongs to the gates: the public compactor whose name its
-    * folds carry and the column its `_deleted` set matches.
-    */
-  private final case class GateLayout(layout: Layout.Clustered,
-                                      compactor: String,
-                                      idCol: String = "id") {
-    /** Fold the store into a clustered generation minus its `_deleted`
-      * set ([[compactGateStore]], as `compactor`) and refresh the
-      * manifest (the generation's slice written, the vacuumed dirs'
-      * slices dropped).
+    /** The committed view as of `asOf` (the current view by default),
+      * projected to `cols`; None when nothing is committed. A missing
+      * column fails with the store's path (a drifted or wrongly-mounted
+      * dir), not an unresolved-column error deep in a gate's plan.
       */
-    def compact(spark: SparkSession, storePath: String,
-                manifestPath: String, filesOut: Int): Option[Long] =
-      compactGateStore(spark, storePath, compactor, manifestPath, idCol)(
-        layout.laidOut(_, filesOut))
+    def view(spark: SparkSession, storePath: String,
+             asOf: Long = Long.MaxValue): Option[DataFrame] = {
+      // no snapshot-floor check here: a floored read checks first
+      val dirs = Stats.viewDirsAt(spark, dir(storePath), asOf)
+      if (dirs.isEmpty) None
+      else {
+        val df = Stats.readDirs(spark, dirs)
+        val missing = cols.filterNot(df.columns.contains)
+        if (missing.nonEmpty)
+          throw new Stats.StoreSchemaException(
+            s"gate store at ${dir(storePath)} has a drifted schema — " +
+              s"expected columns {${cols.mkString(", ")}}, found " +
+              s"{${df.columns.mkString(", ")}} (missing: " +
+              s"${missing.mkString(", ")})")
+        Some(df.select(cols.map(col): _*))
+      }
+    }
 
-    /** The store's committed, manifest-pruned slice for `probe` (a
-      * frame carrying the cluster key): the committed view's files the
-      * probe's key values can live in ([[Stats.touchedFiles]] — all of
-      * them when no manifest is committed), projected to the layout's
-      * columns, minus the `_deleted` set matched on `idCol`; `None`
-      * when the store is empty or no file can match.
+    /** [[view]] minus the family's `_deleted` set, matched on `idCol`. */
+    def live(spark: SparkSession, storePath: String,
+             asOf: Long = Long.MaxValue): Option[DataFrame] =
+      view(spark, storePath, asOf)
+        .map(gateTombstones(storePath).without(spark, _, idCol))
+
+    /** A clustered store's committed, manifest-pruned slice for `probe`
+      * (a frame carrying the cluster key): the current view's rows in
+      * only the files the probe's key values can live in
+      * ([[graft.operators.Layout.Clustered.touched]] — every file when
+      * no manifest is committed), minus the `_deleted` set; None when
+      * the store is empty.
       */
     def slice(spark: SparkSession, storePath: String,
               manifestPath: String, probe: DataFrame): Option[DataFrame] = {
-      val files = Stats.touchedFiles(spark,
-        Stats.committedViewDirs(spark, storePath), manifestPath,
-        layout.key, probe)
-      if (files.isEmpty) None
+      val dirs = Stats.viewDirsAt(spark, dir(storePath), Long.MaxValue)
+      if (dirs.isEmpty) None
       else Some(gateTombstones(storePath).without(spark,
-        spark.read.parquet(files: _*).select(layout.cols.map(col): _*),
-        idCol))
+        clustered.get.touched(dirs, manifestPath, probe), idCol))
+    }
+
+    /** The store as a [[KeyedStore.foldWithout]] member: its dir, the
+      * column the deleted ids match, and its fold shape in `filesOut`
+      * files (clustered, or the columns repartitioned).
+      */
+    def folded(storePath: String, filesOut: Int)
+        : (String, Seq[String], DataFrame => DataFrame) =
+      (dir(storePath), Seq(idCol), rows => clustered.fold(
+        rows.select(cols.map(col): _*).repartition(filesOut))(
+        _.laidOut(rows, filesOut)))
+
+    /** Fold the store minus its `_deleted` set and clear the set
+      * ([[KeyedStore.foldWithout]], named `compactor` — the
+      * physical-drop half of the retraction contract; the read-time
+      * half is [[live]]) under the family's writer lease; a clustered
+      * store then refreshes the manifest at `manifestPath` (the
+      * generation's slice written, the vacuumed dirs' slices dropped).
+      * Returns the new generation token, None when there was nothing
+      * to fold.
+      */
+    def compact(spark: SparkSession, storePath: String,
+                manifestPath: String, filesOut: Int): Option[Long] = {
+      val tomb = gateTombstones(storePath)
+      tomb.leased(spark, s"$compactor(batch)") {
+        val Seq(tok) = tomb.foldWithout(spark, compactor,
+          Seq(folded(storePath, filesOut)))
+        if (tok.isDefined && clustered.isDefined)
+          Stats.refreshManifest(spark, dir(storePath), manifestPath)
+        tok
+      }
     }
   }
 
+  private def clusteredGate(layout: Layout.Clustered, compactor: String,
+                            idCol: String = "id"): GateLayout =
+    GateLayout(layout.cols, compactor, idCol, Some(layout))
+
+  /** The near-dup gate's (id, sig) signature store. */
+  private val PlainSigs = GateLayout(Seq("id", "sig"), "compactNearDupStore")
+  /** The media gate's (media_id, dhash) store, tombstoned by media_id. */
+  private val MediaHashes =
+    GateLayout(Seq("media_id", "dhash"), idCol = "media_id")
+  /** The embedding gate's LSH codes and vectors, under one root. */
+  private val EmbedCodes =
+    GateLayout(Layout.CodeBuckets.cols, "compactEmbedStore", sub = "codes")
+  private val EmbedVecs =
+    GateLayout(Seq("id", "vec"), "compactEmbedStore", sub = "vecs")
   private val BandedSigs =
-    GateLayout(Layout.BandedSigs, "compactNearDupStoreBanded")
+    clusteredGate(Layout.BandedSigs, "compactNearDupStoreBanded")
   private val MediaWindows =
-    GateLayout(Layout.MediaWindows, "compactMediaStoreBanded")
+    clusteredGate(Layout.MediaWindows, "compactMediaStoreBanded")
   private val VideoFrames =
-    GateLayout(Layout.VideoFrames, "compactFrameStore")
+    clusteredGate(Layout.VideoFrames, "compactFrameStore")
   private val WindowFps =
-    GateLayout(Layout.WindowFps, "compactWindowStoreGen")
+    clusteredGate(Layout.WindowFps, "compactWindowStoreGen")
   /** The ER entity dictionary is tombstoned by eid. */
   private val Entities =
-    GateLayout(Layout.Entities, "compactEntityStoreGen", "eid")
-
-  /** The footer manifest path of a gate store: `manifestPath` when
-    * given, else `<storePath>_manifest` (outside the store tree, so
-    * store reads never see it).
-    */
-  private def manifestOf(storePath: String, manifestPath: String): String =
-    if (manifestPath.nonEmpty) manifestPath else s"${storePath}_manifest"
+    clusteredGate(Layout.Entities, "compactEntityStoreGen", "eid")
 
   /** [[compactNearDupStore]] for a BANDED store
     * ([[nearDupGateSinkBanded]]): the generation is rewritten
@@ -490,8 +571,8 @@ object StreamOps {
     * streaming composition of the batch pipeline's banded signature
     * store ([[graft.operators.Dedup.writeBandedSigStore]] family):
     * store dirs hold (band, bucket, id, sig) rows range-clustered by
-    * (band, bucket), a footer manifest rides beside the store (default
-    * `<storePath>_manifest` — OUTSIDE the store tree, so store reads
+    * (band, bucket), a footer manifest rides beside the store at
+    * `<storePath>_manifest` (OUTSIDE the store tree, so store reads
     * never see it), and each micro-batch's store scan OPENS only the
     * files its touched buckets can live in
     * ([[graft.operators.Stats.touchedFiles]] over the
@@ -509,11 +590,10 @@ object StreamOps {
                             minEstJaccard: Double = 0.8,
                             compactEvery: Int = 0,
                             compactFilesOut: Int = 4,
-                            appendFilesOut: Int = 2,
-                            manifestPath: String = "")
+                            appendFilesOut: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
-    val mPath = manifestOf(storePath, manifestPath)
+    val mPath = BandedSigs.manifest(storePath)
     gateSink(spark, stream, checkpoint, Seq(storePath),
         "nearDupGateSinkBanded") { (batch, batchId) =>
       // ONE hash pass + ONE banding pass over the batch, reused by
@@ -528,12 +608,11 @@ object StreamOps {
       val survivors = Dedup.minhashIncrementalFromBands(batch,
           col(id), newBands, storeBands, batchRows, minEstJaccard)
         .localCheckpoint()
-      BandedSigs.layout.appendBatch(
+      BandedSigs.append(
         newBands.join(survivors.select(col(id).as("__sid")),
           col("id") === col("__sid"), "left_semi"),
-        storePath, mPath, batchId, appendFilesOut)
-      survivors.write.mode("overwrite")
-        .parquet(s"$outPath/batch=$batchId")
+        storePath, batchId, appendFilesOut)
+      writeOutput(survivors, outPath, batchId)
       if (compactDue(compactEvery, batchId))
         compactNearDupStoreBanded(spark, storePath, mPath,
           compactFilesOut): Unit
@@ -564,10 +643,10 @@ object StreamOps {
                         window: Int = 40, anchorLen: Int = 8,
                         anchorMod: Int = 16, minShared: Long = 1L,
                         compactEvery: Int = 0, compactFilesOut: Int = 4,
-                        appendFilesOut: Int = 2, manifestPath: String = "")
+                        appendFilesOut: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Curation
-    val mPath = manifestOf(storePath, manifestPath)
+    val mPath = WindowFps.manifest(storePath)
     gateSink(spark, stream, checkpoint, Seq(storePath),
         "substringGateSink") { (batch, batchId) =>
       // ONE fingerprint pass over the batch, reused by the prune
@@ -603,12 +682,11 @@ object StreamOps {
       val survivors = batch
         .join(bc(dropIds), col(id) === col("__did"), "left_anti")
         .localCheckpoint()
-      WindowFps.layout.appendBatch(
+      WindowFps.append(
         batchFps.join(survivors.select(col(id).as("__sid")),
           col("id") === col("__sid"), "left_semi"),
-        storePath, mPath, batchId, appendFilesOut)
-      survivors.write.mode("overwrite")
-        .parquet(s"$outPath/batch=$batchId")
+        storePath, batchId, appendFilesOut)
+      writeOutput(survivors, outPath, batchId)
       if (compactDue(compactEvery, batchId))
         compactWindowStoreGen(spark, storePath, mPath,
           compactFilesOut): Unit
@@ -677,10 +755,9 @@ object StreamOps {
       val survivors = hashes
         .join(dropIds, Seq("media_id"), "left_anti")
         .localCheckpoint()
-      survivors.where(col("dhash").isNotNull)
-        .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-      survivors.select(col("media_id"))
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      MediaHashes.append(survivors.where(col("dhash").isNotNull),
+        storePath, batchId)
+      writeOutput(survivors.select(col("media_id")), outPath, batchId)
     }
   }
 
@@ -690,15 +767,14 @@ object StreamOps {
     */
   private[graft] def mediaStoreView(spark: SparkSession,
                                     storePath: String): Option[DataFrame] =
-    gateStoreView(spark, storePath, Seq("media_id", "dhash"))
-      .map(gateTombstones(storePath).without(spark, _, "media_id"))
+    MediaHashes.live(spark, storePath)
 
   /** [[mediaDedupGateSink]] over a BANDED, manifest-pruned store — the
     * r8 treatment of the MinHash store applied to perceptual hashes:
     * store dirs hold (w, wk, id, dhash) rows range-clustered by
     * (w, wk) (the [[graft.operators.Multimodal.writeDhashStore]]
-    * layout), a footer manifest rides beside the store (default
-    * `<storePath>_manifest`), and each micro-batch's store scan OPENS
+    * layout), a footer manifest rides beside the store at
+    * `<storePath>_manifest`, and each micro-batch's store scan OPENS
     * only the files its own window keys can live in
     * ([[graft.operators.Stats.touchedFiles]] over the
     * current generation view). Gate semantics are
@@ -720,11 +796,10 @@ object StreamOps {
                                    .imageDHash(s, df).toDF(),
                                compactEvery: Int = 0,
                                compactFilesOut: Int = 4,
-                               appendFilesOut: Int = 2,
-                               manifestPath: String = "")
+                               appendFilesOut: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Multimodal
-    val mPath = manifestOf(storePath, manifestPath)
+    val mPath = MediaWindows.manifest(storePath)
     gateSink(spark, stream, checkpoint, Seq(storePath),
         "mediaDedupGateSinkBanded") { (batch, batchId) =>
       // ONE hash pass + ONE window expansion, reused by the prune
@@ -741,11 +816,10 @@ object StreamOps {
       val survivors = hashes
         .join(dropIds, Seq("media_id"), "left_anti")
         .localCheckpoint()
-      MediaWindows.layout.appendBatch(
+      MediaWindows.append(
         Multimodal.dhashWindowRows(survivors.where(col("dhash").isNotNull)),
-        storePath, mPath, batchId, appendFilesOut)
-      survivors.select(col("media_id"))
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+        storePath, batchId, appendFilesOut)
+      writeOutput(survivors.select(col("media_id")), outPath, batchId)
       if (compactDue(compactEvery, batchId))
         compactMediaStoreBanded(spark, storePath, mPath,
           compactFilesOut): Unit
@@ -780,11 +854,10 @@ object StreamOps {
                          maxBucket: Int = 10000,
                          compactEvery: Int = 0,
                          compactFilesOut: Int = 4,
-                         appendFilesOut: Int = 2,
-                         manifestPath: String = "")
+                         appendFilesOut: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Multimodal
-    val mPath = manifestOf(storePath, manifestPath)
+    val mPath = VideoFrames.manifest(storePath)
     gateSink(spark, stream, checkpoint, Seq(storePath),
         "videoDedupGateSink") { (batch, batchId) =>
       val media = batch.select(
@@ -804,12 +877,11 @@ object StreamOps {
       val survivors = media.select(col("media_id")).distinct()
         .join(dropIds, Seq("media_id"), "left_anti")
         .localCheckpoint()
-      VideoFrames.layout.appendBatch(
+      VideoFrames.append(
         frames.join(survivors.select(col("media_id").as("id")),
           Seq("id"), "left_semi"),
-        storePath, mPath, batchId, appendFilesOut)
-      survivors
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+        storePath, batchId, appendFilesOut)
+      writeOutput(survivors, outPath, batchId)
       if (compactDue(compactEvery, batchId))
         compactFrameStore(spark, storePath, mPath,
           compactFilesOut): Unit
@@ -883,10 +955,10 @@ object StreamOps {
     // one store per arm, each with its `<store>_manifest`
     val arms = Seq(BandedSigs -> "text", MediaWindows -> "img",
         MediaWindows -> "aud", VideoFrames -> "vid")
-      .map { case (layout, arm) => layout -> s"$storeRoot/$arm" }
+      .map { case (gate, arm) => gate -> s"$storeRoot/$arm" }
     val Seq(tStore, iStore, aStore, vStore) = arms.map(_._2)
-    def slice(layout: GateLayout, store: String, probe: DataFrame) =
-      layout.slice(spark, store, manifestOf(store, ""), probe)
+    def slice(gate: GateLayout, store: String, probe: DataFrame) =
+      gate.slice(spark, store, gate.manifest(store), probe)
     gateSink(spark, stream, checkpoint, arms.map(_._2),
         "multimodalGateSink") { (batch, batchId) =>
       val b = batch.select(col(id).cast("long").as("mid"),
@@ -949,15 +1021,13 @@ object StreamOps {
       val keepIds = survivors.select(col("mid").as("id"))
       arms.zip(Seq(newBands, ipw, apw, frames)).foreach {
         case ((gate, store), rows) =>
-          gate.layout.appendBatch(rows.join(keepIds, Seq("id"),
-            "left_semi"), store, manifestOf(store, ""), batchId,
-            appendFilesOut)
+          gate.append(rows.join(keepIds, Seq("id"), "left_semi"), store,
+            batchId, appendFilesOut)
       }
-      survivors.select(col("mid"))
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      writeOutput(survivors.select(col("mid")), outPath, batchId)
       if (compactDue(compactEvery, batchId))
-        arms.foreach { case (layout, store) =>
-          layout.compact(spark, store, manifestOf(store, ""),
+        arms.foreach { case (gate, store) =>
+          gate.compact(spark, store, gate.manifest(store),
             compactFilesOut): Unit
         }
     }
@@ -990,15 +1060,10 @@ object StreamOps {
         "embedDedupGateSink") { (batch, batchId) =>
       val base = batch.select(col(id).cast("long").as("id"),
         col(vec).as("vec")).localCheckpoint()
-      val tomb = gateTombstones(storePath)
-      val storeCodes = gateStoreView(spark, s"$storePath/codes",
-          Layout.CodeBuckets.cols)
-        .map(tomb.without(spark, _))
+      val storeCodes = EmbedCodes.live(spark, storePath)
         .getOrElse(Dedup.embeddingCodes(base.limit(0), col("id"),
           col("vec"), planes, tables, dim))
-      val storeVecs = gateStoreView(spark, s"$storePath/vecs",
-          Seq("id", "vec"))
-        .map(tomb.without(spark, _))
+      val storeVecs = EmbedVecs.live(spark, storePath)
         .getOrElse(base.limit(0))
       val dropIds = Dedup.embeddingIncremental(base, col("id"),
           col("vec"), storeCodes, storeVecs, threshold, planes,
@@ -1006,14 +1071,10 @@ object StreamOps {
         .select(col("id_b").as("id")).distinct()
       val survivors = base.join(dropIds, Seq("id"), "left_anti")
         .localCheckpoint()
-      Dedup.embeddingCodes(survivors, col("id"), col("vec"),
-          planes, tables, dim)
-        .write.mode("overwrite")
-        .parquet(s"$storePath/codes/batch=$batchId")
-      survivors.write.mode("overwrite")
-        .parquet(s"$storePath/vecs/batch=$batchId")
-      survivors.select(col("id"))
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      EmbedCodes.append(Dedup.embeddingCodes(survivors, col("id"),
+        col("vec"), planes, tables, dim), storePath, batchId)
+      EmbedVecs.append(survivors, storePath, batchId)
+      writeOutput(survivors.select(col("id")), outPath, batchId)
       if (compactDue(compactEvery, batchId))
         compactEmbedStore(spark, storePath, compactFilesOut): Unit
     }
@@ -1029,38 +1090,18 @@ object StreamOps {
   def compactEmbedStore(spark: SparkSession, storePath: String,
                         filesOut: Int): Option[Long] = {
     val Seq(tokC, tokV) = gateTombstones(storePath).foldWithout(spark,
-      "compactEmbedStore", Seq(
-        (s"$storePath/codes", Seq("id"),
-          _.select(Layout.CodeBuckets.cols.map(col): _*)
-            .repartition(filesOut)),
-        (s"$storePath/vecs", Seq("id"),
-          _.select(col("id"), col("vec")).repartition(filesOut))))
+      "compactEmbedStore",
+      Seq(EmbedCodes, EmbedVecs).map(_.folded(storePath, filesOut)))
     tokC.orElse(tokV)
   }
 
   /** Generic committed-store view for a gate store dir: newest
-    * committed generation + newer batch dirs, projected to `cols`.
+    * committed generation + newer batch dirs, projected to `cols`
+    * (the [[GateLayout.view]] of a store declaring just `cols`).
     */
   private[graft] def gateStoreView(spark: SparkSession, storePath: String,
-                                   cols: Seq[String]): Option[DataFrame] = {
-    val paths = Stats.committedViewDirs(spark, storePath)
-    if (paths.isEmpty) None
-    else {
-      val df = spark.read.parquet(paths: _*)
-      // name-level schema guard (the gate stores' column TYPES follow
-      // the corpus, so the caller declares names only): a drifted or
-      // wrongly-mounted store dir fails loudly with the path, not an
-      // unresolved-column analysis error deep in the gate's plan
-      val missing = cols.filterNot(df.columns.contains)
-      if (missing.nonEmpty)
-        throw new graft.operators.Stats.StoreSchemaException(
-          s"gate store at $storePath has a drifted schema — expected " +
-            s"columns {${cols.mkString(", ")}}, found " +
-            s"{${df.columns.mkString(", ")}} (missing: " +
-            s"${missing.mkString(", ")})")
-      Some(df.select(cols.map(col): _*))
-    }
-  }
+                                   cols: Seq[String]): Option[DataFrame] =
+    GateLayout(cols).view(spark, storePath)
 
   /** Streaming DSIR selection gate ([[graft.operators.Selection]], the
     * importance-resampling quality filter): every micro-batch is
@@ -1075,8 +1116,8 @@ object StreamOps {
     *    overwrites `model=k` = (newest committed model < k) folded with
     *    its own counts — a Structured Streaming retry rewrites the same
     *    dir with the same content, never double-counts. Readers take
-    *    the newest COMMITTED dir ([[newestCumulative]] — crashed
-    *    writes invisible), so the store survives mid-write failures.
+    *    the newest COMMITTED dir ([[Cumulative]] — crashed writes
+    *    invisible), so the store survives mid-write failures.
     *  - Bootstrap: no committed model → the target-only table
     *    (`targetBt`, the [[graft.operators.Selection.dsirBucketTable]]
     *    target side with rcnt = 0) — a caller-fitted TINY artifact.
@@ -1105,15 +1146,13 @@ object StreamOps {
       // survive when minScore <= 0, not be silently dropped by an
       // inner join that produced no score row for it
       val scores = Selection.dsirQuantizedScores(feats, model)
-      batch.join(scores.select(col("id").as("__sid"),
+      writeOutput(batch.join(scores.select(col("id").as("__sid"),
             col("score")), col(id) === col("__sid"), "left")
         .withColumn("score", coalesce(col("score"), lit(0L)))
         .where(col("score") >= minScore)
-        .drop("__sid")
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      Selection.refreshBucketTable(model, feats)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$modelPath/model=$batchId")
+        .drop("__sid"), outPath, batchId)
+      models(modelPath).write(batchId,
+        Selection.refreshBucketTable(model, feats))
     }
   }
 
@@ -1123,28 +1162,55 @@ object StreamOps {
     */
   private[graft] def dsirModelView(spark: SparkSession, modelPath: String,
                                    beforeBatch: Long): Option[DataFrame] =
-    newestCumulative(spark, modelPath, "model", beforeBatch)
-      .map(a => spark.read.parquet(a._2))
+    models(modelPath).before(spark, beforeBatch)
 
-  /** The newest cumulative artifact under `root`: the committed
-    * `<prefix>=<k>` dir with the largest k below `before`, as
-    * (k, path). Commit is judged by reader-visible parquet
+  /** A cumulative artifact sequence under `root` — the DSIR and LM
+    * models (`model=<k>`) and the KMV and profile sketches
+    * (`sketch=<k>`): batch k overwrites `<root>/<prefix>=<k>` with the
+    * newest committed artifact below k folded with its own batch, so a
+    * retry rewrites the same dir with the same content. Commit is
+    * judged by reader-visible parquet
     * ([[graft.operators.Stats.hasCommittedParquet]]), so a crashed
-    * write is skipped for the next older one. None = nothing committed.
+    * write is skipped for the next older one.
     */
-  private def newestCumulative(spark: SparkSession, root: String,
-                               prefix: String,
-                               before: Long): Option[(Long, String)] = {
-    val r = new org.apache.hadoop.fs.Path(root)
-    val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(r)) None
-    else fs.listStatus(r).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith(s"$prefix="))
-      .map(p => (p.getName.drop(prefix.length + 1).toLong, p))
-      .filter(_._1 < before).sortBy(-_._1)
-      .find(a => Stats.hasCommittedParquet(fs, a._2))
-      .map(a => (a._1, a._2.toString))
+  private final case class Cumulative(root: String, prefix: String) {
+    // the committed (k, dir) with the largest k below `bound`
+    private def newest(spark: SparkSession,
+                       bound: Long): Option[(Long, String)] = {
+      val r = new org.apache.hadoop.fs.Path(root)
+      val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
+      if (!fs.exists(r)) None
+      else fs.listStatus(r).filter(_.isDirectory).map(_.getPath)
+        .filter(_.getName.startsWith(s"$prefix="))
+        .map(p => (p.getName.drop(prefix.length + 1).toLong, p))
+        .filter(_._1 < bound).sortBy(-_._1)
+        .find(a => Stats.hasCommittedParquet(fs, a._2))
+        .map(a => (a._1, a._2.toString))
+    }
+
+    /** The newest committed artifact with k < `beforeBatch` (a re-run
+      * of batch k never sees its own earlier write), read under its
+      * footer's schema with no Spark job; None = bootstrap.
+      */
+    def before(spark: SparkSession, beforeBatch: Long): Option[DataFrame] =
+      newest(spark, beforeBatch).map(a => Stats.readDirs(spark, Seq(a._2)))
+
+    /** The newest committed k — the sequence head; Long.MinValue when
+      * nothing is committed.
+      */
+    def head(spark: SparkSession): Long =
+      newest(spark, Long.MaxValue).fold(Long.MinValue)(_._1)
+
+    /** Write `artifact` as `<prefix>=<k>` in one file
+      * (overwrite-idempotent).
+      */
+    def write(k: Long, artifact: DataFrame): Unit =
+      artifact.coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"$root/$prefix=$k")
   }
+
+  private def models(modelPath: String) = Cumulative(modelPath, "model")
+  private def sketches(sketchPath: String) = Cumulative(sketchPath, "sketch")
 
   /** One cumulative-model retraction step — the shared shape of the
     * DSIR and LM families: skip already-deleted ids via the model's
@@ -1162,20 +1228,8 @@ object StreamOps {
       val fresh = KeyedStore.tombstones(modelPath, "/deleted",
           "modelDeletedIds")
         .writeFresh(spark, "retractCumulativeModel", sb)(ids)
-      subtract(m, fresh)
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$modelPath/model=$sb")
+      models(modelPath).write(sb, subtract(m, fresh))
     }
-
-  /** Newest committed `model=` id under a cumulative-model path
-    * (Long.MinValue when none) — the sequence head the retraction
-    * gate's base resolution reads.
-    */
-  private def dsirMaxModelId(spark: SparkSession,
-                             modelPath: String): Long =
-    newestCumulative(spark, modelPath, "model", Long.MaxValue)
-      .fold(Long.MinValue)(_._1)
 
   /** Streaming LM perplexity gate ([[graft.operators.LanguageModel]],
     * the CCNet-style quality filter as a running stream stage): every
@@ -1212,19 +1266,16 @@ object StreamOps {
       val model = dsirModelView(spark, modelPath, batchId)
         .getOrElse(LanguageModel.lmModel(feats.limit(0)))
       val scores = LanguageModel.lmScoreFromFeatures(feats, model)
-      batch.join(scores.select(col("id").as("__sid"),
+      writeOutput(batch.join(scores.select(col("id").as("__sid"),
             col("n_bigrams"), col("score")),
           col(id) === col("__sid"), "left")
         .withColumn("score", coalesce(col("score"), lit(0L)))
         .withColumn("n_bigrams",
           coalesce(col("n_bigrams"), lit(0L)))
         .where(col("score") * den >= lit(num) * col("n_bigrams"))
-        .drop("__sid")
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      LanguageModel.refreshModel(model, feats)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"$modelPath/model=$batchId")
+        .drop("__sid"), outPath, batchId)
+      models(modelPath).write(batchId,
+        LanguageModel.refreshModel(model, feats))
     }
   }
 
@@ -1252,10 +1303,10 @@ object StreamOps {
                  outPath: String, checkpoint: String,
                  maxDist: Int = 3, maxBlock: Int = Int.MaxValue,
                  compactEvery: Int = 0, compactFilesOut: Int = 4,
-                 appendFilesOut: Int = 2, manifestPath: String = "")
+                 appendFilesOut: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Resolution
-    val mPath = manifestOf(storePath, manifestPath)
+    val mPath = Entities.manifest(storePath)
     gateSink(spark, stream, checkpoint, Seq(storePath),
         "erGateSink") { (batch, batchId) =>
       val batchRec = batch.select(col(id).cast("long").as("rid"),
@@ -1278,11 +1329,10 @@ object StreamOps {
       val survEnts = batchK
         .join(bc(dropEids), Seq("eid"), "left_anti")
         .localCheckpoint()
-      batchRec
-        .join(survEnts.select(col("nm")), Seq("nm"), "left_semi")
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      Entities.layout.appendBatch(survEnts, storePath, mPath, batchId,
-        appendFilesOut)
+      writeOutput(batchRec
+        .join(survEnts.select(col("nm")), Seq("nm"), "left_semi"),
+        outPath, batchId)
+      Entities.append(survEnts, storePath, batchId, appendFilesOut)
       if (compactDue(compactEvery, batchId))
         compactEntityStoreGen(spark, storePath, mPath,
           compactFilesOut): Unit
@@ -1419,7 +1469,7 @@ object StreamOps {
     import graft.operators.Similarity
     gateSink(spark, stream, checkpoint, Seq(storeDir),
         "kCenterGateSink") { (batch, batchId) =>
-      if (Stats.committedViewDirs(spark, storeDir).isEmpty)
+      if (Similarity.kCenterStore(storeDir).committedDirs(spark).isEmpty)
         Similarity.writeKCenterStore(batch, col(id), col(vec), k,
           storeDir)
       else
@@ -1553,7 +1603,7 @@ object StreamOps {
           val (g, b) = Stats.committedTokens(spark, r)
           math.max(g, b)
         } ++ (dsirModelPath.toSeq ++ lmModelPath.toSeq)
-          .map(p => dsirMaxModelId(spark, p))).max
+          .map(p => models(p).head(spark))).max
         math.max(batchIdBase,
           if (head == Long.MinValue) 0L else head + 1L)
       }
@@ -1623,7 +1673,7 @@ object StreamOps {
           pqStoreDir.foreach(p =>
             Similarity.compactPqCodeStore(spark, p, filesOut): Unit)
           sigStorePath.foreach(p =>
-            compactNearDupStoreBanded(spark, p, s"${p}_manifest",
+            compactNearDupStoreBanded(spark, p, BandedSigs.manifest(p),
               filesOut): Unit)
           pcaStoreDir.foreach(p =>
             Similarity.compactPcaMoments(spark, p): Unit)
@@ -1887,8 +1937,11 @@ object StreamOps {
       // for each store's bootstrap base, and stream batch 0's
       // append must still exceed it
       val sb = eb + 1
+      // a store with no committed dir bootstraps
+      def fresh(store: KeyedStore): Boolean =
+        store.committedDirs(spark).isEmpty
       val bootstrap = (batchIdBase == 0L && batchId == 0L) ||
-        Stats.committedViewDirs(spark, ccStorePath).isEmpty
+        fresh(Graph.ccStore(ccStorePath))
       if (bootstrap) {
         Graph.writeCCStore(edges, col("u"), col("v"), ccStorePath,
           filesOut)
@@ -1912,7 +1965,7 @@ object StreamOps {
       // exact-deduped against committed history (canonical
       // endpoint order) before it counts
       triStorePath.foreach { tp =>
-        if (Stats.committedViewDirs(spark, tp).isEmpty)
+        if (fresh(Graph.triangleStore(tp)))
           Graph.writeTriangleStore(hist, col("u"), col("v"), tp,
             filesOut)
         def canon(df: DataFrame): DataFrame =
@@ -1928,7 +1981,7 @@ object StreamOps {
       // closure from nodes that peel away), so the bootstrap may
       // absorb the first batch and retries go incremental
       kcoreStorePath.foreach { kp =>
-        if (Stats.committedViewDirs(spark, kp).isEmpty)
+        if (fresh(Graph.kCoreStore(kp)))
           Graph.writeKCoreStore(all, col("u"), col("v"), kcoreK,
             kp, filesOut)
         else
@@ -1942,7 +1995,7 @@ object StreamOps {
       // incremental form — see pageRankWarm). Re-sent edges are
       // harmless (the union edge list is distinct'd inside).
       prStorePath.foreach { pp =>
-        if (Stats.committedViewDirs(spark, pp).isEmpty)
+        if (fresh(Graph.pageRankStore(pp)))
           Graph.writePageRankStore(all, col("u"), col("v"),
             prIters, pp, filesOut)
         else
@@ -1955,7 +2008,7 @@ object StreamOps {
       // the union (re-sent edges harmless: the edge list is
       // distinct'd inside)
       hitsStorePath.foreach { hp =>
-        if (Stats.committedViewDirs(spark, hp).isEmpty)
+        if (fresh(Graph.hitsStore(hp)))
           Graph.writeHitsStore(all, col("u"), col("v"),
             hitsIters, hp, filesOut)
         else
@@ -1969,7 +2022,7 @@ object StreamOps {
       // add weight — feed pre-deduped edges upstream if the
       // stream can replay content)
       louvainStorePath.foreach { lp =>
-        if (Stats.committedViewDirs(spark, lp).isEmpty)
+        if (fresh(Graph.louvainStore(lp)))
           Graph.writeLouvainStore(all, col("u"), col("v"),
             louvainIters, lp, filesOut)
         else
@@ -1982,7 +2035,7 @@ object StreamOps {
       // each batch's endpoints (re-sent edges are harmless:
       // their candidates never beat the stored distances)
       landmarkStorePath.foreach { mp =>
-        if (Stats.committedViewDirs(spark, mp).isEmpty)
+        if (fresh(Graph.landmarkStore(mp)))
           Graph.writeLandmarkStore(all, col("u"), col("v"),
             landmarkCount, landmarkDepth, mp, filesOut)
         else
@@ -1997,7 +2050,7 @@ object StreamOps {
       // self-loops or duplicate condensation rows — harmless,
       // set semantics)
       sccStorePath.foreach { sp =>
-        if (Stats.committedViewDirs(spark, s"$sp/assign").isEmpty)
+        if (fresh(Graph.sccAssignStore(sp)))
           Graph.writeSccStore(all, col("u"), col("v"), sp,
             filesOut)
         else
@@ -2052,11 +2105,8 @@ object StreamOps {
     */
   def gateStoreViewAsOf(spark: SparkSession, storePath: String,
                         cols: Seq[String], asOf: Long)
-      : Option[DataFrame] = {
-    val paths = Stats.viewDirsAt(spark, storePath, asOf)
-    if (paths.isEmpty) None
-    else Some(spark.read.parquet(paths: _*).select(cols.map(col): _*))
-  }
+      : Option[DataFrame] =
+    GateLayout(cols).view(spark, storePath, asOf)
 
   /** Streaming KMV NOVELTY gate — the per-ingest curation signal
     * ("how much of this batch have we already got?") as a running
@@ -2080,7 +2130,7 @@ object StreamOps {
     * dir with the same content and the final store ≡ sketching all
     * batches from scratch (the merge-semigroup law, spec-pinned).
     * Readers take the newest COMMITTED dir with id < their own batch
-    * ([[newestCumulative]]), so crashed writes are invisible and
+    * ([[Cumulative]]), so crashed writes are invisible and
     * batch 0 always bootstraps empty. The store is ≤ #groups · k
     * longs — a planning artifact, never data-sized; history is never
     * re-read or re-shingled.
@@ -2114,17 +2164,14 @@ object StreamOps {
           "left")
         .withColumn("novelty", coalesce(col("novelty"), lit(1.0)))
         .drop("__grp")
-      withNv.where(col("novelty") >= minNovelty)
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      withNv.where(col("novelty") < minNovelty)
-        .write.mode("overwrite").parquet(s"$lowPath/batch=$batchId")
-      val merged = hist match {
+      writeOutput(withNv.where(col("novelty") >= minNovelty), outPath,
+        batchId)
+      writeOutput(withNv.where(col("novelty") < minNovelty), lowPath,
+        batchId)
+      sketches(sketchPath).write(batchId, hist match {
         case Some(h) => Overlap.kmvMerge(h, batchSk, k)
         case None => batchSk
-      }
-      merged.coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"$sketchPath/sketch=$batchId")
+      })
     }
   }
 
@@ -2183,17 +2230,16 @@ object StreamOps {
         .localCheckpoint()
       val cumNdv = Overlap.kmvDistinct(
         state.select(col("grp"), col("sketch")), k)
-      prof.select(col("column"), col("n_rows").as("n_batch"),
+      writeOutput(prof.select(col("column"), col("n_rows").as("n_batch"),
           col("n_nulls").as("nulls_batch"),
           col("n_distinct").as("ndv_batch"))
         .join(state.select(col("grp").as("column"),
           col("n").as("n_total"), col("nulls").as("nulls_total")),
           Seq("column"))
         .join(cumNdv.select(col("grp").as("column"),
-          col("dhat").as("ndv_total_est")), Seq("column"))
-        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      state.coalesce(1).write.mode("overwrite")
-        .parquet(s"$statePath/sketch=$batchId")
+          col("dhat").as("ndv_total_est")), Seq("column")),
+        outPath, batchId)
+      sketches(statePath).write(batchId, state)
     }
   }
 
@@ -2205,8 +2251,7 @@ object StreamOps {
   private[graft] def kmvSketchView(spark: SparkSession,
                                    sketchPath: String,
                                    beforeBatch: Long): Option[DataFrame] =
-    newestCumulative(spark, sketchPath, "sketch", beforeBatch)
-      .map(a => spark.read.parquet(a._2))
+    sketches(sketchPath).before(spark, beforeBatch)
 
   /** foreachBatch MERGE sink: each micro-batch upserts into `table` by
     * `key` (last write per key wins within a batch via the batch's own
